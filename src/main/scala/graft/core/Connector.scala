@@ -202,9 +202,19 @@ object Connector {
   private def selected(src: SourceDef, rc: RunConfig): Seq[(StreamDef, HttpRunner)] =
     src.httpStreams.filter { case (sd, _) => isSelected(rc)(sd.name) }
 
+  /** Worker threads for [[read]], shared by every sync in the JVM, so a
+    * sync neither starts threads nor leaves exiting ones behind to compete
+    * with the next request. Idle workers end after 60 s; daemon, so they
+    * never hold the JVM open.
+    */
+  private val fetchPool = java.util.concurrent.Executors.newCachedThreadPool { (r: Runnable) =>
+    val t = new Thread(r, "graft-fetch"); t.setDaemon(true); t
+  }
+
   /** Full sync: streams run concurrently bounded by `src.concurrency`
-    * (reference errgroup + semaphore throttler, `sourcedef.go:153-186`);
-    * a runner error becomes an in-band LOG and the sync proceeds (reference
+    * (reference errgroup + semaphore throttler, `sourcedef.go:153-186`):
+    * that many workers on the shared pool take the streams in order.
+    * A runner error becomes an in-band LOG and the sync proceeds (reference
     * error trapping, `proto.go:314-332`). State is emitted only after the
     * stream's records are fully written.
     */
@@ -219,51 +229,54 @@ object Connector {
     src.manualStreams.filter(sd => manualOk(sd.name)).foreach(w.openStream)
     val lock = new Object
     val firstError = new AtomicReference[Throwable]()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, src.concurrency))
-    try {
-      val tasks = streams.map { case (sd, runner) =>
-        pool.submit(new Runnable {
-          override def run(): Unit =
-            try {
-              if (firstError.get() != null) return // first error cancels the rest
-              val st = rc.states.get(sd.name)
-              val it = runner.stream(rc.config, st).fetch(httpClient)
-              it.foreach(rec => lock.synchronized(w.writeRecord(sd.name, rec)))
-              runner.newState(rc.config, st)
-                .foreach(s => lock.synchronized(w.writeState(sd.name, s)))
-            } catch {
-              case e: Throwable =>
-                firstError.compareAndSet(null, e)
-                lock.synchronized(w.writeLog("ERROR", s"${sd.name}: ${e.getMessage}"))
-            }
-        })
+    def sync(sd: StreamDef, runner: HttpRunner): Unit =
+      try {
+        if (firstError.get() != null) return // first error cancels the rest
+        val st = rc.states.get(sd.name)
+        val it = runner.stream(rc.config, st).fetch(httpClient)
+        it.foreach(rec => lock.synchronized(w.writeRecord(sd.name, rec)))
+        runner.newState(rc.config, st)
+          .foreach(s => lock.synchronized(w.writeState(sd.name, s)))
+      } catch {
+        case e: Throwable =>
+          firstError.compareAndSet(null, e)
+          lock.synchronized(w.writeLog("ERROR", s"${sd.name}: ${e.getMessage}"))
       }
-      tasks.foreach(_.get())
-      // manual (push) runners, driver-side (reference backend.go:9-48)
-      if (src.manualRunners.nonEmpty) {
-        val ctx = new ManualContext {
-          override val client: HttpClient = httpClient
-          override val config: Option[JsonNode] = rc.config
-          override def stream(name: String): ManualStream =
-            // a CATALOG-deselected manual stream swallows its emissions —
-            // the runner may push to several streams and must not break
-            // when one is deselected, but deselected records must not leak
-            if (!manualOk(name)) new ManualStream {
-              override def emit(recordJson: String): Unit = ()
-              override def emitState(stateJson: String): Unit = ()
-            } else new ManualStream {
-              override def emit(recordJson: String): Unit =
-                lock.synchronized(w.writeRecord(name, recordJson))
-              override def emitState(stateJson: String): Unit =
-                lock.synchronized(w.writeState(name, stateJson))
-            }
+    val pending = new java.util.concurrent.ConcurrentLinkedQueue[(StreamDef, HttpRunner)]()
+    streams.foreach(pending.add)
+    val workers = Seq.fill(math.min(math.max(1, src.concurrency), streams.size)) {
+      fetchPool.submit(new Runnable {
+        override def run(): Unit = {
+          var next = pending.poll()
+          while (next != null) { sync(next._1, next._2); next = pending.poll() }
         }
-        src.manualRunners.foreach { r =>
-          try r.run(ctx)
-          catch { case e: Throwable => lock.synchronized(w.writeLog("ERROR", e.getMessage)) }
-        }
+      })
+    }
+    workers.foreach(_.get())
+    // manual (push) runners, driver-side (reference backend.go:9-48)
+    if (src.manualRunners.nonEmpty) {
+      val ctx = new ManualContext {
+        override val client: HttpClient = httpClient
+        override val config: Option[JsonNode] = rc.config
+        override def stream(name: String): ManualStream =
+          // a CATALOG-deselected manual stream swallows its emissions —
+          // the runner may push to several streams and must not break
+          // when one is deselected, but deselected records must not leak
+          if (!manualOk(name)) new ManualStream {
+            override def emit(recordJson: String): Unit = ()
+            override def emitState(stateJson: String): Unit = ()
+          } else new ManualStream {
+            override def emit(recordJson: String): Unit =
+              lock.synchronized(w.writeRecord(name, recordJson))
+            override def emitState(stateJson: String): Unit =
+              lock.synchronized(w.writeState(name, stateJson))
+          }
       }
-    } finally pool.shutdown()
+      src.manualRunners.foreach { r =>
+        try r.run(ctx)
+        catch { case e: Throwable => lock.synchronized(w.writeLog("ERROR", e.getMessage)) }
+      }
+    }
   }
 
   /** Spark read surface: every (selected) stream as a DataFrame with its

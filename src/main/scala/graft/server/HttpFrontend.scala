@@ -4,6 +4,8 @@ import java.io.{OutputStreamWriter, Writer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
+import scala.util.control.NonFatal
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import graft.core.{Cmd, Connector, RunConfig, SourceDef}
@@ -23,6 +25,17 @@ import graft.sources.HttpClient
   * pass `authKeys` (allow-listed raw Ed25519 public keys) and every request
   * must present a [[TokenAuth]]-signed Authorization token scoped to the
   * request path (SURVEY §2.5 C7).
+  *
+  * Socket contract: every accepted connection runs with TCP_NODELAY, as Go's
+  * `net` does by default for the reference server. The JDK server writes a
+  * response's headers as a packet of their own before the chunked body, so
+  * with Nagle on the body waits until the client ACKs the headers, and a
+  * client's delayed ACK holds that for ~40 ms on every response. The JDK
+  * takes this from `sun.net.httpserver.nodelay`, read ONCE per JVM when the
+  * first JDK `HttpServer` is created; the companion object sets it (unless
+  * set already, so a launch `-D` wins) just before creating the server. An
+  * embedder that creates some other JDK `HttpServer` first must launch the
+  * JVM with `-Dsun.net.httpserver.nodelay=true`.
   */
 final class HttpFrontend(
     // by-name: re-read per request so connectors registered after server
@@ -39,7 +52,7 @@ final class HttpFrontend(
     // connector sync; see the pool comment below)
     maxConcurrent: Int = 8) {
 
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  private val server = HttpFrontend.createServer(new InetSocketAddress("127.0.0.1", port))
 
   // A real pool, NOT setExecutor(null): the null executor runs every handler
   // on the single dispatcher thread, so one long /read sync would serialize
@@ -126,9 +139,9 @@ final class HttpFrontend(
         case _ => respond(ex, 404, _.write("""{"error":"not found"}"""))
       }
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         try respond(ex, 500, _.write(s"""{"error":${graft.core.Json.write(graft.core.Json.mapper.valueToTree(e.getMessage))}}"""))
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
     } finally ex.close()
 
   /** zstd content negotiation, then stream the writer's output. */
@@ -141,5 +154,18 @@ final class HttpFrontend(
     val sink = if (wantZstd) new com.github.luben.zstd.ZstdOutputStream(raw) else raw
     val w = new OutputStreamWriter(sink, StandardCharsets.UTF_8)
     try { write(w); w.flush() } finally sink.close()
+  }
+}
+
+object HttpFrontend {
+  private val NoDelayProperty = "sun.net.httpserver.nodelay"
+
+  /** Creates the JDK server with TCP_NODELAY on every accepted socket (see
+    * the class doc). The property only takes effect if no JDK `HttpServer`
+    * has been created in this JVM yet.
+    */
+  private def createServer(addr: InetSocketAddress): HttpServer = {
+    if (System.getProperty(NoDelayProperty) == null) System.setProperty(NoDelayProperty, "true")
+    HttpServer.create(addr, 0)
   }
 }

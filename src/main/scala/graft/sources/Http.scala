@@ -52,28 +52,57 @@ trait HttpClient extends Serializable {
   def get(req: HttpRequest): HttpResponse
 }
 
-/** java.net.http-based client. Partition-side use is fine: the client is
-  * constructed inside the task, never serialized.
+/** Blocking HTTP/1.1 client on `java.net.HttpURLConnection`: each GET runs
+  * on the calling thread over the JDK's keep-alive connection cache, with no
+  * hand-off to selector or executor threads as in `java.net.http`, whose
+  * far larger code path also takes thousands of requests to JIT-compile.
+  * Holds no connection state, so it serializes into Spark tasks as is.
   */
 final class JdkHttpClient(timeoutMs: Long = 30000) extends HttpClient {
-  // @transient: the JDK client object is not serializable; an instance that
-  // already served a driver-side call must still ride into a task closure
-  // (the deserialized copy lazily re-creates its transport).
-  // NORMAL redirect policy (http→https upgrades allowed, never downgrades):
-  // the JDK default is Redirect.NEVER, under which a 301-ing API endpoint
-  // passes RetryingClient (3xx is not an error there) and fails later with
-  // a cryptic JSON parse error on the redirect body
-  @transient private lazy val client = java.net.http.HttpClient.newBuilder()
-    .followRedirects(java.net.http.HttpClient.Redirect.NORMAL)
-    .connectTimeout(java.time.Duration.ofMillis(timeoutMs)).build()
   override def get(req: HttpRequest): HttpResponse = {
-    val b = java.net.http.HttpRequest.newBuilder(java.net.URI.create(req.fullUrl))
-    req.headers.foreach { case (k, v) => b.header(k, v) }
-    val resp = client.send(b.GET().build(), java.net.http.HttpResponse.BodyHandlers.ofString())
-    val hdrs = scala.jdk.CollectionConverters.MapHasAsScala(resp.headers().map()).asScala
-      .map { case (k, vs) => k -> (if (vs.isEmpty) "" else vs.get(0)) }.toMap
-    HttpResponse(resp.statusCode(), resp.body(), hdrs)
+    var url = new java.net.URL(req.fullUrl)
+    var redirects = 0
+    while (true) {
+      val c = url.openConnection().asInstanceOf[java.net.HttpURLConnection]
+      c.setConnectTimeout(timeoutMs.toInt)
+      // redirects are followed below: HttpURLConnection's own following
+      // never crosses protocols, so it would drop http→https upgrades
+      c.setInstanceFollowRedirects(false)
+      req.headers.foreach { case (k, v) => c.setRequestProperty(k, v) }
+      val status = c.getResponseCode
+      // read to the end and close: that returns the connection to the cache
+      val in = if (status >= 400) c.getErrorStream else c.getInputStream
+      val bytes = if (in == null) Array.emptyByteArray else try in.readAllBytes() finally in.close()
+      val hdrs = scala.jdk.CollectionConverters.MapHasAsScala(c.getHeaderFields).asScala.iterator
+        .collect { case (k, vs) if k != null => k -> (if (vs.isEmpty) "" else vs.get(0)) }.toMap
+      val next = Option(c.getHeaderField("Location"))
+        .filter(_ => JdkHttpClient.Redirects(status) && redirects < JdkHttpClient.MaxRedirects)
+        .map(new java.net.URL(url, _))
+        // NORMAL policy: upgrades allowed, never an https→http downgrade. A
+        // redirect that is not followed reaches RetryingClient as a 3xx,
+        // which it raises as an error instead of JSON-parsing the body.
+        .filterNot(n => url.getProtocol == "https" && n.getProtocol == "http")
+      next match {
+        case Some(n) => url = n; redirects += 1
+        case None => return HttpResponse(status, new String(bytes, JdkHttpClient.charset(c.getContentType)), hdrs)
+      }
+    }
+    throw new IllegalStateException("unreachable")
   }
+}
+
+object JdkHttpClient {
+  private val Redirects = Set(301, 302, 303, 307, 308)
+  private val MaxRedirects = 5
+
+  /** The `charset` parameter of a Content-Type, UTF-8 when absent or unknown. */
+  private def charset(contentType: String): java.nio.charset.Charset =
+    Option(contentType).toSeq.flatMap(_.split(';').map(_.trim))
+      .collectFirst { case p if p.toLowerCase.startsWith("charset=") =>
+        p.substring(8).trim.stripPrefix("\"").stripSuffix("\"")
+      }
+      .flatMap(n => scala.util.Try(java.nio.charset.Charset.forName(n)).toOption)
+      .getOrElse(java.nio.charset.StandardCharsets.UTF_8)
 }
 
 /** Retry/backoff wrapper honoring Retry-After on 429/5xx (reference

@@ -203,6 +203,30 @@ class ProtocolSpec extends AnyFunSuite {
     assert(lines.last.startsWith("""{"type":"STATE""""))
   }
 
+  test("read syncs every stream, at most `concurrency` at once, on shared daemon workers") {
+    val names = (0 until 5).map(i => s"s$i")
+    val inFlight = new java.util.concurrent.atomic.AtomicInteger()
+    val maxInFlight = new java.util.concurrent.atomic.AtomicInteger()
+    val threads = java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
+    val slow: HttpClient = (_: HttpRequest) => {
+      val n = inFlight.incrementAndGet()
+      maxInFlight.accumulateAndGet(n, math.max)
+      threads.add(Thread.currentThread())
+      Thread.sleep(20)
+      inFlight.decrementAndGet()
+      HttpResponse(200, """{"items":[{"id":1,"amount":1.0}],"next":null}""", Map.empty)
+    }
+    val many = SourceDef(name = "many", concurrency = 2,
+      httpStreams = names.map(n => StreamDef(n, ordersDef.schema) -> new StubRunner))
+    val out = new StringWriter
+    Connector.handle(many, Cmd.Read, RunConfig.Empty, out, slow)
+    val lines = out.toString.linesIterator.toList
+    names.foreach(n => assert(lines.exists(l => l.contains("\"RECORD\"") && l.contains(s""""stream":"$n"""")), n))
+    assert(Json.parse(lines.last).at("/state/data").size == 5, lines.last)
+    assert(maxInFlight.get == 2)
+    threads.forEach(t => assert(t.isDaemon && t.getName == "graft-fetch", t.getName))
+  }
+
   test("masked secret renders masked (utils.go:12-24)") {
     assert(Masked("hunter2").toString == "xxxx")
   }

@@ -1,7 +1,12 @@
 package graft.server
 
-import java.net.URI
+import java.io.{BufferedInputStream, ByteArrayOutputStream, InputStream}
+import java.net.{Socket, URI}
 import java.net.http.{HttpClient => JClient, HttpRequest => JRequest, HttpResponse => JResponse}
+
+import java.nio.charset.StandardCharsets
+import java.nio.file.Paths
+import java.util.concurrent.TimeUnit
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,25 +15,12 @@ import graft.sources.{HttpClient, HttpRequest, HttpResponse}
 
 /** End-to-end HTTP frontend tests (reference E2 lifecycle,
   * `proto.go:149-212`): discover listing, command routing, control-stream
-  * body parsing, dialect selection via SETTINGS, zstd negotiation, errors.
+  * body parsing, dialect selection via SETTINGS, zstd negotiation, errors,
+  * and the TCP_NODELAY socket contract.
   */
 class HttpFrontendSpec extends AnyFunSuite {
 
-  private val ordersDef = StreamDef("orders",
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType))))
-
-  private class StubRunner extends HttpRunner {
-    override def stream(config: Option[com.fasterxml.jackson.databind.JsonNode],
-        state: Option[com.fasterxml.jackson.databind.JsonNode]) =
-      graft.sources.PaginatedStream(HttpRequest("http://up/orders"),
-        graft.sources.Pagination.NextUrl("next"), Seq("items"))
-  }
-
-  private val upstream: HttpClient = (_: HttpRequest) =>
-    HttpResponse(200, """{"items":[{"id":7}],"next":null}""", Map.empty)
-
-  private val src = SourceDef(name = "demo", httpStreams = Seq(ordersDef -> new StubRunner))
+  import HttpFrontendSpec.{src, upstream}
 
   private lazy val fe = new HttpFrontend(Map("demo" -> src), upstream,
     clock = () => 1700000000000L).start()
@@ -161,5 +153,108 @@ class HttpFrontendSpec extends AnyFunSuite {
       registry.put("late", src.copy(name = "late"))
       assert(discover() == """["demo","late"]""") // no restart needed
     } finally dynFe.stop()
+  }
+
+  test("sequential requests on one keep-alive socket: bodies complete, none stalls on delayed ACK") {
+    // The JDK reads sun.net.httpserver.nodelay once per JVM, at the first
+    // HttpServer it creates, and other suites in this shared test JVM create
+    // their own. So the requests run in a fresh child JVM on the test
+    // classpath, where HttpFrontend creates the first server whatever the
+    // suite order.
+    val java = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val proc = new ProcessBuilder(java, "-Xmx256m", "-cp", System.getProperty("java.class.path"),
+      HttpFrontendNoDelayProbe.getClass.getName.stripSuffix("$"))
+      .redirectErrorStream(true).start()
+    val out = new String(proc.getInputStream.readAllBytes(), StandardCharsets.UTF_8)
+    assert(proc.waitFor(60, TimeUnit.SECONDS), s"probe JVM did not exit:\n$out")
+    assert(proc.exitValue() == 0, s"probe JVM failed:\n$out")
+
+    val results = out.linesIterator.filter(_.startsWith("probe\t")).map(_.split("\t", -1)).toSeq
+    assert(results.size == HttpFrontendNoDelayProbe.Requests, out)
+    results.foreach { case Array(_, cmd, _, complete, last) =>
+      assert(complete == "true", s"$cmd: chunked body not terminated")
+      val want = if (cmd == "spec") """{"type":"SPEC"""" else """{"type":"STATE""""
+      assert(last.startsWith(want), s"$cmd body ends with: $last")
+    }
+    // Nagle plus the client's delayed ACK puts every response at >= ~40 ms.
+    val wallsMs = results.map(_(2).toLong / 1e6).sorted
+    val medianMs = wallsMs(wallsMs.size / 2)
+    assert(medianMs < 10.0, s"median request wall $medianMs ms; walls ${wallsMs.mkString(", ")}")
+  }
+}
+
+object HttpFrontendSpec {
+  private val ordersDef = StreamDef("orders",
+    org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType))))
+
+  private class StubRunner extends HttpRunner {
+    override def stream(config: Option[com.fasterxml.jackson.databind.JsonNode],
+        state: Option[com.fasterxml.jackson.databind.JsonNode]) =
+      graft.sources.PaginatedStream(HttpRequest("http://up/orders"),
+        graft.sources.Pagination.NextUrl("next"), Seq("items"))
+  }
+
+  val upstream: HttpClient = (_: HttpRequest) =>
+    HttpResponse(200, """{"items":[{"id":7}],"next":null}""", Map.empty)
+
+  val src = SourceDef(name = "demo", httpStreams = Seq(ordersDef -> new StubRunner))
+}
+
+/** Child-JVM side of the TCP_NODELAY test in [[HttpFrontendSpec]]: starts an
+  * HttpFrontend, sends `Requests` sequential requests (spec and a small read,
+  * mixed) over one keep-alive socket, one write per request, and prints one
+  * `probe<TAB>cmd<TAB>wallNanos<TAB>complete<TAB>lastBodyLine` line each.
+  */
+object HttpFrontendNoDelayProbe {
+  val Requests = 40
+
+  def main(args: Array[String]): Unit = {
+    val fe = new HttpFrontend(Map("demo" -> HttpFrontendSpec.src), HttpFrontendSpec.upstream).start()
+    val sock = new Socket("127.0.0.1", fe.boundPort)
+    try {
+      sock.setTcpNoDelay(true)
+      sock.setSoTimeout(30000)
+      val os = sock.getOutputStream
+      val in = new BufferedInputStream(sock.getInputStream)
+      (0 until Requests).foreach { i =>
+        val cmd = if (i % 3 == 0) "read" else "spec"
+        val req = s"POST /demo/$cmd HTTP/1.1\r\nHost: 127.0.0.1\r\nContent-Length: 0\r\n\r\n"
+        val t0 = System.nanoTime()
+        os.write(req.getBytes(StandardCharsets.US_ASCII))
+        os.flush()
+        val (complete, body) = readChunkedResponse(in)
+        val wall = System.nanoTime() - t0
+        val last = body.linesIterator.filter(_.nonEmpty).toSeq.lastOption.getOrElse("")
+        println(s"probe\t$cmd\t$wall\t$complete\t$last")
+      }
+    } finally { sock.close(); fe.stop() }
+    sys.exit(0)
+  }
+
+  private def readLine(in: InputStream): String = {
+    val b = new ByteArrayOutputStream()
+    var c = in.read()
+    while (c != -1 && c != '\n') { b.write(c); c = in.read() }
+    b.toString(StandardCharsets.US_ASCII).stripSuffix("\r")
+  }
+
+  /** Status line and headers, then the chunked body up to its zero-size
+    * terminator. Returns whether the terminator arrived, and the body.
+    */
+  private def readChunkedResponse(in: InputStream): (Boolean, String) = {
+    val status = readLine(in)
+    require(status.startsWith("HTTP/1.1 200"), s"status: $status")
+    Iterator.continually(readLine(in)).takeWhile(_.nonEmpty).foreach(_ => ())
+    val body = new ByteArrayOutputStream()
+    var size = -1
+    while (size != 0) {
+      val sizeLine = readLine(in)
+      if (sizeLine.isEmpty) return (false, body.toString(StandardCharsets.UTF_8))
+      size = Integer.parseInt(sizeLine.takeWhile(_ != ';').trim, 16)
+      body.write(in.readNBytes(size))
+      readLine(in) // CRLF after the chunk data, or the empty trailer after the last chunk
+    }
+    (true, body.toString(StandardCharsets.UTF_8))
   }
 }

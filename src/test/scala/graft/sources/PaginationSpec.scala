@@ -133,4 +133,39 @@ class PaginationSpec extends AnyFunSuite {
     assert(sleeps.toList == List(200000000L)) // first free, second paced 200ms
     assert(inner.requests.size == 2)
   }
+
+  test("JdkHttpClient: follows redirects, returns error bodies, decodes the declared charset") {
+    val server = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    def reply(ex: com.sun.net.httpserver.HttpExchange, status: Int, body: Array[Byte],
+        headers: (String, String)*): Unit = {
+      headers.foreach { case (k, v) => ex.getResponseHeaders.set(k, v) }
+      ex.sendResponseHeaders(status, if (body.isEmpty) -1 else body.length)
+      if (body.nonEmpty) ex.getResponseBody.write(body)
+      ex.close()
+    }
+    server.createContext("/", ex => ex.getRequestURI.getPath match {
+      case "/old" => reply(ex, 302, Array.emptyByteArray, "Location" -> "/new")
+      case "/new" =>
+        val token = Option(ex.getRequestHeaders.getFirst("X-Token")).getOrElse("")
+        reply(ex, 200, s"""{"name":"caf\u00e9","token":"$token"}""".getBytes("ISO-8859-1"),
+          "Content-Type" -> "application/json; charset=ISO-8859-1")
+      case "/loop" => reply(ex, 307, Array.emptyByteArray, "Location" -> "/loop")
+      case _ => reply(ex, 404, """{"error":"nope"}""".getBytes("UTF-8"))
+    })
+    server.start()
+    try {
+      val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+      val c = new JdkHttpClient()
+      val r = c.get(HttpRequest(s"$base/old", headers = Seq("X-Token" -> "t1")))
+      assert(r.status == 200)
+      assert(r.json.get("name").asText == "caf\u00e9")
+      assert(r.json.get("token").asText == "t1") // headers ride along the redirect
+      assert(r.header("content-type").exists(_.contains("ISO-8859-1")))
+      val missing = c.get(HttpRequest(s"$base/missing"))
+      assert(missing.status == 404 && missing.body == """{"error":"nope"}""")
+      // a redirect loop stops after 5 hops and surfaces the 3xx
+      assert(c.get(HttpRequest(s"$base/loop")).status == 307)
+    } finally server.stop(0)
+  }
 }
