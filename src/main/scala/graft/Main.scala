@@ -1,21 +1,22 @@
 package graft
 
-import java.io.{OutputStreamWriter, Writer}
+import java.io.Writer
 import java.nio.file.{Files, Paths}
 
 import graft.connectors.ConnectorDefs
-import graft.core.{Cmd, Connector, RunConfig}
+import graft.core.{Cmd, Connector, ProtoWriter, RunConfig}
 import graft.sources.JdkHttpClient
 
 /** Airbyte-style CLI frontend (reference `pkg/airbyte/cmd.go:18-76`):
   * `<cmd> --connector <name> [--config file-or-inline] [--state f-o-i]
   * [--catalog f-o-i] [--format airbyte|singer]` — flags are synthesized into
   * the same control NDJSON the server path consumes, then dispatched through
-  * `Connector.handle`. Output is protocol NDJSON on stdout.
+  * `Connector.handle`. Output is protocol NDJSON on stdout, in UTF-8
+  * whatever the platform charset.
   */
 object Main {
   def main(args: Array[String]): Unit = {
-    val out = new OutputStreamWriter(System.out)
+    val out = ProtoWriter.utf8(System.out)
     try run(args, out) finally out.flush()
   }
 

@@ -1,7 +1,10 @@
 package graft.core
 
 import java.io.Writer
+import java.util.concurrent.ExecutionException
 import java.util.concurrent.atomic.AtomicReference
+
+import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.JsonNode
 
@@ -114,7 +117,7 @@ final case class SourceDef(
     * `sourcedef.go:120-126`, `proto.go:299-303`).
     */
   def spec: String =
-    s"""{"documentationUrl":${Json.write(Json.mapper.valueToTree(docsUrl))},"supportsIncremental":$supportsIncremental,"connectionSpecification":$configSchema}"""
+    s"""{"documentationUrl":${Json.quote(docsUrl)},"supportsIncremental":$supportsIncremental,"connectionSpecification":$configSchema}"""
 }
 
 object Connector {
@@ -171,7 +174,7 @@ object Connector {
         runner.stream(rc.config, rc.states.get(sd.name))
           .copy(maxPages = 1).fetch(client).take(1).toList
         None
-      } catch { case e: Throwable => Some(s"${sd.name}: ${e.getMessage}") }
+      } catch { case NonFatal(e) => Some(s"${sd.name}: ${e.getMessage}") }
     }.toList
     val transport = client
     val manualFailed = src.manualRunners.zipWithIndex.flatMap { case (runner, i) =>
@@ -186,7 +189,7 @@ object Connector {
       try { runner.run(probeCtx); None }
       catch {
         case ProbeDone => None // first emit arrived — probe succeeded
-        case e: Throwable => Some(s"manual[$i]: ${e.getMessage}")
+        case NonFatal(e) => Some(s"manual[$i]: ${e.getMessage}")
       }
     }
     val failed = httpFailed ++ manualFailed
@@ -215,8 +218,11 @@ object Connector {
     * (reference errgroup + semaphore throttler, `sourcedef.go:153-186`):
     * that many workers on the shared pool take the streams in order.
     * A runner error becomes an in-band LOG and the sync proceeds (reference
-    * error trapping, `proto.go:314-332`). State is emitted only after the
-    * stream's records are fully written.
+    * error trapping, `proto.go:314-332`). Either kind of error cancels the
+    * streams not yet started. A fatal one (`OutOfMemoryError`,
+    * `InterruptedException`, ...) writes no LOG: once the streams already
+    * running have ended, it is thrown out of the sync as itself. State is
+    * emitted only after the stream's records are fully written.
     */
   private def read(src: SourceDef, rc: RunConfig, w: ProtoWriter, httpClient: HttpClient): Unit = {
     val streams = selected(src, rc)
@@ -238,9 +244,12 @@ object Connector {
         runner.newState(rc.config, st)
           .foreach(s => lock.synchronized(w.writeState(sd.name, s)))
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           firstError.compareAndSet(null, e)
           lock.synchronized(w.writeLog("ERROR", s"${sd.name}: ${e.getMessage}"))
+        case e: Throwable =>
+          firstError.compareAndSet(null, e) // the other workers start no new stream
+          throw e
       }
     val pending = new java.util.concurrent.ConcurrentLinkedQueue[(StreamDef, HttpRunner)]()
     streams.foreach(pending.add)
@@ -252,7 +261,10 @@ object Connector {
         }
       })
     }
-    workers.foreach(_.get())
+    val fatal = workers.flatMap { f =>
+      try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+    }
+    fatal.headOption.foreach(e => throw e)
     // manual (push) runners, driver-side (reference backend.go:9-48)
     if (src.manualRunners.nonEmpty) {
       val ctx = new ManualContext {
@@ -274,7 +286,7 @@ object Connector {
       }
       src.manualRunners.foreach { r =>
         try r.run(ctx)
-        catch { case e: Throwable => lock.synchronized(w.writeLog("ERROR", e.getMessage)) }
+        catch { case NonFatal(e) => lock.synchronized(w.writeLog("ERROR", e.getMessage)) }
       }
     }
   }

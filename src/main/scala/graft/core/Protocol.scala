@@ -1,6 +1,7 @@
 package graft.core
 
-import java.io.{BufferedReader, Writer}
+import java.io.{BufferedWriter, OutputStream, OutputStreamWriter, Writer}
+import java.nio.charset.StandardCharsets
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
@@ -21,6 +22,8 @@ object Json {
   def parse(s: String): JsonNode = mapper.readTree(s)
   def obj(): ObjectNode = mapper.createObjectNode()
   def write(n: JsonNode): String = mapper.writeValueAsString(n)
+  /** `s` as a JSON string literal. */
+  def quote(s: String): String = mapper.writeValueAsString(s)
 }
 
 final case class RunConfig(
@@ -112,6 +115,14 @@ object Cmd {
   * Emission ordering mirrors the dialects: Airbyte registers per-stream
   * state and emits ONE STATE at close (`pkg/airbyte/proto.go:43-51`);
   * Singer emits STATE inline (`pkg/singer/singer_stream.go:41-60`).
+  *
+  * Record text: `writeRecord` puts `dataJson` into the RECORD envelope as
+  * is. From an HTTP stream that is the upstream's own text for the record,
+  * whitespace outside strings removed ([[graft.sources.Page]]), so raw
+  * number spellings such as `1.50` reach the output unchanged, as with
+  * fastjson in the reference. The envelope is written piece by piece around
+  * it, with a per-stream prefix built once. Not thread-safe: callers
+  * serialize their calls.
   */
 trait ProtoWriter {
   def openStream(stream: StreamDef): Unit
@@ -141,6 +152,13 @@ object ProtoWriter {
     */
   def supported(format: String): Boolean =
     format == "" || format == "airbyte" || format == "singer"
+
+  /** The sink every frontend writes protocol NDJSON through: UTF-8 whatever
+    * the platform charset, and buffered, so a line costs no allocation in
+    * the encoder. The caller flushes.
+    */
+  def utf8(out: OutputStream): Writer =
+    new BufferedWriter(new OutputStreamWriter(out, StandardCharsets.UTF_8))
 }
 
 /** Airbyte NDJSON dialect (reference `pkg/airbyte/proto.go`,
@@ -149,27 +167,34 @@ object ProtoWriter {
 final class AirbyteWriter(out: Writer, clock: () => Long) extends ProtoWriter {
   private val opened = mutable.LinkedHashMap[String, StreamDef]()
   private val states = mutable.LinkedHashMap[String, String]()
+  private val recordPrefix = mutable.HashMap[String, String]()
 
   private def emit(s: String): Unit = { out.write(s); out.write('\n') }
 
   override def openStream(stream: StreamDef): Unit = opened(stream.name) = stream
 
-  override def writeRecord(stream: String, dataJson: String): Unit =
-    emit(s"""{"type":"RECORD","record":{"stream":"$stream","emitted_at":${clock()},"data":$dataJson}}""")
+  override def writeRecord(stream: String, dataJson: String): Unit = {
+    out.write(recordPrefix.getOrElseUpdate(stream,
+      s"""{"type":"RECORD","record":{"stream":${Json.quote(stream)},"emitted_at":"""))
+    out.write(java.lang.Long.toString(clock()))
+    out.write(""","data":""")
+    out.write(dataJson)
+    out.write("}}\n")
+  }
 
   /** State is registered, not streamed (reference `stream_proto.go:42-45`). */
   override def writeState(stream: String, stateJson: String): Unit =
     states(stream) = stateJson
 
   override def writeLog(level: String, message: String): Unit =
-    emit(s"""{"type":"LOG","log":{"level":"$level","message":${Json.write(Json.mapper.valueToTree(message))}}}""")
+    emit(s"""{"type":"LOG","log":{"level":"$level","message":${Json.quote(message)}}}""")
 
   override def writeSpec(spec: String): Unit =
     emit(s"""{"type":"SPEC","spec":$spec}""")
 
   override def writeStatus(ok: Boolean, reason: String): Unit = {
     val status = if (ok) "SUCCEEDED" else "FAILED"
-    emit(s"""{"type":"CONNECTION_STATUS","connectionStatus":{"status":"$status","message":${Json.write(Json.mapper.valueToTree(reason))}}}""")
+    emit(s"""{"type":"CONNECTION_STATUS","connectionStatus":{"status":"$status","message":${Json.quote(reason)}}}""")
   }
 
   /** discover → CATALOG of opened schemas; read → single STATE doc
@@ -179,13 +204,13 @@ final class AirbyteWriter(out: Writer, clock: () => Long) extends ProtoWriter {
     cmd match {
       case Cmd.Discover =>
         val streams = opened.values.map { s =>
-          s"""{"name":"${s.name}","json_schema":${s.jsonSchema},"supported_sync_modes":[${
+          s"""{"name":${Json.quote(s.name)},"json_schema":${s.jsonSchema},"supported_sync_modes":[${
             if (s.incremental) "\"full_refresh\",\"incremental\"" else "\"full_refresh\""
-          }]${s.namespace.fold("")(ns => s""","namespace":"$ns"""")}}"""
+          }]${s.namespace.fold("")(ns => s""","namespace":${Json.quote(ns)}""")}}"""
         }.mkString(",")
         emit(s"""{"type":"CATALOG","catalog":{"streams":[$streams]}}""")
       case Cmd.Read =>
-        val data = states.map { case (k, v) => s""""$k":$v""" }.mkString(",")
+        val data = states.map { case (k, v) => s"""${Json.quote(k)}:$v""" }.mkString(",")
         emit(s"""{"type":"STATE","state":{"data":{$data}}}""")
       case _ => ()
     }
@@ -198,12 +223,14 @@ final class AirbyteWriter(out: Writer, clock: () => Long) extends ProtoWriter {
   * RECORD with `time_extracted`, inline STATE/LOG.
   */
 final class SingerWriter(out: Writer, clock: () => Long) extends ProtoWriter {
+  private val recordPrefix = mutable.HashMap[String, String]()
+
   private def emit(s: String): Unit = { out.write(s); out.write('\n') }
 
   override def openStream(stream: StreamDef): Unit = {
-    val keys = stream.primaryKey.map(f => s""""${f.dotted}"""").mkString(",")
-    val order = stream.orderBy.map(f => s""""${f.dotted}"""").mkString(",")
-    emit(s"""{"type":"SCHEMA","stream":"${stream.name}","schema":${stream.jsonSchema},"key_properties":[$keys]${
+    val keys = stream.primaryKey.map(f => Json.quote(f.dotted)).mkString(",")
+    val order = stream.orderBy.map(f => Json.quote(f.dotted)).mkString(",")
+    emit(s"""{"type":"SCHEMA","stream":${Json.quote(stream.name)},"schema":${stream.jsonSchema},"key_properties":[$keys]${
       if (order.nonEmpty) s""","order_by_properties":[$order]""" else ""
     }}""")
   }
@@ -212,22 +239,28 @@ final class SingerWriter(out: Writer, clock: () => Long) extends ProtoWriter {
   // parity (`pkg/singer/singer.go:29`, NewNumberInt(time.Now().Unix())) —
   // the Singer spec itself says RFC3339, but compatibility with the
   // reference's own consumers governs here.
-  override def writeRecord(stream: String, dataJson: String): Unit =
-    emit(s"""{"type":"RECORD","stream":"$stream","time_extracted":${clock() / 1000},"record":$dataJson}""")
+  override def writeRecord(stream: String, dataJson: String): Unit = {
+    out.write(recordPrefix.getOrElseUpdate(stream,
+      s"""{"type":"RECORD","stream":${Json.quote(stream)},"time_extracted":"""))
+    out.write(java.lang.Long.toString(clock() / 1000))
+    out.write(""","record":""")
+    out.write(dataJson)
+    out.write("}\n")
+  }
 
   /** Inline, stream-scoped (reference `singer_stream.go:41-60`). */
   override def writeState(stream: String, stateJson: String): Unit =
-    emit(s"""{"type":"STATE","value":{"$stream":$stateJson}}""")
+    emit(s"""{"type":"STATE","value":{${Json.quote(stream)}:$stateJson}}""")
 
   override def writeLog(level: String, message: String): Unit =
-    emit(s"""{"type":"LOG","log":{"level":"$level","message":${Json.write(Json.mapper.valueToTree(message))}}}""")
+    emit(s"""{"type":"LOG","log":{"level":"$level","message":${Json.quote(message)}}}""")
 
   override def writeSpec(spec: String): Unit =
     emit(s"""{"type":"SPEC","spec":$spec}""")
 
   override def writeStatus(ok: Boolean, reason: String): Unit = {
     val status = if (ok) "SUCCEEDED" else "FAILED"
-    emit(s"""{"type":"STATUS","status":{"status":"$status","message":${Json.write(Json.mapper.valueToTree(reason))}}}""")
+    emit(s"""{"type":"STATUS","status":{"status":"$status","message":${Json.quote(reason)}}}""")
   }
 
   override def close(cmd: Cmd): Unit = out.flush()

@@ -1,6 +1,6 @@
 package graft.server
 
-import java.io.{OutputStreamWriter, Writer}
+import java.io.Writer
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
@@ -8,7 +8,7 @@ import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import graft.core.{Cmd, Connector, RunConfig, SourceDef}
+import graft.core.{Cmd, Connector, Json, ProtoWriter, RunConfig, SourceDef}
 import graft.sources.HttpClient
 
 /** HTTP multiplex frontend (reference `proto.go:149-212`,
@@ -101,7 +101,7 @@ final class HttpFrontend(
         TokenAuth.verify(auth, normPath, authKeys,
           now = () => clock() / 1000) match {
           case Left(reason) =>
-            respond(ex, 401, _.write(s"""{"error":${graft.core.Json.write(graft.core.Json.mapper.valueToTree(reason))}}"""))
+            respond(ex, 401, _.write(s"""{"error":${Json.quote(reason)}}"""))
             return
           case Right(_) => ()
         }
@@ -109,7 +109,7 @@ final class HttpFrontend(
       val path = normPath.stripPrefix("/").stripSuffix("/")
       path.split('/') match {
         case Array("discover") =>
-          val names = connectors.keys.toSeq.sorted.map(n => s""""$n"""").mkString("[", ",", "]")
+          val names = connectors.keys.toSeq.sorted.map(Json.quote).mkString("[", ",", "]")
           respond(ex, 200, out => out.write(names))
         case Array(connector, cmdStr) =>
           (connectors.get(connector), Cmd.parse(cmdStr)) match {
@@ -122,9 +122,8 @@ final class HttpFrontend(
               // client would see an empty success. The reference fails its
               // protos[format] lookup before any output too
               // (proto.go:103-107).
-              if (!graft.core.ProtoWriter.supported(rc.format)) {
-                respond(ex, 400, _.write(s"""{"error":${graft.core.Json.write(
-                  graft.core.Json.mapper.valueToTree(s"unknown format '${rc.format}'"))}}"""))
+              if (!ProtoWriter.supported(rc.format)) {
+                respond(ex, 400, _.write(s"""{"error":${Json.quote(s"unknown format '${rc.format}'")}}"""))
                 return
               }
               // Full transport stack per request (retry OUTSIDE pacing, so
@@ -140,11 +139,13 @@ final class HttpFrontend(
       }
     } catch {
       case NonFatal(e) =>
-        try respond(ex, 500, _.write(s"""{"error":${graft.core.Json.write(graft.core.Json.mapper.valueToTree(e.getMessage))}}"""))
+        try respond(ex, 500, _.write(s"""{"error":${Json.quote(e.getMessage)}}"""))
         catch { case NonFatal(_) => () }
     } finally ex.close()
 
-  /** zstd content negotiation, then stream the writer's output. */
+  /** zstd content negotiation, then stream the writer's output through
+    * one buffered UTF-8 writer ([[ProtoWriter.utf8]]).
+    */
   private def respond(ex: HttpExchange, status: Int, write: Writer => Unit): Unit = {
     val wantZstd = Option(ex.getRequestHeaders.getFirst("Accept-Zstd")).exists(_.nonEmpty)
     ex.getResponseHeaders.set("Content-Type", "application/x-ndjson")
@@ -152,7 +153,7 @@ final class HttpFrontend(
     ex.sendResponseHeaders(status, 0) // chunked
     val raw = ex.getResponseBody
     val sink = if (wantZstd) new com.github.luben.zstd.ZstdOutputStream(raw) else raw
-    val w = new OutputStreamWriter(sink, StandardCharsets.UTF_8)
+    val w = ProtoWriter.utf8(sink)
     try { write(w); w.flush() } finally sink.close()
   }
 }

@@ -1,13 +1,18 @@
 package graft.sources
 
+import scala.collection.mutable
+
+import com.fasterxml.jackson.core.{JsonParser, JsonToken}
 import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.{MissingNode, ObjectNode}
 
 import graft.core.Json
 
 /** HTTP source family: a generic paginated fetch loop with pluggable
-  * pagination strategies, a retry/backoff client wrapper, and JSON-path
-  * record descent — the reference's "scan loop" re-expressed as pure
-  * strategy objects (testable against an in-process mock server, no egress).
+  * pagination strategies, a retry/backoff client wrapper, and a one-pass
+  * page decoder that hands out each record as its own JSON text — the
+  * reference's "scan loop" re-expressed as pure strategy objects (testable
+  * against an in-process mock server, no egress).
   *
   * Reference evidence per strategy:
   *  - NextUrl:    follow `next` link in body      (`integrations/pokeapi/poke.go:32-40`)
@@ -223,10 +228,10 @@ final class RateLimitedClient(
   }
 }
 
-/** A pagination strategy decides the next request from the last response. */
+/** A pagination strategy decides the next request from the last page. */
 trait Pagination {
   def first(base: HttpRequest): HttpRequest = base
-  def next(base: HttpRequest, last: HttpResponse): Option[HttpRequest]
+  def next(base: HttpRequest, last: Page): Option[HttpRequest]
 }
 
 object Pagination {
@@ -235,8 +240,8 @@ object Pagination {
     * OData `@odata.nextLink`).
     */
   final case class NextUrl(field: String*) extends Pagination {
-    override def next(base: HttpRequest, last: HttpResponse): Option[HttpRequest] = {
-      val n = field.foldLeft(last.json)((j, f) => if (j == null) null else j.get(f))
+    override def next(base: HttpRequest, last: Page): Option[HttpRequest] = {
+      val n = field.foldLeft(last.fields)((j, f) => if (j == null) null else j.get(f))
       Option(n).filterNot(_.isNull).map(_.asText).filter(_.nonEmpty)
         .map(u => HttpRequest(u, Nil, base.headers))
     }
@@ -246,8 +251,8 @@ object Pagination {
     * `integrations/shopify/shopify.go:75-84`).
     */
   final case class LinkHeader() extends Pagination {
-    override def next(base: HttpRequest, last: HttpResponse): Option[HttpRequest] =
-      last.header("Link").flatMap(parseNext)
+    override def next(base: HttpRequest, last: Page): Option[HttpRequest] =
+      last.response.header("Link").flatMap(parseNext)
         .map(u => HttpRequest(u, Nil, base.headers))
 
     /** Parse `<url1>; rel="prev", <url2>; rel="next"` → url2. */
@@ -262,53 +267,180 @@ object Pagination {
     * sentinel (klaviyo: `marker` until 0/absent).
     */
   final case class Marker(bodyField: String, param: String) extends Pagination {
-    override def next(base: HttpRequest, last: HttpResponse): Option[HttpRequest] = {
-      val m = last.json.get(bodyField)
+    override def next(base: HttpRequest, last: Page): Option[HttpRequest] = {
+      val m = last.fields.get(bodyField)
       Option(m).filterNot(_.isNull).map(_.asText).filter(v => v.nonEmpty && v != "0")
         .map(v => base.withParam(param, v))
     }
   }
 
   /** Offset/limit: advance `start` by `num` until a short page (sitoo,
-    * `sitoo.go:56-62`). `recordsPath` locates the page array for the
-    * short-page test.
+    * `sitoo.go:56-62`). The short-page test counts the page's records, so
+    * `recordsPath` must be the stream's own (checked by [[PaginatedStream]]).
     */
   final case class Offset(startParam: String, numParam: String, num: Int, recordsPath: Seq[String])
       extends Pagination {
     override def first(base: HttpRequest): HttpRequest =
       base.withParam(startParam, "0").withParam(numParam, num.toString)
-    override def next(base: HttpRequest, last: HttpResponse): Option[HttpRequest] = {
-      val page = PathDescent.array(last.json, recordsPath)
-      if (page.size < num) None
+    override def next(base: HttpRequest, last: Page): Option[HttpRequest] =
+      if (last.records.size < num) None
       else {
         val lastStart = base.params.collectFirst { case (`startParam`, v) => v.toInt }.getOrElse(0)
         Some(base.withParam(startParam, (lastStart + num).toString))
       }
+  }
+}
+
+/** One decoded page. `records` holds each element of the records array as
+  * its own JSON text: the upstream's source text for the element, with the
+  * whitespace outside strings removed. Number spellings, escapes and key
+  * order stay as the upstream sent them, as fastjson's `MarshalTo` keeps
+  * them in the reference's `EmitBatch` (`proto.go:283-293`). No tree is
+  * built for records. `fields` is the rest of the body as a tree, the
+  * records array left out: with the record count and the response headers,
+  * it is all a [[Pagination]] reads.
+  */
+final case class Page(response: HttpResponse, fields: JsonNode, records: IndexedSeq[String])
+
+object Page {
+  /** Decode `resp`'s body in one streaming pass. `recordsPath` names the
+    * records array (`resp.GetArray(keys...)` in the reference); an empty
+    * path means the body itself is the array. A missing or non-array
+    * records field yields no records. The whole page is decoded before any
+    * record is handed out, so a malformed page fails as a whole.
+    */
+  def apply(resp: HttpResponse, recordsPath: Seq[String]): Page = {
+    val d = new Decoder(resp.body)
+    try {
+      val fields = (d.p.nextToken(), recordsPath) match {
+        case (null, _) => MissingNode.getInstance
+        case (JsonToken.START_ARRAY, Seq()) => d.readArray(); MissingNode.getInstance
+        case (JsonToken.START_OBJECT, path) if path.nonEmpty => d.readObject(path.toList)
+        case _ => Json.mapper.readTree[JsonNode](d.p)
+      }
+      Page(resp, fields, d.records.toIndexedSeq)
+    } finally d.p.close()
+  }
+
+  // The characters the record text is cut at: JSON's four whitespace
+  // characters, then the quote.
+  private val Marks = Array(' ', '\n', '\r', '\t', '"')
+  private val Quote = 4
+
+  /** The decode state of one page. */
+  private final class Decoder(body: String) {
+    val p: JsonParser = Json.mapper.getFactory.createParser(body)
+    val records = mutable.ArrayBuffer[String]()
+    // Per mark, its first position in `body` at or after the last position
+    // looked from (-1: none left, -2: not looked for yet). Positions are
+    // looked from in increasing order, so `String.indexOf` reads the page
+    // about once per mark.
+    private val cursor = Array.fill(Marks.length)(-2)
+
+    /** The fields of the object `p` has just opened, with the records array
+      * at `path` (relative to it) collected into `records` instead.
+      */
+    def readObject(path: List[String]): ObjectNode = {
+      val node = Json.obj()
+      while (p.nextToken() == JsonToken.FIELD_NAME) {
+        val name = p.currentName
+        val t = p.nextToken()
+        if (name == path.head) records.clear() // the last duplicate key wins, as in a tree
+        if (name == path.head && path.tail.isEmpty && t == JsonToken.START_ARRAY) readArray()
+        else if (name == path.head && path.tail.nonEmpty && t == JsonToken.START_OBJECT)
+          node.replace(name, readObject(path.tail))
+        else node.replace(name, Json.mapper.readTree[JsonNode](p))
+      }
+      node
+    }
+
+    /** Each element of the array `p` has just opened, as its own text. */
+    def readArray(): Unit =
+      while (p.nextToken() != JsonToken.END_ARRAY) {
+        val from = p.currentTokenLocation().getCharOffset.toInt
+        p.skipChildren() // to the closing bracket of an object or array
+        p.finishToken() // to the closing quote of a string
+        records += text(from, p.currentLocation().getCharOffset.toInt)
+      }
+
+    /** `body[from, until)`, which the parser has just read as one value,
+      * without the whitespace outside strings. The loop steps from one
+      * whitespace character to the next, and over the strings before each,
+      * with `String.indexOf`: it never visits the characters in between. A
+      * value with no whitespace outside its strings is cut out with
+      * `substring`. JSON allows no raw control character inside a string,
+      * so the result has no newline.
+      */
+    private def text(from: Int, until: Int): String = {
+      var sb: java.lang.StringBuilder = null
+      var copied = from // body[from, copied) is in sb
+      var scanned = from // outside any string
+      var ws = whitespace(from)
+      while (ws < until) {
+        scanned = pastStrings(scanned, ws)
+        if (scanned > ws) ws = whitespace(scanned) // ws is inside a string
+        else {
+          if (sb == null) sb = new java.lang.StringBuilder(until - from)
+          sb.append(body, copied, ws)
+          copied = ws + 1
+          scanned = copied
+          ws = whitespace(copied)
+        }
+      }
+      if (sb == null) body.substring(from, until) else sb.append(body, copied, until).toString
+    }
+
+    /** From `at`, outside any string, past every string that opens before
+      * `ws`: the end of the last one, or `at` if none opens before it.
+      */
+    private def pastStrings(at: Int, ws: Int): Int = {
+      var i = at
+      var open = find(Quote, at)
+      while (open < ws) {
+        var close = find(Quote, open + 1)
+        while (escaped(close)) close = find(Quote, close + 1)
+        i = close + 1
+        open = if (i > ws) Int.MaxValue else find(Quote, i)
+      }
+      i
+    }
+
+    /** Whether the quote at `q` is escaped: an odd run of backslashes. */
+    private def escaped(q: Int): Boolean = {
+      var n = 0
+      while (body.charAt(q - 1 - n) == '\\') n += 1
+      n % 2 == 1
+    }
+
+    private def whitespace(from: Int): Int =
+      math.min(math.min(find(0, from), find(1, from)), math.min(find(2, from), find(3, from)))
+
+    /** The first position of `Marks(k)` at or after `from`, or
+      * `Int.MaxValue`. `from` never decreases from one call to the next.
+      */
+    private def find(k: Int, from: Int): Int = {
+      if (cursor(k) != -1 && cursor(k) < from) cursor(k) = body.indexOf(Marks(k), from)
+      if (cursor(k) == -1) Int.MaxValue else cursor(k)
     }
   }
 }
 
-/** Descend `keys...` to the records array (reference `EmitBatch`,
-  * `proto.go:283-293`: `resp.GetArray(keys...)`).
-  */
-object PathDescent {
-  def array(root: JsonNode, path: Seq[String]): Vector[JsonNode] = {
-    val n = path.foldLeft(root)((j, k) => if (j == null) null else j.get(k))
-    if (n == null || !n.isArray) Vector.empty
-    else (0 until n.size()).iterator.map(n.get).toVector
-  }
-}
-
 /** One paginated HTTP stream: base request builder + pagination + records
-  * path. `fetch` runs the page loop and yields raw record JSON strings —
-  * the engine turns them into a DataFrame with the stream's declared schema
-  * (`spark.read.schema(...).json(ds)`).
+  * path. `fetch` runs the page loop and yields each record as its own JSON
+  * text (see [[Page]] for that contract); the engine turns them into a
+  * DataFrame with the stream's declared schema (`spark.read.schema(...).json(ds)`).
   */
 final case class PaginatedStream(
     base: HttpRequest,
     pagination: Pagination,
     recordsPath: Seq[String],
     maxPages: Int = Int.MaxValue) {
+
+  pagination match {
+    case o: Pagination.Offset => require(o.recordsPath == recordsPath,
+      s"Offset counts records at ${o.recordsPath.mkString(".")} but the stream reads ${recordsPath.mkString(".")}")
+    case _ => ()
+  }
 
   def fetch(client: HttpClient): Iterator[String] = new Iterator[String] {
     private var req: Option[HttpRequest] = Some(pagination.first(base))
@@ -318,10 +450,10 @@ final case class PaginatedStream(
     private def advance(): Unit =
       while (!buf.hasNext && req.isDefined && pages < maxPages) {
         val r = req.get
-        val resp = client.get(r)
+        val page = Page(client.get(r), recordsPath)
         pages += 1
-        buf = PathDescent.array(resp.json, recordsPath).iterator.map(Json.write)
-        req = pagination.next(r, resp)
+        buf = page.records.iterator
+        req = pagination.next(r, page)
       }
 
     override def hasNext: Boolean = { advance(); buf.hasNext }

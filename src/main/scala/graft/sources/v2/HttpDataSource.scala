@@ -258,7 +258,7 @@ final class HttpPartitionReader(readSchema: StructType, props: Map[String, Strin
           override def first(b: graft.sources.HttpRequest) =
             b.withParam(off.startParam, part.startOffset.toString)
               .withParam(off.numParam, off.num.toString)
-          override def next(b: graft.sources.HttpRequest, last: graft.sources.HttpResponse) =
+          override def next(b: graft.sources.HttpRequest, last: graft.sources.Page) =
             off.next(b, last)
         }
         base.copy(pagination = anchored,

@@ -1,6 +1,9 @@
 package graft
 
 import java.io.StringWriter
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.TimeUnit
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -74,6 +77,41 @@ class MainSpec extends AnyFunSuite {
       assert(records.map(_.at("/record/data/productid").asLong).toSet == (0L until 13L).toSet)
       // airbyte dialect: one trailing STATE doc closes the sync
       assert(lines.last.get("type").asText == "STATE")
+    } finally server.stop(0)
+  }
+
+  test("main writes UTF-8 NDJSON to stdout whatever the platform charset") {
+    val server = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", ex => {
+      val body = """{"items":[{"productid":1,"title":"café","moneyprice":"2.0"}]}"""
+        .getBytes(StandardCharsets.UTF_8)
+      ex.getResponseHeaders.set("Content-Type", "application/json; charset=utf-8")
+      ex.sendResponseHeaders(200, body.length)
+      ex.getResponseBody.write(body)
+      ex.close()
+    })
+    server.start()
+    try {
+      // a child JVM whose platform charset cannot encode é
+      val java = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+      // output to files, so a hung child is bounded by waitFor, not by a read
+      val (outFile, errFile) = (Files.createTempFile("main-out", ".ndjson"), Files.createTempFile("main-err", ".txt"))
+      try {
+        val proc = new ProcessBuilder(java, "-Xmx256m", "-Dfile.encoding=US-ASCII",
+          "-cp", System.getProperty("java.class.path"), "graft.Main", "read", "--connector", "sitoo",
+          "--config", s"""{"api_url":"http://127.0.0.1:${server.getAddress.getPort}"}""")
+          .redirectOutput(outFile.toFile).redirectError(errFile.toFile).start()
+        val exited = proc.waitFor(60, TimeUnit.SECONDS)
+        if (!exited) proc.destroyForcibly().waitFor()
+        val stdout = Files.readAllBytes(outFile)
+        def report = s"stdout:\n${new String(stdout, StandardCharsets.UTF_8)}\nstderr:\n" +
+          new String(Files.readAllBytes(errFile), StandardCharsets.UTF_8)
+        assert(exited, s"no exit within 60 s\n$report")
+        assert(proc.exitValue() == 0, report)
+        val want = "\"title\":\"café\"".getBytes(StandardCharsets.UTF_8)
+        assert(stdout.indexOfSlice(want) >= 0, stdout.map(b => f"$b%02x").mkString(" "))
+      } finally { Files.delete(outFile); Files.delete(errFile) }
     } finally server.stop(0)
   }
 }

@@ -227,6 +227,92 @@ class ProtocolSpec extends AnyFunSuite {
     threads.forEach(t => assert(t.isDaemon && t.getName == "graft-fetch", t.getName))
   }
 
+  test("RECORD envelopes carry the upstream's record text verbatim; stream names are JSON-escaped everywhere") {
+    val page = "{\"items\": [ {\"id\": 1, \"amount\": 1.50, \"note\": \"caf\\u00e9 a\\/b\"} ], \"next\": null}"
+    val verbatim: HttpClient = (_: HttpRequest) => HttpResponse(200, page, Map.empty)
+    val rec = "{\"id\":1,\"amount\":1.50,\"note\":\"caf\\u00e9 a\\/b\"}"
+    def run(cmd: Cmd, format: String, name: String): List[String] = {
+      val out = new StringWriter
+      val one = SourceDef(name = "one", httpStreams = Seq(ordersDef.copy(name = name) -> new StubRunner))
+      Connector.handle(one, cmd, RunConfig.Empty.copy(format = format), out, verbatim,
+        clock = () => 1700000000000L)
+      out.toString.linesIterator.toList
+    }
+    def read(format: String, name: String) = run(Cmd.Read, format, name)
+    assert(read("", "orders").head ==
+      s"""{"type":"RECORD","record":{"stream":"orders","emitted_at":1700000000000,"data":$rec}}""")
+    assert(read("singer", "orders")(1) ==
+      s"""{"type":"RECORD","stream":"orders","time_extracted":1700000000,"record":$rec}""")
+    val odd = "a\"b\\c"
+    for ((format, ptr) <- Seq("" -> "/record/stream", "singer" -> "/stream")) {
+      val line = read(format, odd).find(_.contains("RECORD")).get
+      assert(Json.parse(line).at(ptr).asText == odd, line)
+    }
+    // every other line that names the stream parses and names it
+    def named(line: String, ptr: String): Unit =
+      assert(Json.parse(line).at(ptr).fieldNames.next() == odd, line)
+    val singer = read("singer", odd)
+    assert(Json.parse(singer.head).get("type").asText == "SCHEMA", singer.head)
+    assert(Json.parse(singer.head).get("stream").asText == odd, singer.head)
+    named(singer.last, "/value")
+    named(read("", odd).last, "/state/data")
+    val catalog = Json.parse(run(Cmd.Discover, "", odd).head)
+    assert(catalog.at("/catalog/streams/0/name").asText == odd, catalog)
+  }
+
+  test("a fatal error in one read worker cancels the streams not yet started") {
+    val fatal = new OutOfMemoryError("synthetic")
+    val besideStarted = new java.util.concurrent.CountDownLatch(1)
+    val thrower = new java.util.concurrent.atomic.AtomicReference[Thread]()
+    val fatalRunner = new StubRunner {
+      override def stream(config: Option[com.fasterxml.jackson.databind.JsonNode],
+          state: Option[com.fasterxml.jackson.databind.JsonNode]) = {
+        besideStarted.await(10, java.util.concurrent.TimeUnit.SECONDS)
+        thrower.set(Thread.currentThread); throw fatal
+      }
+    }
+    // starts beside the fatal stream, and reads once that worker has ended
+    val besideRunner = new StubRunner {
+      override def stream(config: Option[com.fasterxml.jackson.databind.JsonNode],
+          state: Option[com.fasterxml.jackson.databind.JsonNode]) = {
+        besideStarted.countDown()
+        val deadline = System.nanoTime + 10000000000L
+        def running = thrower.get == null ||
+          (thrower.get ne Thread.currentThread) && thrower.get.getState == Thread.State.RUNNABLE
+        while (running && System.nanoTime < deadline) Thread.sleep(5)
+        super.stream(config, state)
+      }
+    }
+    val three = SourceDef(name = "three", concurrency = 2, httpStreams = Seq(
+      ordersDef.copy(name = "fatal") -> fatalRunner,
+      ordersDef.copy(name = "beside") -> besideRunner,
+      ordersDef.copy(name = "after") -> new StubRunner))
+    val out = new StringWriter
+    val e = intercept[OutOfMemoryError](
+      Connector.handle(three, Cmd.Read, RunConfig.Empty, out, client))
+    assert(e eq fatal)
+    val streams = out.toString.linesIterator.map(Json.parse(_).at("/record/stream").asText).toList
+    assert(streams == List("beside", "beside"), out)
+  }
+
+  test("a fatal runner error is thrown out of handle, not turned into a LOG line or FAILED") {
+    val fatal = new OutOfMemoryError("synthetic")
+    val httpFatal = SourceDef(name = "http-fatal", httpStreams = Seq(ordersDef -> new HttpRunner {
+      override def stream(config: Option[com.fasterxml.jackson.databind.JsonNode],
+          state: Option[com.fasterxml.jackson.databind.JsonNode]) = throw fatal
+    }))
+    val manualFatal = SourceDef(name = "manual-fatal",
+      manualStreams = Seq(StreamDef("pushed", ordersDef.schema)),
+      manualRunners = Seq(new ManualRunner {
+        override def run(ctx: ManualContext): Unit = throw fatal
+      }))
+    for (src <- Seq(httpFatal, manualFatal); cmd <- Seq(Cmd.Check, Cmd.Read)) {
+      val e = intercept[OutOfMemoryError](
+        Connector.handle(src, cmd, RunConfig.Empty, new StringWriter, client))
+      assert(e eq fatal, s"${src.name} $cmd")
+    }
+  }
+
   test("masked secret renders masked (utils.go:12-24)") {
     assert(Masked("hunter2").toString == "xxxx")
   }

@@ -72,6 +72,55 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  // -- generated pages: JSON text with arbitrary whitespace between tokens --
+  private val ws = Gen.frequency(4 -> Gen.const(""), 1 -> Gen.oneOf(" ", "\n", "\t", "\r\n  ", "\n    "))
+  private val jsonString = Gen.listOf(Gen.frequency(
+    6 -> Gen.alphaNumChar.map(_.toString),
+    1 -> Gen.oneOf(" ", "é", "日", "{", "]", ":", ","),
+    1 -> Gen.oneOf("\\\"", "\\\\", "\\/", "\\n", "\\t", "\\u00e9", "\\ud83d\\ude00")))
+    .map(_.take(12).mkString("\"", "", "\""))
+  private val jsonNumber = Gen.oneOf(
+    Gen.choose(-1000000L, 1000000L).map(_.toString),
+    Gen.const("1.50"), Gen.const("-0.0"), Gen.const("1e3"), Gen.const("2.5E-2"),
+    Gen.const("123456789012345678901234567890"))
+  private val jsonScalar = Gen.oneOf(jsonString, jsonNumber, Gen.oneOf("true", "false", "null"))
+  private def jsonValue(depth: Int): Gen[String] =
+    if (depth == 0) jsonScalar
+    else Gen.frequency(2 -> jsonScalar, 1 -> jsonObject(depth - 1), 1 -> jsonArray(depth - 1))
+  private def jsonArray(depth: Int): Gen[String] = for {
+    n <- Gen.choose(0, 3); vs <- Gen.listOfN(n, Gen.zip(ws, jsonValue(depth), ws))
+  } yield vs.map { case (a, v, b) => a + v + b }.mkString("[", ",", "]")
+  private def jsonObject(depth: Int): Gen[String] = for {
+    n <- Gen.choose(0, 3); kvs <- Gen.listOfN(n, Gen.zip(ws, jsonString, ws, ws, jsonValue(depth), ws))
+  } yield kvs.map { case (a, k, b, c, v, d) => a + k + b + ":" + c + v + d }.mkString("{", ",", "}")
+
+  test("page pass: every record is one line and parses to its element of the page's tree") {
+    val otherKeys = Gen.oneOf("\"a\"", "\"next\"", "\"meta\"", "\"n\\u0065xt\"")
+    val page = for {
+      before <- Gen.listOfN(2, Gen.zip(otherKeys, jsonValue(1)))
+      elems <- Gen.choose(0, 6).flatMap(n => Gen.listOfN(n, Gen.zip(ws, jsonValue(3), ws)))
+      after <- Gen.listOfN(2, Gen.zip(otherKeys, jsonValue(1)))
+      sp <- ws
+    } yield {
+      val fields = (before.map { case (k, v) => s"$k:$sp$v" } :+
+        elems.map { case (a, v, b) => a + v + b }.mkString(s"\"data\":$sp{\"items\":$sp[", ",", s"]$sp}")) ++
+        after.map { case (k, v) => s"$k:$sp$v" }
+      fields.mkString(s"{$sp", s",$sp", s"$sp}")
+    }
+    check(Prop.forAll(page) { body =>
+      val recs = PaginatedStream(HttpRequest("http://x"), Pagination.Marker("next", "m"),
+        Seq("data", "items")).copy(maxPages = 1)
+        .fetch(_ => HttpResponse(200, body, Map.empty)).toVector
+      // the test descends the page's tree itself
+      val items = graft.core.Json.parse(body).get("data").get("items")
+      val ok = recs.size == items.size && recs.zipWithIndex.forall { case (r, i) =>
+        !r.contains('\n') && !r.contains('\r') && graft.core.Json.parse(r) == items.get(i) &&
+          !r.replaceAll("\"(?:[^\"\\\\]|\\\\.)*\"", "").exists(Character.isWhitespace)
+      }
+      Prop(ok) :| s"page: $body\nrecords: ${recs.mkString("\n")}"
+    })
+  }
+
   test("rate limiter: cumulative wait enforces the sustained rate for any burst pattern") {
     val acquires = Gen.choose(2, 40)
     val rates = Gen.oneOf(1.0, 5.0, 50.0)

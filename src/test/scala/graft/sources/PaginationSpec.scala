@@ -81,6 +81,125 @@ class PaginationSpec extends AnyFunSuite {
     assert(c.requests.map(_.fullUrl).toList == List("http://o/p1", "http://o/p2"))
   }
 
+  // -- record text: each element of the records array as its own JSON text --
+
+  private def onePage(body: String, path: String*): List[String] =
+    PaginatedStream(HttpRequest("http://x/p"), Pagination.NextUrl("next"), path)
+      .fetch(new Script(ok(body))).toList
+
+  test("record text: a pretty-printed page yields one line per record, whitespace outside strings removed") {
+    val body =
+      """{
+        |  "results": [
+        |    {
+        |      "name": "a b",
+        |      "tags": [ 1, 2 ]
+        |    },
+        |    { "name" : "c\td" }
+        |  ],
+        |  "next": null
+        |}""".stripMargin
+    val recs = onePage(body, "results")
+    assert(recs == List("""{"name":"a b","tags":[1,2]}""", """{"name":"c\td"}"""))
+    assert(recs.forall(r => !r.contains('\n') && !r.contains('\r')))
+  }
+
+  test("record text: whitespace inside strings is kept, next to escaped quotes and backslashes") {
+    val body = "{\"results\":[{\"a\": \"x \\\" y\", \"b\\\\\" :\"\\\\\", \"c\":[ \"p q\" , 1 ]}," +
+      "{\"s\":\"only inside\",\"t\":\"\\\\\\\" \"}]}"
+    assert(onePage(body, "results") == List(
+      "{\"a\":\"x \\\" y\",\"b\\\\\":\"\\\\\",\"c\":[\"p q\",1]}",
+      "{\"s\":\"only inside\",\"t\":\"\\\\\\\" \"}"))
+  }
+
+  test("record text: a page longer than the parser's read buffer") {
+    val recs = (0 until 2000).map { i =>
+      s"""{"id":$i,"s":"${"x" * (i % 40)}${if (i % 2 == 0) "" else " y"}","n":[$i,${i}.50]}"""
+    }
+    val body = recs.zipWithIndex.map { case (r, i) => if (i % 3 == 0) r.replace(":", " : ") else r }
+      .mkString("{\"results\":[", ",\n ", "],\"next\":null}")
+    assert(body.length > 0x8000) // Jackson reads a String this long through a Reader, in chunks
+    assert(onePage(body, "results") == recs)
+  }
+
+  test("record text: the pagination field may sit before or after the records array") {
+    for (body <- Seq(
+        """{"next":"http://x/p2","results":[{"id":1}]}""",
+        """{"results":[{"id":1}],"next":"http://x/p2"}""")) {
+      val c = new Script(ok(body), ok("""{"results":[{"id":2}],"next":null}"""))
+      val recs = PaginatedStream(HttpRequest("http://x/p1"),
+        Pagination.NextUrl("next"), Seq("results")).fetch(c).toList
+      assert(recs == List("""{"id":1}""", """{"id":2}"""), body)
+      assert(c.requests.map(_.fullUrl).toList == List("http://x/p1", "http://x/p2"), body)
+    }
+  }
+
+  test("record text: a two-level records path, with a cursor beside the array") {
+    val c = new Script(
+      ok("""{"meta":{"n":1},"data":{"cursor":"m1","items":[{"id":1},{"id":2}],"more":true}}"""),
+      ok("""{"data":{"items":[{"id":3}],"cursor":"0"}}"""))
+    val stream = PaginatedStream(HttpRequest("http://k/t"), new Pagination {
+      override def next(base: HttpRequest, last: Page) = {
+        // the fields tree keeps everything but the records array
+        assert(last.fields.at("/data/items").isMissingNode)
+        Pagination.Marker("cursor", "since").next(base, last.copy(fields = last.fields.get("data")))
+      }
+    }, Seq("data", "items"))
+    assert(stream.fetch(c).toList == List("""{"id":1}""", """{"id":2}""", """{"id":3}"""))
+    assert(c.requests(1).params.contains("since" -> "m1"))
+  }
+
+  test("record text: a missing or non-array records field yields no records; pagination still reads the page") {
+    for (body <- Seq(
+        """{"next":"http://x/p2"}""",
+        """{"results":{"id":1},"next":"http://x/p2"}""",
+        """{"results":null,"next":"http://x/p2"}""",
+        """{"results":"[1,2]","next":"http://x/p2"}""")) {
+      val c = new Script(ok(body), ok("""{"results":[{"id":2}]}"""))
+      val recs = PaginatedStream(HttpRequest("http://x/p1"),
+        Pagination.NextUrl("next"), Seq("results")).fetch(c).toList
+      assert(recs == List("""{"id":2}"""), body)
+      assert(c.requests.size == 2, body)
+    }
+    // an empty path names the body itself; an object body then holds no records
+    assert(onePage("""[{"id":1}, 2]""") == List("""{"id":1}""", "2"))
+    assert(onePage("""{"id":1}""").isEmpty)
+    assert(onePage("").isEmpty)
+  }
+
+  test("record text: scalar elements") {
+    assert(onePage("""{"results":[ 1, -2.50, "x y", true, false, null, [ ], { } ]}""", "results") ==
+      List("1", "-2.50", "\"x y\"", "true", "false", "null", "[]", "{}"))
+  }
+
+  test("record text: number spellings, escapes and non-ASCII pass through verbatim") {
+    // é spelled as a JSON escape, next to a raw é
+    val rec = "{\"a\":1.50,\"b\":1e3,\"c\":123456789012345678901234567890," +
+      "\"d\":\"caf\\u00e9 café\",\"e\":\"a\\/b\",\"f\":-0.0}"
+    assert(onePage(s"""{"results":[ $rec ]}""", "results") == List(rec))
+  }
+
+  test("record text: a malformed page fails as a whole, before any of its records") {
+    val c = new Script(ok("""{"results":[{"id":1},{"id":2},{"id":"""))
+    val it = PaginatedStream(HttpRequest("http://x/p1"), Pagination.NextUrl("next"), Seq("results")).fetch(c)
+    intercept[com.fasterxml.jackson.core.JsonProcessingException](it.hasNext)
+  }
+
+  test("offset stops on a short page, counting the records of the page pass") {
+    val c = new Script(
+      ok("""{"total":5,"page":{"items":[{"id":1},{"id":2},{"id":3}]}}"""),
+      ok("""{"page":{"items":[{"id":4},{"id":5}]},"total":5}"""),
+      ok("""{"page":{"items":[{"id":6}]}}"""))
+    val recs = PaginatedStream(HttpRequest("http://s/p"),
+      Pagination.Offset("start", "num", num = 3, Seq("page", "items")), Seq("page", "items")).fetch(c).toList
+    assert(recs.size == 5)
+    assert(c.requests.size == 2)
+    assert(c.requests(1).params.contains("start" -> "3"))
+    // the short-page test counts the stream's records array, so the two paths must agree
+    intercept[IllegalArgumentException](PaginatedStream(HttpRequest("http://s/p"),
+      Pagination.Offset("start", "num", num = 3, Seq("items")), Seq("page", "items")))
+  }
+
   test("retrying client honors Retry-After then succeeds (utils.go:35-38)") {
     val sleeps = mutable.ArrayBuffer[Long]()
     val c = new Script(
