@@ -8,8 +8,9 @@ import graft.operators.{PqParams, VectorIndex}
   * [[VectorIndex.reindex]]'s train+encode chain used to re-run the full
   * vector-source scan + membership semi-join once per action (~5 corpus
   * passes); since r19 it projects (id, emb, meta) through the membership
-  * join ONCE into `reindex_staging/corpus` and feeds every train/encode
-  * action from that narrow parquet.
+  * join ONCE into the staged `corpus_gen_N` directory (dropped by the
+  * reindex's manifest commit) and feeds every train/encode action from
+  * that narrow parquet.
   *
   * The instrument runs a full reindex against a persisted index at TWO
   * corpus scales — the sf0.1 source and the synthesized 1000× tier — and

@@ -8,14 +8,14 @@ import graft.operators.{PqParams, VectorIndex}
   * r15 #4 / r16 #2): a PRODUCTION-SHAPED change batch — a handful of ids
   * against a large corpus, the micro-batch steady state — applied to the
   * same persisted index twice, once discovering through the sidecar and
-  * once through the legacy full-codes scan (sidecar deleted).
+  * once through the full-codes scan (sidecar deleted).
   *
   * Two instruments, each emitted per corpus scale:
   *
   *   - DISCOVERY-ONLY: wall time + task input bytes of just the
   *     touched-cell discovery ([[VectorIndex.discoverOldCells]]). This is
   *     the phase the sidecar exists to prune; inside a full upsert its
-  *     delta drowns in the route-independent encode/rewrite/occupancy
+  *     delta drowns in the route-independent encode/rewrite/commit
   *     fixed costs (measured r17: whole-upsert bytes differed <1% between
   *     arms while the discovery phase differed by the full codes scan).
   *   - WHOLE-UPSERT: the end-to-end mutation, pinning that both routes

@@ -23,8 +23,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * Null handling: a null array yields null (nullSafeEval), and UNEQUAL
   * LENGTHS yield null — exactly what `aggregate(zip_with(...))` produces
   * (zip_with pads the shorter side with nulls, which poison the sum), so the
-  * [[graft.plans.RewriteDotProduct]] rule is semantics-preserving on ragged
-  * inputs. Null *elements* are not expected in embedding data and read as 0.
+  * two formulations agree on ragged inputs too. Null *elements* are not
+  * expected in embedding data and read as 0.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {

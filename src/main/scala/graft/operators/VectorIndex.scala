@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.VectorFunctions.{argminL2, l2sq}
 
@@ -362,61 +363,58 @@ object VectorIndex extends org.apache.spark.internal.Logging {
           r.getAs[Number]("widened_nprobe").intValue())
     }
 
-  /** Persist quantizer + codes. Codes are laid out partitioned by `cell`,
-    * so a search probing `nprobe` of `k` cells can prune its scan to
-    * `nprobe/k` of the files — the layout IS the coarse index on disk
-    * ([[searchAdcPruned]] exploits exactly this). Also persists the
-    * per-cell occupancy table (see [[cellOccupancy]]) so the index carries
-    * its own skew accounting from birth.
+  /** Persist quantizer + codes as the index's next generation. Codes are
+    * laid out partitioned by `cell`, so a search probing `nprobe` of `k`
+    * cells can prune its scan to `nprobe/k` of the files — the layout IS
+    * the coarse index on disk ([[searchAdcPruned]] exploits exactly this).
+    * The per-cell occupancy (see [[cellOccupancy]]) rides the same
+    * manifest commit, so the index carries its own skew accounting from
+    * birth.
+    *
+    * Every part is staged COMPLETE in the next generation's directories
+    * and published by one manifest commit: a fresh path commits
+    * generation 1, and a rebuild of a live index never overwrites the
+    * directories a concurrent reader may still be scanning. Applied-batch
+    * marks carry over, so a replayed streaming batch stays refused.
     */
   def write(quant: IvfadcQuantizer, codes: DataFrame, path: String): Unit = {
     val s = codes.sparkSession
     withWriterLease(s, path, "write") {
-      // settle a crashed-but-committed reindex FIRST: its promote rolling
-      // forward AFTER this rebuild would overwrite the fresh index with the
-      // stale staged build
-      recoverReindex(s, path)
-      val snap = snapshot(s, path)
-      // A generation-managed index (≥1 committed swap) is rebuilt with the
-      // same reader-atomic discipline as compact/split/reindex: stage the
-      // full part set COMPLETE in the next generation's directories, then
-      // flip the manifest in one commit — never overwrite the directories
-      // the live manifest references in place, which a concurrent reader
-      // resolving the live snapshot is still scanning. A fresh/legacy flat
-      // index (gen 0, no manifest) writes flat, as ever.
-      val managed = manifestGens(hadoopFs(s, path), path).nonEmpty
-      val dirs: Map[String, String] =
-        if (managed) indexParts.map(p => p -> stagedDirName(snap, p)).toMap
-        else flatDirs
-      def dst(part: String) = s"$path/${dirs(part)}"
-      // a rebuild re-cells everything: the old sidecar mapping dies NOW
-      // (absence = safe fallback through every crash window below) and is
-      // rebuilt fresh from the written codes at the end
-      hadoopFs(s, path).delete(idMapPath(path), true)
-      quant.cents.write.mode("overwrite").parquet(dst("cents"))
-      quant.csubs.write.mode("overwrite").parquet(dst("codebook"))
-      // cluster by cell before the partitioned write: without it every input
-      // task emits a file into every cell directory (tasks × cells small
-      // files — measured as the dominant cost of the index build); with it
-      // each cell's rows sit in one task → one file per cell, and every
-      // later reload/prune opens k files instead of tasks·k
-      codes.repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(dst("codes"))
-      // fresh directory: its schema marker is exactly what was written
-      // (full-rows reads then skip the all-footers merge — see the marker's
-      // section doc); written before the manifest commit publishes the dir
-      writeSchemaMarker(s, dst("codes"), codes.schema)
-      cellOccupancy(s.read.parquet(dst("codes"))
-        .select(col("vec_id"), col("cell"), col("m"), col("code")))
-        .write.mode("overwrite").parquet(dst("occupancy"))
-      if (managed) commitParts(s, path, dirs)
-      // an index born past the read threshold carries the discovery
-      // sidecar from birth (the staged dir IS the live dir once the
-      // manifest commits — no rename); smaller ones discover via the
-      // full scan until they grow (see sidecarReadMinBytes lifecycle)
-      if (codesBytes(s, dst("codes")) >= sidecarReadMinBytes)
-        rebuildIdMapFrom(s, path, dst("codes"))
+      commitRebuild(s, latest(s, path).fold(emptySnapshot(path))(settled(s, _)),
+        quant, codes)
     }
+  }
+
+  /** The full-rebuild commit shared by [[write]] and [[reindex]]: stage
+    * cents, codebook and codes into the next generation's directories,
+    * count occupancy off the staged codes, and flip the manifest once.
+    */
+  private def commitRebuild(s: SparkSession, snap: IndexSnapshot,
+      quant: IvfadcQuantizer, codes: DataFrame): Unit = {
+    val path = snap.path
+    val dirs = indexParts.map(p => p -> stagedDirName(snap, p)).toMap
+    def dst(part: String) = s"$path/${dirs(part)}"
+    // a rebuild re-cells everything: the old sidecar mapping dies NOW
+    // (absence = safe fallback through every crash window below) and is
+    // rebuilt fresh from the written codes at the end
+    hadoopFs(s, path).delete(idMapPath(path), true)
+    quant.cents.write.mode("overwrite").parquet(dst("cents"))
+    quant.csubs.write.mode("overwrite").parquet(dst("codebook"))
+    // cluster by cell before the partitioned write: without it every input
+    // task emits a file into every cell directory (tasks × cells small
+    // files — measured as the dominant cost of the index build); with it
+    // each cell's rows sit in one task → one file per cell, and every
+    // later reload/prune opens k files instead of tasks·k
+    codes.repartition(col("cell"))
+      .write.mode("overwrite").partitionBy("cell").parquet(dst("codes"))
+    val schema = nullableSchema(codes.schema)
+    val occ = countsOf(cellOccupancy(s.read.schema(schema).parquet(dst("codes"))))
+    commit(s, snap)(_.copy(dirs = dirs, schema = schema, occupancy = occ))
+    // an index born past the read threshold carries the discovery sidecar
+    // from birth; smaller ones discover via the full scan until they grow
+    // (see sidecarReadMinBytes lifecycle)
+    if (codesBytes(s, dst("codes")) >= sidecarReadMinBytes)
+      rebuildIdMapFrom(s, path, dst("codes"))
   }
 
   def loadQuantizer(s: SparkSession, path: String, pq: PqParams): IvfadcQuantizer =
@@ -448,9 +446,21 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     */
   def loadCodes(s: SparkSession, snap: IndexSnapshot,
       meta: Seq[String] = Nil): DataFrame =
-    s.read.parquet(snap.partPath("codes"))
+    codesRead(s, snap)
       .select(col("vec_id") +: col("cell") +: col("m") +: col("code") +:
         meta.map(col): _*)
+
+  /** Codes with EVERY stored column (streaming `__batch` stamps included,
+    * whichever files carry them), read under the manifest's full-rows
+    * schema — no footer scan; files predating a column read it as null.
+    * [[loadCodes]] projects the search schema; maintenance paths need the
+    * full rows to rewrite losslessly.
+    */
+  private def codesRead(s: SparkSession, snap: IndexSnapshot): DataFrame =
+    s.read.schema(snap.schema).parquet(snap.partPath("codes"))
+
+  private[graft] def loadCodesFull(s: SparkSession, path: String): DataFrame =
+    codesRead(s, snapshot(s, path))
 
   /** Index a fresh batch into a persisted index: encode under the FROZEN
     * stored quantizer and append the codes — the persisted corpus codes are
@@ -461,10 +471,6 @@ object VectorIndex extends org.apache.spark.internal.Logging {
   def appendBatch(s: SparkSession, path: String, fresh: DataFrame,
       id: Column, emb: Column, pq: PqParams): Unit =
     withWriterLease(s, path, "appendBatch") {
-      // settle a crashed-but-committed reindex FIRST (same hazard as
-      // appendSink): appending into the superseded generation loses the
-      // batch when the promote later rolls forward and GC's it
-      recoverReindex(s, path)
       appendCodes(s, path, fresh, id, emb, pq, stamp = None, streamId = None)
     }
 
@@ -473,14 +479,14 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     * under the frozen stored quantizer, cell-cluster BEFORE the eager
     * checkpoint (the append then reuses the materialized layout — one new
     * file per touched cell per batch, not one per (task, cell), with no
-    * second pass), append, fold the occupancy delta, and — for stamped
-    * streaming batches — advance the replay high-water mark LAST, so the
-    * marker always trails the durable data.
+    * second pass), commit any new columns (superset-first), append, then
+    * commit the occupancy delta together with the batch's applied mark —
+    * the mark is committed only after the data it covers.
     */
   private def appendCodes(s: SparkSession, path: String, vectors: DataFrame,
       id: Column, emb: Column, pq: PqParams, stamp: Option[Long],
       streamId: Option[String]): Unit = {
-    val snap = snapshot(s, path)
+    val snap = settled(s, path)
     val quant = loadQuantizer(s, snap, pq)
     val encoded = encode(vectors, id, emb, quant)
     val stamped = stamp.fold(encoded)(b => encoded.withColumn("__batch", lit(b)))
@@ -488,14 +494,16 @@ object VectorIndex extends org.apache.spark.internal.Logging {
       .repartition(col("cell")).localCheckpoint()
     // sidecar first (crash between the two leaves harmless extra entries —
     // appendIdMap's invariant), then the codes append
-    appendIdMap(s, path, codes)
-    // schema marker widened BEFORE the data lands (superset-first): a
-    // stamped batch appended without the marker knowing its columns would
-    // silently lose the stamps to every later explicit-schema read
-    widenSchemaMarker(s, snap.partPath("codes"), codes.schema)
+    appendIdMap(s, snap, codes)
+    val live = widenSchema(s, snap, codes.schema)
     codes.write.mode("append").partitionBy("cell").parquet(snap.partPath("codes"))
-    mergeOccupancy(s, path, cellOccupancy(codes))
-    stamp.foreach(writeAppliedBatch(s, path, _, streamId))
+    val delta = countsOf(cellOccupancy(codes))
+    commit(s, live)(m => m.copy(
+      occupancy = delta.foldLeft(m.occupancy) { case (o, (c, n)) =>
+        o.updated(c, o.getOrElse(c, 0L) + n)
+      },
+      applied = stamp.fold(m.applied)(b =>
+        m.applied.updated(streamId, m.applied.get(streamId).fold(b)(_ max b)))))
   }
 
   // ---- deletes / updates -------------------------------------------------
@@ -531,21 +539,22 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     * localCheckpoint (bounded by touched-cell codes + the change batch)
     * before the overwrite so the write never reads the path it replaces.
     *
-    * CRASH WINDOW (documented, with a converging recovery): the upsert is
-    * three mutations — (1) dynamic-overwrite of touched cell partitions,
-    * (2) delete of fully-emptied cell directories, (3) occupancy replace —
-    * and a crash between them leaves (after 1) a fully-tombstoned cell's
-    * stale directory still serving its deleted vectors, or (after 2) a
-    * stale occupancy. Recovery is to RE-RUN THE SAME CHANGE BATCH: the
+    * CRASH WINDOW (documented, with a converging recovery): the upsert
+    * stages the touched cells' rewrite complete, moves each staged cell
+    * over its live one (rolled forward by the next mutation or
+    * [[recover]] if interrupted), deletes fully-emptied cell directories,
+    * and then commits the touched cells' recounted occupancy. A crash
+    * after the moves leaves a fully-tombstoned cell's stale directory
+    * still serving its deleted vectors, or a stale occupancy. Recovery is
+    * to RE-RUN THE SAME CHANGE BATCH: the
     * touched-cell set is re-derived from whatever rows currently match
     * `changedIds` (the stale emptied cell still holds its deleted ids, so
-    * it re-enters `touched`, survives with zero rows, and step 2 drops its
-    * directory), the overwrite is idempotent, and the occupancy replace
-    * recounts the touched cells — so one clean re-run converges the index
-    * to the exact post-upsert state (spec-pinned from the worst
-    * intermediate state in VectorIndexSpec). Occupancy alone can also be
-    * restored at any time by [[refreshOccupancy]]. Single-writer op, like
-    * all maintenance here.
+    * it re-enters `touched`, survives with zero rows, and its directory is
+    * dropped), the rewrite is idempotent, and the commit recounts the
+    * touched cells — so one clean re-run converges the answers to the
+    * exact post-upsert state (spec-pinned by the crash-point sweep).
+    * Occupancy alone can also be restored at any time by
+    * [[refreshOccupancy]]. Single-writer op, like all maintenance here.
     *
     * @param updates frame exposing `id`/`emb` — changed or new vectors
     * @param deletes single-column frame of ids to remove (tombstones)
@@ -565,10 +574,6 @@ object VectorIndex extends org.apache.spark.internal.Logging {
       deletes: DataFrame, id: Column, emb: Column, pq: PqParams,
       meta: Seq[String]): Unit =
     withWriterLease(s, path, "upsertBatch") {
-      // settle a crashed-but-committed reindex FIRST: an upsert applied to
-      // the superseded generation silently vanishes when the promote later
-      // rolls forward
-      recoverReindex(s, path)
       upsertCore(s, path, updates, deletes, id, emb, loadQuantizer(s, path, pq), meta)
     }
 
@@ -583,17 +588,16 @@ object VectorIndex extends org.apache.spark.internal.Logging {
   private def upsertCore(s: SparkSession, path: String, updates: DataFrame,
       deletes: DataFrame, id: Column, emb: Column, quant: IvfadcQuantizer,
       meta: Seq[String]): Unit = {
+    val snap = settled(s, path)
     val delIds = deletes.select(deletes.columns.head).toDF("vec_id")
     val updIds = updates.select(id.as("vec_id"))
     val changedAll = updIds.union(delIds).distinct()
-    // ONE action folds what used to be two (r18 checkpointed here and the
-    // sidecar probe then collected AGAIN — VERDICT r18 #1b): collect the
-    // changed (id, bucket) pairs once, capped at IdProbeCap. A micro-batch-
-    // sized set becomes a LOCAL changedIds relation — its broadcast builds
-    // (the survivors anti-join, the legacy discovery semi-join) and the
-    // sidecar probe all read driver-held rows without any further Spark
-    // job. An over-cap batch keeps the r18 localCheckpoint discipline and
-    // the probe recomputes its buckets distributed, exactly as before.
+    // ONE action collects the changed (id, bucket) pairs, capped at
+    // IdProbeCap. A micro-batch-sized set becomes a LOCAL changedIds
+    // relation — its broadcast builds (the survivors anti-join, the
+    // full-scan discovery semi-join) and the sidecar probe all read
+    // driver-held rows without any further Spark job. An over-cap batch is
+    // localCheckpointed and the probe recomputes its buckets distributed.
     // Ids ride canonically typed ([[canonicalVecId]] — integral as long),
     // matching the sidecar's stored hashing; join-key coercion makes the
     // anti-join against arrival-typed codes exact either way.
@@ -604,12 +608,10 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     val smallBatch = pairRows.length <= IdProbeCap
     val changedIds: DataFrame =
       if (smallBatch) {
-        val idField = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("vec_id",
-            if (isIntegral(changedAll.schema("vec_id").dataType))
-              org.apache.spark.sql.types.LongType
-            else changedAll.schema("vec_id").dataType,
-            nullable = true)))
+        val idField = StructType(Seq(StructField("vec_id",
+          if (isIntegral(changedAll.schema("vec_id").dataType)) LongType
+          else changedAll.schema("vec_id").dataType,
+          nullable = true)))
         s.createDataFrame(
           java.util.Arrays.asList(pairRows.map(r =>
             org.apache.spark.sql.Row(r.get(0))): _*), idField)
@@ -618,18 +620,14 @@ object VectorIndex extends org.apache.spark.internal.Logging {
       if (smallBatch) Some(pairRows.map(r => (r.get(0), r.getLong(1))).toSeq)
       else None
     val newCodes = encode(updates, id, emb, quant, meta).localCheckpoint()
-    val codes = loadCodesFull(s, path)
+    val codes = codesRead(s, snap)
     // Touched-cell set = the old cells of changed ids ∪ the new cells of
     // updated vectors (an update may move a vector between cells). The old
-    // half goes through the id→cell sidecar when present (VERDICT r15 #4:
-    // the full-codes discovery scan was the one per-batch full index pass —
-    // at 100 TB a full pass per micro-batch), reading only the changed
-    // ids' hash-bucket directories; the survivors read below is then
-    // partition-pruned to the touched cells, so the whole upsert reads
-    // touched-cell-order bytes. One action for the cell set itself (plus,
-    // on the sidecar path, one tiny bucket-enumeration action over the
-    // change batch).
-    val touched = oldCellsOf(s, path, codes, changedIds, probedPairs)
+    // half goes through the id→cell sidecar when present, reading only the
+    // changed ids' hash-bucket directories; the survivors read below is
+    // then partition-pruned to the touched cells, so the whole upsert
+    // reads touched-cell-order bytes.
+    val touched = oldCellsOf(s, snap, codes, changedIds, probedPairs)
       .union(newCodes.select(col("cell")))
       .distinct().collect().map(_.get(0)).toSeq
     if (touched.isEmpty) { // empty change batch
@@ -639,55 +637,84 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     }
     // sidecar first, then the codes mutation: a crash between the two
     // leaves only harmless extra entries (see appendIdMap's invariant)
-    appendIdMap(s, path, newCodes)
+    appendIdMap(s, snap, newCodes)
     val survivors = codes.filter(col("cell").isin(touched: _*))
       .join(broadcast(changedIds), Seq("vec_id"), "left_anti")
     // unionByName(allowMissing): a streaming-ingested index carries __batch
     // stamps; upserted rows get null there. Replay detection survives this
     // (and survives deleting max-stamped rows outright) because the
-    // `applied_batch` high-water marker, not the data-derived max alone,
-    // is the primary exactly-once record — see batchApplied. Cell-clustered
-    // BEFORE the eager checkpoint, so the partitioned write below reuses
-    // the materialized layout (one file per cell) without a second pass —
-    // and all reads of the path finish before the overwrite.
+    // manifest's applied mark, not the data-derived max alone, is the
+    // primary exactly-once record. Cell-clustered BEFORE the eager
+    // checkpoint, so the partitioned write below reuses the materialized
+    // layout (one file per cell) without a second pass — and all reads of
+    // the path finish before the overwrite.
     val rewritten = survivors.unionByName(newCodes, allowMissingColumns = true)
       .repartition(col("cell"))
       .localCheckpoint()
     Dedup.dropLocalCheckpoint(changedIds) // consumed by the rewrite above
     Dedup.dropLocalCheckpoint(newCodes)   // folded into the rewrite above
-    val codesDir = snapshot(s, path).partPath("codes")
-    // marker widened BEFORE the rewrite (superset-first; a metadata-carrying
-    // upsert on a bare index may add columns). `rewritten` was built from
-    // the marker-resolved full read ∪ the new codes, so its schema IS the
-    // union — no re-derivation (and no legacy footer pass) needed here.
-    // Verified (ADVICE r18): this is a WIDENING context — a silently failed
-    // write would leave the old narrower marker while widened data lands.
-    writeSchemaMarkerVerified(s, codesDir, rewritten.schema, rewritten.schema)
-    rewritten.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell").parquet(codesDir)
-    // ONE pass over the checkpointed rewrite serves two consumers: the
-    // per-cell counts are the touched cells' new occupancy AND their cell
-    // set is the survivor set (≤ |touched| rows — bounded driver state)
-    val occAfter = cellOccupancy(rewritten).collect()
-    // dynamic overwrite only replaces partitions PRESENT in the new data —
-    // a cell whose every vector was deleted writes no rows, so its stale
-    // directory must be dropped explicitly
-    val cellsAfter = occAfter.map(_.get(0)).toSet
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), s.sparkContext.hadoopConfiguration)
-    touched.filterNot(cellsAfter).foreach { c =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$codesDir/cell=$c"), true)
-    }
-    // occupancy: untouched cells keep their counts; touched cells take the
-    // already-collected recounts (a LocalRelation — no extra scan)
-    val occ = occupancy(s, path)
-    val occDelta = s.createDataFrame(
-      java.util.Arrays.asList(occAfter: _*), cellOccupancy(rewritten).schema)
-    mergeOccupancy(s, path,
-      occ.filter(!col("cell").isin(touched: _*)).unionByName(occDelta),
-      replace = true)
+    // a metadata-carrying upsert on a bare index may add columns: they are
+    // committed before the rewrite lands (superset-first)
+    replaceCells(s, widenSchema(s, snap, rewritten.schema), touched, rewritten)
   }
+
+  /** Replace the live codes of `cells` with `rows` — every row those cells
+    * keep, cell-clustered and materialized — and commit their recounted
+    * occupancy (untouched cells keep their counts). The rows are staged
+    * COMPLETE before any live cell is replaced, so a crash between two
+    * cell moves rolls forward from the stage ([[settled]]) instead of
+    * losing a deleted-but-not-yet-replaced cell. A cell left with no rows
+    * loses its directory.
+    */
+  private def replaceCells(s: SparkSession, snap: IndexSnapshot, cells: Seq[Any],
+      rows: DataFrame): IndexSnapshot = {
+    // ONE pass over the materialized rows serves two consumers: the
+    // per-cell counts are the new occupancy AND their cell set is the
+    // surviving cell set (≤ |cells| rows — bounded driver state)
+    val counts = countsOf(cellOccupancy(rows))
+    rows.write.mode("overwrite").partitionBy("cell").parquet(cellStage(snap.path).toString)
+    settled(s, snap)
+    val ids = cells.map(_.asInstanceOf[Number].longValue)
+    val fs = hadoopFs(s, snap.path)
+    ids.filterNot(counts.contains).foreach { c =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"${snap.partPath("codes")}/cell=$c"), true)
+    }
+    commit(s, snap)(m => m.copy(occupancy = m.occupancy -- ids ++ counts))
+  }
+
+  private def cellStage(path: String) =
+    new org.apache.hadoop.fs.Path(s"$path/cells_staging")
+
+  /** Finish an interrupted [[replaceCells]] and return `snap`: a complete
+    * stage (parquet's `_SUCCESS`) moves each staged cell over its live
+    * counterpart — idempotent, a re-run skips cells already moved — and an
+    * incomplete one replaced nothing and is dropped. An interrupted
+    * append's job directory is dropped too: the next append's job commit
+    * would otherwise move its committed task files in a second time.
+    * Every mutation resolves its snapshot through here, so no writer
+    * builds on a half-replaced codes directory.
+    */
+  private def settled(s: SparkSession, snap: IndexSnapshot): IndexSnapshot = {
+    val fs = hadoopFs(s, snap.path)
+    val jobDir = new org.apache.hadoop.fs.Path(snap.partPath("codes"), "_temporary")
+    if (fs.exists(jobDir)) fs.delete(jobDir, true)
+    val stage = cellStage(snap.path)
+    if (fs.exists(stage)) {
+      if (fs.exists(new org.apache.hadoop.fs.Path(stage, "_SUCCESS")))
+        fs.listStatus(stage).map(_.getPath).filter(_.getName.startsWith("cell="))
+          .foreach { staged =>
+            val live = new org.apache.hadoop.fs.Path(snap.partPath("codes"), staged.getName)
+            fs.delete(live, true)
+            if (!fs.rename(staged, live))
+              throw new java.io.IOException(s"moving $staged into $live failed")
+          }
+      fs.delete(stage, true)
+    }
+    snap
+  }
+
+  private def settled(s: SparkSession, path: String): IndexSnapshot =
+    settled(s, snapshot(s, path))
 
   // ---- id→cell discovery sidecar ------------------------------------------
 
@@ -703,10 +730,10 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     new org.apache.hadoop.fs.Path(idMapDir(path))
 
   /** Below this codes-directory size the sidecar does not exist AT ALL:
-    * the legacy full-codes discovery scan is one cheap broadcast semi-join
-    * at these sizes, while maintaining the sidecar costs one parquet write
+    * the full-codes discovery scan is one cheap broadcast semi-join at
+    * these sizes, while maintaining the sidecar costs one parquet write
     * job per mutation — measured as the bulk of a ~1.3× structural
-    * regression on the sf0.1 mutation gates (VERDICT r16 #3). So small
+    * regression on the sf0.1 mutation gates. So small
     * indexes skip the build at birth, mutations DROP a sidecar they find
     * below the threshold (always safe: absence falls back to the full
     * scan), and the first mutation of an index grown past DOUBLE the
@@ -830,9 +857,11 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     * the ordering invariant holds through the restore too. Callers hold
     * the writer lease (every mutation path does).
     */
-  private def appendIdMap(s: SparkSession, path: String, codes: DataFrame): Unit = {
+  private def appendIdMap(s: SparkSession, snap: IndexSnapshot,
+      codes: DataFrame): Unit = {
+    val path = snap.path
     val fs = hadoopFs(s, path)
-    val codesDir = snapshot(s, path).partPath("codes")
+    val codesDir = snap.partPath("codes")
     val bytes = codesBytes(s, codesDir)
     val present = fs.exists(idMapPath(path))
     if (bytes < sidecarReadMinBytes) {
@@ -848,24 +877,16 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     * old sidecar, rename into place. Every crash window is safe because
     * ABSENCE is safe (discovery falls back to the full codes scan) — a
     * half-staged build is debris the next rebuild overwrites, and the
-    * delete→rename gap leaves no sidecar at all.
-    */
-  /** @param mergeSchema pay the all-footers schema merge only on the
-    *   public legacy-fold path ([[rebuildIdMap]]), where the codes dir may
-    *   be arbitrary debris; the internal callers (write/reindex/compact)
-    *   rebuild from codes THEY just wrote — uniform by construction, and
-    *   the rebuild projects only (vec_id, cell, m), which every codes file
-    *   of every generation carries.
+    * delete→rename gap leaves no sidecar at all. The rebuild projects only
+    * (vec_id, cell, m), which every codes file carries.
     */
   private def rebuildIdMapFrom(s: SparkSession, path: String,
-      codesDir: String, mergeSchema: Boolean = false): Unit = {
+      codesDir: String): Unit = {
     val fs = hadoopFs(s, path)
     val staging = new org.apache.hadoop.fs.Path(s"$path/idmap_staging")
     fs.delete(staging, true)
     idMapWriteShape(idMapEntries(
-      (if (mergeSchema) codesFullSchemaRead(s, codesDir) // marker skips footers
-       else s.read.parquet(codesDir))
-        .select(col("vec_id"), col("cell"), col("m"))))
+      s.read.parquet(codesDir).select(col("vec_id"), col("cell"), col("m"))))
       .write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
     fs.delete(idMapPath(path), true)
     if (!fs.rename(staging, idMapPath(path)))
@@ -873,15 +894,12 @@ object VectorIndex extends org.apache.spark.internal.Logging {
   }
 
   /** (Re)build the id→cell discovery sidecar of a persisted index — the
-    * opt-in for an index created before the sidecar existed (everything
-    * [[write]]/[[reindex]] builds carries it from birth), and the fold
-    * that trims the append-only growth of stale entries.
+    * fold that trims the append-only growth of stale entries and rewrites
+    * a sidecar in a non-canonical form.
     */
   def rebuildIdMap(s: SparkSession, path: String): Unit =
     withWriterLease(s, path, "rebuildIdMap") {
-      recoverReindex(s, path)
-      rebuildIdMapFrom(s, path, snapshot(s, path).partPath("codes"),
-        mergeSchema = true)
+      rebuildIdMapFrom(s, path, settled(s, path).partPath("codes"))
     }
 
   /** Observable record of the last touched-cell discovery (test seam): did
@@ -899,16 +917,17 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     * return a SUPERSET of the true old cells (stale append-only entries):
     * a stale touched cell is rewritten identically by the dynamic
     * overwrite — pure write amplification, never wrong answers. Without
-    * the sidecar: the legacy full codes scan (one broadcast semi-join).
+    * the sidecar: the full codes scan (one broadcast semi-join).
     */
-  private def oldCellsOf(s: SparkSession, path: String, codes: => DataFrame,
+  private def oldCellsOf(s: SparkSession, snap: IndexSnapshot, codes: => DataFrame,
       changedIds: DataFrame,
       probedPairs: Option[Seq[(Any, Long)]] = None): DataFrame = {
+    val path = snap.path
     val fs = hadoopFs(s, path)
-    val codesDir = snapshot(s, path).partPath("codes")
+    val codesDir = snap.partPath("codes")
     val bytes = codesBytes(s, codesDir)
     val sidecar: Option[DataFrame] =
-      // size bypass (VERDICT r16 #3): under the threshold the full scan IS
+      // size bypass: under the threshold the full scan IS
       // the cheap path — one broadcast semi-join folded into the touched-
       // cell action, vs a footer read + an extra bucket-enumeration job
       // (and below it the sidecar is not maintained at all)
@@ -933,11 +952,11 @@ object VectorIndex extends org.apache.spark.internal.Logging {
   }
 
   /** The sidecar read route of [[oldCellsOf]]: probe the changed ids'
-    * bucket directories. None = unreadable/legacy sidecar → caller falls
+    * bucket directories. None = unreadable/non-canonical sidecar → caller falls
     * back to the full scan (absence semantics). `probedPairs` carries the
     * caller's already-collected (canonical id, bucket) pairs when the
     * change batch fit under [[IdProbeCap]] — the probe then runs zero
-    * Spark jobs of its own (VERDICT r18 #1b).
+    * Spark jobs of its own.
     */
   private def readIdMap(s: SparkSession, path: String,
       changedIds: DataFrame,
@@ -980,8 +999,8 @@ object VectorIndex extends org.apache.spark.internal.Logging {
             else probe
               .select(pmod(xxhash64(col("vec_id")), lit(IdMapBuckets.toLong)).as("b"))
               .distinct().collect().map(_.getLong(0)).toSeq
-          // ONE directory listing instead of a per-bucket exists probe
-          // (ADVICE r16): the present bucket set in a single fs call
+          // ONE directory listing instead of a per-bucket exists probe:
+          // the present bucket set in a single fs call
           val present =
             try fs.listStatus(idMapPath(path)).iterator
               .map(_.getPath.getName).toSet
@@ -1013,9 +1032,11 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     * encode/rewrite/occupancy fixed costs.
     */
   private[graft] def discoverOldCells(s: SparkSession, path: String,
-      changedIds: DataFrame): Seq[Any] =
-    oldCellsOf(s, path, loadCodesFull(s, path), changedIds)
+      changedIds: DataFrame): Seq[Any] = {
+    val snap = snapshot(s, path)
+    oldCellsOf(s, snap, codesRead(s, snap), changedIds)
       .distinct().collect().map(_.get(0)).toSeq
+  }
 
   // ---- streaming ingest ---------------------------------------------------
 
@@ -1028,21 +1049,17 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     * path.
     *
     * Restart semantics: `foreachBatch` replays an in-flight batch on
-    * recovery; a replayed batch is detected via the `applied_batch`
-    * high-water marker (O(1), advanced only after the append lands, so it
+    * recovery; a replayed batch is detected via the manifest's applied
+    * mark for its stream (committed only after the append lands, so it
     * never claims an unapplied batch and — unlike a data-derived max —
     * cannot regress when [[upsertBatch]] later rewrites or deletes
-    * max-stamped rows), with the appended rows' own `__batch` stamps as
-    * the fallback authority for the marker-write crash window — idempotent
-    * per batch id, the same device as the dedup sink's docs stamps. [[loadCodes]] projects `__batch` away, so search
-    * is oblivious to how rows arrived, and [[compactCells]] preserves the
-    * stamps, so replay detection survives compaction.
-    *
-    * Occupancy is merged incrementally AFTER the codes append; a crash
-    * exactly between the two leaves occupancy under-counted for that batch
-    * (the replay skips it wholesale) — occupancy is an accounting signal,
-    * not a correctness surface, and [[refreshOccupancy]] recounts it from
-    * the codes at any time.
+    * max-stamped rows). The appended rows' own `__batch` stamps cover the
+    * lost-commit window: rows stamped by a batch no mark covers are a
+    * crashed attempt's (possibly partial) append, rolled back before the
+    * batch re-applies — idempotent per batch id, the same device as the
+    * dedup sink's docs stamps. [[loadCodes]] projects `__batch` away, so
+    * search is oblivious to how rows arrived, and [[compactCells]]
+    * preserves the stamps, so replay detection survives compaction.
     *
     * STREAM IDENTITY (required for multi-lineage safety): `foreachBatch`
     * batch ids are scoped to a CHECKPOINT LINEAGE and restart at 0 when a
@@ -1050,18 +1067,13 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     * identity, every batch of the new lineage would compare <= the old
     * lineage's high-water mark and be silently skipped (data loss). Pass a
     * stable `streamId` per checkpoint lineage (the idempotent-sink
-    * convention of scoping the txn marker by (appId, version)): the marker
-    * is kept per stream (`applied_batch_<streamId>`) and the rows' replay
-    * stamps carry `__stream`, so both detection layers compare only
-    * against their own lineage — a fresh lineage starts from a clean
-    * marker and nothing is skipped. `streamId = None` keeps the legacy
-    * single-marker behavior and is safe ONLY while the index is fed by
-    * exactly one checkpoint lineage for its whole life.
+    * convention of scoping the txn marker by (appId, version)): the
+    * manifest keeps one mark per raw stream id and the rows' replay stamps
+    * carry `__stream`, so both detection layers compare only against their
+    * own lineage — a fresh lineage starts clean and nothing is skipped.
+    * `streamId = None` keeps one unscoped mark and is safe ONLY while the
+    * index is fed by exactly one checkpoint lineage for its whole life.
     *
-    * @param batchCap optional per-batch row cap (no-silent-caps: refused
-    *   rows are counted into `capDrops`, the accumulator pattern of
-    *   [[graft.streaming.StreamingDedup.nearDupCandidates]]); None admits
-    *   everything
     * AUTO-COMPACTION (the flush-at-threshold policy the reference applies
     * to its own buffers — pkg/integ buffered writers flush when full):
     * every micro-batch appends one small file to each touched cell, so a
@@ -1072,14 +1084,8 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     * scan's planning performs) and runs [[compactCells]] when any cell
     * exceeds `n` files, restoring 1 file/cell. Answers are unchanged and
     * the `__batch`/`__stream` replay stamps survive (compaction preserves
-    * every column), so exactly-once detection is oblivious to when
-    * compactions happened. Ordering: compaction runs after the batch's
-    * marker write, so a crash mid-compaction loses no append — the next
-    * entry rolls the half-swap forward or back ([[recoverCompaction]]).
-    * Inherits compactCells' single-writer window: concurrent readers
-    * during the brief swap are unsafe, same as any in-place parquet
-    * rewrite — schedule reads off the ingest path or accept the
-    * recovery call.
+    * every column). Compaction runs after the batch's commit, so a crash
+    * mid-compaction loses no append.
     *
     * @param batchCap optional per-batch row cap (no-silent-caps: refused
     *   rows are counted into `capDrops`, the accumulator pattern of
@@ -1098,7 +1104,7 @@ object VectorIndex extends org.apache.spark.internal.Logging {
       autoCompactFilesPerCell: Option[Int] = None)
       : (DataFrame, Long) => Unit = { (batch, batchId) =>
     val s = batch.sparkSession
-    // One lease spans the whole batch — recovery, replay check, append, and
+    // One lease spans the whole batch — replay check, append, and
     // auto-compaction — so a manual maintenance op cannot interleave with a
     // half-finished micro-batch (the inner calls re-enter this lease).
     // Acquisition RETRIES with bounded backoff instead of failing fast: the
@@ -1110,17 +1116,9 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     // the holder is either dead (its TTL reclaim will fire) or wedged, and
     // the stream SHOULD surface the failure.
     withWriterLeaseRetry(s, path, "appendSink") {
-      // Self-recovery BEFORE anything reads the codes path: a crashed
-      // reindex promote must be settled FIRST — otherwise this batch would
-      // append into the superseded generation and silently vanish when the
-      // pending promote later commits — then compaction debris (legacy
-      // half-swap states and uncommitted staged generations). Both are
-      // cheap no-ops (a few fs.exists) on a healthy index, so every sink
-      // entry pays them, not just auto-compacting ones (a manual
-      // compactCells/reindex crash must not strand a plain sink either).
-      recoverReindex(s, path)
-      recoverCompaction(s, path)
-      if (!batchApplied(s, path, batchId, streamId)) {
+      val snap = settled(s, path)
+      if (!snap.applied.get(streamId).exists(_ >= batchId)) {
+        rollBackUnrecorded(s, snap, streamId, batchId)
         val admitted = batchCap match {
           case Some(cap) =>
             val n = batch.count()
@@ -1155,136 +1153,171 @@ object VectorIndex extends org.apache.spark.internal.Logging {
       .maxOption.getOrElse(0)
   }
 
-  /** Has `batchId` (or any later batch) already been applied to the index?
-    * Two layers, each correct where the other is not:
-    *
-    *   1. the HIGH-WATER MARKER (`applied_batch`, written only AFTER a
-    *      batch's codes append completes) — O(1) to read, and because it
-    *      trails the data it can never claim an unapplied batch. It also
-    *      survives [[upsertBatch]]: maintenance may rewrite or delete the
-    *      very rows carrying the max `__batch` stamp (updated rows get
-    *      null there), which would regress a purely data-derived max and
-    *      re-apply a replayed batch — the marker cannot regress;
-    *   2. the data-derived max(__batch) — the fallback for the crash
-    *      window where the append landed but the marker write was lost,
-    *      and for indexes created before the marker existed.
-    *
-    * Both layers are SCOPED by `streamId` when one is supplied: the marker
-    * file is per-stream and the data max considers only rows whose
-    * `__stream` stamp matches, so a lineage restarted under a new id never
-    * sees another lineage's progress (see [[appendSink]]'s stream-identity
-    * contract).
-    */
   /** Observable count of the adopted-index edge warnings below — a test
     * seam so the warning's firing is assertable, not just printed.
     */
   private[graft] val adoptedIndexWarnings = new java.util.concurrent.atomic.AtomicLong
 
-  private def batchApplied(s: SparkSession, path: String, batchId: Long,
-      streamId: Option[String]): Boolean =
-    readAppliedBatch(s, path, streamId).exists(_ >= batchId) || {
-      val codes = loadCodesFull(s, path)
-      val scoped = streamId match {
-        case Some(sid) =>
-          if (codes.columns.contains("__stream")) codes.filter(col("__stream") === sid)
-          else {
-            // ADOPTED-INDEX EDGE, made loud: a streamId was supplied but no
-            // row carries a __stream stamp — a pre-stream-identity index
-            // adopted under a new id. Correct-conservative for a fresh
-            // lineage (nothing to compare against), but if this index WAS
-            // fed by an unstamped lineage whose marker write was lost in
-            // the crash window, the fallback is dark and a replayed batch
-            // re-applies. The contract ("stable streamId per lineage")
-            // covers it; the warning makes the edge observable.
-            adoptedIndexWarnings.incrementAndGet()
-            logWarning(s"batchApplied: streamId '$sid' supplied but index at " +
-              s"$path carries no __stream stamps (index adopted under a new " +
-              "stream identity?) — data-derived replay fallback is inactive " +
-              "for this lineage; only the high-water marker protects against " +
-              "replays")
-            codes.limit(0)
-          }
-        case None => codes
-      }
-      codes.columns.contains("__batch") && {
-        val m = scoped.agg(max(col("__batch"))).head()
-        !m.isNullAt(0) && m.getLong(0) >= batchId
+  /** The data-derived replay record, for the lost-commit window: rows of
+    * this lineage stamped `batchId` or later that no applied mark covers
+    * are a crashed attempt's append — complete, or partial when the crash
+    * fell between the file moves of the append's job commit. They are
+    * rolled back (only the cells holding them are rewritten) so the batch
+    * re-applies exactly once. One filtered scan finds them; none is the
+    * common case. The unscoped lineage (`streamId = None`) owns the rows
+    * without a `__stream` stamp.
+    */
+  private def rollBackUnrecorded(s: SparkSession, snap: IndexSnapshot,
+      streamId: Option[String], batchId: Long): Unit = {
+    val codes = codesRead(s, snap)
+    val cols = codes.columns.toSet
+    val lineage: Option[Column] = streamId match {
+      case Some(sid) if cols("__stream") => Some(col("__stream") === sid)
+      case Some(sid) =>
+        // ADOPTED-INDEX EDGE, made loud: a streamId was supplied but no
+        // row carries a __stream stamp — an index fed so far only by an
+        // unscoped lineage, adopted under a new id. Nothing of this
+        // lineage can be told apart, so nothing is rolled back; if this
+        // lineage's own commit was lost, a replayed batch re-applies.
+        adoptedIndexWarnings.incrementAndGet()
+        logWarning(s"appendSink: streamId '$sid' supplied but index at " +
+          s"${snap.path} carries no __stream stamps (index adopted under a " +
+          "new stream identity?) — data-derived replay detection is " +
+          "inactive for this lineage; only the applied mark protects " +
+          "against replays")
+        None
+      case None => Some(if (cols("__stream")) col("__stream").isNull else lit(true))
+    }
+    lineage.filter(_ => cols("__batch")).foreach { mine =>
+      val unrecorded = coalesce(mine && col("__batch") >= batchId, lit(false))
+      val cells = codes.filter(unrecorded).select(col("cell")).distinct()
+        .collect().map(_.get(0)).toSeq
+      if (cells.nonEmpty) {
+        val kept = codes.filter(col("cell").isin(cells: _*) && !unrecorded)
+          .repartition(col("cell")).localCheckpoint()
+        replaceCells(s, snap, cells, kept)
+        Dedup.dropLocalCheckpoint(kept)
       }
     }
+  }
 
   private def hadoopFs(s: SparkSession, path: String) =
     org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), s.sparkContext.hadoopConfiguration)
 
-  // ---- generation manifest (reader-atomic swaps) ---------------------------
+  // ---- generation manifest: the one commit record ---------------------------
 
-  /** One resolved generation of the index: the manifest's part→directory
-    * mapping, read ONCE — every part path derived from one snapshot belongs
-    * to the same committed generation, so a reader that resolves a snapshot
-    * and then loads quantizer + codes through it can never observe a
-    * mixed-generation index, no matter what swaps commit meanwhile (the
-    * previous generation's directories are retained until the NEXT commit,
-    * so an in-flight reader's files outlive one concurrent swap; only a
-    * reader spanning TWO swaps fails, loudly, on the missing files).
+  /** One committed generation of the index, read ONCE from its manifest —
+    * the only commit record an index has:
+    *
+    *   - `dirs`: part (`cents`, `codebook`, `codes`) → directory;
+    *   - `schema`: the full-rows schema of the codes (the union of every
+    *     column ever written there — explicit-schema reads never scan
+    *     footers);
+    *   - `occupancy`: vectors per cell;
+    *   - `applied`: per-stream applied-batch high-water marks, keyed by the
+    *     raw stream id (None = the unscoped lineage);
+    *   - `retain`: the previous data generation's directories, kept for
+    *     in-flight readers until the next directory swap.
+    *
+    * Every part path derived from one snapshot belongs to the same
+    * committed generation, so a reader that resolves a snapshot and then
+    * loads quantizer + codes through it never observes a mixed-generation
+    * index. The superseded directories outlive one directory swap however
+    * many metadata-only commits (appends, upserts) follow it; only a
+    * reader spanning TWO swaps fails, loudly, on the missing files.
     */
   final case class IndexSnapshot(path: String, gen: Long,
-      dirs: Map[String, String]) {
+      dirs: Map[String, String], schema: StructType,
+      occupancy: Map[Long, Long], applied: Map[Option[String], Long],
+      retain: Set[String]) {
     def partPath(part: String): String = s"$path/${dirs(part)}"
   }
 
+  private def emptySnapshot(path: String) = IndexSnapshot(path, 0L,
+    Map.empty, new StructType(), Map.empty, Map.empty, Set.empty)
+
+  /** The persisted parts of an index, each a `<part>_gen_N` directory. */
+  private val indexParts = Seq("cents", "codebook", "codes")
+
   private val ManifestRe = "manifest-(\\d{9})".r
+  /** Generation-staged directories: the parts plus reindex's corpus stage. */
+  private val StagedRe = "(cents|codebook|codes|corpus)_gen_(\\d+)".r
   private def manifestFile(path: String, gen: Long) =
     new org.apache.hadoop.fs.Path(f"$path/manifest-$gen%09d")
-  private def flatDirs: Map[String, String] = indexParts.map(p => p -> p).toMap
 
-  /** Generation numbers of all committed manifests at the index root
-    * (empty for a legacy flat index that has never swapped).
-    */
+  /** Generation numbers of all committed manifests at the index root. */
   private def manifestGens(fs: org.apache.hadoop.fs.FileSystem,
       path: String): Seq[Long] =
-    // ONLY a missing root means "fresh/legacy index" (no manifests yet).
-    // Any other IO failure must propagate: swallowing it would silently
-    // resolve a generation-managed index as the flat gen-0 layout — a
-    // reader would serve the superseded generation and a writer would
-    // append into a directory the next GC deletes.
+    // ONLY a missing root means "no index yet". Any other IO failure must
+    // propagate: swallowing it would resolve a live index as absent.
     try fs.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
       .map(_.getPath.getName)
       .collect { case ManifestRe(g) => g.toLong }
       .sorted
     catch { case _: java.io.FileNotFoundException => Seq.empty }
 
-  /** Resolve the CURRENT committed generation — one atomic read of the
-    * newest manifest (or the implicit generation 0: the legacy flat layout,
-    * which every index starts from until its first swap). This is the
-    * reader entry point: resolve once, then load every part through the
-    * snapshot.
+  /** Resolve the CURRENT committed generation — one read of the newest
+    * manifest. This is the reader entry point: resolve once, then load
+    * every part through the snapshot.
     */
-  def snapshot(s: SparkSession, path: String): IndexSnapshot = {
+  def snapshot(s: SparkSession, path: String): IndexSnapshot =
+    latest(s, path).getOrElse(
+      throw new java.io.FileNotFoundException(s"no committed index at $path"))
+
+  private def latest(s: SparkSession, path: String): Option[IndexSnapshot] = {
     val fs = hadoopFs(s, path)
-    manifestGens(fs, path).lastOption match {
-      case None => IndexSnapshot(path, 0L, flatDirs)
-      case Some(gen) =>
-        val dirs = readManifest(fs, manifestFile(path, gen))
-        IndexSnapshot(path, gen, flatDirs ++ dirs)
-    }
+    // two commits landing between the listing and the read GC the listed
+    // manifest: list again
+    @scala.annotation.tailrec
+    def attempt(left: Int): Option[IndexSnapshot] =
+      manifestGens(fs, path).lastOption match {
+        case None => None
+        case Some(gen) => scala.util.Try(readManifest(fs, path, gen)) match {
+          case scala.util.Success(snap) => Some(snap)
+          case scala.util.Failure(_: java.io.FileNotFoundException) if left > 0 =>
+            attempt(left - 1)
+          case scala.util.Failure(e) => throw e
+        }
+      }
+    attempt(3)
   }
 
-  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Map[String, String] = {
-    val in = fs.open(p)
-    val content = try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](4096)
-      var n = in.read(buf)
-      while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toString("UTF-8")
-    } finally in.close()
-    content.linesIterator.flatMap { line =>
-      line.split("=", 2) match {
-        case Array(k, v) if indexParts.contains(k) => Some(k -> v)
-        case _ => None
-      }
-    }.toMap
+  private def readManifest(fs: org.apache.hadoop.fs.FileSystem, path: String,
+      gen: Long): IndexSnapshot = {
+    import scala.jdk.CollectionConverters._
+    val in = fs.open(manifestFile(path, gen))
+    val root = try graft.core.Json.mapper.readTree(in) finally in.close()
+    def elems(field: String) = root.get(field).elements().asScala.toSeq
+    val dirs = root.get("dirs")
+    IndexSnapshot(path, gen,
+      dirs.fieldNames().asScala.map(p => p -> dirs.get(p).asText).toMap,
+      org.apache.spark.sql.types.DataType.fromJson(root.get("schema").toString)
+        .asInstanceOf[StructType],
+      elems("occupancy").map(e => e.get(0).asLong -> e.get(1).asLong).toMap,
+      elems("applied").map(e =>
+        Option(e.get("stream")).filterNot(_.isNull).map(_.asText) ->
+          e.get("batch").asLong).toMap,
+      elems("retain").map(_.asText).toSet)
+  }
+
+  private def manifestJson(snap: IndexSnapshot): String = {
+    val json = graft.core.Json
+    val root = json.obj()
+    val dirs = root.putObject("dirs")
+    snap.dirs.toSeq.sorted.foreach { case (p, d) => dirs.put(p, d) }
+    root.replace("schema", json.parse(snap.schema.json))
+    val occ = root.putArray("occupancy")
+    snap.occupancy.toSeq.sorted.foreach { case (c, n) => occ.addArray().add(c).add(n) }
+    val applied = root.putArray("applied")
+    snap.applied.toSeq.sortBy(_._1.getOrElse("")).foreach { case (sid, b) =>
+      val e = applied.addObject()
+      sid.fold(e.putNull("stream"))(e.put("stream", _))
+      e.put("batch", b)
+    }
+    val retain = root.putArray("retain")
+    snap.retain.toSeq.sorted.foreach(d => retain.add(d))
+    json.write(root)
   }
 
   /** The directory a swap of `part` must stage its replacement into — the
@@ -1294,112 +1327,72 @@ object VectorIndex extends org.apache.spark.internal.Logging {
   private def stagedDirName(snap: IndexSnapshot, part: String): String =
     s"${part}_gen_${snap.gen + 1}"
 
-  /** COMMIT a swap: write the next manifest (carrying the current mapping
-    * overlaid with `newDirs`) via tmp-file + rename-to-fresh-name — atomic
-    * on HDFS and local fs, and readers always resolve the newest complete
-    * manifest, so the flip is all-or-nothing for every part at once. Then
-    * garbage-collect: directories referenced by neither the new nor the
-    * previous generation are deleted, as are manifests older than the
-    * previous (so at most two generations of any part ever sit on disk —
-    * the MVCC retention that keeps one swap's worth of in-flight readers
-    * alive). Caller must hold the writer lease.
+  /** COMMIT a mutation: write the next manifest — `change` applied to the
+    * current one, every field it leaves alone carried forward — via
+    * tmp-file + rename-to-fresh-name, atomic on HDFS and the local fs.
+    * Readers always resolve the newest complete manifest, so the commit is
+    * all-or-nothing for every field at once. A commit that swaps
+    * directories retains the superseded ones for in-flight readers; a
+    * metadata-only commit carries the retained set forward unchanged.
+    * Then garbage-collect ([[gc]]). Caller must hold the writer lease.
     */
-  private def commitParts(s: SparkSession, path: String,
-      newDirs: Map[String, String]): Unit = {
-    val fs = hadoopFs(s, path)
-    val snap = snapshot(s, path)
-    val next = snap.dirs ++ newDirs
-    val gen = snap.gen + 1
+  private def commit(s: SparkSession, snap: IndexSnapshot)(
+      change: IndexSnapshot => IndexSnapshot): IndexSnapshot = {
+    val fs = hadoopFs(s, snap.path)
+    val changed = change(snap)
+    val next = changed.copy(gen = snap.gen + 1,
+      retain =
+        if (changed.dirs == snap.dirs) snap.retain
+        else snap.dirs.values.toSet -- changed.dirs.values)
     val tmp = new org.apache.hadoop.fs.Path(
-      s"$path/.manifest-tmp-${System.nanoTime()}")
+      s"${snap.path}/.manifest-tmp-${System.nanoTime()}")
     val out = fs.create(tmp, true)
-    try out.write(indexParts.map(p => s"$p=${next(p)}").mkString("", "\n", "\n")
-      .getBytes("UTF-8"))
-    finally out.close()
-    val dst = manifestFile(path, gen)
-    if (!fs.rename(tmp, dst)) {
+    try out.write(manifestJson(next).getBytes("UTF-8")) finally out.close()
+    if (!fs.rename(tmp, manifestFile(snap.path, next.gen))) {
       fs.delete(tmp, false)
       throw new java.io.IOException(
-        s"manifest commit for generation $gen at $path lost a race — " +
-          "a concurrent writer committed despite the lease")
+        s"manifest commit for generation ${next.gen} at ${snap.path} lost a " +
+          "race — a concurrent writer committed despite the lease")
     }
-    gcGenerations(s, path, gen, next)
+    gc(s, next)
+    next
   }
 
-  /** Drop everything no generation ≥ (committedGen − 1) references: old
-    * manifests and orphaned part directories. The previous generation's
-    * refs are kept whole for in-flight readers (see [[commitParts]]).
-    *
-    * `committedDirs` is the just-committed mapping, passed IN-MEMORY from
-    * [[commitParts]]: the live generation's refs must never be re-read from
-    * disk here, where a transient IOException would degrade them to a guess
-    * and the guess would delete the live data. The previous generation's
-    * manifest IS read back — and an unreadable read ABORTS the GC (it is
-    * best-effort; debris is re-collected on the next commit) rather than
-    * falling back to a ref set that can't be proven.
+  /** Drop everything the committed generation `snap` does not reference:
+    * manifests older than its predecessor, generation directories outside
+    * its live and retained sets (including staged-but-uncommitted debris
+    * of a crashed swap), stray manifest tmp files and an interrupted
+    * sidecar stage. Best-effort: what survives an IO failure is collected
+    * on the next commit.
     */
-  private def gcGenerations(s: SparkSession, path: String,
-      committedGen: Long, committedDirs: Map[String, String]): Unit = {
-    val fs = hadoopFs(s, path)
-    val prevRefs: Option[Set[String]] =
-      if (committedGen - 1 <= 0) Some(flatDirs.values.toSet)
-      else try Some(
-        (flatDirs ++ readManifest(fs, manifestFile(path, committedGen - 1)))
-          .values.toSet)
-      catch { case e: java.io.IOException =>
-        logError(s"skipping generation GC at $path: previous manifest " +
-          s"(gen ${committedGen - 1}) unreadable — ${e.getMessage}")
-        None
-      }
-    prevRefs.foreach { prev =>
-      val keep = committedDirs.values.toSet ++ prev
-      val partDirRe = s"(${indexParts.mkString("|")})(_gen_\\d+)?".r
-      try fs.listStatus(new org.apache.hadoop.fs.Path(path)).foreach { st =>
-        val n = st.getPath.getName
-        n match {
-          case ManifestRe(g) if g.toLong < committedGen - 1 =>
-            fs.delete(st.getPath, false); ()
-          case partDirRe(_, _) if st.isDirectory && !keep.contains(n) =>
-            fs.delete(st.getPath, true); ()
-          case _ => ()
-        }
-      } catch { case _: java.io.IOException => () }
-    }
-  }
-
-  /** Delete STAGED-BUT-UNCOMMITTED generation directories (a swap that
-    * crashed before its manifest commit): any `part_gen_g` with g beyond
-    * the committed generation is debris — EXCEPT the target generation of a
-    * pending committed reindex (`reindex_staging/_COMMITTED` names it),
-    * whose promoted parts must survive until [[recoverReindex]] rolls the
-    * swap forward. Caller must hold the writer lease.
-    */
-  private def dropUncommittedStaging(s: SparkSession, path: String): Unit = {
-    val fs = hadoopFs(s, path)
-    val committed = snapshot(s, path).gen
-    val pendingReindexGen = pendingReindexTarget(s, path)
-    val partDirRe = s"(${indexParts.mkString("|")})_gen_(\\d+)".r
-    try fs.listStatus(new org.apache.hadoop.fs.Path(path)).foreach { st =>
+  private def gc(s: SparkSession, snap: IndexSnapshot): Unit = {
+    val fs = hadoopFs(s, snap.path)
+    val keep = snap.dirs.values.toSet ++ snap.retain
+    try fs.listStatus(new org.apache.hadoop.fs.Path(snap.path)).foreach { st =>
       st.getPath.getName match {
-        case partDirRe(_, g)
-            if st.isDirectory && g.toLong > committed &&
-              !pendingReindexGen.contains(g.toLong) =>
-          fs.delete(st.getPath, true); ()
+        case ManifestRe(g) if g.toLong < snap.gen - 1 => fs.delete(st.getPath, false)
+        case n @ StagedRe(_, _) if !keep.contains(n) => fs.delete(st.getPath, true)
+        case n if n.startsWith(".manifest-tmp-") || n == "idmap_staging" =>
+          fs.delete(st.getPath, true)
         case _ => ()
       }
     } catch { case _: java.io.IOException => () }
   }
 
-  /** Target generation of a committed-but-unpromoted reindex, read from the
-    * `_COMMITTED` marker; None when no reindex is pending or the marker is
-    * the legacy (empty) form.
+  /** Repair an interrupted mutation — the one recovery entry point,
+    * idempotent and a no-op on a healthy index. A crash before a commit
+    * leaves the committed generation untouched and the staged work as
+    * unreferenced debris; a crash between a commit and its GC leaves
+    * superseded directories; a crash mid cell-replace leaves its stage.
+    * The stage is rolled forward and the rest collected here (and by the
+    * next mutation anyway). Appends and upserts then converge by
+    * re-running the same batch (see [[upsertBatch]], [[appendSink]]); a
+    * split by [[recoverSplit]].
     */
-  private def pendingReindexTarget(s: SparkSession, path: String): Option[Long] = {
-    val fs = hadoopFs(s, path)
-    val marker = new org.apache.hadoop.fs.Path(s"$path/reindex_staging/_COMMITTED")
-    if (!fs.exists(marker)) None
-    else readLease(fs, marker).flatMap(_.trim.toLongOption)
-  }
+  def recover(s: SparkSession, path: String): Unit =
+    withWriterLease(s, path, "recover") {
+      latest(s, path).foreach(snap => gc(s, settled(s, snap)))
+    }
 
   // ---- single-writer lease -------------------------------------------------
 
@@ -1416,7 +1409,7 @@ object VectorIndex extends org.apache.spark.internal.Logging {
 
   /** Per-thread re-entrancy count per index path: a maintenance op that
     * calls another (splitCell → upsertCore's caller, appendSink →
-    * recoverCompaction/compactCells, reindex → recoverReindex) re-enters
+    * compactCells) re-enters
     * the lease it already holds instead of deadlocking on itself.
     */
   private val leaseDepths =
@@ -1693,55 +1686,13 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Per-stream marker file name; the unscoped legacy name when no stream
-    * identity is in play. Stream ids are sanitized to a filename-safe
-    * charset so a caller-supplied id can never escape the index directory.
-    */
-  private def markerName(streamId: Option[String]): String =
-    streamId.fold("applied_batch")(sid =>
-      "applied_batch_" + sid.replaceAll("[^A-Za-z0-9._-]", "_"))
-
-  private def readAppliedBatch(s: SparkSession, path: String,
-      streamId: Option[String]): Option[Long] = {
-    val fs = hadoopFs(s, path)
-    val p = new org.apache.hadoop.fs.Path(s"$path/${markerName(streamId)}")
-    if (!fs.exists(p)) None
-    else scala.util.Try {
-      val in = fs.open(p)
-      try {
-        val buf = new Array[Byte](64)
-        val n = in.read(buf)
-        new String(buf, 0, math.max(n, 0), "UTF-8").trim.toLong
-      } finally in.close()
-      // a torn write parses as garbage → None → the data-derived fallback
-    }.toOption
-  }
-
-  /** Advance the high-water mark — monotonic, called only after the
-    * batch's codes are durably appended.
-    */
-  private def writeAppliedBatch(s: SparkSession, path: String, batchId: Long,
-      streamId: Option[String]): Unit =
-    if (!readAppliedBatch(s, path, streamId).exists(_ >= batchId)) {
-      val fs = hadoopFs(s, path)
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(s"$path/${markerName(streamId)}"), true)
-      try out.write(s"$batchId\n".getBytes("UTF-8")) finally out.close()
-    }
-
-  /** Full recount of the occupancy table from the codes — the recovery
-    * path for the (documented) crash window in [[appendSink]], and a
-    * general consistency restore.
+  /** Full recount of the committed occupancy from the codes — a general
+    * consistency restore (e.g. after an upsert's crash window).
     */
   def refreshOccupancy(s: SparkSession, path: String): Unit =
     withWriterLease(s, path, "refreshOccupancy") {
-      // settle a crashed-but-committed reindex first — recounting the
-      // superseded generation's codes would persist an occupancy the
-      // promote immediately invalidates
-      recoverReindex(s, path)
-      val snap = snapshot(s, path)
-      cellOccupancy(loadCodes(s, snap)).localCheckpoint()
-        .write.mode("overwrite").parquet(snap.partPath("occupancy"))
+      val snap = settled(s, path)
+      commit(s, snap)(_.copy(occupancy = countsOf(cellOccupancy(loadCodes(s, snap)))))
     }
 
   // ---- small-file compaction --------------------------------------------
@@ -1754,81 +1705,33 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     * knows the cell layout). `repartition(cell)` puts each cell's rows in
     * exactly one task, so the rewrite emits exactly one file per cell; the
     * result is staged COMPLETE in the next generation's directory and
-    * committed with one atomic manifest flip ([[commitParts]]) — no
-    * driver/executor materialization of the corpus, no read-overwrite
-    * conflict, and READERS ARE SAFE THROUGHOUT: the live generation's
-    * files are untouched until the commit, and retained through one more
-    * commit after it for in-flight readers. All columns survive, including
-    * streaming `__batch` stamps — max(__batch) replay detection still
-    * works post-compaction.
-    *
-    * CRASH RECOVERY: a crash before the manifest commit leaves the staged
-    * generation as unreferenced debris and the live index UNTOUCHED —
-    * [[recoverCompaction]] (run on every entry here and on every
-    * [[appendSink]] entry) just deletes the debris; re-running the
-    * compaction redoes the work. There is no crash window in which the
-    * index stops serving — the improvement over the old rename-swap, whose
-    * mid-swap states this recovery still repairs when found on a
-    * pre-manifest index.
+    * committed with one manifest flip ([[commit]]) — no driver/executor
+    * materialization of the corpus, no read-overwrite conflict, and
+    * READERS ARE SAFE THROUGHOUT: the live generation's files are
+    * untouched until the commit, and retained through the next directory
+    * swap for in-flight readers. All columns survive, including streaming
+    * `__batch` stamps — max(__batch) replay detection still works
+    * post-compaction. A crash before the commit leaves the live index
+    * untouched and the stage as debris ([[recover]]).
     */
   def compactCells(s: SparkSession, path: String): Unit =
       withWriterLease(s, path, "compactCells") {
-    recoverReindex(s, path) // settle a pending reindex promote first (gen order)
-    recoverCompaction(s, path)
-    val snap = snapshot(s, path)
+    val snap = settled(s, path)
     val stagedDir = stagedDirName(snap, "codes")
-    val full = codesFullSchemaRead(s, snap.partPath("codes"))
-    full.repartition(col("cell"))
+    codesRead(s, snap).repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/$stagedDir")
-    // staged dir is fresh and complete: its marker is the rewrite's schema
-    // (rides the manifest flip with the data it describes)
-    writeSchemaMarker(s, s"$path/$stagedDir", full.schema)
-    commitParts(s, path, Map("codes" -> stagedDir))
+    commit(s, snap)(m => m.copy(dirs = m.dirs + ("codes" -> stagedDir)))
     // fold the sidecar's append-only stale entries while we're at the
     // hygiene pass anyway — compaction changes no id→cell mapping, so the
     // pre-fold sidecar stays a valid superset through every crash window.
     // A compacted index now under the read threshold drops it instead
     // (absence-safe; the size lifecycle restores it at the next crossing).
     if (hadoopFs(s, path).exists(idMapPath(path))) {
-      val codesDir = snapshot(s, path).partPath("codes")
+      val codesDir = s"$path/$stagedDir"
       if (codesBytes(s, codesDir) >= sidecarReadMinBytes)
         rebuildIdMapFrom(s, path, codesDir)
       else { hadoopFs(s, path).delete(idMapPath(path), true); () }
     }
-  }
-
-  /** Repair an interrupted [[compactCells]] — idempotent, no-op on a
-    * healthy index. Under the generation manifest the only crash state is
-    * staged-but-uncommitted debris ([[dropUncommittedStaging]]); the
-    * legacy pre-manifest rename-swap states (`codes/` missing with
-    * `codes_old/` + `codes_compacting/` present) are still repaired when
-    * found on an index that has never committed a manifest:
-    *
-    *   - legacy `codes/` missing: roll FORWARD if the stage carries
-    *     `_SUCCESS`, else roll BACK to `codes_old/`;
-    *   - legacy `codes/` present: stage/old directories are debris.
-    */
-  def recoverCompaction(s: SparkSession, path: String): Unit =
-      withWriterLease(s, path, "recoverCompaction") {
-    val fs = hadoopFs(s, path)
-    dropUncommittedStaging(s, path)
-    if (manifestGens(fs, path).isEmpty) {
-      def p(n: String) = new org.apache.hadoop.fs.Path(s"$path/$n")
-      val (codes, old, staged) = (p("codes"), p("codes_old"), p("codes_compacting"))
-      if (!fs.exists(codes)) {
-        if (fs.exists(new org.apache.hadoop.fs.Path(staged, "_SUCCESS"))) {
-          fs.rename(staged, codes)
-          fs.delete(old, true)
-        } else if (fs.exists(old)) {
-          fs.delete(staged, true)
-          fs.rename(old, codes)
-        }
-      } else {
-        fs.delete(staged, true)
-        fs.delete(old, true)
-      }
-    }
-    ()
   }
 
   // ---- hot-cell split ------------------------------------------------------
@@ -1863,14 +1766,14 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     * vector source for the members (same contract as [[upsertBatch]]'s
     * `updates`); rows whose `id` is not a member are ignored.
     *
-    * CRASH RECOVERY (staged manifest, the [[compactCells]] discipline):
+    * CRASH RECOVERY (staged children, the [[compactCells]] discipline):
     * the chosen children centroids are persisted to `split_staging/`
     * BEFORE any mutation, and every entry here first rolls a previous
     * interrupted split forward ([[recoverSplit]]). The apply phase is
     * idempotent given the staged centroids — members are re-derived from
     * whatever currently sits in parent ∪ children cells, the upsert
     * converges from any intermediate state (its documented contract), and
-    * the final centroid-table overwrite plus manifest delete commit the
+    * the final centroid-table commit plus the stage delete finish the
     * split. Single-writer maintenance op, like compaction.
     *
     * @return the two child cell ids
@@ -1878,17 +1781,16 @@ object VectorIndex extends org.apache.spark.internal.Logging {
   def splitCell(s: SparkSession, path: String, cell: Long, vectors: DataFrame,
       id: Column, emb: Column, pq: PqParams, meta: Seq[String] = Nil): Seq[Long] =
       withWriterLease(s, path, "splitCell") {
-    recoverReindex(s, path) // settle a pending reindex promote first (gen order)
+    settled(s, path)
     recoverSplit(s, path, vectors, id, emb, pq, meta)
-    // One hot cell's member VECTORS, materialized once (r18): the
+    // One hot cell's member VECTORS, materialized once: the
     // sub-train's 4 actions (seed TakeOrdered + 3 Lloyd iterations) would
     // each re-execute their input — a full `vectors` scan per action. One
     // hot cell's vectors are bounded by construction (the split exists to
     // bound them), so the checkpoint holds O(cell) rows and saves 3 corpus
     // reads. The member-ID build side (codes scan + distinct) needs no
-    // checkpoint of its own (r19 — it did in r18, before `members` was
-    // materialized): it executes exactly once, inside this one checkpoint
-    // action, as the semi-join's broadcast build.
+    // checkpoint of its own: it executes exactly once, inside this one
+    // checkpoint action, as the semi-join's broadcast build.
     val memberIds = loadCodes(s, path).filter(col("cell") === cell)
       .select(col("vec_id").as("__split_member")).distinct()
     val members = vectors.join(broadcast(memberIds),
@@ -1899,7 +1801,7 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     Dedup.dropLocalCheckpoint(members) // consumed by the sub-train above
     // fewer than 2 sub-centroids = fewer than 2 member rows to seed from —
     // refinement cannot help this cell. Thrown BEFORE any staging or
-    // mutation (the manifest write is below), so the index is untouched;
+    // mutation (the children stage is below), so the index is untouched;
     // splitHottestCell translates it into NeedsRetrain instead of
     // propagating, per its documented contract.
     if (sub.length < 2) throw UnsplittableCellException(cell, sub.length)
@@ -1916,8 +1818,8 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     applySplit(s, path, vectors, id, emb, pq, meta)
   }
 
-  /** Roll an interrupted [[splitCell]] forward (complete staged manifest →
-    * re-apply, idempotent) or back (partial manifest without its commit
+  /** Roll an interrupted [[splitCell]] forward (complete staged children →
+    * re-apply, idempotent) or back (partial stage without its commit
     * marker → discard; no mutation had started). No-op on a healthy index.
     */
   def recoverSplit(s: SparkSession, path: String, vectors: DataFrame,
@@ -1930,18 +1832,18 @@ object VectorIndex extends org.apache.spark.internal.Logging {
         applySplit(s, path, vectors, id, emb, pq, meta)
         ()
       } else {
-        fs.delete(staging, true) // the manifest write itself crashed
+        fs.delete(staging, true) // the stage write itself crashed
         ()
       }
     }
   }
 
   /** The idempotent apply phase of a split, driven ONLY by the staged
-    * manifest: build the post-split centroid table, re-encode every vector
+    * children: build the post-split centroid table, re-encode every vector
     * currently coded in parent ∪ children cells under it (covers the fresh
     * run AND every crash intermediate — a member duplicated across a
     * half-swapped rewrite re-enters through either copy and the overwrite
-    * collapses it), persist the new centroid table, drop the manifest.
+    * collapses it), commit the new centroid table, drop the stage.
     */
   private def applySplit(s: SparkSession, path: String, vectors: DataFrame,
       id: Column, emb: Column, pq: PqParams, meta: Seq[String]): Seq[Long] = {
@@ -1954,7 +1856,7 @@ object VectorIndex extends org.apache.spark.internal.Logging {
       .toSeq.toDF("cent_id", "cent")
     // k+1 rows, checkpointed before the staged write below. The filter
     // removes the CHILD ids too, not just the parent: a crash between the
-    // cents commit and the manifest delete leaves the persisted table
+    // cents commit and the stage delete leaves the persisted table
     // already post-split, and a recovery re-run that filtered only the
     // (absent) parent would union the staged children a second time —
     // duplicated centroid rows consume probe slots and double-match the
@@ -1969,13 +1871,13 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     val quant = IvfadcQuantizer(newCents,
       s.read.parquet(snap.partPath("codebook")), pq)
     val cellSet = parent +: childIds
-    // Parent ∪ children member VECTORS materialized once (r18, same
-    // reasoning as splitCell's sub-train input): upsertCore executes its
+    // Parent ∪ children member VECTORS materialized once (same reasoning
+    // as splitCell's sub-train input): upsertCore executes its
     // `updates` in several actions (the encode checkpoint, the changed-id
     // snapshot) and each would re-scan the full `vectors` source for
     // O(parent ∪ children) surviving rows. Bounded by the touched cells,
     // dropped when consumed. The member-ID build side runs exactly once,
-    // inside this one checkpoint action (r19 — no separate checkpoint).
+    // inside this one checkpoint action.
     val memberIds = loadCodes(s, path).filter(col("cell").isin(cellSet: _*))
       .select(col("vec_id").as("__split_member")).distinct()
     val updates = vectors.join(broadcast(memberIds),
@@ -1988,11 +1890,11 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     // readers resolve either the whole pre-commit or whole post-commit
     // centroid table (the codes rewrite above is partition-wise in place —
     // the split's documented touched-cells-only cost bound — so the split's
-    // own window is still writer-side-only; the atomic flip here closes the
-    // mixed cents/codes hazard the old in-place overwrite had)
-    val stagedDir = stagedDirName(snapshot(s, path), "cents")
+    // own window is still writer-side-only)
+    val live = snapshot(s, path)
+    val stagedDir = stagedDirName(live, "cents")
     newCents.write.mode("overwrite").parquet(s"$path/$stagedDir")
-    commitParts(s, path, Map("cents" -> stagedDir))
+    commit(s, live)(m => m.copy(dirs = m.dirs + ("cents" -> stagedDir)))
     hadoopFs(s, path).delete(new org.apache.hadoop.fs.Path(s"$path/split_staging"), true)
     childIds
   }
@@ -2073,11 +1975,6 @@ object VectorIndex extends org.apache.spark.internal.Logging {
 
   // ---- full retrain / reindex ---------------------------------------------
 
-  /** The four persisted parts of an index, in the order the reindex swap
-    * promotes them.
-    */
-  private val indexParts = Seq("cents", "codebook", "codes", "occupancy")
-
   /** Retrain the quantizer on the CURRENT corpus and atomically swap in a
     * freshly-encoded index — the response to the [[NeedsRetrain]] signal
     * and to general quantizer drift (the FAISS contract the scaladoc at
@@ -2091,32 +1988,25 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     *     vector source ([[splitCell]]'s contract); rows whose id is not
     *     currently coded are ignored — reindex changes the quantizer, not
     *     the membership;
-    *   - the new index (cents/codebook/codes/occupancy) is built COMPLETELY
-    *     under `reindex_staging/` while the old index keeps serving;
-    *     nothing live is touched until the staged build carries its
-    *     `_COMMITTED` marker;
-    *   - the swap is per-part metadata renames (live → `reindex_old/`,
-    *     staged → live), rolled forward from any crash point by
-    *     [[recoverReindex]] (the [[compactCells]]/[[splitCell]] staged-
-    *     manifest discipline): _COMMITTED present → the staged index wins,
-    *     absent → the old index was never touched and the stage is debris.
+    *   - the new cents/codebook/codes are built COMPLETELY in the next
+    *     generation's directories while the old index keeps serving, and
+    *     published by one manifest commit ([[write]]'s rebuild path); a
+    *     crash before it leaves the old index untouched and the stage as
+    *     debris ([[recover]]).
     *
     * Equivalence contract (the `ann_reindex` oracle gate pins it
     * cross-engine): the reindexed index answers exactly like a from-scratch
     * [[train]]+[[encode]]+[[write]] over the current corpus — because that
     * is literally what the staged build is.
     *
-    * Replay bookkeeping: the `applied_batch*` high-water markers live at
-    * the index root and SURVIVE the swap — a replayed streaming batch is
-    * still refused after a reindex (its vectors are already inside the
-    * re-encoded corpus; re-appending them would duplicate). The re-encoded
-    * rows carry no `__batch`/`__stream` stamps, so the data-derived
-    * fallback restarts dark for pre-reindex batches — the marker is the
-    * authority, the same trade documented on [[appendSink]].
+    * Replay bookkeeping: the applied marks ride the manifest and SURVIVE
+    * the swap — a replayed streaming batch is still refused after a
+    * reindex (its vectors are already inside the re-encoded corpus). The
+    * re-encoded rows carry no `__batch`/`__stream` stamps, so the
+    * data-derived fallback restarts dark for pre-reindex batches — the
+    * mark is the authority, the same trade documented on [[appendSink]].
     *
     * Single-writer maintenance op (lease-enforced, like everything here).
-    * Readers during the brief per-part swap window are unsafe, as with
-    * compaction — serve from a settled index or accept the recovery call.
     *
     * @param vectors vector source; only ids currently in the index are used
     * @param meta    filterable metadata columns to carry onto the new code
@@ -2125,172 +2015,27 @@ object VectorIndex extends org.apache.spark.internal.Logging {
   def reindex(s: SparkSession, path: String, vectors: DataFrame, id: Column,
       emb: Column, kCells: Int, iters: Int, pq: PqParams,
       meta: Seq[String] = Nil): Unit = withWriterLease(s, path, "reindex") {
-    recoverReindex(s, path) // settle any interrupted predecessor first
-    val staging = s"$path/reindex_staging"
-    val fs = hadoopFs(s, path)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
     require(!meta.contains("__reindex_id") && !meta.contains("__reindex_emb"),
       "metadata column names __reindex_id/__reindex_emb are reserved by reindex")
-    // ONE full pass over the caller's vector source (r19, VERDICT r18 #3;
-    // r18 had already materialized the member-ID build side, but every
-    // train+encode action still re-ran the full source scan + semi-join —
-    // ~5 corpus passes): project membership and exactly the needed columns
-    // (id, emb, meta — guide §6 column pruning) and STAGE them as parquet
-    // under the staging dir. The chain's ~6 actions (k-means seeds, Lloyd
-    // iterations, codebook seeds, the codes write) then re-read a narrow
-    // staged table instead. Disk-bounded, not memory-bound — the r18 round
-    // rightly rejected a corpus-sized executor-memory checkpoint (guide §5);
-    // a parquet stage is exactly the columnar storage a production reindex
-    // streams from. It lives and dies with reindex_staging (the promote
-    // deletes the dir; an uncommitted crash leaves debris the next run
-    // clears above).
-    val memberIds = loadCodes(s, path)
+    val snap = settled(s, path)
+    // ONE full pass over the caller's vector source: project membership and
+    // exactly the needed columns (id, emb, meta) and STAGE them as parquet
+    // next to the staged parts. The chain's ~6 actions (k-means seeds,
+    // Lloyd iterations, codebook seeds, the codes write) then re-read a
+    // narrow staged table instead of re-running the source scan +
+    // semi-join. Disk-bounded, not memory-bound. The commit's GC drops the
+    // stage; a crash leaves it as debris.
+    val corpusDir = s"$path/${stagedDirName(snap, "corpus")}"
+    val memberIds = loadCodes(s, snap)
       .select(col("vec_id").as("__member")).distinct()
     vectors.join(broadcast(memberIds), id === col("__member"), "left_semi")
       .select(id.as("__reindex_id") +: emb.as("__reindex_emb") +: meta.map(col): _*)
-      .write.mode("overwrite").parquet(s"$staging/corpus")
-    val corpus = s.read.parquet(s"$staging/corpus")
+      .write.mode("overwrite").parquet(corpusDir)
+    val corpus = s.read.parquet(corpusDir)
     val cid = col("__reindex_id")
     val cemb = col("__reindex_emb")
     val quant = train(corpus, cid, cemb, kCells, iters, pq)
-    val codes = encode(corpus, cid, cemb, quant, meta)
-    quant.cents.write.mode("overwrite").parquet(s"$staging/cents")
-    quant.csubs.write.mode("overwrite").parquet(s"$staging/codebook")
-    // same cell-clustered one-file-per-cell layout as [[write]]
-    codes.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$staging/codes")
-    // fresh staged dir: marker = exactly what was written (renamed into the
-    // promoted generation together with the data)
-    writeSchemaMarker(s, s"$staging/codes", codes.schema)
-    cellOccupancy(s.read.parquet(s"$staging/codes"))
-      .write.mode("overwrite").parquet(s"$staging/occupancy")
-    // the commit point: the marker names the target generation, making the
-    // promote below (staged-part renames + one manifest flip) re-runnable
-    // from any crash point with a stable target
-    val targetGen = snapshot(s, path).gen + 1
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$staging/_COMMITTED"), true)
-    try out.write(s"$targetGen\n".getBytes("UTF-8")) finally out.close()
-    promoteReindex(s, path, targetGen)
-  }
-
-  /** The roll-forwardable promote phase: rename each still-staged part to
-    * its target-generation directory (a part already renamed by a crashed
-    * predecessor is skipped), then flip the manifest — ONE atomic commit
-    * covering all four parts, so a reader can never observe new cents with
-    * old codes — and drop the staging area. Idempotent: re-runs skip
-    * completed renames, and the commit is skipped if the target generation
-    * is already live.
-    */
-  private def promoteReindex(s: SparkSession, path: String,
-      targetGen: Long): Unit = {
-    val fs = hadoopFs(s, path)
-    def staged(n: String) = new org.apache.hadoop.fs.Path(s"$path/reindex_staging/$n")
-    def target(n: String) = new org.apache.hadoop.fs.Path(s"$path/${n}_gen_$targetGen")
-    indexParts.foreach { n =>
-      if (fs.exists(staged(n)) && !fs.exists(target(n))) fs.rename(staged(n), target(n))
-    }
-    // every part must now sit at its target dir (renamed by us or a crashed
-    // predecessor) — a missing one means the staged build was damaged by
-    // hand; refuse to commit a broken generation
-    val missing = indexParts.filterNot(n => fs.exists(target(n)))
-    require(missing.isEmpty,
-      s"reindex promote at $path: staged parts missing for generation " +
-        s"$targetGen: ${missing.mkString(", ")}")
-    if (snapshot(s, path).gen < targetGen) {
-      // the sidecar maps the SUPERSEDED generation's cells — it must die
-      // BEFORE the flip (a post-flip crash leaving the stale mapping live
-      // would mis-route later upserts' touched-cell discovery; absence
-      // just falls back to the full scan)
-      fs.delete(idMapPath(path), true)
-      commitParts(s, path,
-        indexParts.map(n => n -> s"${n}_gen_$targetGen").toMap)
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/reindex_staging"), true)
-    // rebuild from the promoted generation's codes (idempotent across
-    // recovery re-runs: present means a completed post-flip rebuild);
-    // a generation under the read threshold goes sidecar-less, like write()
-    if (!fs.exists(idMapPath(path))) {
-      val codesDir = snapshot(s, path).partPath("codes")
-      if (codesBytes(s, codesDir) >= sidecarReadMinBytes)
-        rebuildIdMapFrom(s, path, codesDir)
-    }
-    ()
-  }
-
-  /** Repair an interrupted [[reindex]] — idempotent, cheap no-op on a
-    * healthy index. Decision table:
-    *
-    *   - `reindex_staging/` present WITH a generation-stamped `_COMMITTED`:
-    *     the staged build is complete and authoritative — roll the promote
-    *     FORWARD ([[promoteReindex]] skips completed renames and an
-    *     already-live commit).
-    *   - present WITH a legacy (empty) `_COMMITTED`: a pre-manifest crash —
-    *     roll forward via the legacy flat-rename swap.
-    *   - present WITHOUT the marker: the staged build itself crashed; the
-    *     live index was never touched — drop the stage.
-    *   - absent but legacy `reindex_old/` present: pre-manifest cleanup
-    *     crash; restore any missing flat part and drop the debris.
-    */
-  def recoverReindex(s: SparkSession, path: String): Unit =
-      withWriterLease(s, path, "recoverReindex") {
-    val fs = hadoopFs(s, path)
-    def p(n: String) = new org.apache.hadoop.fs.Path(s"$path/$n")
-    val staging = p("reindex_staging")
-    if (fs.exists(staging)) {
-      val marker = new org.apache.hadoop.fs.Path(staging, "_COMMITTED")
-      if (fs.exists(marker)) {
-        pendingReindexTarget(s, path) match {
-          case Some(targetGen) => promoteReindex(s, path, targetGen)
-          case None => completeReindexSwapLegacy(s, path)
-        }
-      } else {
-        fs.delete(staging, true)
-        restoreFromOld(fs, path)
-      }
-    } else if (fs.exists(p("reindex_old"))) {
-      restoreFromOld(fs, path)
-    }
-  }
-
-  /** The pre-manifest promote: move live flat parts aside and rename the
-    * staged ones into the flat locations. Only reachable for a crash state
-    * left by a pre-manifest build (empty `_COMMITTED` marker).
-    */
-  private def completeReindexSwapLegacy(s: SparkSession, path: String): Unit = {
-    val fs = hadoopFs(s, path)
-    def p(n: String) = new org.apache.hadoop.fs.Path(s"$path/$n")
-    def staged(n: String) = new org.apache.hadoop.fs.Path(s"$path/reindex_staging/$n")
-    def old(n: String) = new org.apache.hadoop.fs.Path(s"$path/reindex_old/$n")
-    fs.mkdirs(p("reindex_old"))
-    // stale-generation sidecar: drop before the parts move (legacy path —
-    // no rebuild; the next rebuildIdMap/write recreates it on demand)
-    fs.delete(idMapPath(path), true)
-    indexParts.foreach { n =>
-      if (fs.exists(staged(n))) {
-        if (fs.exists(p(n))) { fs.delete(old(n), true); fs.rename(p(n), old(n)) }
-        fs.rename(staged(n), p(n))
-      }
-    }
-    fs.delete(p("reindex_old"), true)
-    fs.delete(p("reindex_staging"), true)
-    ()
-  }
-
-  /** Put back any part whose live copy is missing but whose pre-swap copy
-    * survives under `reindex_old/`, then drop the old area. Defensive —
-    * unreachable from [[completeReindexSwap]]'s own crash windows (the
-    * stage, deleted last, still exists in all of them), but it makes
-    * recovery total over hand-damaged states too.
-    */
-  private def restoreFromOld(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Unit = {
-    def p(n: String) = new org.apache.hadoop.fs.Path(s"$path/$n")
-    def old(n: String) = new org.apache.hadoop.fs.Path(s"$path/reindex_old/$n")
-    indexParts.foreach { n =>
-      if (!fs.exists(p(n)) && fs.exists(old(n))) fs.rename(old(n), p(n))
-    }
-    fs.delete(p("reindex_old"), true)
-    ()
+    commitRebuild(s, snap, quant, encode(corpus, cid, cemb, quant, meta))
   }
 
   // ---- occupancy accounting ----------------------------------------------
@@ -2307,11 +2052,24 @@ object VectorIndex extends org.apache.spark.internal.Logging {
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n_vecs"))
 
-  /** The persisted per-cell occupancy of an index ([[write]] seeds it;
+  /** A (cell, n_vecs) frame collected to the driver — ≤ k rows. */
+  private def countsOf(occ: DataFrame): Map[Long, Long] =
+    occ.collect().map(r =>
+      r.getAs[Number](0).longValue -> r.getAs[Number](1).longValue).toMap
+
+  /** The committed per-cell occupancy of an index (`cell`, `n_vecs`), `cell`
+    * typed like the codes' `cell` column ([[write]] seeds it;
     * [[appendBatch]]/[[upsertBatch]] maintain it incrementally).
     */
-  def occupancy(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(snapshot(s, path).partPath("occupancy"))
+  def occupancy(s: SparkSession, path: String): DataFrame = {
+    val snap = snapshot(s, path)
+    val rows = snap.occupancy.toSeq.sorted.map { case (c, n) =>
+      org.apache.spark.sql.Row(c, n)
+    }
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+        StructField("cell", LongType), StructField("n_vecs", LongType))))
+      .withColumn("cell", col("cell").cast(snap.schema("cell").dataType))
+  }
 
   /** Skew summary over the persisted occupancy: `imbalance` is the
     * worst-case pruned-scan degradation factor (max cell / mean cell) —
@@ -2335,186 +2093,49 @@ object VectorIndex extends org.apache.spark.internal.Logging {
       round(avg(col("n_vecs")), 2).as("mean_cell"),
       round(max(col("n_vecs")) / avg(col("n_vecs")), 2).as("imbalance"))
 
-  /** Fold `delta` per-cell counts into the persisted occupancy table.
-    * `replace = false` SUMS overlapping cells (append semantics);
-    * `replace = true` expects `delta` to already carry the final counts
-    * for every cell it mentions (upsert semantics — the caller rebuilt the
-    * touched cells' counts). Tiny table (≤ k rows): checkpointed before
-    * the overwrite.
-    */
-  private def mergeOccupancy(s: SparkSession, path: String, delta: DataFrame,
-      replace: Boolean = false): Unit = {
-    val occPath = snapshot(s, path).partPath("occupancy")
-    val merged =
-      if (replace) delta
-      else occupancy(s, path).unionByName(delta)
-        .groupBy(col("cell")).agg(sum(col("n_vecs")).as("n_vecs"))
-    merged.localCheckpoint().write.mode("overwrite").parquet(occPath)
-  }
-
-  /** Codes with EVERY stored column (streaming `__batch` stamps included,
-    * whichever files carry them) — [[loadCodes]] projects the search
-    * schema; maintenance paths need the full rows to rewrite losslessly.
-    */
-  private[graft] def loadCodesFull(s: SparkSession, path: String): DataFrame =
-    codesFullSchemaRead(s, snapshot(s, path).partPath("codes"))
-
-  // ---- codes schema marker --------------------------------------------------
-  //
-  // The full-rows read used to pay `mergeSchema=true` — a distributed job
-  // reading EVERY parquet footer under the codes directory — once per
-  // mutation batch (upsert, streaming replay check, compaction). Bytes read
-  // are O(files in the index): the metadata dual of the full-scan discovery
-  // the id→cell sidecar already removed, and at 100 TB a per-micro-batch
-  // full-footer pass by itself. Table formats solve this by holding the
-  // schema in a manifest; this marker is that idea scaled to one file:
-  // `_schema.json` INSIDE the codes directory (underscore-prefixed, so data
-  // readers ignore it; it rides every staged-directory rename with the data
-  // it describes) holds the union of every column set ever written there.
+  // ---- codes schema -------------------------------------------------------
   //
   // INVARIANT (superset-first, the sidecar's discipline): a writer that may
-  // ADD columns to a live directory (stamped appends, metadata-carrying
-  // upserts) widens the marker BEFORE the data lands. Every crash window
-  // then leaves at worst a marker claiming a column no file carries — an
-  // explicit-schema read returns it as all-null, exactly what mergeSchema
-  // returns for files lacking a column — never a marker missing a column
-  // files DO carry (which would silently drop stamps from a lossless
-  // rewrite). Single-writer (lease-enforced) like every mutation here.
-  // Absence (legacy index, operator delete) falls back to mergeSchema —
-  // always correct, just O(files).
+  // ADD columns to the live codes directory (stamped appends,
+  // metadata-carrying upserts) commits the widened manifest schema BEFORE
+  // the data lands. Every crash window then leaves at worst a schema
+  // claiming a column no file carries — an explicit-schema read returns it
+  // as all-null — never a schema missing a column files DO carry (which
+  // would silently drop stamps from a lossless rewrite).
 
-  private val CodesSchemaMarker = "_schema.json"
-
-  /** Read the codes directory with its full (union) schema: marker when
-    * present — zero footer jobs — else the legacy all-footers mergeSchema.
+  /** Fields normalized nullable: files written before a column existed
+    * read it as null.
     */
-  private def codesFullSchemaRead(s: SparkSession, codesDir: String): DataFrame =
-    readSchemaMarker(s, codesDir) match {
-      case Some(st) => s.read.schema(st).parquet(codesDir)
-      case None => s.read.option("mergeSchema", "true").parquet(codesDir)
-    }
+  private def nullableSchema(st: StructType): StructType =
+    StructType(st.fields.map(_.copy(nullable = true)))
 
-  private[graft] def readSchemaMarker(s: SparkSession,
-      codesDir: String): Option[org.apache.spark.sql.types.StructType] = try {
-    val fs = hadoopFs(s, codesDir)
-    val p = new org.apache.hadoop.fs.Path(s"$codesDir/$CodesSchemaMarker")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      org.apache.spark.sql.types.DataType.fromJson(json) match {
-        case st: org.apache.spark.sql.types.StructType => Some(st)
-        case _ => None
-      }
-    }
-  } catch { // torn/unreadable marker = absent; fatal errors must propagate
-    case scala.util.control.NonFatal(_) => None
-  }
-
-  /** Persist `schema` as the directory's full-rows read schema. Fields are
-    * normalized nullable (files written before a column existed read it as
-    * null — the mergeSchema semantics this replaces). tmp-write + rename so
-    * a torn write is never read as truth (readSchemaMarker treats a parse
-    * failure as absent anyway).
+  /** Commit `incoming`'s new columns before the data carrying them lands;
+    * the snapshot itself when nothing is new.
     */
-  private def writeSchemaMarker(s: SparkSession, codesDir: String,
-      schema: org.apache.spark.sql.types.StructType): Unit = try {
-    val nullable = org.apache.spark.sql.types.StructType(
-      schema.fields.map(_.copy(nullable = true)))
-    val fs = hadoopFs(s, codesDir)
-    val tmp = new org.apache.hadoop.fs.Path(s"$codesDir/.${CodesSchemaMarker}.tmp")
-    val dst = new org.apache.hadoop.fs.Path(s"$codesDir/$CodesSchemaMarker")
-    val out = fs.create(tmp, true)
-    try out.write(nullable.json.getBytes("UTF-8")) finally out.close()
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst)) fs.delete(tmp, false)
-    ()
-  } catch { // marker is an optimization: absence is safe (fatal propagates).
-    // The WIDEN paths additionally verify after the write — a swallowed
-    // failure there would leave a stale NARROWER marker, which is NOT
-    // absence (see widenSchemaMarker, ADVICE r18).
-    case scala.util.control.NonFatal(_) => ()
-  }
-
-  /** Widen a live directory's marker to cover `incoming`'s columns BEFORE
-    * the data lands (see the superset-first invariant above). A directory
-    * with no marker derives its current union once via the legacy footer
-    * merge — the last time that cost is ever paid for this directory; the
-    * partition-inferred `cell` type (int for small ids) is normalized to
-    * the written long so legacy-derived and fresh markers agree (ADVICE
-    * r18).
-    *
-    * VERIFIED, not fire-and-forget (ADVICE r18, high): a swallowed
-    * write failure here would leave the OLD, NARROWER marker while data
-    * carrying the new columns lands — later explicit-schema reads would
-    * silently drop those columns and the next lossless rewrite would
-    * delete them permanently. After the write, re-read and check coverage
-    * of `incoming`; on any shortfall DELETE the marker (absence = the
-    * always-correct mergeSchema fallback), and if even that delete fails,
-    * abort the mutation before its data lands.
-    */
-  private def widenSchemaMarker(s: SparkSession, codesDir: String,
-      incoming: org.apache.spark.sql.types.StructType): Unit = {
-    val base = readSchemaMarker(s, codesDir).getOrElse {
-      val merged = s.read.option("mergeSchema", "true").parquet(codesDir).schema
-      org.apache.spark.sql.types.StructType(merged.fields.map(f =>
-        if (f.name == "cell" && isIntegral(f.dataType))
-          f.copy(dataType = org.apache.spark.sql.types.LongType)
-        else f))
-    }
-    writeSchemaMarkerVerified(s, codesDir, unionSchemas(base, incoming), incoming)
-  }
-
-  /** [[writeSchemaMarker]] + the post-write coverage check every WIDENING
-    * context requires (ADVICE r18, high): re-read the marker and confirm it
-    * covers `mustCover`'s columns; on any shortfall delete the marker
-    * (absence = the always-correct mergeSchema fallback) and, if even the
-    * delete fails, throw — the caller aborts before its data lands.
-    */
-  private def writeSchemaMarkerVerified(s: SparkSession, codesDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      mustCover: org.apache.spark.sql.types.StructType): Unit = {
-    writeSchemaMarker(s, codesDir, schema)
-    val covered = readSchemaMarker(s, codesDir).exists { st =>
-      val names = st.fieldNames.toSet
-      mustCover.fields.forall(f => names.contains(f.name))
-    }
-    if (!covered) {
-      val fs = hadoopFs(s, codesDir)
-      val dst = new org.apache.hadoop.fs.Path(s"$codesDir/$CodesSchemaMarker")
-      if (fs.exists(dst) && !fs.delete(dst, false))
-        throw new java.io.IOException(
-          s"codes schema marker at $codesDir: widen to " +
-            s"${mustCover.fieldNames.mkString(",")} failed and the stale " +
-            "narrower marker could not be removed — aborting before the " +
-            "data write (superset-first invariant)")
-    }
+  private def widenSchema(s: SparkSession, snap: IndexSnapshot,
+      incoming: StructType): IndexSnapshot = {
+    val union = unionSchemas(snap.schema, nullableSchema(incoming))
+    if (union.length == snap.schema.length) snap
+    else commit(s, snap)(_.copy(schema = union))
   }
 
   /** Name-keyed field union, first-seen order. The writers here never
-    * change a column's type, so a type conflict on a shared name can only
-    * be debris (a foreign file dropped into the directory, or a hand-edited
-    * marker) — REFUSED loudly at widen time (VERDICT r18 #7) instead of
-    * first-seen-silently-wins, which would surface as quietly wrong
-    * explicit-schema reads far from the cause. `cell` is exempt: its
-    * marker type is canonical long while partition-directory inference can
-    * yield int (normalized by the callers; tolerated here for robustness).
+    * change a column's type, so a type conflict on a shared name (a caller
+    * re-using a metadata column name with another type) is REFUSED loudly
+    * instead of first-seen-silently-wins, which would surface as quietly
+    * wrong explicit-schema reads far from the cause.
     */
-  private[graft] def unionSchemas(a: org.apache.spark.sql.types.StructType,
-      b: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType = {
+  private[graft] def unionSchemas(a: StructType, b: StructType): StructType = {
     val byName = a.fields.map(f => f.name -> f).toMap
     b.fields.foreach { f =>
       byName.get(f.name).foreach { have =>
-        require(f.name == "cell" || have.dataType == f.dataType,
+        require(have.dataType == f.dataType,
           s"codes schema drift on column '${f.name}': existing " +
             s"${have.dataType.simpleString} vs incoming " +
-            s"${f.dataType.simpleString} — refusing to widen over retyped " +
-            "debris (writers never retype; check the codes directory)")
+            s"${f.dataType.simpleString} — refusing to widen over a retyped " +
+            "column (writers never retype)")
       }
     }
-    org.apache.spark.sql.types.StructType(
-      a.fields ++ b.fields.filterNot(f => byName.contains(f.name)))
+    StructType(a.fields ++ b.fields.filterNot(f => byName.contains(f.name)))
   }
 }

@@ -90,9 +90,9 @@ private[graft] object AnnFixtures {
     IvfadcQuantizer(frameOf(s, q.cents), frameOf(s, q.csubs), pq)
   }
 
-  /** Path of the shared PERSISTED index (quantizer + full-corpus encode +
-    * occupancy, [[VectorIndex.write]] layout), built once per (process,
-    * dir). Callers must treat it as READ-ONLY — mutation gates go through
+  /** Path of the shared PERSISTED index (quantizer + full-corpus encode,
+    * committed as generation 1 by [[VectorIndex.write]]), built once per
+    * (process, dir). Callers must treat it as READ-ONLY — mutation gates go through
     * [[copyIndex]].
     */
   def indexPath(s: SparkSession, dir: String, pq: PqParams): String =
@@ -118,12 +118,13 @@ private[graft] object AnnFixtures {
     * rename-only: parquet never modifies a file in place (dynamic
     * partition overwrite deletes old part files — unlinking one name
     * leaves the pristine tree's inode intact — and writes fresh ones),
-    * manifests are tmp-write + rename, and the one in-place touch in the
+    * every commit writes a NEW manifest file (tmp-write + rename to the
+    * next generation's name), and the one in-place touch in the
     * codebase (`restampLease`'s mtime bump) targets the `maintenance_lease`
     * file, which exists only WHILE a writer holds the index — the settled
     * shared index has none, so a mutation gate's lease is always a fresh
     * private inode. Only `.parquet` part files are linked (they carry all
-    * the bytes); metadata files (`_SUCCESS`, manifests, markers) are real
+    * the bytes); metadata files (`_SUCCESS`, manifests) are real
     * copies, because Hadoop's RawLocalFileSystem `create(overwrite=true)`
     * TRUNCATES an existing file in place — on a shared inode that would
     * reach back into the pristine tree. Link failures (cross-device,

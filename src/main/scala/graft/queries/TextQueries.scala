@@ -651,7 +651,7 @@ object TextQueries extends QueryPack {
           .as("__nrm"))
       .select(col("doc_id"),
         (when(col("__nrm") > 0,
-          aggregate(zip_with(col("__cnts"), wLit, (c, w) => c * w), lit(0.0), (a, x) => a + x)
+          graft.functions.VectorFunctions.dot(col("__cnts"), wLit)
             / col("__nrm"))
           .otherwise(lit(0.0)) + lit(qmBias)).as("__logit"))
       // + 0.0 canonicalizes IEEE negative zero: a logit in (-5e-7, 0)

@@ -120,7 +120,7 @@ final class HttpMicroBatchStream(readSchema: StructType, props: Map[String, Stri
 
 /** JSON offset: the window's exclusive upper bound after the batch. */
 final case class CursorOffset(to: String) extends Offset {
-  override def json(): String = s"""{"to":${Json.write(Json.mapper.valueToTree(to))}}"""
+  override def json(): String = s"""{"to":${Json.quote(to)}}"""
 }
 
 final case class HttpStreamPartition(startTo: String, endTo: String) extends InputPartition

@@ -5,20 +5,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
 
-/** Round-13 index-lifecycle hardening:
+/** Index-lifecycle contracts:
   *
-  *  - the applySplit crash window AFTER the cents overwrite (r12 ADVICE
-  *    high): recovery must not duplicate the child centroids;
-  *  - appendSink self-recovery from a crashed auto-compaction (r12 ADVICE
-  *    medium): the stream must come back up without manual surgery;
-  *  - a one-member hot cell maps to NeedsRetrain instead of an exception
-  *    (r12 ADVICE low), with the index untouched;
-  *  - the adopted-index edge warning in batchApplied (r12 VERDICT #8);
-  *  - the single-writer maintenance lease (r12 VERDICT #4): concurrent
-  *    writers fail fast, crashed holders expire, re-entrancy works;
-  *  - reindex (r12 VERDICT #3): rebuild-equivalence, replay-marker
-  *    survival, crash recovery for every swap window, and the drift
-  *    response restoring a violated probe-cost bound.
+  *  - the applySplit crash window AFTER the cents overwrite: recovery must
+  *    not duplicate the child centroids;
+  *  - a one-member hot cell maps to NeedsRetrain instead of an exception,
+  *    with the index untouched;
+  *  - the adopted-index edge warning of the replay check;
+  *  - the single-writer maintenance lease: concurrent writers fail fast,
+  *    crashed holders expire, re-entrancy works;
+  *  - reindex: rebuild-equivalence, applied-mark survival, reader
+  *    atomicity, and the drift response restoring a violated probe-cost
+  *    bound. Crash points of every mutation are swept in
+  *    VectorIndexCrashSweepSpec.
   */
 class VectorIndexLifecycleSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
@@ -102,35 +101,15 @@ class VectorIndexLifecycleSpec extends AnyFunSuite {
       "recovered index must answer exactly like the cleanly-split one")
   }
 
-  test("appendSink self-recovers a crashed auto-compaction half-swap before touching the index") {
-    val corpus = bimodalCorpus().filter(col("vec_id") < 48)
-    val fresh = bimodalCorpus().filter(col("vec_id") >= 48)
-    val path = tmp("graft_sink_halfswap")
-    build(corpus, path)
-    val fs = fsOf(path)
-    // the compaction crash window: codes renamed away, stage complete
-    // (carries parquet's _SUCCESS marker from the original write)
-    fs.rename(hp(path, "codes"), hp(path, "codes_compacting"))
-    fs.mkdirs(hp(path, "codes_old"))
-
-    val sink = VectorIndex.appendSink(path, pq, col("vec_id"), col("embedding"),
-      streamId = Some("lineage1"), autoCompactFilesPerCell = Some(50))
-    sink(fresh, 0L) // must not throw on the missing codes/ directory
-
-    assert(fs.exists(hp(path, "codes")) && !fs.exists(hp(path, "codes_old")) &&
-      !fs.exists(hp(path, "codes_compacting")),
-      "the sink must roll the half-swap forward on entry")
-    val n = VectorIndex.loadCodes(spark, path).select("vec_id").distinct().count()
-    assert(n == 64L, s"the batch must have been appended after recovery, got $n vectors")
-  }
-
   test("a one-member hot cell yields NeedsRetrain, not an exception, and leaves the index untouched") {
     val corpus = (0 until 3).map { i =>
       (i.toLong, Array.tabulate(dim)(d => if (d == i) 50f else 0f))
     }.toDF("vec_id", "embedding")
     val path = tmp("graft_split_onemember")
     build(corpus, path, kCells = 3, iters = 1)
-    val centsBefore = spark.read.parquet(s"$path/cents").collect().map(_.getLong(0)).toSet
+    def cents() = spark.read.parquet(VectorIndex.snapshot(spark, path).partPath("cents"))
+      .collect().map(_.getLong(0)).toSet
+    val centsBefore = cents()
 
     // maxCellRows=0 forces the policy to act on a 1-member hottest cell
     val outcome = VectorIndex.splitHottestCell(spark, path, corpus,
@@ -139,8 +118,7 @@ class VectorIndexLifecycleSpec extends AnyFunSuite {
       case VectorIndex.NeedsRetrain(_, rows) => assert(rows == 1L)
       case other => fail(s"expected NeedsRetrain for a 1-member cell, got $other")
     }
-    assert(spark.read.parquet(s"$path/cents").collect().map(_.getLong(0)).toSet
-      == centsBefore, "the index must be untouched")
+    assert(cents() == centsBefore, "the index must be untouched")
     assert(!new java.io.File(s"$path/split_staging").exists(),
       "nothing may have been staged")
     // the raw operator still throws the TYPED exception for direct callers
@@ -161,8 +139,8 @@ class VectorIndexLifecycleSpec extends AnyFunSuite {
     VectorIndex.appendSink(path, pq, col("vec_id"), col("embedding"))(
       batch.filter(col("vec_id") < 56), 0L)
     val before = VectorIndex.adoptedIndexWarnings.get()
-    // adopt the index under a NEW stream identity: no applied_batch_s marker
-    // and no __stream column → the data-derived fallback is dark; the
+    // adopt the index under a NEW stream identity: no applied mark for it
+    // and no __stream column → the data-derived detection is dark; the
     // warning must fire and the fresh lineage's batch must still apply
     VectorIndex.appendSink(path, pq, col("vec_id"), col("embedding"),
       streamId = Some("adopted-lineage"))(batch.filter(col("vec_id") >= 56), 0L)
@@ -249,72 +227,17 @@ class VectorIndexLifecycleSpec extends AnyFunSuite {
     assert(VectorIndex.occupancy(spark, path).orderBy("cell").collect().toSeq ==
       VectorIndex.cellOccupancy(VectorIndex.loadCodes(spark, path))
         .orderBy("cell").collect().toSeq)
-    // no staging debris
-    assert(!new java.io.File(s"$path/reindex_staging").exists())
-    assert(!new java.io.File(s"$path/reindex_old").exists())
+    // no staging debris: the corpus stage went with the commit
+    assert(!new java.io.File(path).list().exists(_.startsWith("corpus_gen_")))
 
     // REPLAY SAFETY ACROSS REINDEX: batch 7's vectors are inside the
-    // re-encoded corpus; the surviving high-water marker must refuse the
-    // replay even though the new codes carry no __batch/__stream stamps
+    // re-encoded corpus; the surviving applied mark must refuse the replay
+    // even though the new codes carry no __batch/__stream stamps
     val nBefore = VectorIndex.loadCodes(spark, path).count()
     VectorIndex.appendSink(path, pq, col("vec_id"), col("embedding"),
       streamId = Some("lineageR"))(fresh, 7L)
     assert(VectorIndex.loadCodes(spark, path).count() == nBefore,
       "a replayed pre-reindex batch must still be refused after the reindex")
-  }
-
-  test("recoverReindex: every crash window rolls forward or back; a reader-visible index exists throughout") {
-    val corpus = bimodalCorpus().cache()
-    val path = tmp("graft_reindex_crash")
-    build(corpus, path, kCells = 8)
-    val preAnswers = answers(path, corpus)
-
-    // ROLL BACK: the staged build itself crashed (no _COMMITTED) — the
-    // live index is authoritative, the stage is debris
-    val fs = fsOf(path)
-    fs.mkdirs(hp(path, "reindex_staging/cents"))
-    val junk = fs.create(hp(path, "reindex_staging/cents/part-junk.parquet"), true)
-    junk.write("partial".getBytes("UTF-8")); junk.close()
-    VectorIndex.recoverReindex(spark, path)
-    assert(!fs.exists(hp(path, "reindex_staging")), "partial stage must be dropped")
-    assert(answers(path, corpus) == preAnswers, "roll-back must not touch the index")
-
-    // ROLL FORWARD: a COMMITTED staged build (constructed exactly as
-    // reindex stages it) with the crash falling mid-swap — live cents
-    // already moved aside. recovery must finish the promote and converge
-    // to the same state a clean reindex reaches (built on a twin copy).
-    val twin = tmp("graft_reindex_twin")
-    def copyDir(src: java.io.File, dst: java.io.File): Unit =
-      if (src.isDirectory) { dst.mkdirs(); Option(src.listFiles()).toSeq.flatten
-        .foreach(f => copyDir(f, new java.io.File(dst, f.getName))) }
-      else { java.nio.file.Files.copy(src.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING); () }
-    copyDir(new java.io.File(path), new java.io.File(twin))
-    VectorIndex.reindex(spark, twin, corpus, col("vec_id"), col("embedding"),
-      kCells = 8, iters = 2, pq = pq)
-    val wantAnswers = answers(twin, corpus)
-
-    // stage the same build by hand on the crashed index
-    val quant2 = VectorIndex.train(corpus, col("vec_id"), col("embedding"),
-      kCells = 8, iters = 2, pq = pq)
-    val codes2 = VectorIndex.encode(corpus, col("vec_id"), col("embedding"), quant2)
-    val staging = s"$path/reindex_staging"
-    quant2.cents.write.mode("overwrite").parquet(s"$staging/cents")
-    quant2.csubs.write.mode("overwrite").parquet(s"$staging/codebook")
-    codes2.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$staging/codes")
-    VectorIndex.cellOccupancy(spark.read.parquet(s"$staging/codes"))
-      .write.mode("overwrite").parquet(s"$staging/occupancy")
-    fs.create(hp(path, "reindex_staging/_COMMITTED"), true).close()
-    // simulate the mid-swap crash: live cents moved aside, not yet replaced
-    fs.mkdirs(hp(path, "reindex_old"))
-    fs.rename(hp(path, "cents"), hp(path, "reindex_old/cents"))
-
-    VectorIndex.recoverReindex(spark, path)
-    assert(!fs.exists(hp(path, "reindex_staging")) && !fs.exists(hp(path, "reindex_old")),
-      "roll-forward must consume the stage and the old copies")
-    assert(answers(path, corpus) == wantAnswers,
-      "the rolled-forward index must answer exactly like a clean reindex")
   }
 
   test("drift response: reindex restores a probe-cost bound the stale quantizer violates; the policy then reports Balanced") {
@@ -489,74 +412,39 @@ class VectorIndexLifecycleSpec extends AnyFunSuite {
     assert(ansAfter == coldAns)
   }
 
-  test("generation manifest: a legacy flat index upgrades on its first swap and retains exactly one previous generation") {
+  test("generation manifest: write commits generation 1; each directory swap retains exactly one previous generation") {
     val corpus = bimodalCorpus().cache()
     val path = tmp("graft_gen_upgrade")
     build(corpus, path)
-    assert(VectorIndex.snapshot(spark, path).gen == 0L, "fresh index is generation 0 (flat)")
-    assert(new java.io.File(s"$path/codes").isDirectory)
+    val s0 = VectorIndex.snapshot(spark, path)
+    assert(s0.gen == 1L && s0.dirs("codes") == "codes_gen_1",
+      s"a fresh write commits generation 1, got $s0")
     val ans = answers(path, corpus)
 
     VectorIndex.compactCells(spark, path)
     val s1 = VectorIndex.snapshot(spark, path)
-    assert(s1.gen == 1L && s1.dirs("codes") == "codes_gen_1",
-      s"first swap must commit generation 1, got $s1")
-    assert(new java.io.File(s"$path/codes").isDirectory,
-      "the previous (flat) generation must be RETAINED for in-flight readers")
+    assert(s1.gen == 2L && s1.dirs("codes") == "codes_gen_2",
+      s"the swap must commit generation 2, got $s1")
+    assert(s1.retain == Set("codes_gen_1") &&
+      new java.io.File(s"$path/codes_gen_1").isDirectory,
+      "the previous generation must be RETAINED for in-flight readers")
     assert(answers(path, corpus) == ans)
 
     VectorIndex.compactCells(spark, path)
     val s2 = VectorIndex.snapshot(spark, path)
-    assert(s2.gen == 2L && s2.dirs("codes") == "codes_gen_2")
-    assert(!new java.io.File(s"$path/codes").exists(),
-      "the generation before the previous must be GC'd at the next commit")
-    assert(new java.io.File(s"$path/codes_gen_1").isDirectory,
-      "generation 1 is now the retained previous")
+    assert(s2.gen == 3L && s2.dirs("codes") == "codes_gen_3")
+    assert(!new java.io.File(s"$path/codes_gen_1").exists(),
+      "the generation before the previous must be GC'd at the next swap")
+    assert(new java.io.File(s"$path/codes_gen_2").isDirectory,
+      "generation 2 is now the retained previous")
     assert(answers(path, corpus) == ans)
 
     // staged-but-uncommitted debris (a swap that crashed before its commit)
     // is dropped by recovery without touching the live generation
     new java.io.File(s"$path/codes_gen_99").mkdirs()
-    VectorIndex.recoverCompaction(spark, path)
+    VectorIndex.recover(spark, path)
     assert(!new java.io.File(s"$path/codes_gen_99").exists(), "debris must be dropped")
     assert(answers(path, corpus) == ans)
-  }
-
-  test("recoverReindex rolls a committed-but-unpromoted staged build forward into one atomic manifest flip") {
-    val corpus = bimodalCorpus().cache()
-    val path = tmp("graft_gen_reindex_fwd")
-    build(corpus, path, kCells = 2)
-    val ansOld = answers(path, corpus)
-
-    // hand-build the crash state: a COMPLETE staged retrain (kCells=8) with
-    // the generation-stamped _COMMITTED marker, process dead before promote
-    val quant2 = VectorIndex.train(corpus, col("vec_id"), col("embedding"),
-      kCells = 8, iters = 2, pq = pq)
-    val codes2 = VectorIndex.encode(corpus, col("vec_id"), col("embedding"), quant2)
-    val staging = s"$path/reindex_staging"
-    quant2.cents.write.mode("overwrite").parquet(s"$staging/cents")
-    quant2.csubs.write.mode("overwrite").parquet(s"$staging/codebook")
-    codes2.repartition(col("cell")).write.mode("overwrite")
-      .partitionBy("cell").parquet(s"$staging/codes")
-    VectorIndex.cellOccupancy(spark.read.parquet(s"$staging/codes"))
-      .write.mode("overwrite").parquet(s"$staging/occupancy")
-    val fs = fsOf(path)
-    val out = fs.create(hp(path, "reindex_staging/_COMMITTED"), true)
-    out.write("1\n".getBytes("UTF-8")); out.close()
-
-    VectorIndex.recoverReindex(spark, path)
-
-    val snap = VectorIndex.snapshot(spark, path)
-    assert(snap.gen == 1L, "the promote must have committed generation 1")
-    assert(Seq("cents", "codebook", "codes", "occupancy")
-      .forall(p => snap.dirs(p) == s"${p}_gen_1"), s"all parts flip together, got ${snap.dirs}")
-    assert(!fs.exists(hp(path, "reindex_staging")), "staging must be consumed")
-    val ansNew = answers(path, corpus)
-    assert(ansNew != ansOld, "the promoted retrain must be live")
-    // idempotent: a second recovery call is a no-op
-    VectorIndex.recoverReindex(spark, path)
-    assert(VectorIndex.snapshot(spark, path).gen == 1L)
-    assert(answers(path, corpus) == ansNew)
   }
 
   test("lease release is ownership-checked: a reclaimed lease survives release and the op aborts loudly") {
@@ -858,12 +746,12 @@ class VectorIndexLifecycleSpec extends AnyFunSuite {
 
   test("write() on a generation-managed index is a staged atomic swap, not an in-place overwrite") {
     // The manifest's reader-atomicity contract must cover FULL REBUILDS
-    // too: once an index has swapped generations, write() staging into the
-    // live flat directories would hand a concurrent reader mixed parts.
+    // too: write() onto a live index overwriting the directories the live
+    // manifest references would hand a concurrent reader mixed parts.
     val corpus = bimodalCorpus().cache()
     val path = tmp("graft_gen_write")
     build(corpus, path, kCells = 2)
-    VectorIndex.compactCells(spark, path) // upgrade to generation management
+    VectorIndex.compactCells(spark, path)
     val s1 = VectorIndex.snapshot(spark, path)
     assert(s1.gen >= 1L)
 
@@ -874,7 +762,7 @@ class VectorIndexLifecycleSpec extends AnyFunSuite {
 
     val s2 = VectorIndex.snapshot(spark, path)
     assert(s2.gen == s1.gen + 1, "the rebuild must commit the NEXT generation")
-    assert(Seq("cents", "codebook", "codes", "occupancy")
+    assert(Seq("cents", "codebook", "codes")
       .forall(p => s2.dirs(p) == s"${p}_gen_${s2.gen}"),
       s"every part must resolve to the staged generation, got ${s2.dirs}")
     // the previous generation's directories survive one commit for
@@ -883,51 +771,5 @@ class VectorIndexLifecycleSpec extends AnyFunSuite {
       "the superseded generation must be retained for in-flight readers")
     // and the rebuild is live: 8 cells now
     assert(spark.read.parquet(s2.partPath("cents")).count() == 8L)
-  }
-
-  test("appendBatch and upsertBatch settle a pending committed reindex before mutating") {
-    // A crashed-but-committed reindex (staged build + _COMMITTED marker,
-    // promote never ran) supersedes the live generation. A batch append or
-    // upsert that lands in the OLD generation is silently destroyed when
-    // the promote later rolls forward — so both entries must settle the
-    // promote first, exactly like appendSink.
-    val corpus = bimodalCorpus().cache()
-    val path = tmp("graft_gen_append_settle")
-    build(corpus, path, kCells = 2)
-
-    // hand-build the crash state (same shape as the recoverReindex test)
-    val quant8 = VectorIndex.train(corpus, col("vec_id"), col("embedding"),
-      kCells = 8, iters = 2, pq = pq)
-    val codes8 = VectorIndex.encode(corpus, col("vec_id"), col("embedding"), quant8)
-    val staging = s"$path/reindex_staging"
-    quant8.cents.write.mode("overwrite").parquet(s"$staging/cents")
-    quant8.csubs.write.mode("overwrite").parquet(s"$staging/codebook")
-    codes8.repartition(col("cell")).write.mode("overwrite")
-      .partitionBy("cell").parquet(s"$staging/codes")
-    VectorIndex.cellOccupancy(spark.read.parquet(s"$staging/codes"))
-      .write.mode("overwrite").parquet(s"$staging/occupancy")
-    val out = fsOf(path).create(hp(path, "reindex_staging/_COMMITTED"), true)
-    out.write("1\n".getBytes("UTF-8")); out.close()
-
-    val fresh = Seq((100L, Array.tabulate(dim)(_ => 0.005f)))
-      .toDF("vec_id", "embedding")
-    VectorIndex.appendBatch(spark, path, fresh, col("vec_id"), col("embedding"), pq)
-
-    val snap = VectorIndex.snapshot(spark, path)
-    assert(snap.gen == 1L, "appendBatch must have promoted the pending reindex first")
-    // codes carry one row per PQ subspace (m rows per vector) — count ids
-    def ids(codes: org.apache.spark.sql.DataFrame, id: Long): Long =
-      codes.filter(col("vec_id") === id).select("vec_id").distinct().count()
-    assert(ids(VectorIndex.loadCodes(spark, snap), 100L) == 1L,
-      "the appended vector must live in the PROMOTED generation, not the superseded one")
-
-    // and the upsert path: update the appended row, delete one corpus row
-    val upd = Seq((100L, Array.tabulate(dim)(_ => 0.009f)))
-      .toDF("vec_id", "embedding")
-    val del = Seq(0L).toDF("vec_id")
-    VectorIndex.upsertBatch(spark, path, upd, del, col("vec_id"), col("embedding"), pq)
-    val served = VectorIndex.loadCodes(spark, path)
-    assert(ids(served, 100L) == 1L)
-    assert(ids(served, 0L) == 0L)
   }
 }

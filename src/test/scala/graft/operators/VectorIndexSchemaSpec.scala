@@ -5,20 +5,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
 
-/** The codes schema marker (`_schema.json` inside the codes directory):
-  * full-rows maintenance reads (upsert rewrite, streaming replay check,
-  * compaction) used to pay an all-footers mergeSchema job per mutation
-  * batch — O(files in the index) metadata reads at 100 TB. The marker holds
-  * the union schema in one file; these tests pin its lifecycle and every
-  * crash/fallback window:
+/** The codes' full-rows schema, carried by the generation manifest:
+  * maintenance reads (upsert rewrite, replay detection, compaction) read
+  * the codes under it instead of paying an all-footers schema merge per
+  * mutation batch. These tests pin its lifecycle:
   *
-  *  - a fresh [[VectorIndex.write]] stamps the marker and the explicit-
-  *    schema read round-trips the rows;
-  *  - a SUPERSET marker (the only state the superset-first write order can
-  *    leave behind a crash) reads the phantom column as all-null — exactly
-  *    the mergeSchema semantics for files lacking a column;
-  *  - a torn/garbage marker and an absent marker (legacy index) both fall
-  *    back to the all-footers merge, so absence is always safe.
+  *  - a fresh [[VectorIndex.write]] records the written schema and the
+  *    explicit-schema read round-trips the rows;
+  *  - a SUPERSET schema (the only state the superset-first commit order
+  *    can leave behind a crash) reads the phantom column as all-null;
+  *  - a retyped column is refused before any data lands.
   */
 class VectorIndexSchemaSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
@@ -40,28 +36,22 @@ class VectorIndexSchemaSpec extends AnyFunSuite {
     Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
   }
 
-  private def markerFile(path: String) =
-    new java.io.File(s"$path/codes/_schema.json")
+  /** Commit `schema` as the index's codes schema, as a hand edit would. */
+  private def commitSchema(path: String,
+      schema: org.apache.spark.sql.types.StructType): Unit =
+    ManifestSurgery.amend(spark, path)(
+      _.replace("schema", graft.core.Json.parse(schema.json)))
 
-  private def writeMarkerRaw(path: String, content: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$path/codes/_schema.json"), true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
-
-  test("write() stamps the marker; the explicit-schema read round-trips the codes") {
+  test("write() records the full-rows schema in the manifest; the explicit-schema read round-trips the codes") {
     val path = freshIndex()
     try {
-      assert(markerFile(path).isFile, "write() must stamp _schema.json")
-      val marker = VectorIndex.readSchemaMarker(spark, s"$path/codes")
-      assert(marker.isDefined)
+      assert(VectorIndex.snapshot(spark, path).schema.fieldNames.toSet ===
+        Set("vec_id", "cell", "m", "code"), "write() must record the codes schema")
       val full = VectorIndex.loadCodesFull(spark, path)
       assert(full.schema.fieldNames.toSet ===
         Set("vec_id", "cell", "m", "code"))
-      // the partition column is declared in the marker, not re-inferred from
-      // directory names — `cell` must come back as the written long
+      // the partition column is declared in the schema, not re-inferred
+      // from directory names — `cell` must come back as the written long
       assert(full.schema("cell").dataType ===
         org.apache.spark.sql.types.LongType)
       // row-level equality against the projected search read
@@ -76,15 +66,13 @@ class VectorIndexSchemaSpec extends AnyFunSuite {
   test("superset marker (crash window): phantom column reads all-null, answers unchanged") {
     val path = freshIndex()
     try {
-      // simulate the one state superset-first can leave: marker widened for
-      // a stamped append whose data write never landed
-      val st = VectorIndex.readSchemaMarker(spark, s"$path/codes").get
+      // simulate the one state superset-first can leave: schema widened
+      // for a stamped append whose data write never landed
+      val st = VectorIndex.snapshot(spark, path).schema
       val widened = org.apache.spark.sql.types.StructType(st.fields :+
         org.apache.spark.sql.types.StructField("__batch",
           org.apache.spark.sql.types.LongType, nullable = true))
-      // through the Hadoop fs (not java.nio): the local fs is checksummed,
-      // and a bare-file overwrite leaves a stale .crc that fails the read
-      writeMarkerRaw(path, widened.json)
+      commitSchema(path, widened)
       val full = VectorIndex.loadCodesFull(spark, path)
       assert(full.schema.fieldNames.contains("__batch"))
       assert(full.filter(col("__batch").isNotNull).count() === 0L,
@@ -103,10 +91,10 @@ class VectorIndexSchemaSpec extends AnyFunSuite {
   }
 
   test("retyped debris refuses the widen loudly (VERDICT r18 #7)") {
-    // writers never retype a column, so a marker whose type disagrees with
-    // an incoming write can only be debris (hand-edited marker, foreign
-    // file) — the union must fail loudly instead of first-seen-silently-
-    // wins, which would surface as quietly wrong explicit-schema reads
+    // writers never retype a column, so a schema whose type disagrees with
+    // an incoming write can only be a caller or hand-edit error — the union
+    // must fail loudly instead of first-seen-silently-wins, which would
+    // surface as quietly wrong explicit-schema reads
     import org.apache.spark.sql.types._
     val a = StructType(Seq(StructField("vec_id", LongType),
       StructField("code", LongType)))
@@ -115,19 +103,14 @@ class VectorIndexSchemaSpec extends AnyFunSuite {
       VectorIndex.unionSchemas(a, retyped)
     }
     assert(e.getMessage.contains("schema drift") && e.getMessage.contains("code"))
-    // `cell` is exempt: partition-directory inference yields int where the
-    // canonical marker type is long — tolerated, first-seen wins
-    val cellInt = StructType(Seq(StructField("cell", IntegerType)))
-    val cellLong = StructType(Seq(StructField("cell", LongType)))
-    assert(VectorIndex.unionSchemas(cellLong, cellInt)("cell").dataType === LongType)
-    // end-to-end: an appendBatch onto an index whose marker claims a
+    // end-to-end: an appendBatch onto an index whose schema claims a
     // retyped `code` aborts before any data lands
     val path = freshIndex()
     try {
-      val st = VectorIndex.readSchemaMarker(spark, s"$path/codes").get
+      val st = VectorIndex.snapshot(spark, path).schema
       val debris = StructType(st.fields.map(f =>
         if (f.name == "code") f.copy(dataType = StringType) else f))
-      writeMarkerRaw(path, debris.json)
+      commitSchema(path, debris)
       val rowsBefore = VectorIndex.loadCodes(spark, path).count()
       val fresh = emb.filter(col("vec_id") === 21)
         .select((col("vec_id") + 100000).as("vec_id"), col("embedding"))
@@ -137,72 +120,6 @@ class VectorIndexSchemaSpec extends AnyFunSuite {
       }
       assert(VectorIndex.loadCodes(spark, path).count() === rowsBefore,
         "the refused append must not have landed any rows")
-    } finally rm(new java.io.File(path))
-  }
-
-  test("legacy fallback normalizes `cell` to long in the derived marker (ADVICE r18)") {
-    val path = freshIndex()
-    try {
-      // legacy index: no marker — the first widen derives the base from the
-      // footer merge, where the partition column comes back int-inferred
-      assert(markerFile(path).delete())
-      val fresh = emb.filter(col("vec_id") === 22)
-        .select((col("vec_id") + 200000).as("vec_id"), col("embedding"))
-      VectorIndex.appendBatch(spark, path, fresh,
-        col("vec_id"), col("embedding"), pq)
-      val st = VectorIndex.readSchemaMarker(spark, s"$path/codes")
-      assert(st.isDefined, "the widen must have re-stamped the marker")
-      assert(st.get("cell").dataType === org.apache.spark.sql.types.LongType,
-        "legacy-derived and fresh markers must agree on the canonical long")
-      assert(VectorIndex.loadCodesFull(spark, path).schema("cell").dataType ===
-        org.apache.spark.sql.types.LongType)
-    } finally rm(new java.io.File(path))
-  }
-
-  test("widen verify: a failed marker write leaves NO stale narrower marker " +
-      "(ADVICE r18, high)") {
-    val path = freshIndex()
-    try {
-      // narrow the live marker (simulates the debris the verify exists
-      // for), then sabotage the writer's tmp path with a non-empty
-      // DIRECTORY so fs.create fails and the widen write is swallowed
-      val st = VectorIndex.readSchemaMarker(spark, s"$path/codes").get
-      val narrowed = org.apache.spark.sql.types.StructType(
-        st.fields.filterNot(_.name == "code"))
-      writeMarkerRaw(path, narrowed.json)
-      val tmp = new java.io.File(s"$path/codes/._schema.json.tmp")
-      assert(tmp.mkdir())
-      java.nio.file.Files.writeString(tmp.toPath.resolve("block"), "x")
-      val fresh = emb.filter(col("vec_id") === 23)
-        .select((col("vec_id") + 300000).as("vec_id"), col("embedding"))
-      VectorIndex.appendBatch(spark, path, fresh,
-        col("vec_id"), col("embedding"), pq)
-      // the stale narrower marker (missing `code`) must be GONE — absence
-      // is the safe state (mergeSchema fallback); a surviving narrow marker
-      // would silently drop `code` from the next lossless rewrite
-      assert(VectorIndex.readSchemaMarker(spark, s"$path/codes").isEmpty,
-        "stale narrower marker must be deleted when the widen write fails")
-      val full = VectorIndex.loadCodesFull(spark, path)
-      assert(full.schema.fieldNames.contains("code"))
-      assert(full.filter(col("vec_id") === 300023L).count() === pq.m.toLong,
-        "the append itself must still have landed")
-    } finally rm(new java.io.File(path))
-  }
-
-  test("garbage and absent markers fall back to the footer merge (legacy read)") {
-    val path = freshIndex()
-    try {
-      val expect = VectorIndex.loadCodesFull(spark, path)
-        .orderBy("vec_id", "m").collect().toSeq
-      // torn marker: unparseable JSON must behave as absent
-      writeMarkerRaw(path, "{torn")
-      assert(VectorIndex.readSchemaMarker(spark, s"$path/codes").isEmpty)
-      assert(VectorIndex.loadCodesFull(spark, path)
-        .orderBy("vec_id", "m").collect().toSeq === expect)
-      // absent marker: the pre-marker index layout
-      assert(markerFile(path).delete())
-      assert(VectorIndex.loadCodesFull(spark, path)
-        .orderBy("vec_id", "m").collect().toSeq === expect)
     } finally rm(new java.io.File(path))
   }
 }

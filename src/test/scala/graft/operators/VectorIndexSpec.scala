@@ -80,7 +80,7 @@ class VectorIndexSpec extends AnyFunSuite {
       "one code row per (vector, subspace) after the append")
 
     // cell-partitioned layout on disk: the coarse index IS the directory tree
-    val cellDirs = new java.io.File(s"$path/codes").listFiles()
+    val cellDirs = new java.io.File(VectorIndex.snapshot(spark, path).partPath("codes")).listFiles()
       .count(f => f.isDirectory && f.getName.startsWith("cell="))
     assert(cellDirs > 1, s"codes must be laid out partitioned by cell, got $cellDirs dirs")
 
@@ -159,7 +159,8 @@ class VectorIndexSpec extends AnyFunSuite {
       walk(new java.io.File(path)).filter(_.getName.endsWith(".parquet"))
         .map(f => f.getAbsolutePath -> (f.length, f.lastModified)).toMap
     }
-    val before = fileSig(s"$path/codes")
+    val codesDir = VectorIndex.snapshot(spark, path).partPath("codes")
+    val before = fileSig(codesDir)
 
     VectorIndex.upsertBatch(spark, path, updates, deletes,
       col("vec_id"), col("embedding"), pq)
@@ -197,7 +198,7 @@ class VectorIndexSpec extends AnyFunSuite {
         .select("cell").distinct().collect().map(_.getAs[Number](0).longValue).toSet
       oldCells ++ newCells
     }
-    val after = fileSig(s"$path/codes")
+    val after = fileSig(codesDir)
     val untouchedBefore = before.filterNot { case (p, _) => touched.exists(c => p.contains(s"cell=$c/")) }
     val untouchedAfter = after.filterNot { case (p, _) => touched.exists(c => p.contains(s"cell=$c/")) }
     assert(untouchedBefore.nonEmpty, "fixture must leave some cells untouched for the test to mean anything")
@@ -223,7 +224,8 @@ class VectorIndexSpec extends AnyFunSuite {
     val emptyUpdates = corpus.limit(0).select(col("vec_id"), col("embedding"))
     VectorIndex.upsertBatch(spark, path, emptyUpdates, condemned,
       col("vec_id"), col("embedding"), pq)
-    assert(!new java.io.File(s"$path/codes/cell=$someCell").exists(),
+    assert(!new java.io.File(
+      VectorIndex.snapshot(spark, path).partPath("codes") + s"/cell=$someCell").exists(),
       "a fully-tombstoned cell must not leave a stale partition directory")
     assert(VectorIndex.loadCodes(spark, path).filter(col("cell") === someCell).count() == 0)
     // occupancy no longer lists the emptied cell
@@ -601,49 +603,6 @@ class VectorIndexSpec extends AnyFunSuite {
     new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
   private def hp(path: String, n: String) = new org.apache.hadoop.fs.Path(s"$path/$n")
 
-  test("recoverCompaction: half-swap crashes roll forward (complete stage) or back (partial stage)") {
-    val path = java.nio.file.Files.createTempDirectory("graft_vindex_recover").toString
-    val quant = VectorIndex.train(corpus, col("vec_id"), col("embedding"),
-      kCells = 16, iters = 1, pq = pq)
-    VectorIndex.write(quant,
-      VectorIndex.encode(corpus, col("vec_id"), col("embedding"), quant), path)
-    def answer() = VectorIndex.searchAdc(VectorIndex.loadCodes(spark, path),
-      VectorIndex.loadQuantizer(spark, path, pq), queries, nprobe = 4, topK = 5)
-      .orderBy("query_id", "rn").collect().toSeq
-    val healthy = answer()
-    assert(healthy.nonEmpty)
-    val fs = fsOf(path)
-
-    // crash BETWEEN the two swap renames, stage COMPLETE (it carries the
-    // parquet _SUCCESS commit marker): codes/ gone, data split across
-    // codes_old/ and codes_compacting/ — recovery must roll FORWARD
-    fs.rename(hp(path, "codes"), hp(path, "codes_compacting")) // complete stage incl. _SUCCESS
-    fs.mkdirs(hp(path, "codes_old"))
-    VectorIndex.recoverCompaction(spark, path)
-    assert(fs.exists(hp(path, "codes")) && !fs.exists(hp(path, "codes_old")) &&
-      !fs.exists(hp(path, "codes_compacting")), "roll-forward must restore exactly codes/")
-    assert(answer() == healthy, "rolled-forward index must answer identically")
-
-    // crash DURING staging (stage partial, no _SUCCESS) after codes was
-    // renamed away — recovery must roll BACK to the old directory
-    fs.rename(hp(path, "codes"), hp(path, "codes_old"))
-    fs.mkdirs(hp(path, "codes_compacting"))
-    val junk = fs.create(new org.apache.hadoop.fs.Path(hp(path, "codes_compacting"), "part-junk.parquet"), true)
-    junk.write("partial".getBytes("UTF-8")); junk.close()
-    VectorIndex.recoverCompaction(spark, path)
-    assert(fs.exists(hp(path, "codes")) && !fs.exists(hp(path, "codes_old")) &&
-      !fs.exists(hp(path, "codes_compacting")), "roll-back must restore exactly codes/")
-    assert(answer() == healthy, "rolled-back index must answer identically")
-
-    // debris with codes/ intact (crash before the swap began): just cleaned
-    fs.mkdirs(hp(path, "codes_old"))
-    fs.mkdirs(hp(path, "codes_compacting"))
-    // compactCells itself runs recovery on entry — and then compacts fine
-    VectorIndex.compactCells(spark, path)
-    assert(!fs.exists(hp(path, "codes_old")) && !fs.exists(hp(path, "codes_compacting")))
-    assert(answer() == healthy, "compaction after debris cleanup must not change answers")
-  }
-
   test("upsertBatch crash window: re-running the same change batch converges from the worst intermediate state") {
     val path = java.nio.file.Files.createTempDirectory("graft_vindex_crash").toString
     val quant = VectorIndex.train(corpus, col("vec_id"), col("embedding"),
@@ -664,28 +623,31 @@ class VectorIndexSpec extends AnyFunSuite {
       else java.nio.file.Files.copy(src.toPath, dst.toPath,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
+    val pre = VectorIndex.snapshot(spark, path)
+    val cellDir = new java.io.File(pre.partPath("codes") + s"/cell=$someCell")
     val tmp = java.nio.file.Files.createTempDirectory("graft_vindex_snap").toFile
-    copyDir(new java.io.File(s"$path/codes/cell=$someCell"), new java.io.File(tmp, "cell"))
-    copyDir(new java.io.File(s"$path/occupancy"), new java.io.File(tmp, "occupancy"))
+    copyDir(cellDir, new java.io.File(tmp, "cell"))
 
     VectorIndex.upsertBatch(spark, path, updates, condemned,
       col("vec_id"), col("embedding"), pq)
 
     // SIMULATE the crash-after-overwrite state: the fully-tombstoned cell's
-    // stale directory is back (delete step lost) and occupancy is the
-    // pre-upsert table (replace step lost)
-    copyDir(new java.io.File(tmp, "cell"), new java.io.File(s"$path/codes/cell=$someCell"))
+    // stale directory is back (delete step lost) and the commit carrying
+    // the recounted occupancy never landed (the pre-upsert manifest is
+    // still the newest)
+    copyDir(new java.io.File(tmp, "cell"), cellDir)
     val fs = fsOf(path)
-    fs.delete(hp(path, "occupancy"), true)
-    copyDir(new java.io.File(tmp, "occupancy"), new java.io.File(s"$path/occupancy"))
+    val upserted = VectorIndex.snapshot(spark, path)
+    assert(upserted.gen == pre.gen + 1, "a delete-only upsert commits once")
+    fs.delete(hp(path, f"manifest-${upserted.gen}%09d"), false)
+    assert(VectorIndex.snapshot(spark, path).gen == pre.gen)
     assert(VectorIndex.loadCodes(spark, path).filter(col("cell") === someCell).count() > 0,
       "fixture: the stale tombstoned cell must be serving again before recovery")
 
     // RECOVERY = re-run the exact same change batch; it must converge
     VectorIndex.upsertBatch(spark, path, updates, condemned,
       col("vec_id"), col("embedding"), pq)
-    assert(!new java.io.File(s"$path/codes/cell=$someCell").exists(),
-      "re-run must drop the stale emptied-cell directory")
+    assert(!cellDir.exists(), "re-run must drop the stale emptied-cell directory")
     // no duplicate rows survived recovery: one code row per (vector, subspace)
     val dupRows = VectorIndex.loadCodes(spark, path)
       .groupBy("vec_id", "m").count().filter(col("count") > 1).count()

@@ -382,4 +382,16 @@ class HttpDataSourceSpec extends AnyFunSuite {
       .option("connector", "nope").load())
     assert(e.getMessage.contains("unknown connector"))
   }
+
+  test("CursorOffset JSON is byte-identical to the tree-written form and round-trips") {
+    import graft.core.Json
+    // Spark checkpoint offset logs already hold offsets written through the
+    // Jackson tree; the quoted form must produce the same bytes
+    for (to <- Seq("2024-01-02T03:04:05Z", "a\"b\\c", "caf\u00e9 \u2603\n")) {
+      val json = CursorOffset(to).json()
+      assert(json == s"""{"to":${Json.write(Json.mapper.valueToTree(to))}}""")
+      assert(Json.parse(json).get("to").asText == to)
+    }
+    assert(CursorOffset("2024-01-02T03:04:05Z").json() == """{"to":"2024-01-02T03:04:05Z"}""")
+  }
 }

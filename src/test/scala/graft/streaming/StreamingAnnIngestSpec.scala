@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{PqParams, VectorIndex}
+import graft.operators.{ManifestSurgery, PqParams, VectorIndex}
 
 /** Streaming ANN ingest — [[VectorIndex.appendSink]] composed with a real
   * checkpointed query (r10 VERDICT #7, composing round 10's two pieces:
@@ -12,9 +12,10 @@ import graft.operators.{PqParams, VectorIndex}
   *  - vectors ingested across micro-batches and a query STOP/RESTART land
   *    in the index exactly once, and the index answers exactly like a
   *    batch encode of corpus ∪ everything ingested;
-  *  - a replayed batch id (foreachBatch's crash contract) is detected from
-  *    the __batch stamps and skipped — including after compaction, which
-  *    must preserve the stamps;
+  *  - a replayed batch id (foreachBatch's crash contract) is skipped by its
+  *    applied mark, and detected from the __batch stamps when the commit
+  *    carrying the mark was lost — including after compaction, which must
+  *    preserve the stamps;
   *  - the per-batch cap surfaces its drops through an accumulator
   *    (no-silent-caps) and admits deterministically;
   *  - occupancy stays a recount-invariant through streamed appends.
@@ -193,17 +194,15 @@ class StreamingAnnIngestSpec extends AnyFunSuite {
     assert(got.nonEmpty)
 
     // replay stamps survived every auto-compaction: old batch ids are
-    // still skipped, data-derived detection included (marker removed)
+    // still skipped, data-derived detection included (mark removed)
     val n = codes.count()
     sink(batches(2), 2L)
     assert(VectorIndex.loadCodes(spark, path).count() == n,
-      "replay after auto-compactions must be skipped (marker layer)")
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/applied_batch"), false)
+      "replay after auto-compactions must be skipped (applied mark)")
+    ManifestSurgery.dropAppliedMarks(spark, path)
     sink(batches(7), 7L)
     assert(VectorIndex.loadCodes(spark, path).count() == n,
-      "__batch stamps must survive compaction for the marker-crash window")
+      "__batch stamps must survive compaction for the lost-commit window")
   }
 
   test("stream identity scopes replay detection: a new checkpoint lineage's batch 0 is not masked") {
@@ -234,18 +233,37 @@ class StreamingAnnIngestSpec extends AnyFunSuite {
     assert(VectorIndex.loadCodes(spark, path).count() == afterB,
       "replay within the same lineage must be skipped")
 
-    // marker-crash window: lose lineage B's marker file — the __stream-scoped
-    // data max must still detect the replay, and must NOT be confused by
-    // lineage A's stamps
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/applied_batch_lineage-b"), false)
+    // lost-commit window: lose lineage B's applied mark — the
+    // __stream-scoped stamps must still detect the replay (applied once,
+    // not twice), and must NOT be confused by lineage A's stamps
+    ManifestSurgery.dropAppliedMark(spark, path, Some("lineage-b"))
     sinkB(emb.filter(col("vec_id") >= 380 && col("vec_id") < 410), 0L)
     assert(VectorIndex.loadCodes(spark, path).count() == afterB,
       "data-derived replay detection must be scoped to the lineage's own stamps")
 
-    // and lineage A replay is still skipped too (its marker is untouched)
+    // and lineage A replay is still skipped too (its mark is untouched)
     sinkA(emb.filter(col("vec_id") >= 300 && col("vec_id") < 340), 0L)
     assert(VectorIndex.loadCodes(spark, path).count() == afterB)
+  }
+
+  test("stream ids differing only in characters outside [A-Za-z0-9._-] keep separate applied marks") {
+    val path = java.nio.file.Files.createTempDirectory("graft_ann_rawids").toString
+    val quant = VectorIndex.train(corpus, col("vec_id"), col("embedding"),
+      kCells = 16, iters = 1, pq = pq)
+    VectorIndex.write(quant,
+      VectorIndex.encode(corpus, col("vec_id"), col("embedding"), quant), path)
+    def ids = VectorIndex.loadCodes(spark, path).select("vec_id").distinct().count()
+    val slash = VectorIndex.appendSink(path, pq, col("vec_id"), col("embedding"),
+      streamId = Some("a/b"))
+    (0 until 3).foreach(k =>
+      slash(emb.filter(col("vec_id") >= 300 + 10 * k && col("vec_id") < 310 + 10 * k), k.toLong))
+    val before = ids
+    // `a_b` is a different lineage whose ids merely sanitize alike: its
+    // batch 0 must land, not be masked by `a/b`'s progress
+    VectorIndex.appendSink(path, pq, col("vec_id"), col("embedding"),
+      streamId = Some("a_b"))(emb.filter(col("vec_id") >= 400 && col("vec_id") < 410), 0L)
+    assert(ids == before + 10, "lineage a_b's batch 0 must be applied")
+    assert(VectorIndex.snapshot(spark, path).applied ==
+      Map(Some("a/b") -> 2L, Some("a_b") -> 0L))
   }
 }
