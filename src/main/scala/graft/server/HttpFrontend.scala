@@ -1,12 +1,11 @@
 package graft.server
 
-import java.io.Writer
-import java.net.InetSocketAddress
+import java.io.{BufferedInputStream, Writer}
+import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ConcurrentHashMap, Semaphore}
 
 import scala.util.control.NonFatal
-
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import graft.core.{Cmd, Connector, Json, ProtoWriter, RunConfig, SourceDef}
 import graft.sources.HttpClient
@@ -26,16 +25,29 @@ import graft.sources.HttpClient
   * must present a [[TokenAuth]]-signed Authorization token scoped to the
   * request path (SURVEY §2.5 C7).
   *
-  * Socket contract: every accepted connection runs with TCP_NODELAY, as Go's
-  * `net` does by default for the reference server. The JDK server writes a
-  * response's headers as a packet of their own before the chunked body, so
-  * with Nagle on the body waits until the client ACKs the headers, and a
-  * client's delayed ACK holds that for ~40 ms on every response. The JDK
-  * takes this from `sun.net.httpserver.nodelay`, read ONCE per JVM when the
-  * first JDK `HttpServer` is created; the companion object sets it (unless
-  * set already, so a launch `-D` wins) just before creating the server. An
-  * embedder that creates some other JDK `HttpServer` first must launch the
-  * JVM with `-Dsun.net.httpserver.nodelay=true`.
+  * The server is its own blocking HTTP/1.1 loop ([[Http11]]), shaped like
+  * the reference's Go `net/http`:
+  *  - Threads. One acceptor thread; each accepted connection gets one daemon
+  *    thread that reads its requests in order and runs each itself. At most
+  *    [[HttpFrontend.MaxConnections]] connections are open at once; the rest
+  *    wait in the listen backlog. A connection idle for
+  *    [[HttpFrontend.IdleTimeoutMs]] is closed. `maxConcurrent` bounds the
+  *    commands (`POST /{connector}/{cmd}`) that run at once, with a fair
+  *    semaphore; it does not bound connections.
+  *  - Sockets. TCP_NODELAY on every accepted connection, as Go's `net` does.
+  *  - Responses. Chunked, through one 64 KiB buffer per connection: the head
+  *    goes out in the first write and the terminator in the last, and no
+  *    write but the last is smaller than 64 KiB. An HTTP/1.0 request gets a
+  *    close-delimited body and `Connection: close`.
+  *  - Requests. A request line over 8 KiB gets 414, a header block over
+  *    64 KiB gets 431. The body is framed by `Content-Length` or by chunked
+  *    transfer coding, never both (400), and read whole before routing;
+  *    `Expect: 100-continue` gets its interim response first. A malformed
+  *    request gets 400 and the connection is closed.
+  *  - Errors. A failure before the head is on the wire answers 500. After
+  *    it, the connection is closed without the chunked terminator, as Go's
+  *    `net/http` does when a handler panics, so a client never takes a cut
+  *    response for a complete one.
   */
 final class HttpFrontend(
     // by-name: re-read per request so connectors registered after server
@@ -48,125 +60,154 @@ final class HttpFrontend(
     // holding a signed token ([[TokenAuth]]) whose embedded key is in this
     // allow-list and whose prefix scope covers the request path
     authKeys: Seq[Array[Byte]] = Nil,
-    // handler-pool width = max concurrent syncs (each /read is a full
-    // connector sync; see the pool comment below)
+    // most commands running at once (each /read is a full connector sync)
     maxConcurrent: Int = 8) {
+  require(maxConcurrent > 0, s"maxConcurrent must be positive, got $maxConcurrent")
 
-  private val server = HttpFrontend.createServer(new InetSocketAddress("127.0.0.1", port))
+  private val listener = new ServerSocket(port, 0, InetAddress.getByName("127.0.0.1"))
+  private val commands = new Semaphore(maxConcurrent, true)
+  private val connectionSlots = new Semaphore(HttpFrontend.MaxConnections)
+  private val open = ConcurrentHashMap.newKeySet[Socket]()
 
-  // A real pool, NOT setExecutor(null): the null executor runs every handler
-  // on the single dispatcher thread, so one long /read sync would serialize
-  // the entire multiplex frontend ("one server fronting many connectors").
-  // BOUNDED END TO END (not newCachedThreadPool, and not a fixed pool with
-  // the default unbounded queue — that would still accept and buffer a
-  // burst's exchanges without limit): `maxConcurrent` threads, a small
-  // bounded queue, and caller-runs overflow. Overflow work executing on
-  // the dispatcher thread stalls accept(), so further connections wait in
-  // the OS listen backlog — real backpressure instead of unbounded
-  // threads (cached pool) or unbounded queued fds (fixed pool).
-  private val pool = new java.util.concurrent.ThreadPoolExecutor(
-    maxConcurrent, maxConcurrent, 60L, java.util.concurrent.TimeUnit.SECONDS,
-    new java.util.concurrent.ArrayBlockingQueue[Runnable](2 * maxConcurrent),
-    (r: Runnable) => { val t = new Thread(r, "graft-http"); t.setDaemon(true); t },
-    new java.util.concurrent.ThreadPoolExecutor.CallerRunsPolicy)
-
-  def boundPort: Int = server.getAddress.getPort
+  def boundPort: Int = listener.getLocalPort
 
   def start(): HttpFrontend = {
-    server.createContext("/", handle _)
-    server.setExecutor(pool)
-    server.start()
+    daemon("graft-http-accept")(() => accept())
     this
   }
 
-  def stop(): Unit = { server.stop(0); pool.shutdown() }
+  def stop(): Unit = { listener.close(); open.forEach(s => s.close()) }
 
-  private def handle(ex: HttpExchange): Unit =
+  private def daemon(name: String)(body: Runnable): Unit = {
+    val t = new Thread(body, name); t.setDaemon(true); t.start()
+  }
+
+  private def accept(): Unit =
+    while (!listener.isClosed) {
+      connectionSlots.acquire()
+      try {
+        val s = listener.accept()
+        open.add(s)
+        if (listener.isClosed) s.close() // stop() ran while this one was accepted
+        daemon("graft-http")(() => serve(s))
+      } catch { case NonFatal(_) => connectionSlots.release() } // stop(), or one failed accept
+    }
+
+  /** One connection's requests, in order, until either side closes it. An
+    * error the connection cannot answer closes it.
+    */
+  private def serve(s: Socket): Unit =
     try {
-      // Normalize before BOTH the auth scope check and routing, so the two
-      // agree on what a path means: /demo/../other must not pass a
-      // /demo/-scoped token's prefix check. Order matters: getPath DECODES
-      // percent-escapes first (%2e%2e is a dot-segment once decoded —
-      // normalizing the still-encoded URI would miss it), then the decoded
-      // path is normalized; any '..' segment that survives (a leading one
-      // escaping the root) is rejected outright.
-      val normPath = new java.net.URI(null, null, ex.getRequestURI.getPath, null)
-        .normalize().getPath
-      if (normPath.split('/').contains("..")) {
-        respond(ex, 400, _.write("""{"error":"invalid path"}"""))
-        return
-      }
-      if (authKeys.nonEmpty) {
-        val auth = Option(ex.getRequestHeaders.getFirst("Authorization")).getOrElse("")
-        TokenAuth.verify(auth, normPath, authKeys,
-          now = () => clock() / 1000) match {
-          case Left(reason) =>
-            respond(ex, 401, _.write(s"""{"error":${Json.quote(reason)}}"""))
-            return
-          case Right(_) => ()
-        }
-      }
-      val path = normPath.stripPrefix("/").stripSuffix("/")
-      path.split('/') match {
-        case Array("discover") =>
-          val names = connectors.keys.toSeq.sorted.map(Json.quote).mkString("[", ",", "]")
-          respond(ex, 200, out => out.write(names))
-        case Array(connector, cmdStr) =>
-          (connectors.get(connector), Cmd.parse(cmdStr)) match {
-            case (Some(src), Some(cmd)) =>
-              val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-              val rc = RunConfig.parse(body.linesIterator)
-              // Validate the dialect BEFORE committing a response status:
-              // once respond() sends 200/chunked, a ProtoWriter failure
-              // inside the streaming lambda can only be swallowed and the
-              // client would see an empty success. The reference fails its
-              // protos[format] lookup before any output too
-              // (proto.go:103-107).
-              if (!ProtoWriter.supported(rc.format)) {
-                respond(ex, 400, _.write(s"""{"error":${Json.quote(s"unknown format '${rc.format}'")}}"""))
-                return
-              }
-              // Full transport stack per request (retry OUTSIDE pacing, so
-              // every physical attempt draws a token — matching Main and
-              // Connector.transport's invariant; wrapping pacing around an
-              // already-retrying caller client would let retries ride one
-              // token draw).
-              respond(ex, 200, out => Connector.handle(src, cmd, rc, out, Connector.transport(src, baseClient), clock))
-            case (None, _) => respond(ex, 404, _.write(s"""{"error":"unknown connector '$connector'"}"""))
-            case (_, None) => respond(ex, 400, _.write(s"""{"error":"unknown command '$cmdStr'"}"""))
+      s.setTcpNoDelay(true)
+      s.setSoTimeout(HttpFrontend.IdleTimeoutMs)
+      val in = new BufferedInputStream(s.getInputStream)
+      val out = new Http11.ResponseOut(s.getOutputStream)
+      var more = true
+      while (more) Http11.readRequest(in, s.getOutputStream) match {
+        case Http11.Closed => more = false
+        case Http11.Rejected(status, reason) =>
+          respond(out, None, status, _.write(s"""{"error":${Json.quote(reason)}}"""))
+          Http11.lingerClose(s)
+          more = false
+        case req: Http11.Request =>
+          try handle(out, req)
+          catch {
+            case NonFatal(e) if !out.headSent =>
+              respond(out, Some(req), 500, _.write(s"""{"error":${Json.quote(e.getMessage)}}"""))
           }
-        case _ => respond(ex, 404, _.write("""{"error":"not found"}"""))
+          if (req.close) { Http11.lingerClose(s); more = false }
       }
     } catch {
-      case NonFatal(e) =>
-        try respond(ex, 500, _.write(s"""{"error":${Json.quote(e.getMessage)}}"""))
-        catch { case NonFatal(_) => () }
-    } finally ex.close()
+      case NonFatal(_) => () // peer gone, idle timeout, stop(), or a failure after the head
+    } finally {
+      open.remove(s)
+      s.close()
+      connectionSlots.release()
+    }
+
+  private def handle(out: Http11.ResponseOut, req: Http11.Request): Unit = {
+    def respond(status: Int, write: Writer => Unit): Unit =
+      HttpFrontend.this.respond(out, Some(req), status, write)
+    // Normalize before BOTH the auth scope check and routing, so the two
+    // agree on what a path means: /demo/../other must not pass a
+    // /demo/-scoped token's prefix check. Order matters: getPath DECODES
+    // percent-escapes first (%2e%2e is a dot-segment once decoded —
+    // normalizing the still-encoded URI would miss it), then the decoded
+    // path is normalized; any '..' segment that survives (a leading one
+    // escaping the root) is rejected outright.
+    val normPath = new java.net.URI(null, null, req.target.getPath, null)
+      .normalize().getPath
+    if (normPath.split('/').contains("..")) {
+      respond(400, _.write("""{"error":"invalid path"}"""))
+      return
+    }
+    if (authKeys.nonEmpty) {
+      val auth = req.header("authorization").getOrElse("")
+      TokenAuth.verify(auth, normPath, authKeys,
+        now = () => clock() / 1000) match {
+        case Left(reason) =>
+          respond(401, _.write(s"""{"error":${Json.quote(reason)}}"""))
+          return
+        case Right(_) => ()
+      }
+    }
+    val path = normPath.stripPrefix("/").stripSuffix("/")
+    path.split('/') match {
+      case Array("discover") =>
+        val names = connectors.keys.toSeq.sorted.map(Json.quote).mkString("[", ",", "]")
+        respond(200, w => w.write(names))
+      case Array(connector, cmdStr) =>
+        (connectors.get(connector), Cmd.parse(cmdStr)) match {
+          case (Some(src), Some(cmd)) =>
+            val rc = RunConfig.parse(new String(req.body, StandardCharsets.UTF_8).linesIterator)
+            // Validate the dialect BEFORE committing a response status, as
+            // the reference fails its protos[format] lookup before any
+            // output (proto.go:103-107).
+            if (!ProtoWriter.supported(rc.format)) {
+              respond(400, _.write(s"""{"error":${Json.quote(s"unknown format '${rc.format}'")}}"""))
+              return
+            }
+            // Full transport stack per request (retry OUTSIDE pacing, so
+            // every physical attempt draws a token — matching Main and
+            // Connector.transport's invariant; wrapping pacing around an
+            // already-retrying caller client would let retries ride one
+            // token draw).
+            commands.acquire()
+            try respond(200, w => Connector.handle(src, cmd, rc, w, Connector.transport(src, baseClient), clock))
+            finally commands.release()
+          case (None, _) => respond(404, _.write(s"""{"error":"unknown connector '$connector'"}"""))
+          case (_, None) => respond(400, _.write(s"""{"error":"unknown command '$cmdStr'"}"""))
+        }
+      case _ => respond(404, _.write("""{"error":"not found"}"""))
+    }
+  }
 
   /** zstd content negotiation, then stream the writer's output through
-    * one buffered UTF-8 writer ([[ProtoWriter.utf8]]).
+    * one buffered UTF-8 writer ([[ProtoWriter.utf8]]) into `out`.
     */
-  private def respond(ex: HttpExchange, status: Int, write: Writer => Unit): Unit = {
-    val wantZstd = Option(ex.getRequestHeaders.getFirst("Accept-Zstd")).exists(_.nonEmpty)
-    ex.getResponseHeaders.set("Content-Type", "application/x-ndjson")
-    if (wantZstd) ex.getResponseHeaders.set("X-Compression", "zstd")
-    ex.sendResponseHeaders(status, 0) // chunked
-    val raw = ex.getResponseBody
-    val sink = if (wantZstd) new com.github.luben.zstd.ZstdOutputStream(raw) else raw
-    val w = ProtoWriter.utf8(sink)
-    try { write(w); w.flush() } finally sink.close()
+  private def respond(out: Http11.ResponseOut, req: Option[Http11.Request], status: Int,
+      write: Writer => Unit): Unit = {
+    val zstd = req.flatMap(_.header("accept-zstd")).exists(_.nonEmpty)
+    val body = out.begin(req, status, close = req.forall(_.close),
+      if (zstd) Seq("X-Compression: zstd") else Nil)
+    val sink = if (zstd) new com.github.luben.zstd.ZstdOutputStream(body) else body
+    try {
+      val w = ProtoWriter.utf8(sink)
+      write(w)
+      w.close()
+    } catch {
+      case e: Throwable =>
+        out.abandon()
+        if (zstd) try sink.close() catch { case NonFatal(_) => () } // frees the native stream
+        throw e
+    }
+    out.finish()
   }
 }
 
 object HttpFrontend {
-  private val NoDelayProperty = "sun.net.httpserver.nodelay"
-
-  /** Creates the JDK server with TCP_NODELAY on every accepted socket (see
-    * the class doc). The property only takes effect if no JDK `HttpServer`
-    * has been created in this JVM yet.
-    */
-  private def createServer(addr: InetSocketAddress): HttpServer = {
-    if (System.getProperty(NoDelayProperty) == null) System.setProperty(NoDelayProperty, "true")
-    HttpServer.create(addr, 0)
-  }
+  /** Most connections open at once; more wait in the listen backlog. */
+  val MaxConnections = 256
+  /** A connection with no request for this long is closed. */
+  val IdleTimeoutMs = 30000
 }

@@ -1,12 +1,12 @@
 package graft.server
 
-import java.io.{BufferedInputStream, ByteArrayOutputStream, InputStream}
+import java.io.{BufferedInputStream, ByteArrayOutputStream, InputStream, OutputStream}
 import java.net.{Socket, URI}
 import java.net.http.{HttpClient => JClient, HttpRequest => JRequest, HttpResponse => JResponse}
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.Paths
-import java.util.concurrent.TimeUnit
+import java.util.concurrent.{CompletableFuture, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,11 +16,12 @@ import graft.sources.{HttpClient, HttpRequest, HttpResponse}
 /** End-to-end HTTP frontend tests (reference E2 lifecycle,
   * `proto.go:149-212`): discover listing, command routing, control-stream
   * body parsing, dialect selection via SETTINGS, zstd negotiation, errors,
-  * and the TCP_NODELAY socket contract.
+  * the keep-alive/TCP_NODELAY socket contract, and the HTTP/1.1 wire cases
+  * the server's own loop handles (raw sockets).
   */
 class HttpFrontendSpec extends AnyFunSuite {
 
-  import HttpFrontendSpec.{src, upstream}
+  import HttpFrontendSpec._
 
   private lazy val fe = new HttpFrontend(Map("demo" -> src), upstream,
     clock = () => 1700000000000L).start()
@@ -34,11 +35,11 @@ class HttpFrontendSpec extends AnyFunSuite {
     http.send(b.build(), JResponse.BodyHandlers.ofByteArray())
   }
 
-  test("burst beyond the bounded pool+queue stays live (caller-runs backpressure, no drops)") {
-    // maxConcurrent=1 → 1 pool thread + 2 queue slots; 8 concurrent
-    // requests overflow into caller-runs on the dispatcher. Every request
-    // must still complete 200 — bounded resources degrade to serialized
-    // service, never to rejected/dropped exchanges.
+  test("burst of concurrent connections at maxConcurrent = 1 stays live (no drops)") {
+    // 8 concurrent requests, each on a connection of its own, against a
+    // frontend that runs one command at a time. Every request must still
+    // complete 200 — bounded resources degrade to serialized service,
+    // never to rejected/dropped requests.
     val burstFe = new HttpFrontend(Map("demo" -> src), upstream,
       clock = () => 1700000000000L, maxConcurrent = 1).start()
     try {
@@ -156,30 +157,180 @@ class HttpFrontendSpec extends AnyFunSuite {
   }
 
   test("sequential requests on one keep-alive socket: bodies complete, none stalls on delayed ACK") {
-    // The JDK reads sun.net.httpserver.nodelay once per JVM, at the first
-    // HttpServer it creates, and other suites in this shared test JVM create
-    // their own. So the requests run in a fresh child JVM on the test
-    // classpath, where HttpFrontend creates the first server whatever the
-    // suite order.
-    val java = Paths.get(System.getProperty("java.home"), "bin", "java").toString
-    val proc = new ProcessBuilder(java, "-Xmx256m", "-cp", System.getProperty("java.class.path"),
-      HttpFrontendNoDelayProbe.getClass.getName.stripSuffix("$"))
-      .redirectErrorStream(true).start()
-    val out = new String(proc.getInputStream.readAllBytes(), StandardCharsets.UTF_8)
-    assert(proc.waitFor(60, TimeUnit.SECONDS), s"probe JVM did not exit:\n$out")
-    assert(proc.exitValue() == 0, s"probe JVM failed:\n$out")
-
-    val results = out.linesIterator.filter(_.startsWith("probe\t")).map(_.split("\t", -1)).toSeq
-    assert(results.size == HttpFrontendNoDelayProbe.Requests, out)
-    results.foreach { case Array(_, cmd, _, complete, last) =>
-      assert(complete == "true", s"$cmd: chunked body not terminated")
-      val want = if (cmd == "spec") """{"type":"SPEC"""" else """{"type":"STATE""""
-      assert(last.startsWith(want), s"$cmd body ends with: $last")
+    // spec and a small read, mixed, each request sent in one write on one
+    // socket. Nagle plus the client's delayed ACK puts every response at
+    // >= ~40 ms.
+    val wallsMs = wire(fe) { (os, in) =>
+      (0 until 40).map { i =>
+        val cmd = if (i % 3 == 0) "read" else "spec"
+        val t0 = System.nanoTime()
+        send(os, s"POST /demo/$cmd HTTP/1.1\r\nHost: 127.0.0.1\r\nContent-Length: 0\r\n\r\n")
+        val (complete, body) = readChunkedResponse(in)
+        val wall = System.nanoTime() - t0
+        assert(complete, s"$cmd: chunked body not terminated")
+        val last = body.linesIterator.filter(_.nonEmpty).toSeq.lastOption.getOrElse("")
+        val want = if (cmd == "spec") """{"type":"SPEC"""" else """{"type":"STATE""""
+        assert(last.startsWith(want), s"$cmd body ends with: $last")
+        wall / 1e6
+      }.sorted
     }
-    // Nagle plus the client's delayed ACK puts every response at >= ~40 ms.
-    val wallsMs = results.map(_(2).toLong / 1e6).sorted
     val medianMs = wallsMs(wallsMs.size / 2)
     assert(medianMs < 10.0, s"median request wall $medianMs ms; walls ${wallsMs.mkString(", ")}")
+  }
+
+  test("a sync that dies after its response started is cut off, never terminated as complete") {
+    // 2,000-record pages: the head and the first 64 KiB are on the wire
+    // long before the fetch of page 4 dies with a fatal error.
+    val page = (0 until 2000).map(i => s"""{"id":$i}""").mkString("[", ",", "]")
+    val fetches = new AtomicInteger()
+    val failing: HttpClient = (_: HttpRequest) => {
+      val n = fetches.incrementAndGet()
+      if (n == 4) throw new StackOverflowError("page 4")
+      HttpResponse(200, s"""{"items":$page,"next":"http://up/orders?page=${n + 1}"}""", Map.empty)
+    }
+    val failFe = new HttpFrontend(Map("demo" -> src), failing, clock = () => 1700000000000L).start()
+    try wire(failFe) { (os, in) =>
+      send(os, "POST /demo/read HTTP/1.1\r\nHost: x\r\nContent-Length: 0\r\n\r\n")
+      val (complete, body) = readChunkedResponse(in)
+      assert(fetches.get() == 4)
+      assert(body.linesIterator.count(_.contains("\"RECORD\"")) >= 2000, "the head and pages went out")
+      assert(!complete, "a failed sync's body ended with the chunked terminator")
+      assert(!body.contains("\"STATE\""), "a failed sync emitted STATE")
+      assert(in.read() == -1, "the connection stays open after a failed sync")
+    } finally failFe.stop()
+  }
+
+  test("maxConcurrent bounds concurrent syncs, not connections") {
+    val running = new AtomicInteger()
+    val most = new AtomicInteger()
+    val slow: HttpClient = (_: HttpRequest) => {
+      most.accumulateAndGet(running.incrementAndGet(), math.max)
+      try Thread.sleep(300) finally running.decrementAndGet()
+      HttpResponse(200, """{"items":[{"id":7}],"next":null}""", Map.empty)
+    }
+    val oneFe = new HttpFrontend(Map("demo" -> src), slow,
+      clock = () => 1700000000000L, maxConcurrent = 1).start()
+    try {
+      val replies = (1 to 2).map { _ =>
+        CompletableFuture.supplyAsync(() => wire(oneFe) { (os, in) =>
+          send(os, "POST /demo/read HTTP/1.1\r\nHost: x\r\nContent-Length: 0\r\n\r\n")
+          readReply(in)
+        })
+      }.map(_.get(30, TimeUnit.SECONDS))
+      replies.foreach { r =>
+        assert(r.status == 200 && r.complete, r)
+        assert(r.body.linesIterator.toSeq.last.startsWith("""{"type":"STATE""""), r.body)
+      }
+      assert(most.get() == 1, s"${most.get()} syncs ran at once")
+    } finally oneFe.stop()
+  }
+
+  test("Expect: 100-continue gets the interim response before the body is read") {
+    wire(fe) { (os, in) =>
+      val body = """{"type":"SETTINGS","settings":{"format":"singer"}}""" + "\n"
+      send(os, s"POST /demo/read HTTP/1.1\r\nHost: x\r\nContent-Length: ${body.length}\r\n" +
+        "Expect: 100-continue\r\n\r\n")
+      assert(readLine(in) == "HTTP/1.1 100 Continue")
+      assert(readLine(in) == "")
+      send(os, body)
+      val r = readReply(in)
+      assert(r.status == 200 && r.complete, r)
+      assert(r.body.startsWith("""{"type":"SCHEMA","stream":"orders""""), r.body)
+    }
+  }
+
+  test("chunked request body is the control stream") {
+    wire(fe) { (os, in) =>
+      val body = """{"type":"SETTINGS","settings":{"format":"singer"}}""" + "\n"
+      val (a, b) = body.splitAt(20)
+      send(os, "POST /demo/read HTTP/1.1\r\nHost: x\r\nTransfer-Encoding: chunked\r\n\r\n" +
+        s"${a.length.toHexString}\r\n$a\r\n${b.length.toHexString};ext=1\r\n$b\r\n0\r\n\r\n")
+      val r = readReply(in)
+      assert(r.status == 200 && r.complete, r)
+      assert(r.body.startsWith("""{"type":"SCHEMA","stream":"orders""""), r.body)
+    }
+  }
+
+  test("HTTP/1.0 request: close-delimited body and Connection: close") {
+    wire(fe) { (os, in) =>
+      send(os, "POST /demo/spec HTTP/1.0\r\nContent-Length: 0\r\n\r\n")
+      val r = readReply(in)
+      assert(r.status == 200, r)
+      assert(r.headers.get("connection").contains("close"), r.headers)
+      assert(!r.headers.contains("transfer-encoding") && !r.headers.contains("content-length"), r.headers)
+      assert(r.body.startsWith("""{"type":"SPEC""""), r.body)
+    }
+  }
+
+  test("requests pipelined in one write get their responses, in order (HEAD: no body)") {
+    wire(fe) { (os, in) =>
+      send(os, "POST /demo/spec HTTP/1.1\r\nHost: x\r\nContent-Length: 0\r\n\r\n" +
+        "HEAD /discover HTTP/1.1\r\nHost: x\r\n\r\n" +
+        "GET /discover HTTP/1.1\r\nHost: x\r\n\r\n")
+      val first = readReply(in)
+      val head = readReply(in, headOnly = true)
+      val third = readReply(in)
+      assert(first.status == 200 && first.complete && first.body.startsWith("""{"type":"SPEC""""), first)
+      assert(head.status == 200 && head.headers.get("transfer-encoding").contains("chunked"), head)
+      assert(third.status == 200 && third.complete && third.body == """["demo"]""", third)
+    }
+  }
+
+  test("Content-Length together with Transfer-Encoding → 400, then close") {
+    wire(fe) { (os, in) =>
+      send(os, "POST /demo/spec HTTP/1.1\r\nHost: x\r\nContent-Length: 5\r\n" +
+        "Transfer-Encoding: chunked\r\n\r\n0\r\n\r\n")
+      val r = readReply(in)
+      assert(r.status == 400 && r.complete, r)
+      assert(r.headers.get("connection").contains("close"), r.headers)
+      assert(in.read() == -1, "connection left open")
+    }
+  }
+
+  test("oversize header block → 431, oversize request line → 414") {
+    wire(fe) { (os, in) =>
+      send(os, "GET /discover HTTP/1.1\r\nHost: x\r\nX-Big: " + "a" * (70 << 10) + "\r\n\r\n")
+      assert(readReply(in).status == 431)
+      assert(in.read() == -1, "connection left open")
+    }
+    wire(fe) { (os, in) =>
+      send(os, "GET /discover?" + "a" * (9 << 10) + " HTTP/1.1\r\nHost: x\r\n\r\n")
+      assert(readReply(in).status == 414)
+    }
+  }
+
+  test("malformed request target → 400") {
+    Seq("/demo/%zz", "demo/spec", "/a|b").foreach { target =>
+      wire(fe) { (os, in) =>
+        send(os, s"GET $target HTTP/1.1\r\nHost: x\r\n\r\n")
+        val r = readReply(in)
+        assert(r.status == 400, s"$target: $r")
+        assert(r.body.contains("malformed request target"), r.body)
+      }
+    }
+  }
+
+  test("response writes: head in the first, terminator in the last, none but the last under 64 KiB") {
+    val writes = Seq.newBuilder[Array[Byte]]
+    val sock = new OutputStream {
+      override def write(b: Int): Unit = writes += Array(b.toByte)
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = writes += b.slice(off, off + len)
+    }
+    val out = new Http11.ResponseOut(sock)
+    val body = (0 until 40000).map(i => s"line $i\n").mkString.getBytes(StandardCharsets.UTF_8)
+    val stream = out.begin(None, 200, close = false, Nil)
+    body.grouped(1000).foreach(stream.write)
+    assert(out.headSent)
+    out.finish()
+    val ws = writes.result()
+    assert(ws.size > 2, ws.map(_.length))
+    assert(ws.init.forall(_.length == Http11.WriteSize), ws.map(_.length))
+    assert(new String(ws.head, StandardCharsets.US_ASCII).startsWith("HTTP/1.1 200 OK\r\n"))
+    assert(new String(ws.last, StandardCharsets.US_ASCII).endsWith("\r\n0\r\n\r\n"))
+    val wire = new java.io.ByteArrayInputStream(ws.flatten.toArray)
+    val r = readReply(wire)
+    assert(r.status == 200 && r.complete && wire.read() == -1)
+    assert(r.body == new String(body, StandardCharsets.UTF_8))
   }
 }
 
@@ -199,40 +350,23 @@ object HttpFrontendSpec {
     HttpResponse(200, """{"items":[{"id":7}],"next":null}""", Map.empty)
 
   val src = SourceDef(name = "demo", httpStreams = Seq(ordersDef -> new StubRunner))
-}
 
-/** Child-JVM side of the TCP_NODELAY test in [[HttpFrontendSpec]]: starts an
-  * HttpFrontend, sends `Requests` sequential requests (spec and a small read,
-  * mixed) over one keep-alive socket, one write per request, and prints one
-  * `probe<TAB>cmd<TAB>wallNanos<TAB>complete<TAB>lastBodyLine` line each.
-  */
-object HttpFrontendNoDelayProbe {
-  val Requests = 40
-
-  def main(args: Array[String]): Unit = {
-    val fe = new HttpFrontend(Map("demo" -> HttpFrontendSpec.src), HttpFrontendSpec.upstream).start()
+  /** One raw connection to `fe`, closed after `f`. */
+  def wire[T](fe: HttpFrontend)(f: (OutputStream, InputStream) => T): T = {
     val sock = new Socket("127.0.0.1", fe.boundPort)
     try {
       sock.setTcpNoDelay(true)
       sock.setSoTimeout(30000)
-      val os = sock.getOutputStream
-      val in = new BufferedInputStream(sock.getInputStream)
-      (0 until Requests).foreach { i =>
-        val cmd = if (i % 3 == 0) "read" else "spec"
-        val req = s"POST /demo/$cmd HTTP/1.1\r\nHost: 127.0.0.1\r\nContent-Length: 0\r\n\r\n"
-        val t0 = System.nanoTime()
-        os.write(req.getBytes(StandardCharsets.US_ASCII))
-        os.flush()
-        val (complete, body) = readChunkedResponse(in)
-        val wall = System.nanoTime() - t0
-        val last = body.linesIterator.filter(_.nonEmpty).toSeq.lastOption.getOrElse("")
-        println(s"probe\t$cmd\t$wall\t$complete\t$last")
-      }
-    } finally { sock.close(); fe.stop() }
-    sys.exit(0)
+      f(sock.getOutputStream, new BufferedInputStream(sock.getInputStream))
+    } finally sock.close()
   }
 
-  private def readLine(in: InputStream): String = {
+  def send(os: OutputStream, s: String): Unit = {
+    os.write(s.getBytes(StandardCharsets.ISO_8859_1))
+    os.flush()
+  }
+
+  def readLine(in: InputStream): String = {
     val b = new ByteArrayOutputStream()
     var c = in.read()
     while (c != -1 && c != '\n') { b.write(c); c = in.read() }
@@ -242,10 +376,14 @@ object HttpFrontendNoDelayProbe {
   /** Status line and headers, then the chunked body up to its zero-size
     * terminator. Returns whether the terminator arrived, and the body.
     */
-  private def readChunkedResponse(in: InputStream): (Boolean, String) = {
+  def readChunkedResponse(in: InputStream): (Boolean, String) = {
     val status = readLine(in)
     require(status.startsWith("HTTP/1.1 200"), s"status: $status")
     Iterator.continually(readLine(in)).takeWhile(_.nonEmpty).foreach(_ => ())
+    readChunks(in)
+  }
+
+  private def readChunks(in: InputStream): (Boolean, String) = {
     val body = new ByteArrayOutputStream()
     var size = -1
     while (size != 0) {
@@ -257,4 +395,26 @@ object HttpFrontendNoDelayProbe {
     }
     (true, body.toString(StandardCharsets.UTF_8))
   }
+
+  /** One response; `complete` says its body ended as its framing says. */
+  final case class Reply(status: Int, headers: Map[String, String], body: String, complete: Boolean)
+
+  def readReply(in: InputStream, headOnly: Boolean = false): Reply = {
+    val status = readLine(in).split(' ')(1).toInt
+    val headers = Iterator.continually(readLine(in)).takeWhile(_.nonEmpty).map { h =>
+      val i = h.indexOf(':'); h.substring(0, i).toLowerCase -> h.substring(i + 1).trim
+    }.toMap
+    if (headOnly) Reply(status, headers, "", complete = true)
+    else if (headers.get("transfer-encoding").contains("chunked")) {
+      val (complete, body) = readChunks(in)
+      Reply(status, headers, body, complete)
+    } else headers.get("content-length") match {
+      case Some(n) =>
+        val body = in.readNBytes(n.toInt)
+        Reply(status, headers, new String(body, StandardCharsets.UTF_8), body.length == n.toInt)
+      case None => // close-delimited
+        Reply(status, headers, new String(in.readAllBytes(), StandardCharsets.UTF_8), complete = true)
+    }
+  }
 }
+
