@@ -1,10 +1,10 @@
 package graft
 
-import java.io.Writer
+import java.io.{BufferedOutputStream, OutputStream, Writer}
 import java.nio.file.{Files, Paths}
 
 import graft.connectors.ConnectorDefs
-import graft.core.{Cmd, Connector, ProtoWriter, RunConfig}
+import graft.core.{Cmd, Connector, RunConfig, SourceDef}
 import graft.sources.JdkHttpClient
 
 /** Airbyte-style CLI frontend (reference `pkg/airbyte/cmd.go:18-76`):
@@ -12,11 +12,11 @@ import graft.sources.JdkHttpClient
   * [--catalog f-o-i] [--format airbyte|singer]` — flags are synthesized into
   * the same control NDJSON the server path consumes, then dispatched through
   * `Connector.handle`. Output is protocol NDJSON on stdout, in UTF-8
-  * whatever the platform charset.
+  * whatever the platform charset, through one buffered byte stream.
   */
 object Main {
   def main(args: Array[String]): Unit = {
-    val out = ProtoWriter.utf8(System.out)
+    val out = new BufferedOutputStream(System.out, 1 << 16)
     try run(args, out) finally out.flush()
   }
 
@@ -26,7 +26,18 @@ object Main {
   private def fileOrInline(v: String): String =
     if (v.trim.startsWith("{")) v else Files.readString(Paths.get(v))
 
+  def run(args: Array[String], out: OutputStream): Unit = {
+    val (src, cmd, rc) = parse(args)
+    Connector.handle(src, cmd, rc, out, Connector.transport(src, new JdkHttpClient()),
+      () => System.currentTimeMillis())
+  }
+
   def run(args: Array[String], out: Writer): Unit = {
+    val (src, cmd, rc) = parse(args)
+    Connector.handle(src, cmd, rc, out, Connector.transport(src, new JdkHttpClient()))
+  }
+
+  private def parse(args: Array[String]): (SourceDef, Cmd, RunConfig) = {
     val cmd = args.headOption.flatMap(Cmd.parse).getOrElse {
       System.err.println("usage: graft.Main <spec|check|discover|read> --connector <name> [--config f|json] [--state f|json] [--catalog f|json] [--format airbyte|singer]")
       sys.exit(2)
@@ -48,8 +59,6 @@ object Main {
       flags.get("config").map(c => s"""{"type":"CONFIG","config":${fileOrInline(c)}}"""),
       flags.get("state").map(s => s"""{"type":"STATE","state":{"data":${fileOrInline(s)}}}"""),
       flags.get("catalog").map(c => s"""{"type":"CATALOG","catalog":${fileOrInline(c)}}""")).flatten
-    val rc = RunConfig.parse(control.iterator)
-    val client = Connector.transport(src, new JdkHttpClient())
-    Connector.handle(src, cmd, rc, out, client)
+    (src, cmd, RunConfig.parse(control.iterator))
   }
 }

@@ -1,6 +1,6 @@
 package graft.core
 
-import java.io.Writer
+import java.io.{OutputStream, Writer}
 import java.util.concurrent.ExecutionException
 import java.util.concurrent.atomic.AtomicReference
 
@@ -141,8 +141,18 @@ object Connector {
       shareIndex: Int, nShares: Int): HttpClient =
     new graft.sources.RetryingClient(src.pacedShare(base, shareIndex, nShares))
 
+  /** [[handle]] for a caller that holds a `Writer`: the same output,
+    * decoded from UTF-8 as it is written.
+    */
   def handle(src: SourceDef, cmd: Cmd, rc: RunConfig, out: Writer, client: HttpClient,
       clock: () => Long = () => System.currentTimeMillis()): Unit = {
+    val chars = ProtoWriter.decoding(out)
+    try handle(src, cmd, rc, chars, client, clock) finally chars.flush()
+  }
+
+  /** Runs `cmd`, writing its protocol NDJSON to `out` as UTF-8. */
+  def handle(src: SourceDef, cmd: Cmd, rc: RunConfig, out: OutputStream, client: HttpClient,
+      clock: () => Long): Unit = {
     val w = ProtoWriter(rc.format, out, clock)
     cmd match {
       case Cmd.Spec => w.writeSpec(src.spec)
@@ -216,10 +226,13 @@ object Connector {
 
   /** Full sync: streams run concurrently bounded by `src.concurrency`
     * (reference errgroup + semaphore throttler, `sourcedef.go:153-186`):
-    * that many workers on the shared pool take the streams in order.
-    * A runner error becomes an in-band LOG and the sync proceeds (reference
-    * error trapping, `proto.go:314-332`). Either kind of error cancels the
-    * streams not yet started. A fatal one (`OutOfMemoryError`,
+    * that many workers take the streams in order, the calling thread being
+    * one of them and the shared pool running the rest. A worker turns each
+    * page into RECORD lines in its own buffer, then appends them to the
+    * output under one lock per page; a stream's STATE follows its last
+    * page. A runner error becomes an in-band LOG and the sync proceeds
+    * (reference error trapping, `proto.go:314-332`). Either kind of error
+    * cancels the streams not yet started. A fatal one (`OutOfMemoryError`,
     * `InterruptedException`, ...) writes no LOG: once the streams already
     * running have ended, it is thrown out of the sync as itself. State is
     * emitted only after the stream's records are fully written.
@@ -235,12 +248,15 @@ object Connector {
     src.manualStreams.filter(sd => manualOk(sd.name)).foreach(w.openStream)
     val lock = new Object
     val firstError = new AtomicReference[Throwable]()
-    def sync(sd: StreamDef, runner: HttpRunner): Unit =
+    def sync(sd: StreamDef, runner: HttpRunner, lines: RecordLines): Unit =
       try {
         if (firstError.get() != null) return // first error cancels the rest
         val st = rc.states.get(sd.name)
-        val it = runner.stream(rc.config, st).fetch(httpClient)
-        it.foreach(rec => lock.synchronized(w.writeRecord(sd.name, rec)))
+        lines.of(sd.name)
+        runner.stream(rc.config, st).pages(httpClient).foreach { page =>
+          lines.add(page)
+          if (!lines.isEmpty) lock.synchronized(w.write(lines))
+        }
         runner.newState(rc.config, st)
           .foreach(s => lock.synchronized(w.writeState(sd.name, s)))
       } catch {
@@ -253,15 +269,15 @@ object Connector {
       }
     val pending = new java.util.concurrent.ConcurrentLinkedQueue[(StreamDef, HttpRunner)]()
     streams.foreach(pending.add)
-    val workers = Seq.fill(math.min(math.max(1, src.concurrency), streams.size)) {
-      fetchPool.submit(new Runnable {
-        override def run(): Unit = {
-          var next = pending.poll()
-          while (next != null) { sync(next._1, next._2); next = pending.poll() }
-        }
-      })
+    val worker: Runnable = () => {
+      val lines = w.records()
+      var next = pending.poll()
+      while (next != null) { sync(next._1, next._2, lines); next = pending.poll() }
     }
-    val fatal = workers.flatMap { f =>
+    val workers = math.min(math.max(1, src.concurrency), streams.size)
+    val pooled = Seq.fill(math.max(0, workers - 1))(fetchPool.submit(worker, ()))
+    val own = if (workers > 0) try { worker.run(); None } catch { case e: Throwable => Some(e) } else None
+    val fatal = own ++ pooled.flatMap { f =>
       try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
     }
     fatal.headOption.foreach(e => throw e)

@@ -1,7 +1,9 @@
 package graft.core
 
-import java.io.{BufferedWriter, OutputStream, OutputStreamWriter, Writer}
-import java.nio.charset.StandardCharsets
+import java.io.{OutputStream, Writer}
+import java.nio.{ByteBuffer, CharBuffer}
+import java.nio.charset.CodingErrorAction
+import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
@@ -108,30 +110,124 @@ object Cmd {
 }
 
 /** Driver-side protocol writer: one dialect instance per run, serializing
-  * control + record messages as NDJSON to `out`. Distributed record writes
-  * use the Column-level envelope builders in [[graft.sinks.Envelopes]]
+  * control + record messages as UTF-8 NDJSON to `out`. Distributed record
+  * writes use the Column-level envelope builders in [[graft.sinks.Envelopes]]
   * instead; this writer is the protocol-exact CLI/golden-test path.
   *
   * Emission ordering mirrors the dialects: Airbyte registers per-stream
   * state and emits ONE STATE at close (`pkg/airbyte/proto.go:43-51`);
   * Singer emits STATE inline (`pkg/singer/singer_stream.go:41-60`).
   *
-  * Record text: `writeRecord` puts `dataJson` into the RECORD envelope as
-  * is. From an HTTP stream that is the upstream's own text for the record,
+  * Record text: a RECORD envelope holds the record's text as is. From an
+  * HTTP stream that is the upstream's own UTF-8 bytes for the record,
   * whitespace outside strings removed ([[graft.sources.Page]]), so raw
   * number spellings such as `1.50` reach the output unchanged, as with
-  * fastjson in the reference. The envelope is written piece by piece around
-  * it, with a per-stream prefix built once. Not thread-safe: callers
-  * serialize their calls.
+  * fastjson in the reference. RECORD lines are built in a [[RecordLines]]
+  * buffer, around a per-stream prefix encoded once, and reach `out` in one
+  * write per buffer. Not thread-safe: callers serialize their calls; a
+  * [[RecordLines]] is filled by one thread without any lock.
   */
-trait ProtoWriter {
+sealed abstract class ProtoWriter(out: OutputStream, clock: () => Long) {
   def openStream(stream: StreamDef): Unit
-  def writeRecord(stream: String, dataJson: String): Unit
   def writeState(stream: String, stateJson: String): Unit
   def writeLog(level: String, message: String): Unit
   def writeSpec(spec: String): Unit
   def writeStatus(ok: Boolean, reason: String): Unit
   def close(cmd: Cmd): Unit
+
+  /** A RECORD line is `head(stream)`, the time from `stamp`, `mid`, the
+    * record's text, then `tail`.
+    */
+  protected def recordHead(quotedStream: String): String
+  protected def stamp(millis: Long): Long
+  protected val recordMid: String
+  protected val recordTail: String
+
+  private val heads = new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
+  private[core] final def head(stream: String): Array[Byte] =
+    heads.computeIfAbsent(stream, s => recordHead(Json.quote(s)).getBytes(UTF_8))
+  private[core] final lazy val mid = recordMid.getBytes(UTF_8)
+  private[core] final lazy val tail = recordTail.getBytes(UTF_8)
+  private[core] final def now(): Long = stamp(clock())
+
+  /** An empty buffer of RECORD lines, to be filled by one thread. */
+  final def records(): RecordLines = new RecordLines(this)
+
+  /** Writes `lines`' RECORD lines to the output and empties it. */
+  final def write(lines: RecordLines): Unit = lines.drainTo(out)
+
+  private lazy val single = records()
+
+  final def writeRecord(stream: String, dataJson: String): Unit = {
+    single.of(stream).add(dataJson)
+    write(single)
+  }
+
+  protected final def emit(s: String): Unit = out.write((s + "\n").getBytes(UTF_8))
+
+  protected final def flush(): Unit = out.flush()
+}
+
+/** RECORD lines of one stream at a time, encoded into a buffer that is
+  * reused from page to page. `emitted_at`/`time_extracted` is read from the
+  * writer's clock for each record.
+  */
+final class RecordLines private[core] (w: ProtoWriter) {
+  private var buf = new Array[Byte](1 << 15)
+  private var size = 0
+  private var head: Array[Byte] = _
+
+  /** Lines from here on are `stream`'s. */
+  def of(stream: String): RecordLines = { head = w.head(stream); this }
+
+  def isEmpty: Boolean = size == 0
+
+  /** One RECORD line around the record text `data[off, off + len)`. */
+  def add(data: Array[Byte], off: Int, len: Int): Unit = {
+    val mid = w.mid
+    val tail = w.tail
+    val need = size + head.length + 20 + mid.length + len + tail.length
+    if (need > buf.length) buf = java.util.Arrays.copyOf(buf, math.max(need, buf.length * 2))
+    put(head, 0, head.length)
+    putLong(w.now())
+    put(mid, 0, mid.length)
+    put(data, off, len)
+    put(tail, 0, tail.length)
+  }
+
+  def add(dataJson: String): Unit = {
+    val b = dataJson.getBytes(UTF_8)
+    add(b, 0, b.length)
+  }
+
+  /** A line for each record of `page`. */
+  def add(page: graft.sources.Page): Unit = {
+    var i = 0
+    while (i < page.size) { add(page.data, page.offset(i), page.length(i)); i += 1 }
+  }
+
+  private def put(b: Array[Byte], off: Int, len: Int): Unit = {
+    System.arraycopy(b, off, buf, size, len)
+    size += len
+  }
+
+  /** `v` in decimal, as `java.lang.Long.toString` spells it. */
+  private def putLong(v: Long): Unit =
+    if (v < 0) { val b = java.lang.Long.toString(v).getBytes(US_ASCII); put(b, 0, b.length) }
+    else {
+      var digits = 1
+      var t = v
+      while (t >= 10) { t /= 10; digits += 1 }
+      var i = size + digits - 1
+      t = v
+      while (i >= size) { buf(i) = ('0' + t % 10).toByte; t /= 10; i -= 1 }
+      size += digits
+    }
+
+  private[core] def drainTo(out: OutputStream): Unit = {
+    out.write(buf, 0, size)
+    size = 0
+  }
 }
 
 object ProtoWriter {
@@ -139,7 +235,7 @@ object ProtoWriter {
     * `proto.go:143-147`; server registers ""→airbyte, "singer"→singer,
     * `cmd/server/main.go:29-32`).
     */
-  def apply(format: String, out: Writer, clock: () => Long = () => System.currentTimeMillis()): ProtoWriter =
+  def apply(format: String, out: OutputStream, clock: () => Long = () => System.currentTimeMillis()): ProtoWriter =
     format match {
       case "" | "airbyte" => new AirbyteWriter(out, clock)
       case "singer" => new SingerWriter(out, clock)
@@ -153,34 +249,51 @@ object ProtoWriter {
   def supported(format: String): Boolean =
     format == "" || format == "airbyte" || format == "singer"
 
-  /** The sink every frontend writes protocol NDJSON through: UTF-8 whatever
-    * the platform charset, and buffered, so a line costs no allocation in
-    * the encoder. The caller flushes.
+  /** An output stream that decodes the UTF-8 written to it into `out` as it
+    * arrives: the character side of the byte writer, for callers that hold
+    * a `Writer`. A character split across writes is completed by the next.
     */
-  def utf8(out: OutputStream): Writer =
-    new BufferedWriter(new OutputStreamWriter(out, StandardCharsets.UTF_8))
+  def decoding(out: Writer): OutputStream = new OutputStream {
+    private val decoder = UTF_8.newDecoder()
+      .onMalformedInput(CodingErrorAction.REPLACE).onUnmappableCharacter(CodingErrorAction.REPLACE)
+    private val chars = CharBuffer.allocate(8192)
+    private var carry = Array.emptyByteArray // the start of a split character
+
+    override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      val in =
+        if (carry.isEmpty) ByteBuffer.wrap(b, off, len)
+        else ByteBuffer.wrap(carry ++ java.util.Arrays.copyOfRange(b, off, off + len))
+      while (decoder.decode(in, chars, false).isOverflow) drain()
+      drain()
+      carry = new Array[Byte](in.remaining)
+      in.get(carry)
+    }
+
+    private def drain(): Unit = {
+      out.write(chars.array, 0, chars.position)
+      chars.clear()
+    }
+
+    override def flush(): Unit = out.flush()
+  }
 }
 
 /** Airbyte NDJSON dialect (reference `pkg/airbyte/proto.go`,
   * `pkg/airbyte/stream_proto.go`).
   */
-final class AirbyteWriter(out: Writer, clock: () => Long) extends ProtoWriter {
+final class AirbyteWriter(out: OutputStream, clock: () => Long) extends ProtoWriter(out, clock) {
   private val opened = mutable.LinkedHashMap[String, StreamDef]()
   private val states = mutable.LinkedHashMap[String, String]()
-  private val recordPrefix = mutable.HashMap[String, String]()
-
-  private def emit(s: String): Unit = { out.write(s); out.write('\n') }
 
   override def openStream(stream: StreamDef): Unit = opened(stream.name) = stream
 
-  override def writeRecord(stream: String, dataJson: String): Unit = {
-    out.write(recordPrefix.getOrElseUpdate(stream,
-      s"""{"type":"RECORD","record":{"stream":${Json.quote(stream)},"emitted_at":"""))
-    out.write(java.lang.Long.toString(clock()))
-    out.write(""","data":""")
-    out.write(dataJson)
-    out.write("}}\n")
-  }
+  override protected def recordHead(quotedStream: String): String =
+    s"""{"type":"RECORD","record":{"stream":$quotedStream,"emitted_at":"""
+  override protected def stamp(millis: Long): Long = millis
+  override protected val recordMid: String = ""","data":"""
+  override protected val recordTail: String = "}}\n"
 
   /** State is registered, not streamed (reference `stream_proto.go:42-45`). */
   override def writeState(stream: String, stateJson: String): Unit =
@@ -214,7 +327,7 @@ final class AirbyteWriter(out: Writer, clock: () => Long) extends ProtoWriter {
         emit(s"""{"type":"STATE","state":{"data":{$data}}}""")
       case _ => ()
     }
-    out.flush()
+    flush()
   }
 }
 
@@ -222,11 +335,7 @@ final class AirbyteWriter(out: Writer, clock: () => Long) extends ProtoWriter {
   * `pkg/singer/singer_stream.go`): SCHEMA at open with key/order properties,
   * RECORD with `time_extracted`, inline STATE/LOG.
   */
-final class SingerWriter(out: Writer, clock: () => Long) extends ProtoWriter {
-  private val recordPrefix = mutable.HashMap[String, String]()
-
-  private def emit(s: String): Unit = { out.write(s); out.write('\n') }
-
+final class SingerWriter(out: OutputStream, clock: () => Long) extends ProtoWriter(out, clock) {
   override def openStream(stream: StreamDef): Unit = {
     val keys = stream.primaryKey.map(f => Json.quote(f.dotted)).mkString(",")
     val order = stream.orderBy.map(f => Json.quote(f.dotted)).mkString(",")
@@ -239,14 +348,11 @@ final class SingerWriter(out: Writer, clock: () => Long) extends ProtoWriter {
   // parity (`pkg/singer/singer.go:29`, NewNumberInt(time.Now().Unix())) —
   // the Singer spec itself says RFC3339, but compatibility with the
   // reference's own consumers governs here.
-  override def writeRecord(stream: String, dataJson: String): Unit = {
-    out.write(recordPrefix.getOrElseUpdate(stream,
-      s"""{"type":"RECORD","stream":${Json.quote(stream)},"time_extracted":"""))
-    out.write(java.lang.Long.toString(clock() / 1000))
-    out.write(""","record":""")
-    out.write(dataJson)
-    out.write("}\n")
-  }
+  override protected def recordHead(quotedStream: String): String =
+    s"""{"type":"RECORD","stream":$quotedStream,"time_extracted":"""
+  override protected def stamp(millis: Long): Long = millis / 1000
+  override protected val recordMid: String = ""","record":"""
+  override protected val recordTail: String = "}\n"
 
   /** Inline, stream-scoped (reference `singer_stream.go:41-60`). */
   override def writeState(stream: String, stateJson: String): Unit =
@@ -263,5 +369,5 @@ final class SingerWriter(out: Writer, clock: () => Long) extends ProtoWriter {
     emit(s"""{"type":"STATUS","status":{"status":"$status","message":${Json.quote(reason)}}}""")
   }
 
-  override def close(cmd: Cmd): Unit = out.flush()
+  override def close(cmd: Cmd): Unit = flush()
 }

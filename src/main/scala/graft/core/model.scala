@@ -44,8 +44,9 @@ final case class StreamDef(
 
   /** JSON Schema document for catalogs/specs — from the declared StructType,
     * mirroring the reference's jsonschema reflection (`schema.go:27-35`).
+    * Rendered once per stream definition.
     */
-  def jsonSchema: String = JsonSchema.ofStruct(schema)
+  lazy val jsonSchema: String = JsonSchema.ofStruct(schema)
 }
 
 object StreamDef {

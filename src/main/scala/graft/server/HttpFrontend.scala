@@ -1,6 +1,6 @@
 package graft.server
 
-import java.io.{BufferedInputStream, Writer}
+import java.io.{BufferedInputStream, OutputStream}
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.{ConcurrentHashMap, Semaphore}
@@ -106,14 +106,14 @@ final class HttpFrontend(
       while (more) Http11.readRequest(in, s.getOutputStream) match {
         case Http11.Closed => more = false
         case Http11.Rejected(status, reason) =>
-          respond(out, None, status, _.write(s"""{"error":${Json.quote(reason)}}"""))
+          respond(out, None, status, text(s"""{"error":${Json.quote(reason)}}"""))
           Http11.lingerClose(s)
           more = false
         case req: Http11.Request =>
           try handle(out, req)
           catch {
             case NonFatal(e) if !out.headSent =>
-              respond(out, Some(req), 500, _.write(s"""{"error":${Json.quote(e.getMessage)}}"""))
+              respond(out, Some(req), 500, text(s"""{"error":${Json.quote(e.getMessage)}}"""))
           }
           if (req.close) { Http11.lingerClose(s); more = false }
       }
@@ -126,7 +126,7 @@ final class HttpFrontend(
     }
 
   private def handle(out: Http11.ResponseOut, req: Http11.Request): Unit = {
-    def respond(status: Int, write: Writer => Unit): Unit =
+    def respond(status: Int, write: OutputStream => Unit): Unit =
       HttpFrontend.this.respond(out, Some(req), status, write)
     // Normalize before BOTH the auth scope check and routing, so the two
     // agree on what a path means: /demo/../other must not pass a
@@ -138,7 +138,7 @@ final class HttpFrontend(
     val normPath = new java.net.URI(null, null, req.target.getPath, null)
       .normalize().getPath
     if (normPath.split('/').contains("..")) {
-      respond(400, _.write("""{"error":"invalid path"}"""))
+      respond(400, text("""{"error":"invalid path"}"""))
       return
     }
     if (authKeys.nonEmpty) {
@@ -146,7 +146,7 @@ final class HttpFrontend(
       TokenAuth.verify(auth, normPath, authKeys,
         now = () => clock() / 1000) match {
         case Left(reason) =>
-          respond(401, _.write(s"""{"error":${Json.quote(reason)}}"""))
+          respond(401, text(s"""{"error":${Json.quote(reason)}}"""))
           return
         case Right(_) => ()
       }
@@ -155,7 +155,7 @@ final class HttpFrontend(
     path.split('/') match {
       case Array("discover") =>
         val names = connectors.keys.toSeq.sorted.map(Json.quote).mkString("[", ",", "]")
-        respond(200, w => w.write(names))
+        respond(200, text(names))
       case Array(connector, cmdStr) =>
         (connectors.get(connector), Cmd.parse(cmdStr)) match {
           case (Some(src), Some(cmd)) =>
@@ -164,7 +164,7 @@ final class HttpFrontend(
             // the reference fails its protos[format] lookup before any
             // output (proto.go:103-107).
             if (!ProtoWriter.supported(rc.format)) {
-              respond(400, _.write(s"""{"error":${Json.quote(s"unknown format '${rc.format}'")}}"""))
+              respond(400, text(s"""{"error":${Json.quote(s"unknown format '${rc.format}'")}}"""))
               return
             }
             // Full transport stack per request (retry OUTSIDE pacing, so
@@ -173,28 +173,29 @@ final class HttpFrontend(
             // already-retrying caller client would let retries ride one
             // token draw).
             commands.acquire()
-            try respond(200, w => Connector.handle(src, cmd, rc, w, Connector.transport(src, baseClient), clock))
+            try respond(200, o => Connector.handle(src, cmd, rc, o, Connector.transport(src, baseClient), clock))
             finally commands.release()
-          case (None, _) => respond(404, _.write(s"""{"error":"unknown connector '$connector'"}"""))
-          case (_, None) => respond(400, _.write(s"""{"error":"unknown command '$cmdStr'"}"""))
+          case (None, _) => respond(404, text(s"""{"error":"unknown connector '$connector'"}"""))
+          case (_, None) => respond(400, text(s"""{"error":"unknown command '$cmdStr'"}"""))
         }
-      case _ => respond(404, _.write("""{"error":"not found"}"""))
+      case _ => respond(404, text("""{"error":"not found"}"""))
     }
   }
 
-  /** zstd content negotiation, then stream the writer's output through
-    * one buffered UTF-8 writer ([[ProtoWriter.utf8]]) into `out`.
+  private def text(body: String): OutputStream => Unit = _.write(body.getBytes(StandardCharsets.UTF_8))
+
+  /** zstd content negotiation, then `write` the body's bytes straight into
+    * `out`'s buffer, or into a zstd stream over it.
     */
   private def respond(out: Http11.ResponseOut, req: Option[Http11.Request], status: Int,
-      write: Writer => Unit): Unit = {
+      write: OutputStream => Unit): Unit = {
     val zstd = req.flatMap(_.header("accept-zstd")).exists(_.nonEmpty)
     val body = out.begin(req, status, close = req.forall(_.close),
       if (zstd) Seq("X-Compression: zstd") else Nil)
     val sink = if (zstd) new com.github.luben.zstd.ZstdOutputStream(body) else body
     try {
-      val w = ProtoWriter.utf8(sink)
-      write(w)
-      w.close()
+      write(sink)
+      sink.close()
     } catch {
       case e: Throwable =>
         out.abandon()

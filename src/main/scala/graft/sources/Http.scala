@@ -1,15 +1,14 @@
 package graft.sources
 
-import scala.collection.mutable
+import java.nio.charset.Charset
+import java.nio.charset.StandardCharsets.UTF_8
 
-import com.fasterxml.jackson.core.{JsonParser, JsonToken}
 import com.fasterxml.jackson.databind.JsonNode
-import com.fasterxml.jackson.databind.node.{MissingNode, ObjectNode}
 
 import graft.core.Json
 
 /** HTTP source family: a generic paginated fetch loop with pluggable
-  * pagination strategies, a retry/backoff client wrapper, and a one-pass
+  * pagination strategies, a retry/backoff client wrapper, and a one-scan
   * page decoder that hands out each record as its own JSON text — the
   * reference's "scan loop" re-expressed as pure strategy objects (testable
   * against an in-process mock server, no egress).
@@ -43,10 +42,27 @@ final case class HttpRequest(
     copy(params = params.filterNot(_._1 == k) :+ (k -> v))
 }
 
-final case class HttpResponse(status: Int, body: String, headers: Map[String, String]) {
+/** A response as received: the body's bytes and the charset its
+  * `Content-Type` declares. `body` and `json` decode on first use.
+  */
+final class HttpResponse private (val status: Int, content: Array[Byte], charset: Charset,
+    text: String, val headers: Map[String, String]) {
+  lazy val body: String = if (text != null) text else new String(content, charset)
   lazy val json: JsonNode = Json.parse(body)
   def header(name: String): Option[String] =
     headers.collectFirst { case (k, v) if k.equalsIgnoreCase(name) => v }
+
+  /** The body's bytes when they are declared UTF-8, as received. */
+  def utf8Content: Option[Array[Byte]] =
+    if (text != null) Some(text.getBytes(UTF_8)) else Option.when(charset == UTF_8)(content)
+}
+
+object HttpResponse {
+  def apply(status: Int, body: String, headers: Map[String, String]): HttpResponse =
+    new HttpResponse(status, null, UTF_8, body, headers)
+
+  def apply(status: Int, content: Array[Byte], charset: Charset, headers: Map[String, String]): HttpResponse =
+    new HttpResponse(status, content, charset, null, headers)
 }
 
 /** Pluggable transport (java.net in production, a stub in tests).
@@ -77,7 +93,8 @@ final class JdkHttpClient(timeoutMs: Long = 30000) extends HttpClient {
       val status = c.getResponseCode
       // read to the end and close: that returns the connection to the cache
       val in = if (status >= 400) c.getErrorStream else c.getInputStream
-      val bytes = if (in == null) Array.emptyByteArray else try in.readAllBytes() finally in.close()
+      val bytes = if (in == null) Array.emptyByteArray else try JdkHttpClient.readBody(in, c.getContentLengthLong)
+        finally in.close()
       val hdrs = scala.jdk.CollectionConverters.MapHasAsScala(c.getHeaderFields).asScala.iterator
         .collect { case (k, vs) if k != null => k -> (if (vs.isEmpty) "" else vs.get(0)) }.toMap
       val next = Option(c.getHeaderField("Location"))
@@ -89,7 +106,7 @@ final class JdkHttpClient(timeoutMs: Long = 30000) extends HttpClient {
         .filterNot(n => url.getProtocol == "https" && n.getProtocol == "http")
       next match {
         case Some(n) => url = n; redirects += 1
-        case None => return HttpResponse(status, new String(bytes, JdkHttpClient.charset(c.getContentType)), hdrs)
+        case None => return HttpResponse(status, bytes, JdkHttpClient.charset(c.getContentType), hdrs)
       }
     }
     throw new IllegalStateException("unreachable")
@@ -101,13 +118,24 @@ object JdkHttpClient {
   private val MaxRedirects = 5
 
   /** The `charset` parameter of a Content-Type, UTF-8 when absent or unknown. */
-  private def charset(contentType: String): java.nio.charset.Charset =
+  private def charset(contentType: String): Charset =
     Option(contentType).toSeq.flatMap(_.split(';').map(_.trim))
       .collectFirst { case p if p.toLowerCase.startsWith("charset=") =>
         p.substring(8).trim.stripPrefix("\"").stripSuffix("\"")
       }
-      .flatMap(n => scala.util.Try(java.nio.charset.Charset.forName(n)).toOption)
-      .getOrElse(java.nio.charset.StandardCharsets.UTF_8)
+      .flatMap(n => scala.util.Try(Charset.forName(n)).toOption)
+      .getOrElse(UTF_8)
+
+  /** The body: into an array of exactly `Content-Length` bytes when the
+    * length is declared, else read to the end.
+    */
+  private def readBody(in: java.io.InputStream, contentLength: Long): Array[Byte] =
+    if (contentLength < 0 || contentLength > Int.MaxValue - 8) in.readAllBytes()
+    else {
+      val bytes = new Array[Byte](contentLength.toInt)
+      val n = in.readNBytes(bytes, 0, bytes.length)
+      if (n == bytes.length) bytes else java.util.Arrays.copyOf(bytes, n)
+    }
 }
 
 /** Retry/backoff wrapper honoring Retry-After on 429/5xx (reference
@@ -255,12 +283,33 @@ object Pagination {
       last.response.header("Link").flatMap(parseNext)
         .map(u => HttpRequest(u, Nil, base.headers))
 
-    /** Parse `<url1>; rel="prev", <url2>; rel="next"` → url2. */
-    def parseNext(link: String): Option[String] =
-      link.split(',').iterator.map(_.trim).collectFirst {
-        case part if part.contains("rel=\"next\"") && part.startsWith("<") && part.contains(">") =>
-          part.substring(1, part.indexOf('>'))
+    /** Parse `<url1>; rel="prev", <url2>; rel="next"` → url2. Link values
+      * are split only at commas outside `<…>` and quotes, since a URL may
+      * hold commas; `rel` may be quoted or a bare token, and may list
+      * `next` among space-separated relation types (RFC 8288 §3).
+      */
+    def parseNext(link: String): Option[String] = {
+      var i = link.indexOf('<')
+      while (i >= 0) {
+        val close = link.indexOf('>', i)
+        if (close < 0) return None
+        var j = close + 1
+        var quoted = false
+        while (j < link.length && (quoted || link.charAt(j) != ',')) {
+          if (link.charAt(j) == '"') quoted = !quoted
+          j += 1
+        }
+        val next = link.substring(close + 1, j).split(';').iterator.map(_.trim).exists { p =>
+          val eq = p.indexOf('=')
+          eq > 0 && p.substring(0, eq).trim.equalsIgnoreCase("rel") &&
+            p.substring(eq + 1).trim.stripPrefix("\"").stripSuffix("\"").split("\\s+")
+              .exists(_.equalsIgnoreCase("next"))
+        }
+        if (next) return Some(link.substring(i + 1, close))
+        i = link.indexOf('<', j)
       }
+      None
+    }
   }
 
   /** Continuation token in a body field, re-sent as a query param until the
@@ -283,7 +332,7 @@ object Pagination {
     override def first(base: HttpRequest): HttpRequest =
       base.withParam(startParam, "0").withParam(numParam, num.toString)
     override def next(base: HttpRequest, last: Page): Option[HttpRequest] =
-      if (last.records.size < num) None
+      if (last.size < num) None
       else {
         val lastStart = base.params.collectFirst { case (`startParam`, v) => v.toInt }.getOrElse(0)
         Some(base.withParam(startParam, (lastStart + num).toString))
@@ -291,144 +340,12 @@ object Pagination {
   }
 }
 
-/** One decoded page. `records` holds each element of the records array as
-  * its own JSON text: the upstream's source text for the element, with the
-  * whitespace outside strings removed. Number spellings, escapes and key
-  * order stay as the upstream sent them, as fastjson's `MarshalTo` keeps
-  * them in the reference's `EmitBatch` (`proto.go:283-293`). No tree is
-  * built for records. `fields` is the rest of the body as a tree, the
-  * records array left out: with the record count and the response headers,
-  * it is all a [[Pagination]] reads.
-  */
-final case class Page(response: HttpResponse, fields: JsonNode, records: IndexedSeq[String])
-
-object Page {
-  /** Decode `resp`'s body in one streaming pass. `recordsPath` names the
-    * records array (`resp.GetArray(keys...)` in the reference); an empty
-    * path means the body itself is the array. A missing or non-array
-    * records field yields no records. The whole page is decoded before any
-    * record is handed out, so a malformed page fails as a whole.
-    */
-  def apply(resp: HttpResponse, recordsPath: Seq[String]): Page = {
-    val d = new Decoder(resp.body)
-    try {
-      val fields = (d.p.nextToken(), recordsPath) match {
-        case (null, _) => MissingNode.getInstance
-        case (JsonToken.START_ARRAY, Seq()) => d.readArray(); MissingNode.getInstance
-        case (JsonToken.START_OBJECT, path) if path.nonEmpty => d.readObject(path.toList)
-        case _ => Json.mapper.readTree[JsonNode](d.p)
-      }
-      Page(resp, fields, d.records.toIndexedSeq)
-    } finally d.p.close()
-  }
-
-  // The characters the record text is cut at: JSON's four whitespace
-  // characters, then the quote.
-  private val Marks = Array(' ', '\n', '\r', '\t', '"')
-  private val Quote = 4
-
-  /** The decode state of one page. */
-  private final class Decoder(body: String) {
-    val p: JsonParser = Json.mapper.getFactory.createParser(body)
-    val records = mutable.ArrayBuffer[String]()
-    // Per mark, its first position in `body` at or after the last position
-    // looked from (-1: none left, -2: not looked for yet). Positions are
-    // looked from in increasing order, so `String.indexOf` reads the page
-    // about once per mark.
-    private val cursor = Array.fill(Marks.length)(-2)
-
-    /** The fields of the object `p` has just opened, with the records array
-      * at `path` (relative to it) collected into `records` instead.
-      */
-    def readObject(path: List[String]): ObjectNode = {
-      val node = Json.obj()
-      while (p.nextToken() == JsonToken.FIELD_NAME) {
-        val name = p.currentName
-        val t = p.nextToken()
-        if (name == path.head) records.clear() // the last duplicate key wins, as in a tree
-        if (name == path.head && path.tail.isEmpty && t == JsonToken.START_ARRAY) readArray()
-        else if (name == path.head && path.tail.nonEmpty && t == JsonToken.START_OBJECT)
-          node.replace(name, readObject(path.tail))
-        else node.replace(name, Json.mapper.readTree[JsonNode](p))
-      }
-      node
-    }
-
-    /** Each element of the array `p` has just opened, as its own text. */
-    def readArray(): Unit =
-      while (p.nextToken() != JsonToken.END_ARRAY) {
-        val from = p.currentTokenLocation().getCharOffset.toInt
-        p.skipChildren() // to the closing bracket of an object or array
-        p.finishToken() // to the closing quote of a string
-        records += text(from, p.currentLocation().getCharOffset.toInt)
-      }
-
-    /** `body[from, until)`, which the parser has just read as one value,
-      * without the whitespace outside strings. The loop steps from one
-      * whitespace character to the next, and over the strings before each,
-      * with `String.indexOf`: it never visits the characters in between. A
-      * value with no whitespace outside its strings is cut out with
-      * `substring`. JSON allows no raw control character inside a string,
-      * so the result has no newline.
-      */
-    private def text(from: Int, until: Int): String = {
-      var sb: java.lang.StringBuilder = null
-      var copied = from // body[from, copied) is in sb
-      var scanned = from // outside any string
-      var ws = whitespace(from)
-      while (ws < until) {
-        scanned = pastStrings(scanned, ws)
-        if (scanned > ws) ws = whitespace(scanned) // ws is inside a string
-        else {
-          if (sb == null) sb = new java.lang.StringBuilder(until - from)
-          sb.append(body, copied, ws)
-          copied = ws + 1
-          scanned = copied
-          ws = whitespace(copied)
-        }
-      }
-      if (sb == null) body.substring(from, until) else sb.append(body, copied, until).toString
-    }
-
-    /** From `at`, outside any string, past every string that opens before
-      * `ws`: the end of the last one, or `at` if none opens before it.
-      */
-    private def pastStrings(at: Int, ws: Int): Int = {
-      var i = at
-      var open = find(Quote, at)
-      while (open < ws) {
-        var close = find(Quote, open + 1)
-        while (escaped(close)) close = find(Quote, close + 1)
-        i = close + 1
-        open = if (i > ws) Int.MaxValue else find(Quote, i)
-      }
-      i
-    }
-
-    /** Whether the quote at `q` is escaped: an odd run of backslashes. */
-    private def escaped(q: Int): Boolean = {
-      var n = 0
-      while (body.charAt(q - 1 - n) == '\\') n += 1
-      n % 2 == 1
-    }
-
-    private def whitespace(from: Int): Int =
-      math.min(math.min(find(0, from), find(1, from)), math.min(find(2, from), find(3, from)))
-
-    /** The first position of `Marks(k)` at or after `from`, or
-      * `Int.MaxValue`. `from` never decreases from one call to the next.
-      */
-    private def find(k: Int, from: Int): Int = {
-      if (cursor(k) != -1 && cursor(k) < from) cursor(k) = body.indexOf(Marks(k), from)
-      if (cursor(k) == -1) Int.MaxValue else cursor(k)
-    }
-  }
-}
-
 /** One paginated HTTP stream: base request builder + pagination + records
-  * path. `fetch` runs the page loop and yields each record as its own JSON
-  * text (see [[Page]] for that contract); the engine turns them into a
-  * DataFrame with the stream's declared schema (`spark.read.schema(...).json(ds)`).
+  * path. `pages` runs the page loop and yields each decoded [[Page]], whose
+  * records are slices of UTF-8 bytes (see [[Page]] for that contract);
+  * `fetch` yields each record as its own `String`, which the engine turns
+  * into a DataFrame with the stream's declared schema
+  * (`spark.read.schema(...).json(ds)`).
   */
 final case class PaginatedStream(
     base: HttpRequest,
@@ -442,21 +359,21 @@ final case class PaginatedStream(
     case _ => ()
   }
 
-  def fetch(client: HttpClient): Iterator[String] = new Iterator[String] {
+  /** The page loop: each page is fetched and decoded when asked for. */
+  def pages(client: HttpClient): Iterator[Page] = new Iterator[Page] {
     private var req: Option[HttpRequest] = Some(pagination.first(base))
-    private var pages = 0
-    private var buf: Iterator[String] = Iterator.empty
+    private var n = 0
 
-    private def advance(): Unit =
-      while (!buf.hasNext && req.isDefined && pages < maxPages) {
-        val r = req.get
-        val page = Page(client.get(r), recordsPath)
-        pages += 1
-        buf = page.records.iterator
-        req = pagination.next(r, page)
-      }
-
-    override def hasNext: Boolean = { advance(); buf.hasNext }
-    override def next(): String = { advance(); buf.next() }
+    override def hasNext: Boolean = req.isDefined && n < maxPages
+    override def next(): Page = {
+      val r = req.get
+      val page = Page(client.get(r), recordsPath)
+      n += 1
+      req = pagination.next(r, page)
+      page
+    }
   }
+
+  def fetch(client: HttpClient): Iterator[String] =
+    pages(client).flatMap(p => Iterator.tabulate(p.size)(p.record))
 }

@@ -249,7 +249,7 @@ final class HttpPartitionReader(readSchema: StructType, props: Map[String, Strin
       part.shareIndex, part.nShares)
   }
 
-  private val records: Iterator[String] = {
+  private val pages: Iterator[graft.sources.Page] = {
     val base = HttpScan.buildStream(props)
     val stream = base.pagination match {
       case off: Pagination.Offset if part.count >= 0 =>
@@ -265,25 +265,32 @@ final class HttpPartitionReader(readSchema: StructType, props: Map[String, Strin
           maxPages = (part.count + off.num - 1) / off.num)
       case _ => base
     }
-    stream.fetch(client)
+    stream.pages(client)
   }
+  private var page: graft.sources.Page = _
+  private var i = 0
 
   // Spark's own JSON row parser, with the PRUNED schema: unprojected fields
-  // are never materialized.
+  // are never materialized. Each record reaches it as its slice of the
+  // page's UTF-8 bytes.
   private val parser = new JacksonParser(readSchema,
     new JSONOptions(Map.empty[String, String], "UTC"), allowArrayAsStructs = false)
   private val createParser = CreateJacksonParser.utf8String _
 
   private var current: InternalRow = _
 
-  override def next(): Boolean =
-    if (!records.hasNext) false
-    else {
-      val rows = parser.parse(UTF8String.fromString(records.next()), createParser,
-        (s: UTF8String) => s)
-      if (rows.isEmpty) next()
-      else { current = rows.head.copy(); true }
+  override def next(): Boolean = {
+    while (page == null || i == page.size) {
+      if (!pages.hasNext) return false
+      page = pages.next()
+      i = 0
     }
+    val rows = parser.parse(UTF8String.fromBytes(page.data, page.offset(i), page.length(i)),
+      createParser, (s: UTF8String) => s)
+    i += 1
+    if (rows.isEmpty) next()
+    else { current = rows.head.copy(); true }
+  }
 
   override def get(): InternalRow = current
   override def close(): Unit = ()

@@ -1,6 +1,7 @@
 package graft.core
 
 import java.io.StringWriter
+import java.nio.charset.StandardCharsets.UTF_8
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -224,7 +225,11 @@ class ProtocolSpec extends AnyFunSuite {
     names.foreach(n => assert(lines.exists(l => l.contains("\"RECORD\"") && l.contains(s""""stream":"$n"""")), n))
     assert(Json.parse(lines.last).at("/state/data").size == 5, lines.last)
     assert(maxInFlight.get == 2)
-    threads.forEach(t => assert(t.isDaemon && t.getName == "graft-fetch", t.getName))
+    // the calling thread is one of the `concurrency` workers; the others
+    // are the shared pool's daemons
+    val caller = Thread.currentThread()
+    assert(threads.contains(caller))
+    threads.forEach(t => assert((t eq caller) || t.isDaemon && t.getName == "graft-fetch", t.getName))
   }
 
   test("RECORD envelopes carry the upstream's record text verbatim; stream names are JSON-escaped everywhere") {
@@ -258,6 +263,47 @@ class ProtocolSpec extends AnyFunSuite {
     named(read("", odd).last, "/state/data")
     val catalog = Json.parse(run(Cmd.Discover, "", odd).head)
     assert(catalog.at("/catalog/streams/0/name").asText == odd, catalog)
+  }
+
+  test("read output bytes: records verbatim from the page's bytes, the same in both dialects and through a Writer") {
+    // raw and escaped non-ASCII, escaped quotes and slashes, whitespace
+    // inside and outside strings, and one byte that is not UTF-8
+    val page = ("{\"items\": [ {\"id\": 1, \"amount\": 1.50, \"note\": \"café \\u00e9 a\\/b \\\"q\\\"\", \"t\": [ 1 , 2 ]},\n" +
+      " {\"id\":2,\"s\":\"😀 ").getBytes(UTF_8) ++ Array(0xff.toByte) ++ "x\"} ], \"next\": null}".getBytes(UTF_8)
+    val bytes: HttpClient = (_: HttpRequest) => HttpResponse(200, page, UTF_8, Map.empty)
+    def read(format: String): Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream
+      Connector.handle(src, Cmd.Read, RunConfig.Empty.copy(format = format), out, bytes, () => 1700000000000L)
+      out.toByteArray
+    }
+    val recs = Seq("{\"id\":1,\"amount\":1.50,\"note\":\"café \\u00e9 a\\/b \\\"q\\\"\",\"t\":[1,2]}",
+      "{\"id\":2,\"s\":\"😀 �x\"}")
+    val airbyte = recs.map(r => s"""{"type":"RECORD","record":{"stream":"orders","emitted_at":1700000000000,"data":$r}}""") :+
+      """{"type":"STATE","state":{"data":{"orders":{"To":"2024-06-01T00:00:00Z"}}}}"""
+    val singer = ("""{"type":"SCHEMA","stream":"orders","schema":{"type":"object","properties":{"id":{"type":"integer"},""" +
+      """"amount":{"type":"number"}},"required":["id"]},"key_properties":["id"]}""") +:
+      recs.map(r => s"""{"type":"RECORD","stream":"orders","time_extracted":1700000000,"record":$r}""") :+
+      """{"type":"STATE","value":{"orders":{"To":"2024-06-01T00:00:00Z"}}}"""
+    assert(new String(read(""), UTF_8) == airbyte.map(_ + "\n").mkString)
+    assert(read("").toSeq == airbyte.map(_ + "\n").mkString.getBytes(UTF_8).toSeq)
+    assert(read("singer").toSeq == singer.map(_ + "\n").mkString.getBytes(UTF_8).toSeq)
+    val w = new StringWriter
+    Connector.handle(src, Cmd.Read, RunConfig.Empty, w, bytes, clock = () => 1700000000000L)
+    assert(w.toString == airbyte.map(_ + "\n").mkString)
+  }
+
+  test("StreamDef.jsonSchema is rendered once per stream definition, as before") {
+    import org.apache.spark.sql.types._
+    val sd = StreamDef("s\"q", StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("a\"b\\c\u0001", ArrayType(StructType(Seq(StructField("x", DecimalType(10, 2), nullable = false))))),
+      StructField("m", MapType(StringType, TimestampType)), StructField("d", DateType), StructField("bin", BinaryType),
+      StructField("c", CalendarIntervalType), StructField("f", BooleanType))))
+    assert(sd.jsonSchema eq sd.jsonSchema)
+    assert(sd.jsonSchema == """{"type":"object","properties":{"id":{"type":"integer"},"a\"b\\c""" + "\\u0001" + """":{"type":"array",""" +
+      """"items":{"type":"object","properties":{"x":{"type":"number"}},"required":["x"]}},"m":{"type":"object",""" +
+      """"additionalProperties":{"type":"string","format":"date-time"}},"d":{"type":"string","format":"date-time"},""" +
+      """"bin":{"type":"string","contentEncoding":"base64"},"c":{"type":"string","description":"interval"},""" +
+      """"f":{"type":"boolean"}},"required":["id"]}""")
   }
 
   test("a fatal error in one read worker cancels the streams not yet started") {

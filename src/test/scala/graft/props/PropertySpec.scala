@@ -121,6 +121,133 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  // -- generated page bytes: the byte scan against the parent's Jackson decoder --
+  // A char in U+E000-U+E0FF stands for the raw byte of its low 8 bits, so a
+  // generated page can hold bytes that are not UTF-8.
+  private def raw(bytes: Int*): String = bytes.map(b => (0xe000 + b).toChar).mkString
+  private def isRaw(c: Char): Boolean = c >= '\ue000' && c <= '\ue0ff'
+  private def bytesOf(s: String): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream
+    var from = 0
+    for (i <- 0 to s.length) if (i == s.length || isRaw(s.charAt(i))) {
+      out.writeBytes(s.substring(from, i).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      if (i < s.length) out.write(s.charAt(i) - 0xe000)
+      from = i + 1
+    }
+    out.toByteArray
+  }
+  /** Printable ASCII as is, everything else escaped, for failure labels. */
+  private def ascii(s: Iterable[Int]): String =
+    s.map(c => if (c >= 0x20 && c < 0x7f) c.toChar.toString else f"\\x{$c%x}").mkString
+
+  private val ws2 = Gen.frequency(5 -> Gen.const(""), 1 -> Gen.oneOf(" ", "\n", "\t", "\r\n  ", "\n    "))
+  // string bodies: brackets, colons and commas; escaped quotes and runs of
+  // escaped backslashes before brackets; non-ASCII, and bytes that are not UTF-8
+  private val strPiece = Gen.frequency(
+    24 -> Gen.alphaNumChar.map(_.toString),
+    3 -> Gen.oneOf(" ", "é", "日", "😀", "{", "}", "[", "]", ":", ",", "\u007f"),
+    3 -> Gen.oneOf("\\\"", "\\\\", "\\/", "\\n", "\\t", "\\u00e9", "\\ud83d\\ude00", "\\uD800",
+      "\\\\\\\"", "\\\\]", "\\\\\\\\}"),
+    1 -> Gen.oneOf(raw(0x80), raw(0xc3), raw(0xed, 0xa0, 0x80), raw(0xf8), raw(0xc0, 0xaf), raw(0xe2, 0x82),
+      raw(0xf0, 0x9f, 0x98), raw(0xff)))
+  private val str2 = Gen.choose(0, 10).flatMap(n => Gen.listOfN(n, strPiece)).map(_.mkString("\"", "", "\""))
+  // numbers at and past Jackson's 1000-digit limit, integer and float
+  private val num2 = Gen.oneOf(
+    Gen.choose(-1000000L, 1000000L).map(_.toString),
+    Gen.oneOf("0", "-0", "1.50", "-0.0", "1e3", "2.5E-2", "1E+5", "123456789012345678901234567890",
+      "1" * 1000, "-" + "9" * 1000, "1" * 1001, "1." + "2" * 998, "1." + "2" * 999, "1e" + "0" * 999))
+  // invalid numbers, literals, escapes and control characters; trailing commas
+  private val badScalar = Gen.oneOf("01", "-01", "1.", "-", "1e", "1e+", ".5", "+1", "0x1", "--1", "1.e5",
+    "tru", "nul", "True", "truex", "nulll", "fals", "NaN", "\"a\\a\"", "\"\\u12\"", "\"\\x\"",
+    "\"a\u0001b\"", "\"a\tb\"", "\"open", "'a'", "[1,]", "{\"a\":1,}", "[,1]", "{\"a\"}", "{1:2}")
+  private def value2(depth: Int): Gen[String] = {
+    val scalar = Gen.frequency(4 -> str2, 4 -> num2, 2 -> Gen.oneOf("true", "false", "null"))
+    if (depth == 0) scalar
+    // nesting just under and past the 1000-deep limit, counted from the page root
+    else Gen.frequency(3 -> scalar, 1 -> obj2(depth - 1), 1 -> arr2(depth - 1),
+      1 -> Gen.choose(995, 999).map(k => "[" * k + "]" * k))
+  }
+  private def arr2(depth: Int): Gen[String] = for {
+    n <- Gen.choose(0, 3); vs <- Gen.listOfN(n, Gen.zip(ws2, value2(depth), ws2))
+  } yield vs.map { case (a, v, b) => a + v + b }.mkString("[", ",", "]")
+  private def obj2(depth: Int): Gen[String] = for {
+    n <- Gen.choose(0, 3); kvs <- Gen.listOfN(n, Gen.zip(ws2, str2, ws2, ws2, value2(depth), ws2))
+  } yield kvs.map { case (a, k, b, c, v, d) => a + k + b + ":" + c + v + d }.mkString("{", ",", "}")
+
+  /** A page body and its records path: nested, flat or root-array pages,
+    * duplicated records keys, root scalars, text after the root value; one
+    * page in four carries exactly one bad token, in a record, inside one or
+    * as the root; now and then one fragment is inserted anywhere.
+    */
+  private val pageBytes: Gen[(Array[Byte], Seq[String])] = for {
+    bad <- Gen.frequency(3 -> Gen.const(None), 1 -> badScalar.flatMap(b =>
+      Gen.oneOf(b, s"[1,$b]", s"""{"k":$b}""", s"""{"k":[{"j":$b}]}""").map(Some(_))))
+    shape <- Gen.oneOf("nested", "flat", "root", "scalar")
+    good <- Gen.choose(0, 5).flatMap(n => Gen.listOfN(n, Gen.zip(ws2, value2(3), ws2)))
+    badAt <- Gen.choose(0, 5)
+    elems2 <- Gen.choose(0, 2).flatMap(n => Gen.listOfN(n, value2(1)))
+    dup <- Gen.frequency(4 -> 0, 1 -> 1, 1 -> 2)
+    others <- Gen.listOfN(2, Gen.zip(
+      Gen.oneOf("\"a\"", "\"next\"", "\"items\"", "\"data\"", "\"n\\u0065xt\"", "\"é\""), value2(1)))
+    sp <- ws2
+    trailer <- Gen.frequency(4 -> Gen.const(""),
+      1 -> Gen.oneOf(" x", "]", "}", "x", "1", "é", "\u00a0", ":", " ,", raw(0xff)))
+    scalar <- value2(0)
+    insert <- Gen.frequency(3 -> Gen.const(""), 1 -> Gen.oneOf(",", "]", "}", ":", "\"", "\\", " ", "0", ".", "e",
+      "x", "[", "{", "\u0001", raw(0x80), raw(0xe9), "\ufeff"))
+    at <- Gen.choose(0, 1 << 20)
+  } yield {
+    val elems = bad.fold(good)(b => good.patch(math.min(badAt, good.size), Seq(("", b, "")), 0))
+    val items = elems.map { case (a, v, b) => a + v + b }.mkString(s"[$sp", ",", s"$sp]")
+    val items2 = elems2.mkString("[", ",", "]")
+    val Seq(k1, k2) = others.map { case (k, v) => s"$k:$sp$v" }
+    val (text, path) = shape match {
+      case "nested" =>
+        val inner =
+          if (dup == 1) s"""{"items":$items2,$k1,"items":$items}""" else s"""{$k1,"items":$sp$items}"""
+        val data = if (dup == 2) s""""data":{"items":$items2},"data":$inner""" else s""""data":$sp$inner"""
+        (s"{$sp$k2,$data$sp}", Seq("data", "items"))
+      case "flat" =>
+        val body = if (dup == 1) s""""items":$items,"items":$items2""" else s""""items":$items"""
+        (s"{$k1,$sp$body,$k2}", Seq("items"))
+      case "root" => (sp + items, Seq())
+      case _ => (sp + bad.getOrElse(scalar), Seq("items"))
+    }
+    val whole = text + trailer
+    val cut = at % (whole.length + 1)
+    (bytesOf(whole.substring(0, cut) + insert + whole.substring(cut)), path)
+  }
+
+  test("page pass: the byte scan agrees with Jackson's decoder on every generated page") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import scala.util.{Failure, Success, Try}
+    var accepted = 0
+    var rejected = 0
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(2000),
+      Prop.forAllNoShrink(pageBytes) { case (bytes, path) =>
+        // the oracle reads the body as the response decodes it
+        val want = Try(JacksonPageOracle(new String(bytes, UTF_8), path))
+        val got = Try(Page(HttpResponse(200, bytes, UTF_8, Map.empty), path))
+        val ok = (want, got) match {
+          case (Failure(_), Failure(e)) =>
+            rejected += 1
+            e.isInstanceOf[com.fasterxml.jackson.core.JsonProcessingException]
+          case (Success((fields, recs)), Success(page)) =>
+            accepted += 1
+            fields == page.fields && fields.toString == page.fields.toString &&
+              recs.map(_.getBytes(UTF_8).toSeq) ==
+                (0 until page.size).map(i => page.data.slice(page.offset(i), page.offset(i) + page.length(i)).toSeq)
+          case _ => false
+        }
+        Prop(ok) :| s"path ${path.mkString(".")}, page ${ascii(bytes.take(3000).map(_ & 0xff))}\n" +
+          s"oracle: ${ascii(want.map(w => w._1.toString + " " + w._2.mkString("|")).toString.map(_.toInt))}\n" +
+          s"scan: ${ascii(got.map(p => p.fields.toString + " " + (0 until p.size).map(p.record).mkString("|")).toString.map(_.toInt))}"
+      })
+    assert(res.passed, res.status.toString)
+    // both outcomes must be well represented for the agreement to mean much
+    assert(accepted > 400 && rejected > 400, s"accepted $accepted, rejected $rejected")
+  }
+
   test("rate limiter: cumulative wait enforces the sustained rate for any burst pattern") {
     val acquires = Gen.choose(2, 40)
     val rates = Gen.oneOf(1.0, 5.0, 50.0)

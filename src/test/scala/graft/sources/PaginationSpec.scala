@@ -2,7 +2,10 @@ package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
+
 import scala.collection.mutable
+import scala.util.Try
 
 /** Pagination strategy termination + request-shape tests (SURVEY §5 item 4:
   * termination on short page / empty marker / missing link / null next).
@@ -37,6 +40,23 @@ class PaginationSpec extends AnyFunSuite {
       .contains("http://x/n2"))
     assert(lh.parseNext("""<http://x/prev>; rel="previous"""").isEmpty)
     assert(lh.parseNext("").isEmpty)
+  }
+
+  test("link-header: a next URL holding a comma syncs every page; rel may be a bare token") {
+    val lh = Pagination.LinkHeader()
+    val next = "https://x.example.com/p?fields=id,title&page_info=n1"
+    assert(lh.parseNext(s"""<$next>; rel="next"""").contains(next))
+    assert(lh.parseNext("<http://x/n2>; rel=next").contains("http://x/n2"))
+    assert(lh.parseNext("""<http://x/a,b>; rel="previous", <http://x/c,d>; rel="first next"""")
+      .contains("http://x/c,d"))
+    assert(lh.parseNext("""<http://x/a,b>; rel="previous"""").isEmpty)
+    val c = new Script(
+      ok("""{"orders":[{"id":1}]}""", "Link" -> s"""<$next>; rel="next""""),
+      ok("""{"orders":[{"id":2}]}"""))
+    val recs = PaginatedStream(HttpRequest("http://x/p1"),
+      Pagination.LinkHeader(), Seq("orders")).fetch(c).toList
+    assert(recs == List("""{"id":1}""", """{"id":2}"""))
+    assert(c.requests.map(_.fullUrl).toList == List("http://x/p1", next))
   }
 
   test("link-header pagination stops when header absent") {
@@ -183,6 +203,80 @@ class PaginationSpec extends AnyFunSuite {
     val c = new Script(ok("""{"results":[{"id":1},{"id":2},{"id":"""))
     val it = PaginatedStream(HttpRequest("http://x/p1"), Pagination.NextUrl("next"), Seq("results")).fetch(c)
     intercept[com.fasterxml.jackson.core.JsonProcessingException](it.hasNext)
+  }
+
+  // -- the byte path: what the scan reads, against the Jackson decoder it replaced --
+
+  private def records(page: Page): List[String] = (0 until page.size).map(page.record).toList
+
+  /** The scan's records of `bytes` and the old decoder's, over the body's
+    * UTF-8 decoding.
+    */
+  private def both(bytes: Array[Byte], path: Seq[String]): (Try[List[String]], Try[List[String]]) = (
+    Try(records(Page(HttpResponse(200, bytes, UTF_8, Map.empty), path))),
+    Try(JacksonPageOracle(new String(bytes, UTF_8), path)._2.toList))
+
+  test("byte path: a page declared ISO-8859-1 is read in its UTF-8 form") {
+    val body = "{\"results\":[{\"name\":\"caf\u00e9 \u00bd\"}]}"
+    val page = Page(HttpResponse(200, body.getBytes(ISO_8859_1), ISO_8859_1, Map.empty), Seq("results"))
+    assert(records(page) == List("{\"name\":\"caf\u00e9 \u00bd\"}"))
+    assert(page.data.slice(page.offset(0), page.offset(0) + page.length(0)).toSeq ==
+      "{\"name\":\"caf\u00e9 \u00bd\"}".getBytes(UTF_8).toSeq)
+  }
+
+  test("byte path: bytes that are not UTF-8 read as U+FFFD, as in the body's decoding") {
+    val body = "{\"results\":[{\"s\":\"a".getBytes(UTF_8) ++ Array(0xc3, 0x28, 0xff, 0xed, 0xa0, 0x80).map(_.toByte) ++
+      "b\"},\"\u00e9\"]}".getBytes(UTF_8)
+    val (got, want) = both(body, Seq("results"))
+    assert(got.get == List("{\"s\":\"a\ufffd(\ufffd\ufffdb\"}", "\"\u00e9\""))
+    assert(got == want)
+  }
+
+  test("byte path: a leading UTF-8 BOM fails the page as a whole, as the decoded body does") {
+    val body = Array(0xef, 0xbb, 0xbf).map(_.toByte) ++ """{"results":[{"id":1}]}""".getBytes(UTF_8)
+    val (got, want) = both(body, Seq("results"))
+    assert(want.isFailure)
+    intercept[com.fasterxml.jackson.core.JsonProcessingException](got.get)
+  }
+
+  test("byte path: Jackson's read limits hold as the old decoder hits them, at each limit and one past it") {
+    def page(rec: String) = s"""{"results":[$rec]}"""
+    val s20m = "s" * 20000000
+    val cases = Seq[(String, Seq[String], Boolean)](
+      // nesting, from the page root: the root object and the records array are two levels
+      (page("[" * 998 + "]" * 998), Seq("results"), true),
+      (page("[" * 999 + "]" * 999), Seq("results"), false),
+      (page("1" * 1000), Seq("results"), true),
+      (page("1" * 1001), Seq("results"), false),
+      (page("-" + "1" * 1000), Seq("results"), true),
+      (page("1." + "2" * 999), Seq("results"), true),
+      (page("1." + "2" * 1000), Seq("results"), false),
+      (page("1e" + "2" * 999), Seq("results"), true),
+      (page("1.5e-" + "2" * 999), Seq("results"), false),
+      (page(s"""{"${"k" * 50000}":1}"""), Seq("results"), true),
+      (page(s"""{"${"k" * 50001}":1}"""), Seq("results"), false),
+      // names count characters, not bytes
+      (page(s"""{"${"\\u0041" * 50000}":1}"""), Seq("results"), true),
+      (page(s"""{"${"\u00e9" * 50001}":1}"""), Seq("results"), false),
+      // Jackson checks a string's length where its text buffer fills a
+      // segment of up to 64 Ki characters, so only a string at least that
+      // far past the limit fails for certain
+      (page("\"" + s20m + "\""), Seq("results"), true),
+      (page("\"" + s20m + "s" * (1 << 17) + "\""), Seq("results"), false),
+      // a string inside a record is skipped, not read whole
+      (page(s"""{"s":"${s20m}${"s" * (1 << 17)}"}"""), Seq("results"), true),
+      // a float that ends the body: Jackson's slow path counts its missing
+      // exponent or fraction as -1 digits
+      ("1." + "2" * 1000, Seq("results"), true),
+      ("1e" + "2" * 1000, Seq("results"), true),
+      ("1." + "2" * 1000 + " ", Seq("results"), false))
+    for (((body, path, ok), i) <- cases.zipWithIndex) {
+      val (got, want) = both(body.getBytes(UTF_8), path)
+      assert(got.isSuccess == ok, s"case $i: $got")
+      assert(want.isSuccess == ok, s"case $i: $want")
+      if (ok) assert(got == want, s"case $i")
+      else intercept[com.fasterxml.jackson.core.JsonProcessingException](got.get)
+    }
   }
 
   test("offset stops on a short page, counting the records of the page pass") {
