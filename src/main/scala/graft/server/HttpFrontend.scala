@@ -1,6 +1,6 @@
 package graft.server
 
-import java.io.{BufferedInputStream, OutputStream}
+import java.io.OutputStream
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.{ConcurrentHashMap, Semaphore}
@@ -8,6 +8,7 @@ import java.util.concurrent.{ConcurrentHashMap, Semaphore}
 import scala.util.control.NonFatal
 
 import graft.core.{Cmd, Connector, Json, ProtoWriter, RunConfig, SourceDef}
+import graft.http.Http11
 import graft.sources.HttpClient
 
 /** HTTP multiplex frontend (reference `proto.go:149-212`,
@@ -25,7 +26,7 @@ import graft.sources.HttpClient
   * must present a [[TokenAuth]]-signed Authorization token scoped to the
   * request path (SURVEY §2.5 C7).
   *
-  * The server is its own blocking HTTP/1.1 loop ([[Http11]]), shaped like
+  * The server is its own blocking HTTP/1.1 loop ([[graft.http.Http11]]), shaped like
   * the reference's Go `net/http`:
   *  - Threads. One acceptor thread; each accepted connection gets one daemon
   *    thread that reads its requests in order and runs each itself. At most
@@ -100,7 +101,7 @@ final class HttpFrontend(
     try {
       s.setTcpNoDelay(true)
       s.setSoTimeout(HttpFrontend.IdleTimeoutMs)
-      val in = new BufferedInputStream(s.getInputStream)
+      val in = new Http11.Reader(s.getInputStream)
       val out = new Http11.ResponseOut(s.getOutputStream)
       var more = true
       while (more) Http11.readRequest(in, s.getOutputStream) match {

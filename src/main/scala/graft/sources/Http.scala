@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import com.fasterxml.jackson.databind.JsonNode
 
 import graft.core.Json
+import graft.http.Http11
 
 /** HTTP source family: a generic paginated fetch loop with pluggable
   * pagination strategies, a retry/backoff client wrapper, and a one-scan
@@ -43,14 +44,18 @@ final case class HttpRequest(
 }
 
 /** A response as received: the body's bytes and the charset its
-  * `Content-Type` declares. `body` and `json` decode on first use.
+  * `Content-Type` declares. `body` and `json` decode on first use. Header
+  * lines of one name, matched case-insensitively, are one field whose values
+  * are joined with ", " (RFC 9110 §5.3).
   */
-final class HttpResponse private (val status: Int, content: Array[Byte], charset: Charset,
-    text: String, val headers: Map[String, String]) {
+final class HttpResponse private[sources] (val status: Int, content: Array[Byte], charset: Charset,
+    text: String, fields: Array[String]) {
   lazy val body: String = if (text != null) text else new String(content, charset)
   lazy val json: JsonNode = Json.parse(body)
-  def header(name: String): Option[String] =
-    headers.collectFirst { case (k, v) if k.equalsIgnoreCase(name) => v }
+  /** The header fields, by name as the first line of each spelled it. */
+  lazy val headers: Map[String, String] =
+    Iterator.range(0, fields.length, 2).map(i => fields(i) -> fields(i + 1)).toMap
+  def header(name: String): Option[String] = Option(Http11.field(fields, name))
 
   /** The body's bytes when they are declared UTF-8, as received. */
   def utf8Content: Option[Array[Byte]] =
@@ -59,83 +64,21 @@ final class HttpResponse private (val status: Int, content: Array[Byte], charset
 
 object HttpResponse {
   def apply(status: Int, body: String, headers: Map[String, String]): HttpResponse =
-    new HttpResponse(status, null, UTF_8, body, headers)
+    new HttpResponse(status, null, UTF_8, body, flat(headers))
 
   def apply(status: Int, content: Array[Byte], charset: Charset, headers: Map[String, String]): HttpResponse =
-    new HttpResponse(status, content, charset, null, headers)
+    new HttpResponse(status, content, charset, null, flat(headers))
+
+  private def flat(headers: Map[String, String]): Array[String] =
+    headers.iterator.flatMap { case (k, v) => Iterator(k, v) }.toArray
 }
 
-/** Pluggable transport (java.net in production, a stub in tests).
+/** Pluggable transport ([[JdkHttpClient]] in production, a stub in tests).
   * Serializable so a base client can ride into a Spark read task — the page
   * loop then streams executor-side instead of materializing on the driver.
   */
 trait HttpClient extends Serializable {
   def get(req: HttpRequest): HttpResponse
-}
-
-/** Blocking HTTP/1.1 client on `java.net.HttpURLConnection`: each GET runs
-  * on the calling thread over the JDK's keep-alive connection cache, with no
-  * hand-off to selector or executor threads as in `java.net.http`, whose
-  * far larger code path also takes thousands of requests to JIT-compile.
-  * Holds no connection state, so it serializes into Spark tasks as is.
-  */
-final class JdkHttpClient(timeoutMs: Long = 30000) extends HttpClient {
-  override def get(req: HttpRequest): HttpResponse = {
-    var url = new java.net.URL(req.fullUrl)
-    var redirects = 0
-    while (true) {
-      val c = url.openConnection().asInstanceOf[java.net.HttpURLConnection]
-      c.setConnectTimeout(timeoutMs.toInt)
-      // redirects are followed below: HttpURLConnection's own following
-      // never crosses protocols, so it would drop http→https upgrades
-      c.setInstanceFollowRedirects(false)
-      req.headers.foreach { case (k, v) => c.setRequestProperty(k, v) }
-      val status = c.getResponseCode
-      // read to the end and close: that returns the connection to the cache
-      val in = if (status >= 400) c.getErrorStream else c.getInputStream
-      val bytes = if (in == null) Array.emptyByteArray else try JdkHttpClient.readBody(in, c.getContentLengthLong)
-        finally in.close()
-      val hdrs = scala.jdk.CollectionConverters.MapHasAsScala(c.getHeaderFields).asScala.iterator
-        .collect { case (k, vs) if k != null => k -> (if (vs.isEmpty) "" else vs.get(0)) }.toMap
-      val next = Option(c.getHeaderField("Location"))
-        .filter(_ => JdkHttpClient.Redirects(status) && redirects < JdkHttpClient.MaxRedirects)
-        .map(new java.net.URL(url, _))
-        // NORMAL policy: upgrades allowed, never an https→http downgrade. A
-        // redirect that is not followed reaches RetryingClient as a 3xx,
-        // which it raises as an error instead of JSON-parsing the body.
-        .filterNot(n => url.getProtocol == "https" && n.getProtocol == "http")
-      next match {
-        case Some(n) => url = n; redirects += 1
-        case None => return HttpResponse(status, bytes, JdkHttpClient.charset(c.getContentType), hdrs)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-}
-
-object JdkHttpClient {
-  private val Redirects = Set(301, 302, 303, 307, 308)
-  private val MaxRedirects = 5
-
-  /** The `charset` parameter of a Content-Type, UTF-8 when absent or unknown. */
-  private def charset(contentType: String): Charset =
-    Option(contentType).toSeq.flatMap(_.split(';').map(_.trim))
-      .collectFirst { case p if p.toLowerCase.startsWith("charset=") =>
-        p.substring(8).trim.stripPrefix("\"").stripSuffix("\"")
-      }
-      .flatMap(n => scala.util.Try(Charset.forName(n)).toOption)
-      .getOrElse(UTF_8)
-
-  /** The body: into an array of exactly `Content-Length` bytes when the
-    * length is declared, else read to the end.
-    */
-  private def readBody(in: java.io.InputStream, contentLength: Long): Array[Byte] =
-    if (contentLength < 0 || contentLength > Int.MaxValue - 8) in.readAllBytes()
-    else {
-      val bytes = new Array[Byte](contentLength.toInt)
-      val n = in.readNBytes(bytes, 0, bytes.length)
-      if (n == bytes.length) bytes else java.util.Arrays.copyOf(bytes, n)
-    }
 }
 
 /** Retry/backoff wrapper honoring Retry-After on 429/5xx (reference

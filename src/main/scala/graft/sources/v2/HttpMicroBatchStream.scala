@@ -184,11 +184,15 @@ final class HttpStreamPartitionReader(readSchema: StructType, props: Map[String,
     Option(c).filterNot(_.isNull).map(_.asText).flatMap(parseInstant)
   }
 
-  private val records: Iterator[String] = {
+  private val pages: Iterator[graft.sources.Page] = {
     val stateProps = props + ("state" -> s"""{"To":"${part.startTo}"}""")
-    HttpScan.buildStream(stateProps).fetch(client)
+    HttpScan.buildStream(stateProps).pages(client)
   }
+  private var page: graft.sources.Page = _
+  private var i = 0
 
+  // Spark's own JSON row parser; each record reaches it as its slice of
+  // the page's UTF-8 bytes, as in the batch partition reader
   private val parser = new JacksonParser(readSchema,
     new JSONOptions(Map.empty[String, String], "UTC"), allowArrayAsStructs = false)
   private val createParser = CreateJacksonParser.utf8String _
@@ -198,15 +202,21 @@ final class HttpStreamPartitionReader(readSchema: StructType, props: Map[String,
   // loop, not self-recursion: a long run of skipped records (dropped or
   // out-of-window) must not grow the stack
   override def next(): Boolean = {
-    while (records.hasNext) {
-      val raw = records.next()
-      val rows = parser.parse(UTF8String.fromString(raw), createParser, (s: UTF8String) => s)
+    while (true) {
+      while (page == null || i == page.size) {
+        if (!pages.hasNext) return false
+        page = pages.next()
+        i = 0
+      }
+      val rows = parser.parse(UTF8String.fromBytes(page.data, page.offset(i), page.length(i)),
+        createParser, (s: UTF8String) => s)
+      i += 1
       if (rows.nonEmpty) {
         val row = rows.head
         val cursor = cursorIdx match {
-          case Some(i) if !row.isNullAt(i) => parseInstant(row.getUTF8String(i).toString)
+          case Some(c) if !row.isNullAt(c) => parseInstant(row.getUTF8String(c).toString)
           case Some(_) => None
-          case None => cursorFromRaw(raw)
+          case None => cursorFromRaw(page.record(i - 1))
         }
         cursor match {
           case Some(t) if inWindow(t) => current = row.copy(); return true

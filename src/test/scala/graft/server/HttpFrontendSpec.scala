@@ -1,6 +1,7 @@
 package graft.server
 
 import java.io.{BufferedInputStream, ByteArrayOutputStream, InputStream, OutputStream}
+import java.lang.management.ManagementFactory
 import java.net.{Socket, URI}
 import java.net.http.{HttpClient => JClient, HttpRequest => JRequest, HttpResponse => JResponse}
 
@@ -8,9 +9,12 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.{CompletableFuture, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
+import graft.http.Http11
 import graft.sources.{HttpClient, HttpRequest, HttpResponse}
 
 /** End-to-end HTTP frontend tests (reference E2 lifecycle,
@@ -297,6 +301,36 @@ class HttpFrontendSpec extends AnyFunSuite {
       send(os, "GET /discover?" + "a" * (9 << 10) + " HTTP/1.1\r\nHost: x\r\n\r\n")
       assert(readReply(in).status == 414)
     }
+  }
+
+  test("a declared body size allocates nothing before its bytes arrive; other connections are served") {
+    val threads = ManagementFactory.getThreadMXBean.asInstanceOf[com.sun.management.ThreadMXBean]
+    def readingBodies(): Seq[Thread] = Thread.getAllStackTraces.asScala.collect {
+      case (t, frames) if t.getName == "graft-http" && frames.exists(f =>
+        f.getClassName == "graft.http.Http11$Reader" && f.getMethodName == "readFully") => t
+    }.toSeq
+    val socks = Seq(
+      "Content-Length: 2000000000\r\n\r\nabc",
+      "Transfer-Encoding: chunked\r\n\r\n7ffffff0\r\nabc").map { h =>
+      val s = new Socket("127.0.0.1", fe.boundPort)
+      send(s.getOutputStream, s"POST /demo/read HTTP/1.1\r\nHost: x\r\n$h")
+      s
+    }
+    try {
+      val deadline = System.nanoTime + 10000000000L
+      var reading = readingBodies()
+      while (reading.size < 2 && System.nanoTime < deadline) { Thread.sleep(10); reading = readingBodies() }
+      assert(reading.size == 2, "the server is not waiting for both bodies")
+      reading.foreach { t =>
+        val allocated = threads.getThreadAllocatedBytes(t.getId)
+        assert(allocated < (64L << 20), s"${t.getName}: $allocated bytes allocated")
+      }
+      wire(fe) { (os, in) =>
+        send(os, "GET /discover HTTP/1.1\r\nHost: x\r\n\r\n")
+        val r = readReply(in)
+        assert(r.status == 200 && r.body == """["demo"]""", r)
+      }
+    } finally socks.foreach(_.close())
   }
 
   test("malformed request target → 400") {

@@ -347,6 +347,21 @@ class PaginationSpec extends AnyFunSuite {
     assert(inner.requests.size == 2)
   }
 
+  test("link-header: repeated Link lines are one field, so a next link on the first line syncs every page") {
+    lazy val o: RawOrigin = new RawOrigin((_, head) => head.split(' ')(1) match {
+      case "/p1" => RawOrigin.ok("""{"orders":[{"id":1}]}""",
+        s"""Link: <${o.url("/p2")}>; rel="next"""", s"""link: <${o.url("/p0")}>; rel="prev"""")
+      case "/p2" => RawOrigin.ok("""{"orders":[{"id":2}]}""", s"""Link: <${o.url("/p1")}>; rel="prev"""")
+    })
+    try {
+      val c = new JdkHttpClient()
+      assert(c.get(HttpRequest(o.url("/p1"))).header("LINK").contains(
+        s"""<${o.url("/p2")}>; rel="next", <${o.url("/p0")}>; rel="prev""""))
+      val recs = PaginatedStream(HttpRequest(o.url("/p1")), Pagination.LinkHeader(), Seq("orders")).fetch(c).toList
+      assert(recs == List("""{"id":1}""", """{"id":2}"""))
+    } finally o.close()
+  }
+
   test("JdkHttpClient: follows redirects, returns error bodies, decodes the declared charset") {
     val server = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)
