@@ -26,7 +26,7 @@ import graft.operators.{PqParams, VectorIndex}
   *
   * Measured per batch: wall seconds + task input bytes (the read
   * amplification of the sink's fixed costs — replay check, occupancy
-  * update, sidecar append — against a corpus the batch should NOT be
+  * update — against a corpus the batch should NOT be
   * rescanning). Then three one-shot numbers: a REPLAYED batch id (must be
   * a cheap no-op — crash-recovery cost), a pruned search over the final
   * index (the ingested data is immediately queryable), and exactly-once

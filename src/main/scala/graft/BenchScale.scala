@@ -77,7 +77,7 @@ object BenchScale {
     * tables): same recipe version, same replication factor, the stamped
     * table set a SUPERSET of the wanted one, and the source signature —
     * recomputed over the STAMPED tables — unchanged. This is what the
-    * standalone benches (UpsertBench, AnnIngestBench) gate their reuse on
+    * standalone AnnIngestBench gates its reuse on
     * (ADVICE r17: a bare file-existence check silently reused tiers built
     * at different SCALE_REPS or from regenerated fixtures, measuring
     * against different data than the same round's BenchScale artifacts).

@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.graftshim.StageForensics
 
 /** Named artifact for the sf0.1 index-MUTATION gates (VERDICT r17 #5): the
-  * fast-IO evidence that the sidecar lifecycle restored r15 parity (upsert
-  * 3.42 s / append 1.80 s) existed only as an anonymous bench_history line;
-  * a claim needs a named, committed artifact.
+  * fast-IO evidence for the upsert and append gates (r15: upsert 3.42 s /
+  * append 1.80 s) existed only as an anonymous bench_history line; a claim
+  * needs a named, committed artifact.
   *
   * These two gates are the suite's most fsync-bound (each rewrites index
   * bucket files and swaps a manifest), so their wall time tracks disk

@@ -161,6 +161,7 @@ object Connector {
         src.streamDefs.foreach(w.openStream)
         w.close(Cmd.Discover)
       case Cmd.Read =>
+        w.carryStates(rc.states)
         read(src, rc, w, client)
         w.close(Cmd.Read)
     }

@@ -130,6 +130,10 @@ object Cmd {
 sealed abstract class ProtoWriter(out: OutputStream, clock: () => Long) {
   def openStream(stream: StreamDef): Unit
   def writeState(stream: String, stateJson: String): Unit
+  /** The run's input cursors, for a dialect whose closing state must
+    * carry forward those of streams this run does not advance.
+    */
+  def carryStates(states: Map[String, JsonNode]): Unit = ()
   def writeLog(level: String, message: String): Unit
   def writeSpec(spec: String): Unit
   def writeStatus(ok: Boolean, reason: String): Unit
@@ -286,6 +290,7 @@ object ProtoWriter {
 final class AirbyteWriter(out: OutputStream, clock: () => Long) extends ProtoWriter(out, clock) {
   private val opened = mutable.LinkedHashMap[String, StreamDef]()
   private val states = mutable.LinkedHashMap[String, String]()
+  private var carried = Map.empty[String, JsonNode]
 
   override def openStream(stream: StreamDef): Unit = opened(stream.name) = stream
 
@@ -299,6 +304,11 @@ final class AirbyteWriter(out: OutputStream, clock: () => Long) extends ProtoWri
   override def writeState(stream: String, stateJson: String): Unit =
     states(stream) = stateJson
 
+  /** The single STATE replaces the platform's whole saved state, so a
+    * stream that fails or is not selected keeps its input cursor in it.
+    */
+  override def carryStates(states: Map[String, JsonNode]): Unit = carried = states
+
   override def writeLog(level: String, message: String): Unit =
     emit(s"""{"type":"LOG","log":{"level":"$level","message":${Json.quote(message)}}}""")
 
@@ -311,7 +321,8 @@ final class AirbyteWriter(out: OutputStream, clock: () => Long) extends ProtoWri
   }
 
   /** discover → CATALOG of opened schemas; read → single STATE doc
-    * (reference `pkg/airbyte/proto.go:34-51`).
+    * (reference `pkg/airbyte/proto.go:34-51`): this run's new cursors,
+    * then every input cursor it did not replace.
     */
   override def close(cmd: Cmd): Unit = {
     cmd match {
@@ -323,7 +334,10 @@ final class AirbyteWriter(out: OutputStream, clock: () => Long) extends ProtoWri
         }.mkString(",")
         emit(s"""{"type":"CATALOG","catalog":{"streams":[$streams]}}""")
       case Cmd.Read =>
-        val data = states.map { case (k, v) => s"""${Json.quote(k)}:$v""" }.mkString(",")
+        val kept = carried.toSeq.sortBy(_._1).collect {
+          case (k, v) if !states.contains(k) => k -> Json.write(v)
+        }
+        val data = (states ++ kept).map { case (k, v) => s"""${Json.quote(k)}:$v""" }.mkString(",")
         emit(s"""{"type":"STATE","state":{"data":{$data}}}""")
       case _ => ()
     }

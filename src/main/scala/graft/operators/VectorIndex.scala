@@ -394,10 +394,6 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     val path = snap.path
     val dirs = indexParts.map(p => p -> stagedDirName(snap, p)).toMap
     def dst(part: String) = s"$path/${dirs(part)}"
-    // a rebuild re-cells everything: the old sidecar mapping dies NOW
-    // (absence = safe fallback through every crash window below) and is
-    // rebuilt fresh from the written codes at the end
-    hadoopFs(s, path).delete(idMapPath(path), true)
     quant.cents.write.mode("overwrite").parquet(dst("cents"))
     quant.csubs.write.mode("overwrite").parquet(dst("codebook"))
     // cluster by cell before the partitioned write: without it every input
@@ -410,11 +406,6 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     val schema = nullableSchema(codes.schema)
     val occ = countsOf(cellOccupancy(s.read.schema(schema).parquet(dst("codes"))))
     commit(s, snap)(_.copy(dirs = dirs, schema = schema, occupancy = occ))
-    // an index born past the read threshold carries the discovery sidecar
-    // from birth; smaller ones discover via the full scan until they grow
-    // (see sidecarReadMinBytes lifecycle)
-    if (codesBytes(s, dst("codes")) >= sidecarReadMinBytes)
-      rebuildIdMapFrom(s, path, dst("codes"))
   }
 
   def loadQuantizer(s: SparkSession, path: String, pq: PqParams): IvfadcQuantizer =
@@ -492,9 +483,6 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     val stamped = stamp.fold(encoded)(b => encoded.withColumn("__batch", lit(b)))
     val codes = streamId.fold(stamped)(sid => stamped.withColumn("__stream", lit(sid)))
       .repartition(col("cell")).localCheckpoint()
-    // sidecar first (crash between the two leaves harmless extra entries —
-    // appendIdMap's invariant), then the codes append
-    appendIdMap(s, snap, codes)
     val live = widenSchema(s, snap, codes.schema)
     codes.write.mode("append").partitionBy("cell").parquet(snap.partPath("codes"))
     val delta = countsOf(cellOccupancy(codes))
@@ -540,21 +528,15 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     * before the overwrite so the write never reads the path it replaces.
     *
     * CRASH WINDOW (documented, with a converging recovery): the upsert
-    * stages the touched cells' rewrite complete, moves each staged cell
-    * over its live one (rolled forward by the next mutation or
-    * [[recover]] if interrupted), deletes fully-emptied cell directories,
-    * and then commits the touched cells' recounted occupancy. A crash
-    * after the moves leaves a fully-tombstoned cell's stale directory
-    * still serving its deleted vectors, or a stale occupancy. Recovery is
-    * to RE-RUN THE SAME CHANGE BATCH: the
-    * touched-cell set is re-derived from whatever rows currently match
-    * `changedIds` (the stale emptied cell still holds its deleted ids, so
-    * it re-enters `touched`, survives with zero rows, and its directory is
-    * dropped), the rewrite is idempotent, and the commit recounts the
-    * touched cells — so one clean re-run converges the answers to the
-    * exact post-upsert state (spec-pinned by the crash-point sweep).
-    * Occupancy alone can also be restored at any time by
-    * [[refreshOccupancy]]. Single-writer op, like all maintenance here.
+    * stages the touched cells' rewrite and their recount complete, then
+    * moves each staged cell over its live one, deletes fully-emptied cell
+    * directories and commits the recount. A crash once the stage is
+    * complete is rolled forward, occupancy included, by the next mutation
+    * or [[recover]]; a crash before it leaves the live index untouched.
+    * Recovery is to RE-RUN THE SAME CHANGE BATCH: the rewrite is
+    * idempotent, so one clean re-run converges the answers and the
+    * occupancy to the exact post-upsert state (spec-pinned by the
+    * crash-point sweep). Single-writer op, like all maintenance here.
     *
     * @param updates frame exposing `id`/`emb` — changed or new vectors
     * @param deletes single-column frame of ids to remove (tombstones)
@@ -577,6 +559,12 @@ object VectorIndex extends org.apache.spark.internal.Logging {
       upsertCore(s, path, updates, deletes, id, emb, loadQuantizer(s, path, pq), meta)
     }
 
+  /** Change batches up to this many distinct ids are collected once into
+    * a local relation (see [[upsertCore]]); larger ones stay distributed.
+    * Driver state is bounded by the cap (~10k ids ≈ a few hundred KB).
+    */
+  private val IdProbeCap = 10000
+
   /** [[upsertBatch]] under a caller-supplied quantizer instead of the
     * stored one — the seam [[splitCell]] rides (it re-encodes a hot cell's
     * members under the POST-SPLIT centroid table before that table is
@@ -592,42 +580,25 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     val delIds = deletes.select(deletes.columns.head).toDF("vec_id")
     val updIds = updates.select(id.as("vec_id"))
     val changedAll = updIds.union(delIds).distinct()
-    // ONE action collects the changed (id, bucket) pairs, capped at
-    // IdProbeCap. A micro-batch-sized set becomes a LOCAL changedIds
-    // relation — its broadcast builds (the survivors anti-join, the
-    // full-scan discovery semi-join) and the sidecar probe all read
-    // driver-held rows without any further Spark job. An over-cap batch is
-    // localCheckpointed and the probe recomputes its buckets distributed.
-    // Ids ride canonically typed ([[canonicalVecId]] — integral as long),
-    // matching the sidecar's stored hashing; join-key coercion makes the
-    // anti-join against arrival-typed codes exact either way.
-    val pairRows = changedAll
-      .select(canonicalVecId(changedAll).as("vec_id"),
-        pmod(xxhash64(canonicalVecId(changedAll)), lit(IdMapBuckets.toLong)).as("__bucket"))
-      .limit(IdProbeCap + 1).collect()
-    val smallBatch = pairRows.length <= IdProbeCap
+    // ONE action collects the changed ids, capped at IdProbeCap. A
+    // micro-batch-sized set becomes a LOCAL changedIds relation, so its
+    // broadcast builds (the discovery semi-join and the survivors
+    // anti-join) read driver-held rows without any further Spark job. An
+    // over-cap batch is localCheckpointed instead.
+    val idRows = changedAll.limit(IdProbeCap + 1).collect()
     val changedIds: DataFrame =
-      if (smallBatch) {
-        val idField = StructType(Seq(StructField("vec_id",
-          if (isIntegral(changedAll.schema("vec_id").dataType)) LongType
-          else changedAll.schema("vec_id").dataType,
-          nullable = true)))
-        s.createDataFrame(
-          java.util.Arrays.asList(pairRows.map(r =>
-            org.apache.spark.sql.Row(r.get(0))): _*), idField)
-      } else changedAll.localCheckpoint()
-    val probedPairs: Option[Seq[(Any, Long)]] =
-      if (smallBatch) Some(pairRows.map(r => (r.get(0), r.getLong(1))).toSeq)
-      else None
+      if (idRows.length <= IdProbeCap)
+        s.createDataFrame(java.util.Arrays.asList(idRows: _*), changedAll.schema)
+      else changedAll.localCheckpoint()
     val newCodes = encode(updates, id, emb, quant, meta).localCheckpoint()
     val codes = codesRead(s, snap)
     // Touched-cell set = the old cells of changed ids ∪ the new cells of
     // updated vectors (an update may move a vector between cells). The old
-    // half goes through the id→cell sidecar when present, reading only the
-    // changed ids' hash-bucket directories; the survivors read below is
-    // then partition-pruned to the touched cells, so the whole upsert
-    // reads touched-cell-order bytes.
-    val touched = oldCellsOf(s, snap, codes, changedIds, probedPairs)
+    // half is one broadcast semi-join of the live codes against the changed
+    // ids, folded into this one action; the survivors read below is then
+    // partition-pruned to the touched cells.
+    val touched = codes.join(broadcast(changedIds), Seq("vec_id"), "left_semi")
+      .select(col("cell"))
       .union(newCodes.select(col("cell")))
       .distinct().collect().map(_.get(0)).toSeq
     if (touched.isEmpty) { // empty change batch
@@ -635,9 +606,6 @@ object VectorIndex extends org.apache.spark.internal.Logging {
       Dedup.dropLocalCheckpoint(newCodes)
       return
     }
-    // sidecar first, then the codes mutation: a crash between the two
-    // leaves only harmless extra entries (see appendIdMap's invariant)
-    appendIdMap(s, snap, newCodes)
     val survivors = codes.filter(col("cell").isin(touched: _*))
       .join(broadcast(changedIds), Seq("vec_id"), "left_anti")
     // unionByName(allowMissing): a streaming-ingested index carries __batch
@@ -661,382 +629,82 @@ object VectorIndex extends org.apache.spark.internal.Logging {
   /** Replace the live codes of `cells` with `rows` — every row those cells
     * keep, cell-clustered and materialized — and commit their recounted
     * occupancy (untouched cells keep their counts). The rows are staged
-    * COMPLETE before any live cell is replaced, so a crash between two
-    * cell moves rolls forward from the stage ([[settled]]) instead of
-    * losing a deleted-but-not-yet-replaced cell. A cell left with no rows
-    * loses its directory.
+    * COMPLETE, then the touched cells' recount completes the stage, and
+    * only then does [[settled]] replace any live cell — so a crash at any
+    * later point rolls the whole replacement, occupancy included, forward
+    * from the stage. A cell left with no rows loses its directory.
     */
   private def replaceCells(s: SparkSession, snap: IndexSnapshot, cells: Seq[Any],
       rows: DataFrame): IndexSnapshot = {
-    // ONE pass over the materialized rows serves two consumers: the
-    // per-cell counts are the new occupancy AND their cell set is the
-    // surviving cell set (≤ |cells| rows — bounded driver state)
+    // ONE pass over the materialized rows: the per-cell counts are the new
+    // occupancy, and a touched cell absent from them is left empty
     val counts = countsOf(cellOccupancy(rows))
-    rows.write.mode("overwrite").partitionBy("cell").parquet(cellStage(snap.path).toString)
-    settled(s, snap)
-    val ids = cells.map(_.asInstanceOf[Number].longValue)
-    val fs = hadoopFs(s, snap.path)
-    ids.filterNot(counts.contains).foreach { c =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"${snap.partPath("codes")}/cell=$c"), true)
+    val stage = cellStage(snap.path)
+    rows.write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
+    val recount = graft.core.Json.mapper.createArrayNode()
+    cells.map(_.asInstanceOf[Number].longValue).foreach { c =>
+      recount.addArray().add(c).add(counts.getOrElse(c, 0L))
     }
-    commit(s, snap)(m => m.copy(occupancy = m.occupancy -- ids ++ counts))
+    val fs = hadoopFs(s, snap.path)
+    val tmp = new org.apache.hadoop.fs.Path(stage, "_recount.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(graft.core.Json.write(recount).getBytes("UTF-8")) finally out.close()
+    if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(stage, "_recount")))
+      throw new java.io.IOException(s"completing the cell stage at ${snap.path} failed")
+    settled(s, snap)
   }
 
   private def cellStage(path: String) =
     new org.apache.hadoop.fs.Path(s"$path/cells_staging")
 
-  /** Finish an interrupted [[replaceCells]] and return `snap`: a complete
-    * stage (parquet's `_SUCCESS`) moves each staged cell over its live
-    * counterpart — idempotent, a re-run skips cells already moved — and an
-    * incomplete one replaced nothing and is dropped. An interrupted
-    * append's job directory is dropped too: the next append's job commit
-    * would otherwise move its committed task files in a second time.
-    * Every mutation resolves its snapshot through here, so no writer
-    * builds on a half-replaced codes directory.
+  /** Finish an interrupted [[replaceCells]] and return the committed
+    * snapshot. A complete stage (one carrying its `_recount`) moves each
+    * staged cell over its live counterpart — idempotent, a re-run skips
+    * cells already moved — deletes the recounted cells left empty, and
+    * commits the recount; only then is the stage dropped. An incomplete
+    * stage replaced nothing and is dropped. An interrupted append's job
+    * directory is dropped too: the next append's job commit would
+    * otherwise move its committed task files in a second time. Every
+    * mutation resolves its snapshot through here, so no writer builds on a
+    * half-replaced codes directory or a stale occupancy.
     */
   private def settled(s: SparkSession, snap: IndexSnapshot): IndexSnapshot = {
+    import org.apache.hadoop.fs.Path
+    import scala.jdk.CollectionConverters._
     val fs = hadoopFs(s, snap.path)
-    val jobDir = new org.apache.hadoop.fs.Path(snap.partPath("codes"), "_temporary")
+    val codes = snap.partPath("codes")
+    val jobDir = new Path(codes, "_temporary")
     if (fs.exists(jobDir)) fs.delete(jobDir, true)
     val stage = cellStage(snap.path)
-    if (fs.exists(stage)) {
-      if (fs.exists(new org.apache.hadoop.fs.Path(stage, "_SUCCESS")))
-        fs.listStatus(stage).map(_.getPath).filter(_.getName.startsWith("cell="))
-          .foreach { staged =>
-            val live = new org.apache.hadoop.fs.Path(snap.partPath("codes"), staged.getName)
-            fs.delete(live, true)
-            if (!fs.rename(staged, live))
-              throw new java.io.IOException(s"moving $staged into $live failed")
-          }
+    if (!fs.exists(stage)) snap
+    else {
+      val recount = new Path(stage, "_recount")
+      val next =
+        if (!fs.exists(recount)) snap
+        else {
+          val in = fs.open(recount)
+          val counts = try graft.core.Json.mapper.readTree(in).elements().asScala
+            .map(e => e.get(0).asLong -> e.get(1).asLong).toMap
+            finally in.close()
+          fs.listStatus(stage).map(_.getPath).filter(_.getName.startsWith("cell="))
+            .foreach { staged =>
+              val live = new Path(codes, staged.getName)
+              fs.delete(live, true)
+              if (!fs.rename(staged, live))
+                throw new java.io.IOException(s"moving $staged into $live failed")
+            }
+          counts.collect { case (c, 0L) => c }
+            .foreach(c => fs.delete(new Path(codes, s"cell=$c"), true))
+          commit(s, snap)(m => m.copy(
+            occupancy = m.occupancy -- counts.keys ++ counts.filter(_._2 > 0)))
+        }
       fs.delete(stage, true)
+      next
     }
-    snap
   }
 
   private def settled(s: SparkSession, path: String): IndexSnapshot =
     settled(s, snapshot(s, path))
-
-  // ---- id→cell discovery sidecar ------------------------------------------
-
-  /** Hash-bucket count of the discovery sidecar. Bounded and fixed: a
-    * change batch of n ids touches at most min(n, IdMapBuckets) bucket
-    * directories, so discovery reads ~min(n, B)/B of the sidecar instead
-    * of the whole codes table.
-    */
-  private[graft] val IdMapBuckets = 64
-
-  private def idMapDir(path: String) = s"$path/idmap"
-  private def idMapPath(path: String) =
-    new org.apache.hadoop.fs.Path(idMapDir(path))
-
-  /** Below this codes-directory size the sidecar does not exist AT ALL:
-    * the full-codes discovery scan is one cheap broadcast semi-join at
-    * these sizes, while maintaining the sidecar costs one parquet write
-    * job per mutation — measured as the bulk of a ~1.3× structural
-    * regression on the sf0.1 mutation gates. So small
-    * indexes skip the build at birth, mutations DROP a sidecar they find
-    * below the threshold (always safe: absence falls back to the full
-    * scan), and the first mutation of an index grown past DOUBLE the
-    * threshold restores it wholesale under the mutation's writer lease —
-    * one amortized rebuild at the crossing, zero recurring cost below it.
-    * The 1×-2× hysteresis band keeps a borderline index from churning
-    * delete/rebuild. Overridable for tests/tuning via
-    * -Dgraft.sidecar.read.min.bytes.
-    */
-  private[graft] def sidecarReadMinBytes: Long =
-    sys.props.get("graft.sidecar.read.min.bytes").flatMap(_.toLongOption)
-      .getOrElse(64L << 20)
-
-  /** Sidecar-restore grade: an ABSENT sidecar is rebuilt by the next
-    * mutation once the codes directory reaches this size. */
-  private def sidecarRestoreBytes: Long = {
-    val t = sidecarReadMinBytes
-    if (t > Long.MaxValue / 2) Long.MaxValue else 2 * t
-  }
-
-  /** Driver-side size of an index part directory (one getContentSummary
-    * RPC on a real DFS; a local walk on RawLocalFileSystem). Missing dir
-    * reads as 0 — callers treat that as "small".
-    */
-  private def dirBytes(s: SparkSession, dir: String): Long =
-    try hadoopFs(s, dir)
-      .getContentSummary(new org.apache.hadoop.fs.Path(dir)).getLength
-    catch { case _: java.io.IOException => 0L }
-
-  /** Codes directories once measured at restore grade: the walk is skipped
-    * forever after for them (a directory that large only grows in the
-    * window that matters, and shrinking back below merely keeps the
-    * sidecar route — correct either way). Bounds the per-mutation size
-    * probe to small-index cases, where the walk is trivially cheap; on a
-    * real DFS a 100 TB index pays exactly one recursive listing per
-    * (process, generation).
-    */
-  private val bigCodesDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Size of a codes dir for the sidecar lifecycle decisions, with the
-    * sticky big-verdict cache. */
-  private def codesBytes(s: SparkSession, codesDir: String): Long =
-    if (bigCodesDirs.contains(codesDir)) Long.MaxValue
-    else {
-      val b = dirBytes(s, codesDir)
-      if (b >= sidecarRestoreBytes) { bigCodesDirs.add(codesDir); () }
-      b
-    }
-
-  private def isIntegral(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-  }
-
-  /** Canonical id column for sidecar bucket routing: xxhash64(int) !=
-    * xxhash64(long), so a bucket hash computed from whatever physical
-    * integral type a batch ARRIVES with would scatter one id's entries
-    * across different buckets than a later probe computes — a silent
-    * missing-entry window in the superset invariant (ADVICE r16). Integral
-    * ids are therefore cast to long BEFORE hashing and storing; the read
-    * side probes as long whenever the stored type is integral. Non-integral
-    * id types pass through unchanged: for those the arrival type is the
-    * id's one stable type (a cross-type arrival would already fail the
-    * vec_id equi-join itself).
-    */
-  private def canonicalVecId(df: DataFrame): Column =
-    if (isIntegral(df.schema("vec_id").dataType)) col("vec_id").cast("long")
-    else col("vec_id")
-
-  /** Sidecar rows for a codes frame: one (vec_id, cell, bucket) entry per
-    * vector. `cell` is normalized to long — the codes frame sometimes
-    * carries it partition-directory-inferred (int), and mixed physical
-    * types across one parquet directory's files would corrupt later reads.
-    * `vec_id` is normalized to its canonical type ([[canonicalVecId]]) so
-    * bucket routing never depends on a batch's arrival type.
-    */
-  private def idMapEntries(codes: DataFrame): DataFrame = {
-    val canon = codes.filter(col("m") === 0)
-      .select(canonicalVecId(codes).as("vec_id"), col("cell").cast("long").as("cell"))
-    canon.withColumn("bucket", pmod(xxhash64(col("vec_id")), lit(IdMapBuckets.toLong)))
-  }
-
-  /** Write shaping for sidecar entries: cluster by bucket so each bucket
-    * directory gets ONE file per write and the ≤[[IdMapBuckets]] parquet
-    * writer initializations spread across tasks. The r16 direct write (no
-    * shuffle) opened up to tasks×buckets files; a coalesce(1) variant
-    * (tried r17) serialized all writer inits in one task and measurably
-    * REGRESSED reindex at sf0.1 — the file-count/parallelism balance, not
-    * the task count, is what the write pays for.
-    */
-  private def idMapWriteShape(entries: DataFrame): DataFrame =
-    entries.repartition(col("bucket")).sortWithinPartitions("vec_id")
-
-  /** Change batches up to this many distinct ids ship the ids THEMSELVES
-    * into the sidecar read as an isin predicate (beyond it: broadcast
-    * semi-join). With bucket files sorted by vec_id ([[idMapWriteShape]])
-    * the predicate reaches parquet row-group statistics, so a micro-batch
-    * probe reads only the row groups covering its ids — sub-BUCKET pruning
-    * once buckets outgrow one row group (a 100 TB index's buckets are GBs;
-    * the bucket directories alone stop being enough). Driver state is
-    * bounded by the cap (~10k ids ≈ a few hundred KB).
-    */
-  private[graft] val IdProbeCap = 10000
-
-  /** Maintain the sidecar for a mutation's new (id → cell) mappings — MUST
-    * run BEFORE the codes mutation it describes commits, so the sidecar's
-    * invariant (when present, it is a SUPERSET of the live codes' id→cell
-    * mapping — stale extra entries allowed, missing entries never)
-    * survives every crash window: a sidecar append whose codes mutation
-    * then died leaves only harmless extra entries.
-    *
-    * Size lifecycle (see [[sidecarReadMinBytes]]): below the threshold the
-    * sidecar is DROPPED rather than maintained (absence is always safe and
-    * the full-scan discovery is cheaper than the upkeep); at restore grade
-    * an absent sidecar is rebuilt wholesale from the current codes —
-    * rebuild-then-append keeps both writes ahead of the codes commit, so
-    * the ordering invariant holds through the restore too. Callers hold
-    * the writer lease (every mutation path does).
-    */
-  private def appendIdMap(s: SparkSession, snap: IndexSnapshot,
-      codes: DataFrame): Unit = {
-    val path = snap.path
-    val fs = hadoopFs(s, path)
-    val codesDir = snap.partPath("codes")
-    val bytes = codesBytes(s, codesDir)
-    val present = fs.exists(idMapPath(path))
-    if (bytes < sidecarReadMinBytes) {
-      if (present) { fs.delete(idMapPath(path), true); () }
-    } else if (present || bytes >= sidecarRestoreBytes) {
-      if (!present) rebuildIdMapFrom(s, path, codesDir) // one-time restore
-      idMapWriteShape(idMapEntries(codes)).write.mode("append")
-        .partitionBy("bucket").parquet(idMapDir(path))
-    } // absent in the 1x-2x hysteresis band: stays absent, reads fall back
-  }
-
-  /** Rebuild the sidecar wholesale from a codes directory: stage, drop the
-    * old sidecar, rename into place. Every crash window is safe because
-    * ABSENCE is safe (discovery falls back to the full codes scan) — a
-    * half-staged build is debris the next rebuild overwrites, and the
-    * delete→rename gap leaves no sidecar at all. The rebuild projects only
-    * (vec_id, cell, m), which every codes file carries.
-    */
-  private def rebuildIdMapFrom(s: SparkSession, path: String,
-      codesDir: String): Unit = {
-    val fs = hadoopFs(s, path)
-    val staging = new org.apache.hadoop.fs.Path(s"$path/idmap_staging")
-    fs.delete(staging, true)
-    idMapWriteShape(idMapEntries(
-      s.read.parquet(codesDir).select(col("vec_id"), col("cell"), col("m"))))
-      .write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
-    fs.delete(idMapPath(path), true)
-    if (!fs.rename(staging, idMapPath(path)))
-      throw new java.io.IOException(s"idmap rebuild at $path: rename failed")
-  }
-
-  /** (Re)build the id→cell discovery sidecar of a persisted index — the
-    * fold that trims the append-only growth of stale entries and rewrites
-    * a sidecar in a non-canonical form.
-    */
-  def rebuildIdMap(s: SparkSession, path: String): Unit =
-    withWriterLease(s, path, "rebuildIdMap") {
-      rebuildIdMapFrom(s, path, settled(s, path).partPath("codes"))
-    }
-
-  /** Observable record of the last touched-cell discovery (test seam): did
-    * it go through the sidecar, and how many of its bucket directories were
-    * actually read.
-    */
-  private[graft] final case class UpsertDiscovery(usedSidecar: Boolean,
-      bucketsRead: Int, totalBuckets: Int)
-  @volatile private[graft] var lastUpsertDiscovery: Option[UpsertDiscovery] = None
-
-  /** The OLD cells of a change batch's ids — the expensive half of
-    * touched-cell discovery. With the sidecar present this reads ONLY the
-    * bucket directories the changed ids hash into (enumerated explicitly,
-    * so the pruning holds by construction, not by optimizer grace) and may
-    * return a SUPERSET of the true old cells (stale append-only entries):
-    * a stale touched cell is rewritten identically by the dynamic
-    * overwrite — pure write amplification, never wrong answers. Without
-    * the sidecar: the full codes scan (one broadcast semi-join).
-    */
-  private def oldCellsOf(s: SparkSession, snap: IndexSnapshot, codes: => DataFrame,
-      changedIds: DataFrame,
-      probedPairs: Option[Seq[(Any, Long)]] = None): DataFrame = {
-    val path = snap.path
-    val fs = hadoopFs(s, path)
-    val codesDir = snap.partPath("codes")
-    val bytes = codesBytes(s, codesDir)
-    val sidecar: Option[DataFrame] =
-      // size bypass: under the threshold the full scan IS
-      // the cheap path — one broadcast semi-join folded into the touched-
-      // cell action, vs a footer read + an extra bucket-enumeration job
-      // (and below it the sidecar is not maintained at all)
-      if (bytes < sidecarReadMinBytes) None
-      else if (!fs.exists(idMapPath(path))) {
-        if (bytes < sidecarRestoreBytes) None // hysteresis band: fall back
-        else {
-          // threshold crossing (or an operator-deleted sidecar on a large
-          // index): restore once, under the caller's writer lease — the
-          // alternative is a full codes scan on EVERY future micro-batch
-          rebuildIdMapFrom(s, path, codesDir)
-          readIdMap(s, path, changedIds, probedPairs)
-        }
-      }
-      else readIdMap(s, path, changedIds, probedPairs)
-    sidecar.getOrElse {
-      lastUpsertDiscovery =
-        Some(UpsertDiscovery(usedSidecar = false, IdMapBuckets, IdMapBuckets))
-      codes.join(broadcast(changedIds), Seq("vec_id"), "left_semi")
-        .select(col("cell"))
-    }
-  }
-
-  /** The sidecar read route of [[oldCellsOf]]: probe the changed ids'
-    * bucket directories. None = unreadable/non-canonical sidecar → caller falls
-    * back to the full scan (absence semantics). `probedPairs` carries the
-    * caller's already-collected (canonical id, bucket) pairs when the
-    * change batch fit under [[IdProbeCap]] — the probe then runs zero
-    * Spark jobs of its own.
-    */
-  private def readIdMap(s: SparkSession, path: String,
-      changedIds: DataFrame,
-      probedPairs: Option[Seq[(Any, Long)]] = None): Option[DataFrame] = {
-    val fs = hadoopFs(s, path)
-    val dir = idMapDir(path)
-    try {
-        // bucket hashes must agree between write and read. Writes are
-        // canonical ([[canonicalVecId]]): integral ids stored and hashed as
-        // long. A sidecar whose stored type is integral-but-not-long
-        // predates canonicalization (or holds mixed-type debris) — its
-        // entries may sit under arrival-type hashes this probe cannot
-        // reproduce, so it is treated as ABSENT (always safe) until
-        // [[rebuildIdMap]] folds it to canonical form. (probedPairs were
-        // hashed canonically too, so the bypass below agrees with this
-        // route whenever the sidecar is readable at all.)
-        val storedDt = s.read.parquet(dir).schema("vec_id").dataType
-        if (isIntegral(storedDt) &&
-            storedDt != org.apache.spark.sql.types.LongType) None
-        else {
-          val probe = changedIds.select(col("vec_id").cast(storedDt).as("vec_id"))
-          // ONE action yields the bucket set (directory pruning) and — for
-          // micro-batch-sized sets — the ids themselves, shipped back as an
-          // isin predicate so row-group statistics prune WITHIN the sorted
-          // bucket files (see IdProbeCap). An over-cap batch recomputes
-          // just the buckets and keeps the broadcast semi-join. When the
-          // caller already collected the pairs (upsertCore's folded
-          // action), even that one action is skipped.
-          val pairs: Array[(Any, Long)] = probedPairs match {
-            case Some(pp) => pp.toArray
-            case None => probe
-              .select(col("vec_id"),
-                pmod(xxhash64(col("vec_id")), lit(IdMapBuckets.toLong)).as("b"))
-              .distinct().limit(IdProbeCap + 1).collect()
-              .map(r => (r.get(0), r.getLong(1)))
-          }
-          val small = pairs.length <= IdProbeCap
-          val buckets =
-            if (small) pairs.map(_._2).distinct.toSeq
-            else probe
-              .select(pmod(xxhash64(col("vec_id")), lit(IdMapBuckets.toLong)).as("b"))
-              .distinct().collect().map(_.getLong(0)).toSeq
-          // ONE directory listing instead of a per-bucket exists probe:
-          // the present bucket set in a single fs call
-          val present =
-            try fs.listStatus(idMapPath(path)).iterator
-              .map(_.getPath.getName).toSet
-            catch { case _: java.io.IOException => Set.empty[String] }
-          val bucketDirs = buckets.filter(b => present.contains(s"bucket=$b"))
-            .map(b => s"$dir/bucket=$b")
-          lastUpsertDiscovery =
-            Some(UpsertDiscovery(usedSidecar = true, bucketDirs.length, IdMapBuckets))
-          if (bucketDirs.isEmpty)
-            Some(probe.limit(0).select(lit(0L).as("cell")))
-          else {
-            val scan = s.read.option("basePath", dir)
-              .parquet(bucketDirs.toIndexedSeq: _*)
-            val matched =
-              if (small) scan.filter(col("vec_id").isin(pairs.map(_._1): _*))
-              else scan.join(broadcast(probe), Seq("vec_id"), "left_semi")
-            Some(matched.select(col("cell")))
-          }
-        }
-      } catch { case _: org.apache.spark.sql.AnalysisException =>
-        None // unreadable/empty sidecar: fall back, loudly observable below
-      }
-  }
-
-  /** Bench/test seam: run ONLY the touched-cell discovery of a change
-    * batch — the phase the sidecar exists to prune — and return the old
-    * cells. [[graft.UpsertBench]] meters this in isolation because inside a
-    * full upsert the discovery delta drowns in the (route-independent)
-    * encode/rewrite/occupancy fixed costs.
-    */
-  private[graft] def discoverOldCells(s: SparkSession, path: String,
-      changedIds: DataFrame): Seq[Any] = {
-    val snap = snapshot(s, path)
-    oldCellsOf(s, snap, codesRead(s, snap), changedIds)
-      .distinct().collect().map(_.get(0)).toSeq
-  }
 
   // ---- streaming ingest ---------------------------------------------------
 
@@ -1361,8 +1029,7 @@ object VectorIndex extends org.apache.spark.internal.Logging {
   /** Drop everything the committed generation `snap` does not reference:
     * manifests older than its predecessor, generation directories outside
     * its live and retained sets (including staged-but-uncommitted debris
-    * of a crashed swap), stray manifest tmp files and an interrupted
-    * sidecar stage. Best-effort: what survives an IO failure is collected
+    * of a crashed swap) and stray manifest tmp files. Best-effort: what survives an IO failure is collected
     * on the next commit.
     */
   private def gc(s: SparkSession, snap: IndexSnapshot): Unit = {
@@ -1372,8 +1039,7 @@ object VectorIndex extends org.apache.spark.internal.Logging {
       st.getPath.getName match {
         case ManifestRe(g) if g.toLong < snap.gen - 1 => fs.delete(st.getPath, false)
         case n @ StagedRe(_, _) if !keep.contains(n) => fs.delete(st.getPath, true)
-        case n if n.startsWith(".manifest-tmp-") || n == "idmap_staging" =>
-          fs.delete(st.getPath, true)
+        case n if n.startsWith(".manifest-tmp-") => fs.delete(st.getPath, true)
         case _ => ()
       }
     } catch { case _: java.io.IOException => () }
@@ -1687,7 +1353,7 @@ object VectorIndex extends org.apache.spark.internal.Logging {
   }
 
   /** Full recount of the committed occupancy from the codes — a general
-    * consistency restore (e.g. after an upsert's crash window).
+    * consistency restore.
     */
   def refreshOccupancy(s: SparkSession, path: String): Unit =
     withWriterLease(s, path, "refreshOccupancy") {
@@ -1721,17 +1387,6 @@ object VectorIndex extends org.apache.spark.internal.Logging {
     codesRead(s, snap).repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/$stagedDir")
     commit(s, snap)(m => m.copy(dirs = m.dirs + ("codes" -> stagedDir)))
-    // fold the sidecar's append-only stale entries while we're at the
-    // hygiene pass anyway — compaction changes no id→cell mapping, so the
-    // pre-fold sidecar stays a valid superset through every crash window.
-    // A compacted index now under the read threshold drops it instead
-    // (absence-safe; the size lifecycle restores it at the next crossing).
-    if (hadoopFs(s, path).exists(idMapPath(path))) {
-      val codesDir = s"$path/$stagedDir"
-      if (codesBytes(s, codesDir) >= sidecarReadMinBytes)
-        rebuildIdMapFrom(s, path, codesDir)
-      else { hadoopFs(s, path).delete(idMapPath(path), true); () }
-    }
   }
 
   // ---- hot-cell split ------------------------------------------------------
@@ -2095,10 +1750,9 @@ object VectorIndex extends org.apache.spark.internal.Logging {
 
   // ---- codes schema -------------------------------------------------------
   //
-  // INVARIANT (superset-first, the sidecar's discipline): a writer that may
-  // ADD columns to the live codes directory (stamped appends,
-  // metadata-carrying upserts) commits the widened manifest schema BEFORE
-  // the data lands. Every crash window then leaves at worst a schema
+  // INVARIANT (superset-first): a writer that may ADD columns to the live
+  // codes directory (stamped appends, metadata-carrying upserts) commits
+  // the widened manifest schema BEFORE the data lands. Every crash window then leaves at worst a schema
   // claiming a column no file carries — an explicit-schema read returns it
   // as all-null — never a schema missing a column files DO carry (which
   // would silently drop stamps from a lossless rewrite).

@@ -29,8 +29,8 @@ import graft.operators.{Dedup, IvfadcQuantizer, PqParams, VectorIndex}
   * lifetime; frames are rebuilt per call from the rows. The shared index
   * directory lives under java.io.tmpdir and is removed on JVM exit.
   */
-// graft-wide (not queries-private): UpsertBench shares the hardlink copy
-// policy (ADVICE r16); the fixture-cache members themselves stay private.
+// graft-wide (not queries-private): the index specs share the hardlink copy
+// policy; the fixture-cache members themselves stay private.
 private[graft] object AnnFixtures {
 
   /** The one production operating point every sharing gate uses. */
@@ -140,8 +140,7 @@ private[graft] object AnnFixtures {
   /** Hardlink-aware recursive copy (see [[copyIndex]]'s linking rationale:
     * only `.parquet` part files are linked; everything else is a real copy
     * because RawLocalFileSystem's create(overwrite) truncates in place).
-    * Exposed package-wide so [[graft.UpsertBench]] shares the one policy
-    * instead of drifting its own (ADVICE r16). */
+    * Exposed package-wide so every index copy shares the one policy. */
   private[graft] def copyDir(src: java.io.File, dst: java.io.File): Unit =
     if (src.isDirectory) {
       dst.mkdirs()

@@ -204,6 +204,29 @@ class ProtocolSpec extends AnyFunSuite {
     assert(lines.last.startsWith("""{"type":"STATE""""))
   }
 
+  test("airbyte read: the single STATE keeps the input cursor of a stream that fails") {
+    val failing = new StubRunner {
+      override def stream(config: Option[com.fasterxml.jackson.databind.JsonNode],
+          state: Option[com.fasterxml.jackson.databind.JsonNode]) =
+        graft.sources.PaginatedStream(HttpRequest("http://t/refunds"),
+          graft.sources.Pagination.NextUrl("next"), Seq("items"))
+    }
+    // one worker: orders finishes before refunds fails
+    val two = SourceDef(name = "two", concurrency = 1, httpStreams = Seq(
+      ordersDef -> new StubRunner, ordersDef.copy(name = "refunds") -> failing))
+    val refundsDown: HttpClient = (req: HttpRequest) =>
+      if (req.url.endsWith("/refunds")) throw new RuntimeException("refunds down")
+      else client.get(req)
+    val rc = RunConfig.parse(Iterator("""{"type":"STATE","state":{"data":{""" +
+      """"orders":{"To":"2024-01-01T00:00:00Z"},"refunds":{"To":"2024-02-01T00:00:00Z"}}}}"""))
+    val out = new StringWriter
+    Connector.handle(two, Cmd.Read, rc, out, refundsDown, clock = () => 1700000000000L)
+    val lines = out.toString.linesIterator.toList
+    assert(lines.exists(l => l.contains("\"LOG\"") && l.contains("refunds down")), lines)
+    assert(lines.last == """{"type":"STATE","state":{"data":{""" +
+      """"orders":{"To":"2024-06-01T00:00:00Z"},"refunds":{"To":"2024-02-01T00:00:00Z"}}}}""")
+  }
+
   test("read syncs every stream, at most `concurrency` at once, on shared daemon workers") {
     val names = (0 until 5).map(i => s"s$i")
     val inFlight = new java.util.concurrent.atomic.AtomicInteger()

@@ -16,9 +16,9 @@ import graft.SparkFixture
   *     snapshot holds exactly the pre-mutation or the post-mutation index
   *     (quantizer and codes row for row), with no re-run;
   *   - `upsertBatch` and a stamped `appendSink` batch: re-running the same
-  *     batch reaches exactly the post-mutation index; for the sink, the
-  *     applied mark is never ahead of the data and the batch is applied
-  *     once.
+  *     batch reaches exactly the post-mutation index, and the committed
+  *     occupancy equals a recount; for the sink, the applied mark is never
+  *     ahead of the data and the batch is applied once.
   *
   * Equal quantizer and codes rows imply equal search answers. The fixture
   * is tiny and writes few files, so each sweep stays a few dozen points.
@@ -114,6 +114,14 @@ class VectorIndexCrashSweepSpec extends AnyFunSuite
     }
   }
 
+  /** The committed occupancy against a recount of the live codes. */
+  private def assertOccupancyRecounted(dir: String, n: Long): Unit = {
+    def counts(df: DataFrame) = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(counts(VectorIndex.occupancy(spark, dir)) ==
+      counts(VectorIndex.cellOccupancy(VectorIndex.loadCodes(spark, dir))),
+      s"crash at mutating call $n: occupancy must equal a recount")
+  }
+
   private def preOrPost(base: String, op: String => Unit): Unit = {
     val pre = state(base)
     sweep(base, op) { (dir, n, post) =>
@@ -151,6 +159,7 @@ class VectorIndexCrashSweepSpec extends AnyFunSuite
     sweep(pristine, upsert) { (dir, n, post) =>
       upsert(dir)
       assert(state(dir) == post, s"crash at mutating call $n: the re-run must converge")
+      assertOccupancyRecounted(dir, n)
     }
   }
 
@@ -170,10 +179,7 @@ class VectorIndexCrashSweepSpec extends AnyFunSuite
       assert(state(dir) == post, s"crash at mutating call $n: the re-run must apply the batch once")
       val snap = VectorIndex.snapshot(spark, dir)
       assert(snap.applied == Map(Some("s") -> 4L))
-      assert(VectorIndex.occupancy(spark, dir).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
-        VectorIndex.cellOccupancy(VectorIndex.loadCodes(spark, dir)).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap,
-        s"crash at mutating call $n: occupancy must equal a recount")
+      assertOccupancyRecounted(dir, n)
     }
   }
 }

@@ -46,7 +46,7 @@ class VectorIndexManifestSpec extends AnyFunSuite {
     VectorIndex.appendSink(path, pq, col("vec_id"), col("embedding"),
       streamId = Some(stream))
 
-  private val RootEntry = "manifest-\\d{9}|(cents|codebook|codes)_gen_\\d+|idmap".r
+  private val RootEntry = "manifest-\\d{9}|(cents|codebook|codes)_gen_\\d+".r
 
   private def assertRootClean(path: String, after: String): Unit = {
     // `.<name>.crc` files are the local file system's checksums of the
@@ -61,36 +61,34 @@ class VectorIndexManifestSpec extends AnyFunSuite {
   private def manifestJson(path: String, gen: Long) =
     graft.core.Json.mapper.readTree(new java.io.File(f"$path/manifest-$gen%09d"))
 
-  test("the index root holds only manifests, generation directories and the sidecar after every mutation") {
-    // threshold 0: the sidecar exists from birth, so its directory is on
-    // the listing too
-    sys.props("graft.sidecar.read.min.bytes") = "0"
-    try {
-      val corpus = bimodalCorpus().cache()
-      val path = tmp("graft_root_layout")
-      build(corpus.filter(col("vec_id") < 56), path)
-      assertRootClean(path, "write")
-      sink(path, "s")(corpus.filter(col("vec_id") >= 56), 0L)
-      assertRootClean(path, "a stamped appendSink")
-      val labelled = corpus.filter(col("vec_id") < 4)
-        .select(col("vec_id"), reverse(col("embedding")).as("embedding"),
-          lit(1).as("label"))
-      VectorIndex.upsertBatch(spark, path, labelled,
-        labelled.limit(0).select(col("vec_id")), col("vec_id"), col("embedding"), pq,
-        meta = Seq("label"))
-      assert(VectorIndex.snapshot(spark, path).schema.fieldNames.contains("label"))
-      assertRootClean(path, "a metadata-carrying upsertBatch")
-      VectorIndex.compactCells(spark, path)
-      assertRootClean(path, "compactCells")
-      val hot = VectorIndex.occupancy(spark, path)
-        .orderBy(col("n_vecs").desc, col("cell")).head().getLong(0)
-      VectorIndex.splitCell(spark, path, hot, corpus, col("vec_id"), col("embedding"), pq)
-      assertRootClean(path, "splitCell")
-      VectorIndex.reindex(spark, path, corpus, col("vec_id"), col("embedding"),
-        kCells = 4, iters = 2, pq = pq)
-      assertRootClean(path, "reindex")
-      assert(new java.io.File(s"$path/idmap").isDirectory)
-    } finally sys.props("graft.sidecar.read.min.bytes") = (64L << 20).toString
+  test("the index root holds only manifests and generation directories after every mutation") {
+    val corpus = bimodalCorpus().cache()
+    val path = tmp("graft_root_layout")
+    build(corpus.filter(col("vec_id") < 56), path)
+    assertRootClean(path, "write")
+    sink(path, "s")(corpus.filter(col("vec_id") >= 56), 0L)
+    assertRootClean(path, "a stamped appendSink")
+    val labelled = corpus.filter(col("vec_id") < 4)
+      .select(col("vec_id"), reverse(col("embedding")).as("embedding"),
+        lit(1).as("label"))
+    VectorIndex.upsertBatch(spark, path, labelled,
+      labelled.limit(0).select(col("vec_id")), col("vec_id"), col("embedding"), pq,
+      meta = Seq("label"))
+    assert(VectorIndex.snapshot(spark, path).schema.fieldNames.contains("label"))
+    assertRootClean(path, "a metadata-carrying upsertBatch")
+    VectorIndex.compactCells(spark, path)
+    assertRootClean(path, "compactCells")
+    val hot = VectorIndex.occupancy(spark, path)
+      .orderBy(col("n_vecs").desc, col("cell")).head().getLong(0)
+    VectorIndex.splitCell(spark, path, hot, corpus, col("vec_id"), col("embedding"), pq)
+    assertRootClean(path, "splitCell")
+    VectorIndex.reindex(spark, path, corpus, col("vec_id"), col("embedding"),
+      kCells = 4, iters = 2, pq = pq)
+    assertRootClean(path, "reindex")
+    VectorIndex.refreshOccupancy(spark, path)
+    assertRootClean(path, "refreshOccupancy")
+    VectorIndex.recover(spark, path)
+    assertRootClean(path, "recover")
   }
 
   test("superset-first and mark-after-data: a stamped append commits its widened schema before any codes file lands and its applied mark after the last") {

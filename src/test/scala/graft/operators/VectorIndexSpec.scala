@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -135,81 +136,93 @@ class VectorIndexSpec extends AnyFunSuite {
   }
 
   test("upsertBatch: tombstones + changed vectors == full re-encode; untouched cells byte-identical") {
-    val path = java.nio.file.Files.createTempDirectory("graft_vindex_upsert").toString
-    val quant = VectorIndex.train(corpus, col("vec_id"), col("embedding"),
-      kCells = 16, iters = 1, pq = pq)
-    VectorIndex.write(quant,
-      VectorIndex.encode(corpus, col("vec_id"), col("embedding"), quant), path)
+    // ids arrive as long and as int; either way the change batch also
+    // deletes an id that appendBatch added after the index was written
+    for (idType <- Seq("long", "int")) {
+      def typed(df: DataFrame) =
+        df.select(col("vec_id").cast(idType).as("vec_id"), col("embedding"))
+      val base = typed(corpus)
+      val appended = typed(emb.filter(col("vec_id").isin(67L, 77L)))
+      val indexed = base.union(appended)
+      val path = java.nio.file.Files.createTempDirectory("graft_vindex_upsert").toString
+      val quant = VectorIndex.train(base, col("vec_id"), col("embedding"),
+        kCells = 16, iters = 1, pq = pq)
+      VectorIndex.write(quant,
+        VectorIndex.encode(base, col("vec_id"), col("embedding"), quant), path)
+      VectorIndex.appendBatch(spark, path, appended, col("vec_id"), col("embedding"), pq)
 
-    // change batch: a NARROW id slice (the untouched-cells assertion below
-    // needs most cells to stay out of the change set) — delete ids ≡3
-    // (mod 10), update ids ≡4 (mod 10) with a reversed (deterministically
-    // perturbed) embedding; ids ≥ 64 so every training seed and query row
-    // stays put
-    val delC = col("vec_id") % 10 === 3 && col("vec_id") >= 64 && col("vec_id") < 110
-    val updC = col("vec_id") % 10 === 4 && col("vec_id") >= 64 && col("vec_id") < 110
-    val updates = corpus.filter(updC)
-      .select(col("vec_id"), reverse(col("embedding")).as("embedding"))
-    val deletes = corpus.filter(delC).select(col("vec_id"))
+      // change batch: a NARROW id slice (the untouched-cells assertion below
+      // needs most cells to stay out of the change set) — delete ids ≡3
+      // (mod 10) and the appended id 67, update ids ≡4 (mod 10) with a
+      // reversed (deterministically perturbed) embedding; ids ≥ 64 so every
+      // training seed and query row stays put
+      def slice(id: org.apache.spark.sql.Column, r: Int) =
+        id % 10 === r && id >= 64 && id < 110
+      val delC = slice(col("vec_id"), 3) || col("vec_id") === 67
+      val updC = slice(col("vec_id"), 4)
+      val updates = indexed.filter(updC)
+        .select(col("vec_id"), reverse(col("embedding")).as("embedding"))
+      val deletes = indexed.filter(delC).select(col("vec_id"))
 
-    // fingerprint every cell file BEFORE the upsert
-    def fileSig(path: String): Map[String, (Long, Long)] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
-      walk(new java.io.File(path)).filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getAbsolutePath -> (f.length, f.lastModified)).toMap
+      // fingerprint every cell file BEFORE the upsert
+      def fileSig(path: String): Map[String, (Long, Long)] = {
+        def walk(f: java.io.File): Seq[java.io.File] =
+          if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
+        walk(new java.io.File(path)).filter(_.getName.endsWith(".parquet"))
+          .map(f => f.getAbsolutePath -> (f.length, f.lastModified)).toMap
+      }
+      val codesDir = VectorIndex.snapshot(spark, path).partPath("codes")
+      val before = fileSig(codesDir)
+
+      VectorIndex.upsertBatch(spark, path, updates, deletes,
+        col("vec_id"), col("embedding"), pq)
+
+      // equivalence: the maintained index answers exactly like a
+      // from-scratch encode of (indexed − deleted) ∪ updated under the same
+      // frozen quantizer
+      val post = indexed.filter(!delC && !updC).union(updates)
+      val rebuilt = VectorIndex.encode(post, col("vec_id"), col("embedding"), quant)
+      val fromIndex = VectorIndex.searchAdc(VectorIndex.loadCodes(spark, path),
+        VectorIndex.loadQuantizer(spark, path, pq), queries, nprobe = 4, topK = 5)
+        .orderBy("query_id", "rn").collect().toSeq
+      val fromRebuild = VectorIndex.searchAdc(rebuilt, quant, queries, nprobe = 4, topK = 5)
+        .orderBy("query_id", "rn").collect().toSeq
+      assert(fromIndex == fromRebuild, s"$idType ids: upserted index must answer " +
+        "exactly like the full re-encode of the post-change corpus")
+      assert(fromIndex.nonEmpty)
+      // no deleted id is retrievable even in a widened result
+      val wide = VectorIndex.searchAdc(VectorIndex.loadCodes(spark, path),
+        VectorIndex.loadQuantizer(spark, path, pq), queries, nprobe = 16, topK = 200)
+      assert(wide.filter(slice(col("neighbor_id"), 3) || col("neighbor_id") === 67)
+        .count() == 0, s"$idType ids: tombstoned vectors must be gone from the index")
+      assert(VectorIndex.loadCodes(spark, path).filter(col("vec_id") === 67).count() == 0,
+        s"$idType ids: the appended-then-deleted id must be gone")
+
+      // the 100 TB property: cells the change batch never touched keep their
+      // files byte-for-byte (same paths, sizes, mtimes) — only touched cell
+      // partitions were rewritten
+      val touched = {
+        val codes = VectorIndex.encode(indexed, col("vec_id"), col("embedding"), quant)
+        val changedIds = updates.select("vec_id").union(deletes).distinct()
+        val oldCells = codes.join(broadcast(changedIds), Seq("vec_id"), "left_semi")
+          .select("cell").distinct().collect().map(_.getAs[Number](0).longValue).toSet
+        val newCells = VectorIndex.encode(updates, col("vec_id"), col("embedding"), quant)
+          .select("cell").distinct().collect().map(_.getAs[Number](0).longValue).toSet
+        oldCells ++ newCells
+      }
+      val after = fileSig(codesDir)
+      val untouchedBefore = before.filterNot { case (p, _) => touched.exists(c => p.contains(s"cell=$c/")) }
+      val untouchedAfter = after.filterNot { case (p, _) => touched.exists(c => p.contains(s"cell=$c/")) }
+      assert(untouchedBefore.nonEmpty, "fixture must leave some cells untouched for the test to mean anything")
+      assert(untouchedAfter == untouchedBefore, s"$idType ids: untouched cell partitions " +
+        "must survive the upsert byte-for-byte (no corpus rewrite)")
+
+      // occupancy was maintained incrementally and still equals a recount
+      val occ = VectorIndex.occupancy(spark, path).orderBy("cell").collect().toSeq
+      val recount = VectorIndex.cellOccupancy(VectorIndex.loadCodes(spark, path))
+        .orderBy("cell").collect().toSeq
+      assert(occ == recount, s"$idType ids: incrementally-maintained occupancy must equal a recount")
     }
-    val codesDir = VectorIndex.snapshot(spark, path).partPath("codes")
-    val before = fileSig(codesDir)
-
-    VectorIndex.upsertBatch(spark, path, updates, deletes,
-      col("vec_id"), col("embedding"), pq)
-
-    // equivalence: the maintained index answers exactly like a from-scratch
-    // encode of (corpus − deleted) ∪ updated under the same frozen quantizer
-    val post = corpus.filter(!delC && !updC)
-      .select(col("vec_id"), col("embedding"))
-      .union(updates)
-    val rebuilt = VectorIndex.encode(post, col("vec_id"), col("embedding"), quant)
-    val fromIndex = VectorIndex.searchAdc(VectorIndex.loadCodes(spark, path),
-      VectorIndex.loadQuantizer(spark, path, pq), queries, nprobe = 4, topK = 5)
-      .orderBy("query_id", "rn").collect().toSeq
-    val fromRebuild = VectorIndex.searchAdc(rebuilt, quant, queries, nprobe = 4, topK = 5)
-      .orderBy("query_id", "rn").collect().toSeq
-    assert(fromIndex == fromRebuild,
-      "upserted index must answer exactly like the full re-encode of the post-change corpus")
-    assert(fromIndex.nonEmpty)
-    // no deleted id is retrievable even in a widened result
-    val wide = VectorIndex.searchAdc(VectorIndex.loadCodes(spark, path),
-      VectorIndex.loadQuantizer(spark, path, pq), queries, nprobe = 16, topK = 200)
-    assert(wide.filter(col("neighbor_id") % 10 === 3 &&
-        col("neighbor_id") >= 64 && col("neighbor_id") < 110).count() == 0,
-      "tombstoned vectors must be gone from the index")
-
-    // the 100 TB property: cells the change batch never touched keep their
-    // files byte-for-byte (same paths, sizes, mtimes) — only touched cell
-    // partitions were rewritten
-    val touched = {
-      val codes = VectorIndex.encode(corpus, col("vec_id"), col("embedding"), quant)
-      val changedIds = updates.select("vec_id").union(deletes).distinct()
-      val oldCells = codes.join(broadcast(changedIds), Seq("vec_id"), "left_semi")
-        .select("cell").distinct().collect().map(_.getAs[Number](0).longValue).toSet
-      val newCells = VectorIndex.encode(updates, col("vec_id"), col("embedding"), quant)
-        .select("cell").distinct().collect().map(_.getAs[Number](0).longValue).toSet
-      oldCells ++ newCells
-    }
-    val after = fileSig(codesDir)
-    val untouchedBefore = before.filterNot { case (p, _) => touched.exists(c => p.contains(s"cell=$c/")) }
-    val untouchedAfter = after.filterNot { case (p, _) => touched.exists(c => p.contains(s"cell=$c/")) }
-    assert(untouchedBefore.nonEmpty, "fixture must leave some cells untouched for the test to mean anything")
-    assert(untouchedAfter == untouchedBefore,
-      "untouched cell partitions must survive the upsert byte-for-byte (no corpus rewrite)")
-
-    // occupancy was maintained incrementally and still equals a recount
-    val occ = VectorIndex.occupancy(spark, path).orderBy("cell").collect().toSeq
-    val recount = VectorIndex.cellOccupancy(VectorIndex.loadCodes(spark, path))
-      .orderBy("cell").collect().toSeq
-    assert(occ == recount, "incrementally-maintained occupancy must equal a recount")
   }
 
   test("upsertBatch removes a cell directory when its every vector is deleted") {
