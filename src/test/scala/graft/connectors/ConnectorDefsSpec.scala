@@ -38,6 +38,24 @@ final class PagedStubClient(totalPages: Int, perPage: Int) extends HttpClient {
   }
 }
 
+/** The bad-record policy both Spark read surfaces share: one record whose
+  * declared `LongType` field holds a string, one that lacks a declared field.
+  */
+object ConnectorDefsSpec {
+  val BadRecordsPage: String =
+    """{"items":[{"productid":"x","title":"A","moneyprice":"1.0"},{"productid":2,"moneyprice":"2.0"}]}"""
+
+  /** (productid, title, moneyprice) per row, ordered by moneyprice. */
+  def rowsOf(df: org.apache.spark.sql.DataFrame): List[(Option[Long], Option[String], Option[String])] =
+    df.collect().toList.map { r =>
+      (Option(r.getAs[java.lang.Long]("productid")).map(_.longValue),
+        Option(r.getAs[String]("title")), Option(r.getAs[String]("moneyprice")))
+    }.sortBy(_._3)
+
+  val BadRecordRows: List[(Option[Long], Option[String], Option[String])] =
+    List((None, Some("A"), Some("1.0")), (Some(2L), None, Some("2.0")))
+}
+
 /** Connector-declaration tests: request shapes (projection/predicate
   * pushdown into params, SURVEY §2 P1-P3), incremental window + state
   * round-trip (S8), and the Spark read surface with declared schemas.
@@ -95,6 +113,13 @@ class ConnectorDefsSpec extends AnyFunSuite {
     val rows = df.orderBy("productid").collect()
     assert(rows.map(_.getLong(0)).toList == List(1L, 2L))
     assert(rows(0).getString(1) == "A")
+  }
+
+  test("readDataFrames bad records: a mistyped or missing declared field reads as null") {
+    val spark = graft.SparkFixture.spark
+    val client = new Capture(ConnectorDefsSpec.BadRecordsPage)
+    val df = Connector.readDataFrames(spark, ConnectorDefs.sitoo, RunConfig.Empty, client)("products")
+    assert(ConnectorDefsSpec.rowsOf(df) == ConnectorDefsSpec.BadRecordRows)
   }
 
   test("readDataFrames streams the page chain through the task — no driver materialization") {
