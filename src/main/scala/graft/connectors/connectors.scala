@@ -209,9 +209,9 @@ object ConnectorDefs {
     * multiplexing map (`proto.go:149-172`). Built-ins are the reference's
     * five connectors; [[register]] adds application-defined ones (the
     * reference's `integrations.New()` composition, `cmd/server/main.go`).
-    * Registrations are per-JVM: connectors are compiled-in declarations, so
-    * an embedding application registers in a static initializer that runs on
-    * driver and executors alike (same pattern as Spark UDF registration).
+    * Registrations are per-JVM and read on the driver only: a Spark read
+    * carries the resolved connector into its tasks
+    * ([[graft.sources.v2.HttpTable]]).
     */
   private val builtin: Map[String, SourceDef] = Map(
     "pokeapi" -> pokeapi,

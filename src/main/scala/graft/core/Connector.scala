@@ -8,9 +8,11 @@ import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.JsonNode
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.Bridge
 
 import graft.sources.{HttpClient, PaginatedStream}
+import graft.sources.v2.HttpTable
 
 /** Source definition + four-command lifecycle (reference `sourcedef.go`,
   * `proto.go:119-126`): `spec`, `check`, `discover`, `read`.
@@ -18,9 +20,9 @@ import graft.sources.{HttpClient, PaginatedStream}
   * Two read surfaces share the same runners:
   *  - protocol path: records stream straight to a [[ProtoWriter]] as NDJSON
   *    (CLI/golden-test parity with the reference);
-  *  - Spark path: [[Connector.readDataFrames]] turns each stream into a
-  *    `DataFrame` with its *declared* schema (never inferred), the engine's
-  *    center of gravity for analytics.
+  *  - Spark path: each HTTP stream is a `graft-http` DataSource V2 relation
+  *    with its *declared* schema (never inferred), whether it is reached by
+  *    [[Connector.readDataFrames]] or by `spark.read.format("graft-http")`.
   */
 trait HttpRunner extends Serializable {
   /** Build the page loop for one sync, given config + prior cursor state
@@ -108,6 +110,13 @@ final case class SourceDef(
         graft.sources.RateLimiter.forShare(name, r, burst = 4, shareIndex, nShares))
     }
 
+  /** This connector with no streams or runners: what its transport stack
+    * needs (name, request budget), and all a Spark read task carries of it,
+    * so unrelated runners neither bloat the task nor must be serializable.
+    */
+  def transportOnly: SourceDef = copy(httpStreams = Nil, fileStreams = Nil, dbStreams = Nil,
+    manualStreams = Nil, manualRunners = Nil)
+
   def streamDefs: Seq[StreamDef] =
     httpStreams.map(_._1) ++ fileStreams.map(_._1) ++ dbStreams.map(_._1) ++ manualStreams
 
@@ -122,9 +131,6 @@ final case class SourceDef(
 
 object Connector {
 
-  /** Dispatch one lifecycle command (reference `handleCmd`,
-    * `sourcedef.go:47-60`).
-    */
   /** Standard transport stack for a connector: rate limiting wraps the
     * INNERMOST transport so every physical attempt — including retries,
     * which fire exactly when the API is already throttling — draws a token;
@@ -150,7 +156,9 @@ object Connector {
     try handle(src, cmd, rc, chars, client, clock) finally chars.flush()
   }
 
-  /** Runs `cmd`, writing its protocol NDJSON to `out` as UTF-8. */
+  /** Dispatch one lifecycle command (reference `handleCmd`,
+    * `sourcedef.go:47-60`), writing its protocol NDJSON to `out` as UTF-8.
+    */
   def handle(src: SourceDef, cmd: Cmd, rc: RunConfig, out: OutputStream, client: HttpClient,
       clock: () => Long): Unit = {
     val w = ProtoWriter(rc.format, out, clock)
@@ -309,39 +317,23 @@ object Connector {
   }
 
   /** Spark read surface: every (selected) stream as a DataFrame with its
-    * DECLARED schema. The HTTP page loop runs INSIDE the stream's read task
-    * (`mapPartitions` over a one-row range): pages stream through the task's
-    * iterator into the JSON parser, so no page chain is ever materialized
-    * driver-side — a million-page chain flows through bounded memory. The
-    * full transport stack (retry OUTSIDE pacing; per-JVM budget keyed by
-    * connector name, [[graft.sources.RateLimiter.forKey]]) is rebuilt in the
-    * task from the BASE `client`. Chains are sequential by nature (SURVEY §2
-    * S3-S5/S7) → one partition per stream; the DSv2 source (`graft-http`)
-    * additionally range-splits offset pagination across partitions. File
-    * streams are native `spark.read` (S11 — free on Spark).
+    * DECLARED schema. Each HTTP stream is the `graft-http` relation
+    * ([[graft.sources.v2.HttpTable]]) over `src`'s runner, `rc`'s config and
+    * the stream's `rc` state: the same scan `spark.read.format("graft-http")`
+    * plans, with column pruning and cursor pushdown. Building the DataFrame
+    * fetches nothing; the page loop runs inside the read task, so no page
+    * chain is materialized driver-side. Chains are sequential (SURVEY §2
+    * S3-S5/S7) → one partition per stream. File streams are native
+    * `spark.read` (S11 — free on Spark).
     *
     * @param client BASE transport (no retry/pacing wrappers — the stack is
     *               built per task); must be serializable, as `HttpClient` is.
     */
   def readDataFrames(spark: SparkSession, src: SourceDef, rc: RunConfig,
       client: HttpClient, baseDir: String = ""): Map[String, DataFrame] = {
-    // The task closures capture a STRIPPED copy of the def: transport()
-    // only needs (name, requestsPerSec), and shipping every other stream's
-    // runners per task would both bloat the closure and force unrelated
-    // runners to be serializable.
-    val srcCap = src.copy(httpStreams = Nil, fileStreams = Nil, dbStreams = Nil,
-      manualStreams = Nil, manualRunners = Nil)
-    val base = client
     val http = selected(src, rc).map { case (sd, runner) =>
-      val configStr = rc.config.map(Json.write)
-      val stateStr = rc.states.get(sd.name).map(Json.write)
-      val records: Dataset[String] = spark.range(0, 1, 1, numPartitions = 1)
-        .mapPartitions { it =>
-          if (!it.hasNext) Iterator.empty
-          else runner.stream(configStr.map(Json.parse), stateStr.map(Json.parse))
-            .fetch(Connector.transport(srcCap, base))
-        }(org.apache.spark.sql.Encoders.STRING)
-      sd.name -> spark.read.schema(sd.schema).json(records)
+      sd.name -> Bridge.relation(spark, HttpTable(src.transportOnly, sd, runner,
+        rc.config.map(Json.write), rc.states.get(sd.name).map(Json.write), client))
     }
     // file/db streams honor the CATALOG selection exactly like http streams
     // ("every (selected) stream" is the documented contract — a deselected

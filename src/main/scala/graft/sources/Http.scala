@@ -286,9 +286,7 @@ object Pagination {
 /** One paginated HTTP stream: base request builder + pagination + records
   * path. `pages` runs the page loop and yields each decoded [[Page]], whose
   * records are slices of UTF-8 bytes (see [[Page]] for that contract);
-  * `fetch` yields each record as its own `String`, which the engine turns
-  * into a DataFrame with the stream's declared schema
-  * (`spark.read.schema(...).json(ds)`).
+  * `fetch` yields each record as its own `String`.
   */
 final case class PaginatedStream(
     base: HttpRequest,

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JacksonParser, JSONOptions}
+import org.apache.spark.sql.catalyst.util.{FailureSafeParser, PermissiveMode}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -15,8 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.connectors.ConnectorDefs
-import graft.core.Json
-import graft.sources.{JdkHttpClient, PaginatedStream, Pagination}
+import graft.core.{Connector, HttpRunner, Json, SourceDef, StreamDef}
+import graft.sources.{HttpClient, JdkHttpClient, Page, PaginatedStream, Pagination}
 
 /** DataSource V2 integration for the paginated-HTTP source family: exposes
   * any registered connector stream as a Spark table —
@@ -39,53 +40,59 @@ import graft.sources.{JdkHttpClient, PaginatedStream, Pagination}
   *    reference's `start += num` loop becomes N concurrent range readers.
   *    Cursor-chained styles (S3-S5/S7) are inherently sequential → one
   *    partition, exactly like the reference's one-goroutine-per-stream.
+  *
+  * This provider is the only place the connector registry is read: the
+  * [[HttpTable]] it builds carries everything the scan and its readers need.
   */
 final class HttpTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-http"
 
-  private def streamDefOf(options: CaseInsensitiveStringMap) = {
-    val connector = Option(options.get("connector"))
-      .getOrElse(throw new IllegalArgumentException("option 'connector' is required"))
-    val src = ConnectorDefs.all.getOrElse(connector,
-      throw new IllegalArgumentException(
-        s"unknown connector '$connector'; known: ${ConnectorDefs.all.keys.toSeq.sorted.mkString(",")}"))
-    val stream = Option(options.get("stream")).getOrElse(src.httpStreams.head._1.name)
-    src.httpStreams.find(_._1.name == stream).getOrElse(
-      throw new IllegalArgumentException(s"connector '$connector' has no stream '$stream'"))
-  }
-
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    streamDefOf(options)._1.schema
+    getTable(null, Array.empty, options).schema()
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: JMap[String, String]): Table = {
-    val options = new CaseInsensitiveStringMap(properties)
-    val (sd, _) = streamDefOf(options)
-    // Normalize option keys to lowercase ONCE at the provider boundary:
-    // downstream code does plain props.get(...) in several places, and
-    // option casing must not silently change behavior (e.g. .option("Total",
-    // ...) previously fell back to a single sequential partition). All
-    // literal lookups below this point use lowercase keys.
-    val normalized = properties.asScala.map {
+    // Option keys are normalized to lowercase once, here: the scan looks
+    // them up by lowercase literal, and option casing must not silently
+    // change behavior (e.g. .option("Total", ...) falling back to a single
+    // sequential partition).
+    val options = properties.asScala.map {
       case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v
     }.toMap
-    new HttpTable(sd.name, sd.schema, normalized)
+    val connector = options.getOrElse("connector",
+      throw new IllegalArgumentException("option 'connector' is required"))
+    val src = ConnectorDefs.all.getOrElse(connector,
+      throw new IllegalArgumentException(
+        s"unknown connector '$connector'; known: ${ConnectorDefs.all.keys.toSeq.sorted.mkString(",")}"))
+    val stream = options.get("stream")
+    val (sd, runner) = stream.fold(src.httpStreams.headOption)(s => src.httpStreams.find(_._1.name == s))
+      .getOrElse(throw new IllegalArgumentException(
+        s"connector '$connector' has no stream${stream.fold("")(s => s" '$s'")}"))
+    HttpTable(src.transportOnly, sd, runner, options.get("config"), options.get("state"),
+      new JdkHttpClient(), options)
   }
 }
 
-final class HttpTable(name0: String, schema0: StructType, props: Map[String, String])
-    extends Table with SupportsRead {
-  override def name(): String = s"graft-http:$name0"
-  override def schema(): StructType = schema0
+/** One HTTP stream as a Spark table, resolved on the driver: the connector
+  * (stripped to what its transport needs, [[SourceDef.transportOnly]]), the
+  * stream and its runner, the config and cursor state documents, the BASE
+  * client (the retry/pacing stack is built per reader) and the lowercase
+  * `graft-http` options. Serializable: the reader factories carry it to the
+  * executors, which therefore never need the connector registered.
+  */
+final case class HttpTable(src: SourceDef, sd: StreamDef, runner: HttpRunner,
+    config: Option[String], state: Option[String], client: HttpClient,
+    options: Map[String, String] = Map.empty) extends Table with SupportsRead {
+  override def name(): String = s"graft-http:${sd.name}"
+  override def toString: String = name() // the config may hold credentials
+  override def schema(): StructType = sd.schema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val cursor = Option(options.get("connector"))
-      .flatMap(ConnectorDefs.all.get)
-      .flatMap(_.httpStreams.find(_._1.name == name0))
-      .flatMap(_._1.iterateBy.map(_.dotted))
-    new HttpScanBuilder(schema0, props, cursor)
-  }
+  // the relation's options are ignored: this table already holds them
+  override def newScanBuilder(unused: CaseInsensitiveStringMap): ScanBuilder = new HttpScanBuilder(this)
+
+  /** The stream's page loop for this table's config and state. */
+  def stream: PaginatedStream = runner.stream(config.map(Json.parse), state.map(Json.parse))
 }
 
 /** Column pruning + cursor-predicate pushdown. A `cursor > X` /
@@ -97,10 +104,11 @@ final class HttpTable(name0: String, schema0: StructType, props: Map[String, Str
   * engine still guarantees the semantics (exactly how parquet pushdown
   * composes with residual filters).
   */
-final class HttpScanBuilder(full: StructType, props: Map[String, String],
-    cursorCol: Option[String])
+final class HttpScanBuilder(table: HttpTable)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
+  private val full = table.schema()
+  private val cursorCol = table.sd.iterateBy.map(_.dotted)
   private var required: StructType = full
   private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
 
@@ -128,8 +136,6 @@ final class HttpScanBuilder(full: StructType, props: Map[String, String],
 
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
 
-  def cursor: Option[String] = cursorCol
-
   override def build(): Scan = {
     import org.apache.spark.sql.sources.{GreaterThan, GreaterThanOrEqual}
     // Chronological max of the pushed bounds becomes the cursor state
@@ -147,48 +153,38 @@ final class HttpScanBuilder(full: StructType, props: Map[String, String],
       case GreaterThan(_, v: String) => java.time.Instant.parse(v)
       case GreaterThanOrEqual(_, v: String) => java.time.Instant.parse(v)
     }.maxOption
-    val existingStr = props.get("state")
+    val existingStr = table.state
       .map(Json.parse).flatMap(n => Option(n.get("To")).map(_.asText))
     val existing = existingStr.flatMap(s => scala.util.Try(java.time.Instant.parse(s)).toOption)
-    val effProps =
-      if (existingStr.isDefined && existing.isEmpty) props // unparseable user state: leave it alone
+    val narrowed =
+      if (existingStr.isDefined && existing.isEmpty) table // unparseable user state: leave it alone
       else (bound.toSeq ++ existing.toSeq).maxOption match {
-        case Some(i) if !existing.contains(i) =>
-          props + ("state" -> s"""{"To":"${java.time.format.DateTimeFormatter.ISO_INSTANT.format(i)}"}""")
-        case _ => props
+        case Some(i) if !existing.contains(i) => table.copy(state =
+          Some(s"""{"To":"${java.time.format.DateTimeFormatter.ISO_INSTANT.format(i)}"}"""))
+        case _ => table
       }
-    new HttpScan(required, effProps, cursorCol)
+    new HttpScan(required, narrowed)
   }
 }
 
-final class HttpScan(readSchema: StructType, val props: Map[String, String],
-    cursorCol: Option[String] = None) extends Scan with Batch {
+/** @param table the scanned table, its state narrowed by any pushed cursor bound */
+final class HttpScan(readSchema: StructType, val table: HttpTable) extends Scan with Batch {
   override def readSchema(): StructType = readSchema
   override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    // Streaming REQUIRES a cursor: without iterateBy every window would
-    // re-emit the entire stream on every trigger (unbounded duplication) —
-    // fail at planning, like the batch path's unknown-connector error.
-    val cursor = cursorCol.getOrElse(throw new IllegalArgumentException(
-      s"stream '${props.getOrElse("stream", "?")}' of connector " +
-        s"'${props.getOrElse("connector", "?")}' declares no iterateBy cursor; " +
-        "micro-batch streaming needs one to window the sync"))
-    new HttpMicroBatchStream(readSchema, props, cursor)
-  }
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+    new HttpMicroBatchStream(readSchema, table)
   override def description(): String =
-    s"graft-http connector=${props.getOrElse("connector", "?")} stream=${props.getOrElse("stream", "?")}"
+    s"graft-http connector=${table.src.name} stream=${table.sd.name}"
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val total = props.get("total").map(_.toInt)
-    val stream = HttpScan.buildStream(props)
-    (stream.pagination, total) match {
+    val total = table.options.get("total").map(_.toInt)
+    (table.stream.pagination, total) match {
       case (off: Pagination.Offset, Some(n)) if n > off.num =>
         // one partition per page range: the DSv2 split of the reference's
         // offset loop (SURVEY §2 S6)
-        val pagesPerPart = // key lowercase: props normalized at getTable
-          math.max(1, props.get("pagesperpartition").map(_.toInt).getOrElse(4))
-        val chunk = off.num * pagesPerPart
+        val pagesPerPart = math.max(1, table.options.get("pagesperpartition").map(_.toInt).getOrElse(4))
+        val chunk = math.min(off.num.toLong * pagesPerPart, n.toLong).toInt
         val ranges = (0 until n by chunk).toArray
         // each partition is stamped with its share of the connector budget:
         // the reader paces at requestsPerSec / nShares, so the cluster-wide
@@ -200,96 +196,88 @@ final class HttpScan(readSchema: StructType, val props: Map[String, String],
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new HttpReaderFactory(readSchema, props)
+  override def createReaderFactory(): PartitionReaderFactory = new HttpReaderFactory(readSchema, table)
 }
 
-object HttpScan {
-  /** Build the stream's page loop from the serialized options (runs on both
-    * driver for planning and executors for reading).
-    */
-  def buildStream(props: Map[String, String]): PaginatedStream = {
-    val options = new CaseInsensitiveStringMap(props.asJava)
-    val src = ConnectorDefs.all(options.get("connector"))
-    val name = Option(options.get("stream")).getOrElse(src.httpStreams.head._1.name)
-    val runner = src.httpStreams.find(_._1.name == name).get._2
-    val config = Option(options.get("config")).map(Json.parse)
-    val state = Option(options.get("state")).map(Json.parse)
-    runner.stream(config, state)
-  }
-}
-
+/** A page range of an offset-paginated stream (`count` < 0: the whole
+  * chain), stamped with its share of the connector's request budget.
+  */
 final case class HttpPartition(startOffset: Int, count: Int,
-    shareIndex: Int = 0, nShares: Int = 1) extends InputPartition
+    shareIndex: Int = 0, nShares: Int = 1) extends InputPartition {
 
-final class HttpReaderFactory(readSchema: StructType, props: Map[String, String])
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[HttpPartition]
-    new HttpPartitionReader(readSchema, props, p)
-  }
-}
-
-final class HttpPartitionReader(readSchema: StructType, props: Map[String, String], part: HttpPartition)
-    extends PartitionReader[InternalRow] {
-
-  // The standard transport stack (retry OUTSIDE pacing, so every physical
-  // attempt draws a token). Pacing draws from THIS PARTITION'S SHARE of
-  // the connector budget (requestsPerSec / nShares): the driver stamped
-  // every planned partition with its share at planInputPartitions, so the
-  // cluster-wide aggregate honors the configured rate no matter how Spark
-  // spreads the partitions over executors — the per-JVM-singleton model's
-  // `rate × executors` aggregate is gone (SURVEY §7 hard part b).
-  // Reference: 429-aware shared throttling, utils.go:35-38,
-  // readme.MD:99-104.
-  private val client = {
-    val options = new CaseInsensitiveStringMap(props.asJava)
-    val src = ConnectorDefs.all(options.get("connector"))
-    graft.core.Connector.transportShare(src, new JdkHttpClient(),
-      part.shareIndex, part.nShares)
-  }
-
-  private val pages: Iterator[graft.sources.Page] = {
-    val base = HttpScan.buildStream(props)
+  /** This range's pages. The standard transport stack (retry OUTSIDE
+    * pacing, so every physical attempt draws a token) paces within THIS
+    * PARTITION'S SHARE of the connector budget (requestsPerSec / nShares),
+    * so the cluster-wide aggregate honors the configured rate no matter how
+    * Spark spreads the partitions over executors (SURVEY §7 hard part b;
+    * reference: 429-aware shared throttling, utils.go:35-38).
+    */
+  def pages(table: HttpTable): Iterator[Page] = {
+    val base = table.stream
     val stream = base.pagination match {
-      case off: Pagination.Offset if part.count >= 0 =>
+      case off: Pagination.Offset if count >= 0 =>
         // re-anchor the offset loop at this partition's range
         val anchored = new Pagination {
           override def first(b: graft.sources.HttpRequest) =
-            b.withParam(off.startParam, part.startOffset.toString)
-              .withParam(off.numParam, off.num.toString)
-          override def next(b: graft.sources.HttpRequest, last: graft.sources.Page) =
-            off.next(b, last)
+            b.withParam(off.startParam, startOffset.toString).withParam(off.numParam, off.num.toString)
+          override def next(b: graft.sources.HttpRequest, last: Page) = off.next(b, last)
         }
-        base.copy(pagination = anchored,
-          maxPages = (part.count + off.num - 1) / off.num)
+        base.copy(pagination = anchored, maxPages = (count + off.num - 1) / off.num)
       case _ => base
     }
-    stream.pages(client)
+    stream.pages(Connector.transportShare(table.src, table.client, shareIndex, nShares))
   }
-  private var page: graft.sources.Page = _
+}
+
+final class HttpReaderFactory(readSchema: StructType, table: HttpTable) extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = partition match {
+    case p: HttpPartition => new HttpPartitionReader(readSchema, p.pages(table))
+    case p: HttpStreamPartition => new HttpStreamPartitionReader(readSchema, table, p)
+  }
+}
+
+/** The page→row loop of every `graft-http` read. Each record reaches Spark's
+  * own JSON row parser once, as its slice of the page's UTF-8 bytes, with the
+  * PRUNED schema: unprojected fields are never materialized. Bad records
+  * follow the JSON source's PERMISSIVE mode: a declared field that is
+  * missing or does not convert reads as null, and the rest of the record is
+  * kept. [[keep]] lets a reader skip parsed records.
+  */
+class HttpPartitionReader(readSchema: StructType, pages: Iterator[Page])
+    extends PartitionReader[InternalRow] {
+
+  private val parser = {
+    val options = new JSONOptions(Map.empty[String, String], "UTC")
+    val raw = new JacksonParser(readSchema, options, allowArrayAsStructs = false)
+    val create = CreateJacksonParser.utf8String _
+    new FailureSafeParser[UTF8String](raw.parse(_, create, identity[UTF8String]),
+      PermissiveMode, readSchema, options.columnNameOfCorruptRecord)
+  }
+
+  private var page: Page = _
   private var i = 0
-
-  // Spark's own JSON row parser, with the PRUNED schema: unprojected fields
-  // are never materialized. Each record reaches it as its slice of the
-  // page's UTF-8 bytes.
-  private val parser = new JacksonParser(readSchema,
-    new JSONOptions(Map.empty[String, String], "UTC"), allowArrayAsStructs = false)
-  private val createParser = CreateJacksonParser.utf8String _
-
   private var current: InternalRow = _
 
+  /** Whether to return `row`, parsed from record `i` of `page`. */
+  protected def keep(row: InternalRow, page: Page, i: Int): Boolean = true
+
+  // loop, not self-recursion: a long run of skipped records must not grow
+  // the stack. The parser builds a new row per record, so none is copied.
   override def next(): Boolean = {
-    while (page == null || i == page.size) {
-      if (!pages.hasNext) return false
-      page = pages.next()
-      i = 0
+    while (true) {
+      while (page == null || i == page.size) {
+        if (!pages.hasNext) return false
+        page = pages.next()
+        i = 0
+      }
+      val rows = parser.parse(UTF8String.fromBytes(page.data, page.offset(i), page.length(i)))
+      i += 1
+      if (rows.hasNext) {
+        val row = rows.next()
+        if (keep(row, page, i - 1)) { current = row; return true }
+      }
     }
-    val rows = parser.parse(UTF8String.fromBytes(page.data, page.offset(i), page.length(i)),
-      createParser, (s: UTF8String) => s)
-    i += 1
-    if (rows.isEmpty) next()
-    else { current = rows.head.copy(); true }
+    false
   }
 
   override def get(): InternalRow = current

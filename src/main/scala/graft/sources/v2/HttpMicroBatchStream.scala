@@ -2,19 +2,13 @@ package graft.sources.v2
 
 import java.time.Instant
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JacksonParser, JSONOptions}
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.types.{StringType, StructType}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
-import graft.connectors.ConnectorDefs
-import graft.core.Json
-import graft.sources.JdkHttpClient
+import graft.core.{Connector, Json}
+import graft.sources.Page
 
 /** Continuous incremental sync as Structured Streaming: each micro-batch is
   * one cursor window `[start.To, end.To)` of the connector's incremental
@@ -43,8 +37,15 @@ import graft.sources.JdkHttpClient
   *    every trigger forever (use the batch read surface for cursorless
   *    data).
   */
-final class HttpMicroBatchStream(readSchema: StructType, props: Map[String, String],
-    cursorField: String) extends MicroBatchStream with SupportsAdmissionControl {
+final class HttpMicroBatchStream(readSchema: StructType, table: HttpTable)
+    extends MicroBatchStream with SupportsAdmissionControl {
+
+  // Streaming REQUIRES a cursor: without iterateBy every window would
+  // re-emit the entire stream on every trigger (unbounded duplication) —
+  // fail at planning, like the batch path's unknown-connector error.
+  require(table.sd.iterateBy.isDefined,
+    s"stream '${table.sd.name}' of connector '${table.src.name}' declares no iterateBy cursor; " +
+      "micro-batch streaming needs one to window the sync")
 
   private def parse(s: String): Instant = Instant.parse(s)
 
@@ -52,11 +53,14 @@ final class HttpMicroBatchStream(readSchema: StructType, props: Map[String, Stri
     * cursor window, so a query restarted after a long idle period (or a
     * first sync against years of history) drains the backlog in bounded
     * windows instead of one giant fetch — Spark keeps scheduling batches
-    * until the offset catches up to the clock. Unset = unbounded windows.
+    * until the offset catches up to the clock. Unset = unbounded windows;
+    * a cap of 0 or less would never advance the stream, so it is rejected.
     */
-  private val maxWindowSec: Option[Long] = props.get("maxwindowseconds").map(_.toLong)
+  private val maxWindowSec: Option[Long] = table.options.get("maxwindowseconds").map(_.toLong)
+  require(maxWindowSec.forall(_ > 0),
+    s"option 'maxWindowSeconds' must be positive, got ${maxWindowSec.getOrElse("")}")
 
-  private val initialTo: String = props.get("state").map(Json.parse)
+  private val initialTo: String = table.state.map(Json.parse)
     .flatMap(n => Option(n.get("To")).map(_.asText))
     .getOrElse("1970-01-01T00:00:00Z")
 
@@ -69,12 +73,11 @@ final class HttpMicroBatchStream(readSchema: StructType, props: Map[String, Stri
     hi
   }
 
+  private def now(): Instant = table.options.get("nowoverride").map(parse).getOrElse(Instant.now())
+
   override def initialOffset(): Offset = CursorOffset(initialTo)
 
-  override def latestOffset(): Offset = {
-    val now = props.get("nowoverride").map(parse).getOrElse(Instant.now())
-    CursorOffset(advance(now).toString)
-  }
+  override def latestOffset(): Offset = CursorOffset(advance(now()).toString)
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
@@ -89,10 +92,10 @@ final class HttpMicroBatchStream(readSchema: StructType, props: Map[String, Stri
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = parse(start.asInstanceOf[CursorOffset].to)
-    val now = props.get("nowoverride").map(parse).getOrElse(Instant.now())
+    val n = now()
     val end = maxWindowSec match {
-      case Some(cap) if now.isAfter(s.plusSeconds(cap)) => s.plusSeconds(cap)
-      case _ => now
+      case Some(cap) if n.isAfter(s.plusSeconds(cap)) => s.plusSeconds(cap)
+      case _ => n
     }
     val eff = if (end.isBefore(s)) s else end
     CursorOffset(advance(eff).toString)
@@ -112,8 +115,7 @@ final class HttpMicroBatchStream(readSchema: StructType, props: Map[String, Stri
     else Array(HttpStreamPartition(s, e))
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new HttpStreamReaderFactory(readSchema, props, cursorField)
+  override def createReaderFactory(): PartitionReaderFactory = new HttpReaderFactory(readSchema, table)
 
   override def stop(): Unit = ()
 }
@@ -125,25 +127,21 @@ final case class CursorOffset(to: String) extends Offset {
 
 final case class HttpStreamPartition(startTo: String, endTo: String) extends InputPartition
 
-final class HttpStreamReaderFactory(readSchema: StructType, props: Map[String, String],
-    cursorField: String) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[HttpStreamPartition]
-    new HttpStreamPartitionReader(readSchema, props, p, cursorField)
-  }
-}
-
-/** One micro-batch window: the standard transport stack (per-JVM budget,
-  * retry outside pacing — same as the batch partition reader), the runner's
-  * request issued with state `{"To": start}`, and an exact record-level
-  * window filter on the cursor field. Each record is parsed ONCE: the
-  * cursor is read from the parsed row when the cursor column survives
-  * projection (the common case), falling back to a raw-JSON extraction
-  * only when it was pruned or is nested.
+/** One micro-batch window: the shared page→row loop over the runner's
+  * request issued with state `{"To": start}` (standard transport stack:
+  * per-JVM budget, retry outside pacing), plus an exact record-level window
+  * filter on the cursor field. The cursor is read from the parsed row when
+  * the cursor column survives projection (the common case), falling back to
+  * a raw-JSON extraction only when it was pruned or is nested.
   */
-final class HttpStreamPartitionReader(readSchema: StructType, props: Map[String, String],
-    part: HttpStreamPartition, cursorField: String)
-    extends PartitionReader[InternalRow] with org.apache.spark.internal.Logging {
+final class HttpStreamPartitionReader(readSchema: StructType, table: HttpTable,
+    part: HttpStreamPartition)
+    extends HttpPartitionReader(readSchema,
+      table.copy(state = Some(s"""{"To":"${part.startTo}"}""")).stream
+        .pages(Connector.transport(table.src, table.client)))
+    with org.apache.spark.internal.Logging {
+
+  private val cursorField = table.sd.iterateBy.get.dotted
 
   // Records dropped for a MISSING/UNPARSEABLE cursor are by-design data loss
   // on this path (class doc) — count and log them so a transient upstream
@@ -151,12 +149,6 @@ final class HttpStreamPartitionReader(readSchema: StructType, props: Map[String,
   // silent. Out-of-window records are normal (the API returned the tail)
   // and are not counted.
   private var droppedNoCursor: Long = 0L
-
-  private val client = {
-    val options = new CaseInsensitiveStringMap(props.asJava)
-    val src = ConnectorDefs.all(options.get("connector"))
-    graft.core.Connector.transport(src, new JdkHttpClient())
-  }
 
   private def parseInstant(s: String): Option[Instant] =
     scala.util.Try(Instant.parse(s)).toOption
@@ -184,51 +176,18 @@ final class HttpStreamPartitionReader(readSchema: StructType, props: Map[String,
     Option(c).filterNot(_.isNull).map(_.asText).flatMap(parseInstant)
   }
 
-  private val pages: Iterator[graft.sources.Page] = {
-    val stateProps = props + ("state" -> s"""{"To":"${part.startTo}"}""")
-    HttpScan.buildStream(stateProps).pages(client)
-  }
-  private var page: graft.sources.Page = _
-  private var i = 0
-
-  // Spark's own JSON row parser; each record reaches it as its slice of
-  // the page's UTF-8 bytes, as in the batch partition reader
-  private val parser = new JacksonParser(readSchema,
-    new JSONOptions(Map.empty[String, String], "UTC"), allowArrayAsStructs = false)
-  private val createParser = CreateJacksonParser.utf8String _
-
-  private var current: InternalRow = _
-
-  // loop, not self-recursion: a long run of skipped records (dropped or
-  // out-of-window) must not grow the stack
-  override def next(): Boolean = {
-    while (true) {
-      while (page == null || i == page.size) {
-        if (!pages.hasNext) return false
-        page = pages.next()
-        i = 0
-      }
-      val rows = parser.parse(UTF8String.fromBytes(page.data, page.offset(i), page.length(i)),
-        createParser, (s: UTF8String) => s)
-      i += 1
-      if (rows.nonEmpty) {
-        val row = rows.head
-        val cursor = cursorIdx match {
-          case Some(c) if !row.isNullAt(c) => parseInstant(row.getUTF8String(c).toString)
-          case Some(_) => None
-          case None => cursorFromRaw(page.record(i - 1))
-        }
-        cursor match {
-          case Some(t) if inWindow(t) => current = row.copy(); return true
-          case Some(_) => () // outside window: the API returned the tail; expected
-          case None => droppedNoCursor += 1 // no usable cursor: dropped (see class doc)
-        }
-      }
+  override protected def keep(row: InternalRow, page: Page, i: Int): Boolean = {
+    val cursor = cursorIdx match {
+      case Some(c) if !row.isNullAt(c) => parseInstant(row.getUTF8String(c).toString)
+      case Some(_) => None
+      case None => cursorFromRaw(page.record(i))
     }
-    false
+    cursor match {
+      case Some(t) => inWindow(t) // outside the window: the API returned the tail; expected
+      case None => droppedNoCursor += 1; false // no usable cursor: dropped (see class doc)
+    }
   }
 
-  override def get(): InternalRow = current
   override def close(): Unit =
     if (droppedNoCursor > 0) {
       logWarning(s"micro-batch window [${part.startTo}, ${part.endTo}): dropped " +

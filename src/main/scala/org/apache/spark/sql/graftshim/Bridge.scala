@@ -1,8 +1,11 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{ColumnNodeExpression, ExpressionColumnNode}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 /** Bridge between the public `Column` API and Catalyst `Expression`s.
   *
@@ -24,4 +27,10 @@ object Bridge {
     * during analysis.
     */
   def childExpr(c: Column): Expression = ColumnNodeExpression(c.node)
+
+  /** A DataSource V2 table built in code, as a DataFrame: the same relation
+    * `spark.read.format(...).load()` plans, with no options.
+    */
+  def relation(spark: SparkSession, table: Table): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(spark, DataSourceV2Relation.create(table, None, None))
 }

@@ -25,6 +25,19 @@ object PageCounter {
   val pages = new java.util.concurrent.atomic.AtomicInteger(0)
 }
 
+/** JVM-global log of the requests a [[LoggingClient]] copy issued. */
+object RequestLog {
+  val requests = new java.util.concurrent.ConcurrentLinkedQueue[HttpRequest]()
+}
+
+/** Answers every request with `body`, logging it in [[RequestLog]]. */
+final class LoggingClient(body: String) extends HttpClient {
+  override def get(req: HttpRequest): HttpResponse = {
+    RequestLog.requests.add(req)
+    HttpResponse(200, body, Map.empty)
+  }
+}
+
 /** Serves `totalPages` offset pages of `perPage` records, generated lazily
   * per request — nothing is ever held beyond the current page.
   */
@@ -142,6 +155,31 @@ class ConnectorDefsSpec extends AnyFunSuite {
     assert(PageCounter.pages.get() == 0, "DataFrame construction fetched pages eagerly")
     assert(df.count() == totalPages.toLong * perPage - 1) // short last page ends the chain
     assert(PageCounter.pages.get() == totalPages) // one pass, inside the task
+  }
+
+  test("readDataFrames is the graft-http relation: pruned scan, one partition, lazy") {
+    val spark = graft.SparkFixture.spark
+    PageCounter.pages.set(0)
+    val df = Connector.readDataFrames(spark, ConnectorDefs.sitoo, RunConfig.Empty,
+      new PagedStubClient(3, 10))("products").select("title")
+    assert(PageCounter.pages.get() == 0, "DataFrame construction fetched pages")
+    val leaves = df.queryExecution.executedPlan.collectLeaves()
+    assert(leaves.size == 1 && leaves.head.toString.contains("graft-http"), leaves)
+    assert(leaves.head.schema.fieldNames.toSeq == Seq("title"))
+    assert(df.rdd.getNumPartitions == 1)
+    assert(df.collect().map(_.getString(0)).toSet == (0 until 29).map(i => s"P$i").toSet)
+  }
+
+  test("readDataFrames: the stream's rc state reaches the request (shopify orders → updated_at_min)") {
+    val spark = graft.SparkFixture.spark
+    RequestLog.requests.clear()
+    val rc = RunConfig("", None, Map("orders" -> Json.parse("""{"To":"2024-03-01T00:00:00Z"}""")), None)
+    val df = Connector.readDataFrames(spark, ConnectorDefs.all("shopify"), rc,
+      new LoggingClient("""{"orders":[{"id":7,"updated_at":"2024-03-02T00:00:00Z"}]}"""))("orders")
+    assert(df.collect().map(_.getLong(0)).toList == List(7L))
+    val mins = RequestLog.requests.toArray(Array.empty[HttpRequest]).toList
+      .map(_.params.toMap.get("updated_at_min"))
+    assert(mins == List(Some("2024-03-01T00:00:00Z")))
   }
 
   test("db stream (S11): JDBC read with declared projection and partitioned parallel scan") {

@@ -39,10 +39,20 @@ class HttpDataSourceSpec extends AnyFunSuite {
       ex.getResponseBody.write(body)
       ex.close()
     })
+    s.createContext("/bad/", ex => {
+      val body = graft.connectors.ConnectorDefsSpec.BadRecordsPage.getBytes(StandardCharsets.UTF_8)
+      ex.sendResponseHeaders(200, body.length)
+      ex.getResponseBody.write(body)
+      ex.close()
+    })
     s.start()
     s
   }
   private def baseUrl = s"http://127.0.0.1:${server.getAddress.getPort}"
+
+  /** The table `format("graft-http")` resolves for these options. */
+  private def table(options: (String, String)*): HttpTable =
+    new HttpTableProvider().getTable(null, Array.empty, options.toMap.asJava).asInstanceOf[HttpTable]
 
   private def read() = spark.read.format("graft-http")
     .option("connector", "sitoo")
@@ -74,6 +84,19 @@ class HttpDataSourceSpec extends AnyFunSuite {
     assert(df.select("productid").distinct().count() == TOTAL) // ranges don't overlap
   }
 
+  test("pagesPerPartition too large for an Int page span still reads every record") {
+    // num * pagesPerPartition = 3e9 wrapped negative as an Int product and
+    // planned zero partitions: an empty read with no error
+    val df = read().option("total", TOTAL.toString).option("pagesPerPartition", "300000000").load()
+    assert(df.count() == TOTAL)
+  }
+
+  test("bad records read as null fields, as in readDataFrames (PERMISSIVE)") {
+    val df = spark.read.format("graft-http").option("connector", "sitoo").option("stream", "products")
+      .option("config", s"""{"api_url":"$baseUrl/bad"}""").load()
+    assert(graft.connectors.ConnectorDefsSpec.rowsOf(df) == graft.connectors.ConnectorDefsSpec.BadRecordRows)
+  }
+
   test("option keys are case-insensitive end to end (.option(\"Total\") still splits)") {
     // previously Total/PagesPerPartition were looked up case-sensitively in
     // planInputPartitions and silently fell back to one sequential partition
@@ -85,9 +108,7 @@ class HttpDataSourceSpec extends AnyFunSuite {
   test("cursor filter pushdown: predicate becomes incremental request state (P3)") {
     import org.apache.spark.sql.sources.GreaterThan
     // builder-level: shopify orders' iterateBy column is updated_at
-    val props = Map("connector" -> "shopify", "stream" -> "orders")
-    val builder = new HttpScanBuilder(
-      graft.connectors.ConnectorDefs.shopifyOrderSchema, props, Some("updated_at"))
+    val builder = new HttpScanBuilder(table("connector" -> "shopify", "stream" -> "orders"))
     val fs: Array[org.apache.spark.sql.sources.Filter] =
       Array(GreaterThan("updated_at", "2024-03-01T00:00:00Z"), GreaterThan("id", 5L))
     val residual = builder.pushFilters(fs)
@@ -95,7 +116,7 @@ class HttpDataSourceSpec extends AnyFunSuite {
     assert(builder.pushedFilters().toSeq == Seq(GreaterThan("updated_at", "2024-03-01T00:00:00Z")))
     // the pushed bound reaches the issued request as updated_at_min
     val scan = builder.build().asInstanceOf[HttpScan]
-    val params = HttpScan.buildStream(scan.props).base.params.toMap
+    val params = scan.table.stream.base.params.toMap
     assert(params("updated_at_min") == "2024-03-01T00:00:00Z")
   }
 
@@ -110,48 +131,42 @@ class HttpDataSourceSpec extends AnyFunSuite {
     }
     assert(scans.nonEmpty)
     val pushed = scans.head.scan.asInstanceOf[HttpScan]
-    assert(HttpScan.buildStream(pushed.props).base.params.toMap
+    assert(pushed.table.stream.base.params.toMap
       .get("updated_at_min").contains("2024-03-01T00:00:00Z"))
   }
 
   test("pushdown safety: non-RFC3339 bounds stay engine-side; user state never widens") {
     import org.apache.spark.sql.sources.GreaterThan
-    val schema = graft.connectors.ConnectorDefs.shopifyOrderSchema
     // "2024-03-01" (no time) can't reach Instant.parse — must not be pushed
-    val b1 = new HttpScanBuilder(schema, Map("connector" -> "shopify", "stream" -> "orders"),
-      Some("updated_at"))
+    val b1 = new HttpScanBuilder(table("connector" -> "shopify", "stream" -> "orders"))
     b1.pushFilters(Array(GreaterThan("updated_at", "2024-03-01")))
     assert(b1.pushedFilters().isEmpty)
     // an explicit later state option wins over an earlier pushed bound:
     // a filter may only narrow the fetch, never widen it
-    val props = Map("connector" -> "shopify", "stream" -> "orders",
-      "state" -> """{"To":"2026-01-01T00:00:00Z"}""")
-    val b2 = new HttpScanBuilder(schema, props, Some("updated_at"))
+    val b2 = new HttpScanBuilder(table("connector" -> "shopify", "stream" -> "orders",
+      "state" -> """{"To":"2026-01-01T00:00:00Z"}"""))
     b2.pushFilters(Array(GreaterThan("updated_at", "2020-01-01T00:00:00Z")))
-    val params = HttpScan.buildStream(b2.build().asInstanceOf[HttpScan].props).base.params.toMap
+    val params = b2.build().asInstanceOf[HttpScan].table.stream.base.params.toMap
     assert(params("updated_at_min") == "2026-01-01T00:00:00Z")
   }
 
   test("pushdown bounds compare chronologically, not lexicographically") {
     import org.apache.spark.sql.sources.GreaterThan
-    val schema = graft.connectors.ConnectorDefs.shopifyOrderSchema
     // State with fractional seconds is chronologically LATER than the pushed
     // bound but lexicographically EARLIER ('.': 0x2E < 'Z': 0x5A). The state
     // must win untouched — a lexicographic max would replace it with the
     // chronologically-earlier bound and widen the fetch window.
-    val props = Map("connector" -> "shopify", "stream" -> "orders",
-      "state" -> """{"To":"2024-03-01T00:00:00.5Z"}""")
-    val b = new HttpScanBuilder(schema, props, Some("updated_at"))
+    val b = new HttpScanBuilder(table("connector" -> "shopify", "stream" -> "orders",
+      "state" -> """{"To":"2024-03-01T00:00:00.5Z"}"""))
     b.pushFilters(Array(GreaterThan("updated_at", "2024-03-01T00:00:00Z")))
-    assert(b.build().asInstanceOf[HttpScan].props("state") == """{"To":"2024-03-01T00:00:00.5Z"}""")
+    assert(b.build().asInstanceOf[HttpScan].table.state.contains("""{"To":"2024-03-01T00:00:00.5Z"}"""))
     // A non-Z offset bound parses on JDK 12+; the max is taken over Instants
     // and the emitted To is normalized to the Z form the runners emit.
-    val b2 = new HttpScanBuilder(schema,
-      Map("connector" -> "shopify", "stream" -> "orders"), Some("updated_at"))
+    val b2 = new HttpScanBuilder(table("connector" -> "shopify", "stream" -> "orders"))
     b2.pushFilters(Array(
       GreaterThan("updated_at", "2024-03-01T09:00:00+10:00"),  // 2024-02-29T23:00:00Z
       GreaterThan("updated_at", "2024-03-01T01:00:00Z")))      // later, though lex-smaller
-    assert(b2.build().asInstanceOf[HttpScan].props("state") == """{"To":"2024-03-01T01:00:00Z"}""")
+    assert(b2.build().asInstanceOf[HttpScan].table.state.contains("""{"To":"2024-03-01T01:00:00Z"}"""))
   }
 
   test("partition readers pace within their SHARE of the cluster-wide connector budget") {
@@ -371,16 +386,32 @@ class HttpDataSourceSpec extends AnyFunSuite {
   test("micro-batch streaming without an iterateBy cursor fails fast at planning") {
     // sitoo products declares no cursor: every window would re-emit the
     // whole stream on every trigger — must be rejected, not silently looped
-    val scan = new HttpScanBuilder(graft.connectors.ConnectorDefs.sitooProductSchema,
-      Map("connector" -> "sitoo", "stream" -> "products"), None).build()
+    val scan = new HttpScanBuilder(table("connector" -> "sitoo", "stream" -> "products")).build()
     val e = intercept[IllegalArgumentException](scan.toMicroBatchStream("/tmp/ckpt"))
     assert(e.getMessage.contains("iterateBy"))
   }
 
+  test("micro-batch streaming with maxWindowSeconds <= 0 fails fast at planning") {
+    // a window cap of 0 or less never advances the offset: every batch
+    // would be empty and the query would stall
+    for (cap <- Seq("0", "-60")) {
+      val scan = new HttpScanBuilder(table("connector" -> "shopify", "stream" -> "orders",
+        "maxWindowSeconds" -> cap)).build()
+      val e = intercept[IllegalArgumentException](scan.toMicroBatchStream("/tmp/ckpt"))
+      assert(e.getMessage.contains("maxWindowSeconds"), e.getMessage)
+    }
+  }
+
   test("unknown connector/stream fail fast with the known set") {
-    val e = intercept[Exception](spark.read.format("graft-http")
-      .option("connector", "nope").load())
-    assert(e.getMessage.contains("unknown connector"))
+    graft.connectors.ConnectorDefs.register(graft.core.SourceDef(name = "no-http-test",
+      manualStreams = Seq(graft.core.StreamDef("pushed", graft.connectors.ConnectorDefs.sitooProductSchema))))
+    for ((options, message) <- Seq(
+        Map("connector" -> "nope") -> "unknown connector",
+        Map("connector" -> "sitoo", "stream" -> "nope") -> "has no stream 'nope'",
+        Map("connector" -> "no-http-test") -> "has no stream")) {
+      val e = intercept[IllegalArgumentException](spark.read.format("graft-http").options(options).load())
+      assert(e.getMessage.contains(message), e.getMessage)
+    }
   }
 
   test("CursorOffset JSON is byte-identical to the tree-written form and round-trips") {
