@@ -56,7 +56,7 @@ object AnnIngestBench {
     Bench.calibrationProbe() // discard: probe-loop JIT warmup
     val probeBefore = Bench.settledProbe()
     val ioBefore = Bench.settledIoProbe()
-    val meter = org.apache.spark.graftshim.TaskInputBytes.install(spark.sparkContext)
+    val forensics = org.apache.spark.graftshim.StageForensics.install(spark.sparkContext)
     def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
 
     val emb = spark.read.parquet(s"$bigDir/embeddings.parquet")
@@ -79,10 +79,11 @@ object AnnIngestBench {
 
     final case class Timed(sec: Double, bytes: Long)
     def timed(work: => Unit): Timed = {
-      val b0 = meter.snapshot(spark.sparkContext)
+      val s0 = forensics.snapshot(spark.sparkContext)
       val t0 = System.nanoTime()
       work
-      Timed((System.nanoTime() - t0) / 1e9, meter.snapshot(spark.sparkContext) - b0)
+      Timed((System.nanoTime() - t0) / 1e9,
+        forensics.since(spark.sparkContext, s0).getOrElse("input_bytes", 0L))
     }
 
     // base index: quantizer frozen on the base corpus (the production

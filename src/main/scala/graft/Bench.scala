@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.graftshim.StageForensics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** The benched action: a noop-format write. `count()` plans
@@ -27,32 +28,70 @@ object Bench {
       case _ => ()
     }
 
-  /** Untimed warmup pass that doubles as the BYTE-ACCOUNTING pass: runs
-    * every query once (absorbing codegen/classloading cold costs before the
-    * timed pass, as always) while a task-metrics listener attributes total
-    * input bytes read — eager sub-jobs included — to the query that ran
-    * them. Bytes are a property of the DATA SHAPE, not the host, so one
-    * cold pass is the measurement; the artifact's `bytes` field is what
-    * lets the growth gate adjudicate a query's time growth against what it
-    * actually read instead of against the nominal tier ratio
-    * (tools/roundcheck.py consumes it). clearCache between queries so a
-    * sub-plan persisted by an earlier query can never satisfy a later
-    * query's scan and silently under-count its bytes.
+  /** One gate's timed reps: the min and median over its SUCCESSFUL reps
+    * (-1 for both when every rep failed), and one forensics row per rep,
+    * failed reps included.
     */
-  def warmupWithBytes(spark: SparkSession, dir: String, action: DataFrame => Unit,
-      qs: Seq[(String, (SparkSession, String) => DataFrame)]): Map[String, Long] = {
-    val meter = org.apache.spark.graftshim.TaskInputBytes.install(spark.sparkContext)
-    qs.map { case (name, fn) =>
-      val before = meter.snapshot(spark.sparkContext)
-      try {
-        val df = fn(spark, dir)
-        action(df)
-        releaseCheckpoints(df)
-      } catch { case _: Throwable => () }
-      spark.catalog.clearCache()
-      name -> (meter.snapshot(spark.sparkContext) - before)
-    }.toMap
+  final case class GateTiming(name: String, min: Double, median: Double, reps: Seq[Rep])
+
+  /** One rep: wall seconds (-1 when it failed), its [[StageForensics]]
+    * counter deltas, and the Spark jobs it ran.
+    */
+  final case class Rep(sec: Double, stage: Map[String, Long], jobs: Seq[StageForensics.JobSpan])
+
+  /** The harness's one rep loop. Each rep builds the gate and
+    * [[materialize]]s it inside the timed region; releasing its
+    * checkpoints, `clearCache` and the forensics snapshots sit outside it
+    * (a snapshot drains the listener bus, which must not bill into the
+    * rep's wall time), so dead caches/checkpoints from one rep never sit
+    * in storage memory under later timings. Min over successful reps only:
+    * a fast-failing rep must not shadow a real slow success with a
+    * near-zero time. Min is the steady-state cost; the median exposes the
+    * spread a contended host injects.
+    */
+  def timeGates(spark: SparkSession, dir: String,
+      gates: Seq[(String, (SparkSession, String) => DataFrame)], reps: Int): Seq[GateTiming] = {
+    val sc = spark.sparkContext
+    val forensics = StageForensics.install(sc)
+    gates.map { case (name, fn) =>
+      val rows = (1 to reps).map { i =>
+        val s0 = forensics.snapshot(sc)
+        forensics.takeJobs(sc) // drop jobs that ran before this rep
+        val t0 = System.nanoTime()
+        val built =
+          try { val df = fn(spark, dir); materialize(df); Some(df) }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name rep $i failed: $e"); None }
+        val t = (System.nanoTime() - t0) / 1e9
+        built.foreach(releaseCheckpoints)
+        spark.catalog.clearCache()
+        Rep(if (built.isDefined) t else -1.0, forensics.since(sc, s0), forensics.takeJobs(sc))
+      }
+      val ok = rows.map(_.sec).filter(_ >= 0).sorted
+      if (ok.isEmpty) GateTiming(name, -1.0, -1.0, rows)
+      else GateTiming(name, ok.head, (ok((ok.size - 1) / 2) + ok(ok.size / 2)) / 2, rows)
+    }
   }
+
+  /** Per-gate forensics arrays for an artifact: [[ForensicsKeys]] of every rep. */
+  def forensicsOf(pass: Seq[GateTiming]): Map[String, Seq[Seq[Long]]] =
+    pass.map(g => g.name -> g.reps.map(r => ForensicsKeys.map(r.stage.getOrElse(_, 0L)))).toMap
+
+  /** Untimed warmup pass that doubles as the BYTE-ACCOUNTING pass: one rep
+    * of every query (absorbing codegen/classloading cold costs before the
+    * timed pass) whose `input_bytes` delta — eager sub-jobs included — is
+    * the query's byte count. Bytes are a property of the DATA SHAPE, not
+    * the host, so one cold pass is the measurement; the artifact's `bytes`
+    * field is what lets the growth gate adjudicate a query's time growth
+    * against what it actually read instead of against the nominal tier
+    * ratio (tools/roundcheck.py consumes it). The rep loop clears the cache
+    * between queries, so a sub-plan persisted by an earlier query can never
+    * satisfy a later query's scan and silently under-count its bytes.
+    */
+  def warmupWithBytes(spark: SparkSession, dir: String,
+      qs: Seq[(String, (SparkSession, String) => DataFrame)]): Map[String, Long] =
+    timeGates(spark, dir, qs, 1)
+      .map(g => g.name -> g.reps.head.stage.getOrElse("input_bytes", 0L)).toMap
 
   def bytesJson(bytes: Map[String, Long]): String =
     bytes.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + v }
@@ -650,13 +689,9 @@ object Bench {
     val budgetSec = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_SEC")
       .flatMap(_.toDoubleOption).filter(_ > 0).getOrElse(1020.0)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // "noop" (default) is the honest action; "count" reproduces the
-    // round-1..5 methodology (ColumnPruning deletes map-only projections)
-    // SOLELY for cross-round comparison — never commit a count-action run
-    // as a round artifact.
-    val actionName = sys.env.getOrElse("SPARK_GRAFT_BENCH_ACTION", "noop")
-    val action: DataFrame => Unit =
-      if (actionName == "count") df => { df.count(); () } else materialize
+    // The benched action, stamped into the artifact and the byte-cache key:
+    // always the noop write (see materialize).
+    val actionName = "noop"
     // Timed reps per query (min reported). 2 is the round-3+ default; 3
     // tightens the min for the many sub-second queries whose 20-40% run
     // variance otherwise dominates cross-tier comparisons. The value is
@@ -716,7 +751,7 @@ object Bench {
         f"warmup skipped; rep 1 absorbs cold costs (elapsed ${elapsed()}%.0fs)")
     }
     val bytesRead = cached.getOrElse {
-      val b = warmupWithBytes(spark, sfDir, action, sortedQs)
+      val b = warmupWithBytes(spark, sfDir, sortedQs)
       if (cacheKey.nonEmpty) writeBytesCache(cacheKey, sfDir, actionName, b)
       System.err.println(f"[bench] warmup + byte pass done at ${elapsed()}%.0fs" +
         (if (cacheKey.nonEmpty) " (byte map cached for same-code same-data runs)" else ""))
@@ -733,40 +768,9 @@ object Bench {
     // Stage forensics per gate per rep (VERDICT r17 #3): stamped into the
     // artifact so a slow draw is adjudicable from the artifact alone —
     // byte/spill parity across reps with a cpu/run swing is measured
-    // weather; parity broken is a real change. Snapshots bracket the timed
-    // region from OUTSIDE it (snapshot drains the listener bus, which must
-    // not bill into the rep's wall time).
-    val forensics = org.apache.spark.graftshim.StageForensics.install(spark.sparkContext)
-    val stageReps = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Seq[Long]]]
-    def timedPass(repsThis: Int): Seq[(String, Double, Double)] = {
-      stageReps.clear() // the artifact carries the FINAL attempt's forensics
-      sortedQs.map { case (name, fn) =>
-        // min over SUCCESSFUL reps only — a fast-failing rep must not shadow
-        // a real slow success with a near-zero time; all-failed → -1 marker.
-        val times = (1 to repsThis).flatMap { _ =>
-          val s0 = forensics.snapshot(spark.sparkContext)
-          val t0 = System.nanoTime()
-          val built =
-            try { val df = fn(spark, sfDir); action(df); Some(df) }
-            catch { case _: Throwable => None }
-          val t = (System.nanoTime() - t0) / 1e9
-          // Outside the timed region: dead caches/checkpoints from this rep
-          // would otherwise sit in storage memory under later timings.
-          built.foreach(releaseCheckpoints)
-          spark.catalog.clearCache()
-          val s1 = forensics.snapshot(spark.sparkContext)
-          stageReps(name) = stageReps.getOrElse(name, Vector.empty) :+
-            ForensicsKeys.map(k => s1.getOrElse(k, 0L) - s0.getOrElse(k, 0L))
-          if (built.isDefined) Some(t) else None
-        }
-        // min = steady-state cost; median exposes the spread a contended host
-        // injects (min alone can hide it when one rep got lucky).
-        val med =
-          if (times.isEmpty) -1.0
-          else { val s = times.sorted; (s((s.size - 1) / 2) + s(s.size / 2)) / 2 }
-        (name, if (times.isEmpty) -1.0 else times.min, med)
-      }
-    }
+    // weather; parity broken is a real change. The artifact carries the
+    // FINAL attempt's forensics.
+    var lastPass = Seq.empty[GateTiming]
     // Larger-tier reference for the per-attempt inversion gate. Resolved
     // once (the committed artifact doesn't change mid-run); None when
     // absent or when it IS this run's SF (tier runs referencing themselves).
@@ -800,7 +804,10 @@ object Bench {
       () => elapsed(),
       (pm, mw) => quietOrWeather(pm, maxWaits = mw),
       () => settledProbe(),
-      repsThis => timedPass(repsThis),
+      repsThis => {
+        lastPass = timeGates(spark, sfDir, sortedQs, repsThis)
+        lastPass.map(g => (g.name, g.min, g.median))
+      },
       (res, pb, pa) => invRef match {
         case Some((_, _, refTimes, refProbe)) =>
           // Compare like host speeds: scale the (fast-weather) reference by
@@ -827,7 +834,7 @@ object Bench {
     // each differently.
     val json = artifactJson(outcome, actionName, bytesRead, sfDir,
       invRef.map(_._1), budgetSec, Some((ioBefore, settledIoProbe())),
-      ioLedger = ioQuietLedger(), stage = stageReps.toMap,
+      ioLedger = ioQuietLedger(), stage = forensicsOf(lastPass),
       bytesCached = cached.isDefined)
     // Truncation-proofing: the driver captures stdout's tail, which has
     // clipped the head of this (long) line in past rounds. Persist the full

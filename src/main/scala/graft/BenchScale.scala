@@ -264,12 +264,12 @@ object BenchScale {
     // packs — the relational/window/TPC-H shapes had no scale data point)
     val qs = SparkEntry.queries.view
       .filterKeys(k => !exclude.contains(k) && only.forall(_.contains(k))).toMap
+    val sortedQs = qs.toSeq.sortBy(_._1)
     // same methodology as Bench: untimed warmup (doubling as the per-query
     // byte-accounting pass — the tier artifact's `bytes` field is what lets
     // tools/roundcheck.py adjudicate growth against the data shape each
-    // query actually read), then min of 2 timed reps, clearCache between
-    val bytesRead = Bench.warmupWithBytes(spark, outDir, Bench.materialize,
-      qs.toSeq.sortBy(_._1))
+    // query actually read), then min of the timed reps, clearCache between
+    val bytesRead = Bench.warmupWithBytes(spark, outDir, sortedQs)
     spark.catalog.clearCache()
     // same env-tunable rep count as Bench (min reported; marker in JSON)
     val nReps = sys.env.get("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption)
@@ -282,59 +282,34 @@ object BenchScale {
     // either probe lands dirty, and (c) stamps the artifact
     // "contended":true if it never got a clean pair — which
     // tools/roundcheck.py then fails, so a polluted artifact cannot be
-    // committed silently.
+    // committed silently. Bench's acceptance loop with no wall-clock budget
+    // (so never degraded), 20 quiet waits and no inversion gate.
     val probeMax = sys.env.get("SPARK_GRAFT_PROBE_MAX").flatMap(_.toDoubleOption)
       .getOrElse(0.65)
     val maxAttempts = sys.env.get("SPARK_GRAFT_BENCH_ATTEMPTS").flatMap(_.toIntOption)
       .filter(_ >= 1).getOrElse(3)
     Bench.calibrationProbe() // discard: probe-loop JIT warmup
-    def quietProbe(): Bench.ProbeGate = Bench.quietOrWeather(probeMax, maxWaits = 20)
-    // per-gate per-rep stage forensics, stamped into the tier artifact
-    // (VERDICT r17 #3) — see Bench.ForensicsKeys for the adjudication story
-    val forensics = org.apache.spark.graftshim.StageForensics.install(spark.sparkContext)
-    val stageReps = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Seq[Long]]]
-    def timedPass(): Seq[(String, Double)] = {
-      stageReps.clear() // the artifact carries the FINAL attempt's forensics
-      qs.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val times = (1 to nReps).flatMap { _ =>
-          val s0 = forensics.snapshot(spark.sparkContext)
-          val t0 = System.nanoTime()
-          val built =
-            try { val df = fn(spark, outDir); Bench.materialize(df); Some(df) }
-            catch { case _: Throwable => None }
-          val t = (System.nanoTime() - t0) / 1e9
-          built.foreach(Bench.releaseCheckpoints)
-          spark.catalog.clearCache()
-          val s1 = forensics.snapshot(spark.sparkContext)
-          stageReps(name) = stageReps.getOrElse(name, Vector.empty) :+
-            Bench.ForensicsKeys.map(k => s1.getOrElse(k, 0L) - s0.getOrElse(k, 0L))
-          if (built.isDefined) Some(t) else None
-        }
-        name -> (if (times.isEmpty) -1.0 else times.min)
-      }
-    }
-    var attempt = 0
-    var probeBefore = 0.0
-    var probeAfter = 0.0
-    var probeLine = probeMax
-    var probeFloor = probeMax
-    var weather = false
-    var results: Seq[(String, Double)] = Seq.empty
-    var clean = false
     // IO weather bracket (non-gating — see Bench.ioProbe)
     val ioBefore = Bench.settledIoProbe()
-    while (!clean && attempt < maxAttempts) {
-      attempt += 1
-      val gate = quietProbe()
-      probeBefore = gate.probe; probeLine = gate.line; weather = gate.weather
-      probeFloor = gate.floor
-      results = timedPass()
-      probeAfter = Bench.settledProbe()
-      clean = Bench.passClean(probeBefore, probeAfter, probeLine, 0)
-      if (!clean) System.err.println(
-        s"[bench-scale] attempt $attempt contended (probes $probeBefore/$probeAfter > $probeLine)" +
-          (if (attempt < maxAttempts) " — retrying the whole timed pass" else " — giving up, artifact stamped contended"))
-    }
+    // per-gate per-rep stage forensics of the final attempt, stamped into
+    // the tier artifact (VERDICT r17 #3) — see Bench.ForensicsKeys
+    var lastPass = Seq.empty[Bench.GateTiming]
+    val t0 = System.nanoTime()
+    val o = Bench.runGated(
+      Bench.GatedConfig(nReps, maxAttempts, probeMax, budgetSec = Double.PositiveInfinity,
+        maxWaitsCap = 20),
+      () => (System.nanoTime() - t0) / 1e9,
+      (pm, mw) => Bench.quietOrWeather(pm, maxWaits = mw),
+      () => Bench.settledProbe(),
+      r => {
+        lastPass = Bench.timeGates(spark, outDir, sortedQs, r)
+        lastPass.map(g => (g.name, g.min, g.median))
+      },
+      (_, _, _) => (0, Nil))
+    if (!o.probesClean) System.err.println(
+      s"[bench-scale] attempt ${o.attempts} contended (probes ${o.probeBefore}/${o.probeAfter} " +
+        s"> ${o.probeLine}) — artifact stamped contended")
+    val results = o.results.map { case (n, v, _) => (n, v) }
     def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val qjson = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
@@ -350,13 +325,13 @@ object BenchScale {
     val absent = (SparkEntry.queries.keySet -- timed) ++ exclude
     val excl = absent.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fkeys = Bench.ForensicsKeys.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"metric":"$metric","value":${fmt(total)},"unit":"sec","reps":$nReps,"agg":"min","contended":${!clean},"attempts":$attempt,"weather":$weather,"probe_line":${fmt(probeLine)},"probe_floor":${fmt(probeFloor)},"calibration":{"before":${fmt(probeBefore)},"after":${fmt(probeAfter)}},"io_probe":${Bench.ioJson(ioBefore, Bench.settledIoProbe(), Bench.ioQuietLedger())},"scale":"${scaleReps}x-$srcDir","excluded":$excl,"queries":$qjson,"bytes":${Bench.bytesJson(bytesRead)},"forensics_keys":$fkeys,"forensics":${Bench.forensicsJson(stageReps.toMap)}}"""
+    val json = s"""{"metric":"$metric","value":${fmt(total)},"unit":"sec","reps":${o.repsUsed},"agg":"min","contended":${!o.probesClean},"attempts":${o.attempts},"weather":${o.weather},"probe_line":${fmt(o.probeLine)},"probe_floor":${fmt(o.probeFloor)},"calibration":{"before":${fmt(o.probeBefore)},"after":${fmt(o.probeAfter)}},"io_probe":${Bench.ioJson(ioBefore, Bench.settledIoProbe(), Bench.ioQuietLedger())},"scale":"${scaleReps}x-$srcDir","excluded":$excl,"queries":$qjson,"bytes":${Bench.bytesJson(bytesRead)},"forensics_keys":$fkeys,"forensics":${Bench.forensicsJson(Bench.forensicsOf(lastPass))}}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(artifact), json + "\n")
     catch { case _: Throwable => () }
     println(json)
     // tail-survivable health line — see Bench.healthLine
-    println(Bench.healthLine(probeBefore, probeAfter, total, nReps, results.count(_._2 >= 0),
-      extra = s""","contended":${!clean},"attempts":$attempt"""))
+    println(Bench.healthLine(o.probeBefore, o.probeAfter, total, o.repsUsed,
+      results.count(_._2 >= 0), extra = s""","contended":${!o.probesClean},"attempts":${o.attempts}"""))
     spark.stop()
   }
 }

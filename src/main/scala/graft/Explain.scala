@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of named queries (or all)
   * at a given sfDir — used to audit pushdown (`PushedFilters`, `ReadSchema`),
   * broadcast choices, and whole-stage-codegen coverage per SURVEY §7.
+  * Built by [[LocalSession]], so the plans are the ones [[Bench]] times.
   *
   * Usage: runMain graft.Explain <sfDir> [queryName ...]
   */
@@ -12,12 +11,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.build()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One session factory for the harness mains (Bench, Profile) so their
-  * timings are measured under identical configuration — a config added for
-  * benchmarking that didn't reach Profile would make profile numbers
-  * non-comparable.
+/** One session factory for the harness mains (Bench, BenchScale,
+  * BenchOne, Explain, ...) and the perfbench gate workload, so their
+  * timings and plans come from identical configuration — a config added
+  * for benchmarking that didn't reach a drill-down main would make its
+  * numbers non-comparable.
   */
 object LocalSession {
   def build(): SparkSession = {
@@ -13,9 +14,8 @@ object LocalSession {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // AQE initial-partition override, env-tunable for controlled A/Bs.
-      // Default = cores (a no-op vs shuffle.partitions): the canonical
-      // "start high, let AQE coalesce" advice was A/B-measured on the
+      // AQE initial partitions = cores (a no-op vs shuffle.partitions):
+      // the canonical "start high, let AQE coalesce" advice was A/B-measured on the
       // 1000×-tier MinHash (the repo's biggest single exchange, 5.24 GB)
       // and LOST on deterministic metrics — 8×cores initial partitions
       // INCREASED shuffle bytes 4.5% and total spill 72% (the dominant
@@ -23,8 +23,7 @@ object LocalSession {
       // partitions don't shrink, while extra partition boundaries add
       // write-path overhead). Map-side task sizing is Dedup.spread's job;
       // re-evaluate this default only with a fresh A/B artifact.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", cpus))
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       // Partition-discovery listing stays DRIVER-SIDE up to this many paths
       // (default 32 launches a distributed listing JOB). The vector index's
@@ -35,9 +34,8 @@ object LocalSession {
       // loadCodes/loadCodesFull call — the mutation gates read codes 4-6×
       // per rep). 128 keeps tiny-dir listings on the driver while a
       // production table with thousands of partition dirs still gets the
-      // distributed listing. Env-tunable for A/B.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_PAR_DISCOVERY", "128"))
+      // distributed listing.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
       .config("spark.ui.enabled", "false")
       // The status-store listeners run even with the UI disabled and retain
       // per-execution plan graphs/metrics; the defaults (1000 executions,
@@ -58,11 +56,8 @@ object LocalSession {
       // frames pile up across attempts. 2 min bounds the pile without
       // measurable cost for the seconds-long timed reps — but a 1000×-tier
       // query RUNS ~2 min, so the periodic stop-the-world GC lands inside
-      // it; env-tunable so the sf100 adjudication (VERDICT r15 #1: the
-      // dedup_minhash_lsh 73.6→120 s same-bytes regression, suspect = this
-      // setting) can A/B the interval without a code change.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "2min"))
+      // it.
+      .config("spark.cleaner.periodicGC.interval", "2min")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

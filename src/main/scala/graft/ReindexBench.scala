@@ -38,21 +38,14 @@ object ReindexBench {
     val spark = LocalSession.build()
     spark.sparkContext.setLogLevel("WARN")
     BenchScale.synthesize(spark, smallDir, bigDir, nReps, Seq("embeddings"))
-    val meter = org.apache.spark.graftshim.TaskInputBytes.install(spark.sparkContext)
+    // task input bytes plus the structural instrument beside them, the
+    // Spark JOB COUNT per reindex (host-independent; local-mode
+    // inputMetrics undercounts vectorized parquet data reads, so bytes are
+    // a lower-bound proxy — the job structure is exact)
+    val forensics = org.apache.spark.graftshim.StageForensics.install(spark.sparkContext)
     def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     Bench.calibrationProbe() // discard: probe-loop JIT warmup
     val probeBefore = Bench.settledProbe()
-
-    // structural instrument alongside the byte meter: Spark JOB COUNT per
-    // reindex (host-independent; local-mode inputMetrics undercounts
-    // vectorized parquet data reads, so bytes are a lower-bound proxy —
-    // the job structure is exact)
-    val jobCount = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        jobCount.incrementAndGet(); ()
-      }
-    })
     final case class Arm(scale: String, sec: Double, bytes: Long, corpusBytes: Long,
         jobs: Long)
     val arms = Seq("sf01" -> smallDir, "tier1000x" -> bigDir).map { case (scale, dir) =>
@@ -69,20 +62,18 @@ object ReindexBench {
       VectorIndex.write(quant,
         VectorIndex.encode(emb, col("vec_id"), col("embedding"), quant), path)
       spark.sparkContext.setJobDescription(s"reindex A/B: $scale")
-      val b0 = meter.snapshot(spark.sparkContext) // drains the listener bus
-      val j0 = jobCount.get()
+      val s0 = forensics.snapshot(spark.sparkContext) // drains the listener bus
       val t0 = System.nanoTime()
       VectorIndex.reindex(spark, path, emb, col("vec_id"), col("embedding"),
         kCells = 64, iters = 2, pq = pq)
       val sec = (System.nanoTime() - t0) / 1e9
-      val bytes = meter.snapshot(spark.sparkContext) - b0 // drains the bus
-      val jobs = jobCount.get() - j0
+      val d = forensics.since(spark.sparkContext, s0) // drains the bus
       spark.sparkContext.setJobDescription(null)
       // sanity: the promoted generation answers a pruned search
       val n = VectorIndex.loadCodes(spark, path).count()
       require(n > 0, s"reindex A/B $scale: promoted index is empty")
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
-      Arm(scale, sec, bytes, corpusBytes, jobs)
+      Arm(scale, sec, d.getOrElse("input_bytes", 0L), corpusBytes, d.getOrElse("jobs", 0L))
     }
     val probeAfter = Bench.settledProbe()
     val json =

@@ -82,27 +82,16 @@ final case class SourceDef(
     concurrency: Int = 1,
     requestsPerSec: Option[Double] = None) {
 
-  /** One shared limiter per connector PER JVM: every stream, every
-    * concurrent sync, and every Spark task copy of this connector draws
-    * from the same budget (SURVEY §7 hard part b — the reference sidesteps
-    * this with concurrency=1). Resolved from the keyed per-JVM registry so
-    * a SourceDef deserialized into a task closure still shares the budget
-    * with its siblings ([[graft.sources.RateLimiter.forKey]]).
-    */
-  @transient lazy val rateLimiter: Option[graft.sources.RateLimiter] =
-    requestsPerSec.map(r => graft.sources.RateLimiter.forKey(name, r, burst = 4))
-
-  /** Wrap a transport with this connector's pacing (identity when no
-    * budget is configured).
-    */
-  def paced(client: HttpClient): HttpClient =
-    rateLimiter.fold(client)(l => new graft.sources.RateLimitedClient(client, l))
-
-  /** Pacing against ONE SHARE of the cluster-wide budget — used by
-    * partitioned (DSv2) readers, where the driver knows how many readers it
-    * planned and each must draw `requestsPerSec / nShares` so the cluster
-    * aggregate honors the configured rate no matter where the partitions
-    * land ([[graft.sources.RateLimiter.forShare]]).
+  /** Wrap a transport with pacing against ONE SHARE of this connector's
+    * budget (identity when no budget is configured). Partitioned (DSv2)
+    * readers know how many readers the driver planned, and each draws
+    * `requestsPerSec / nShares`, so the cluster aggregate honors the
+    * configured rate no matter where the partitions land. The whole budget
+    * (`nShares == 1`) is one limiter per connector PER JVM: every stream,
+    * every concurrent sync, and every one-partition Spark read of this
+    * connector draws from it (SURVEY §7 hard part b — the reference
+    * sidesteps this with concurrency=1), including a copy deserialized
+    * into a task closure ([[graft.sources.RateLimiter.forShare]]).
     */
   def pacedShare(client: HttpClient, shareIndex: Int, nShares: Int): HttpClient =
     requestsPerSec.fold(client) { r =>
@@ -131,17 +120,17 @@ final case class SourceDef(
 
 object Connector {
 
-  /** Standard transport stack for a connector: rate limiting wraps the
-    * INNERMOST transport so every physical attempt — including retries,
-    * which fire exactly when the API is already throttling — draws a token;
-    * retry/backoff sits outside the budget.
+  /** Standard transport stack for a connector: the whole budget, the same
+    * limiter a one-partition Spark read of it paces against.
     */
   def transport(src: SourceDef, base: HttpClient): HttpClient =
-    new graft.sources.RetryingClient(src.paced(base))
+    transportShare(src, base, 0, 1)
 
-  /** Transport for one planned read partition of `nShares`: retry OUTSIDE
-    * share-split pacing, so every physical attempt draws a token from this
-    * partition's slice of the cluster-wide budget.
+  /** Transport for one planned read partition of `nShares`: rate limiting
+    * wraps the INNERMOST transport so every physical attempt — including
+    * retries, which fire exactly when the API is already throttling —
+    * draws a token from this partition's slice of the budget; retry/backoff
+    * sits outside it.
     */
   def transportShare(src: SourceDef, base: HttpClient,
       shareIndex: Int, nShares: Int): HttpClient =

@@ -134,15 +134,6 @@ final class RetryingClient(
 object RateLimiter {
   private val perJvm = new scala.collection.concurrent.TrieMap[(String, Double, Int), RateLimiter]()
 
-  /** The per-JVM singleton limiter for a (connector, rate, burst) budget —
-    * ANY copy of a connector definition (driver original, deserialized task
-    * closure, DSv2 partition reader) resolves the SAME instance, so every
-    * task in the JVM draws from one shared budget. Cluster-wide rate =
-    * permitsPerSec × executors; size the budget accordingly.
-    */
-  def forKey(key: String, permitsPerSec: Double, burst: Int): RateLimiter =
-    perJvm.getOrElseUpdate((key, permitsPerSec, burst), new RateLimiter(permitsPerSec, burst))
-
   /** One SHARE of a cluster-wide budget (SURVEY §7 hard part b): the driver
     * plans `nShares` read partitions and stamps each with its index; every
     * share paces at `permitsPerSec / nShares`, so the AGGREGATE across all
@@ -159,11 +150,18 @@ object RateLimiter {
     * floored at 1 token so every share can make progress — aggregate
     * instantaneous burst is therefore max(burst, nShares) while the
     * SUSTAINED aggregate stays exactly `permitsPerSec`.
+    *
+    * The whole budget (`nShares == 1`) is keyed by the bare `key`: the
+    * per-JVM singleton for that (connector, rate, burst), so ANY copy of a
+    * connector definition (driver original, deserialized task closure,
+    * one-partition DSv2 reader) and every protocol sync in the JVM draw
+    * from ONE shared budget.
     */
   def forShare(key: String, permitsPerSec: Double, burst: Int,
       shareIndex: Int, nShares: Int): RateLimiter = {
     require(nShares >= 1 && shareIndex >= 0 && shareIndex < nShares)
-    perJvm.getOrElseUpdate((s"$key#$shareIndex/$nShares", permitsPerSec, burst),
+    val shareKey = if (nShares == 1) key else s"$key#$shareIndex/$nShares"
+    perJvm.getOrElseUpdate((shareKey, permitsPerSec, burst),
       new RateLimiter(permitsPerSec / nShares, math.max(1, burst / nShares)))
   }
 }

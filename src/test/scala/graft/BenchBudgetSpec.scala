@@ -114,6 +114,27 @@ class BenchBudgetSpec extends AnyFunSuite {
     assert(ij.path("io_probe").path("after").asDouble() == 0.304)
   }
 
+  test("BenchScale posture (no budget, 20 waits): retries while dirty up to maxAttempts, never degraded") {
+    val cfg = GatedConfig(reps = 2, maxAttempts = 3, probeMax = 0.65,
+      budgetSec = Double.PositiveInfinity, maxWaitsCap = 20)
+    var t = 0.0
+    val waitsSeen = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var passes = 0
+    val dirty = runGated(cfg, () => t,
+      (pm, mw) => { waitsSeen += mw; dirtyGate(pm, mw) }, () => 2.0,
+      reps => { passes += 1; t += 1e6; Seq(("q", 1.0, 1.0)) }, noInv)
+    assert(waitsSeen.toSeq == Seq(20, 20, 20), "every attempt gets the full 20 quiet waits")
+    assert(passes == 3 && dirty.attempts == 3, "dirty retries run to maxAttempts")
+    assert(!dirty.degraded && dirty.repsUsed == 2, "no budget: never degraded, full reps")
+    assert(!dirty.probesClean)
+    t = 0.0
+    var calls = 0
+    val clean = runGated(cfg, () => t,
+      (pm, mw) => { calls += 1; if (calls == 1) dirtyGate(pm, mw) else quietGate(pm, mw) },
+      () => 0.5, reps => { t += 1e6; Seq(("q", 1.0, 1.0)) }, noInv)
+    assert(clean.attempts == 2 && clean.probesClean && !clean.degraded)
+  }
+
   test("ioProbe does its fixed work and reports a positive wall time") {
     val s = Bench.ioProbe()
     assert(s > 0.0 && s < 120.0, s"fsync probe out of range: $s")

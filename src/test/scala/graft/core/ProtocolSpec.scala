@@ -43,16 +43,30 @@ class ProtocolSpec extends AnyFunSuite {
   test("requestsPerSec wires one shared limiter; no budget = identity client") {
     val unpaced = SourceDef("x")
     val c = new HttpClient { override def get(req: graft.sources.HttpRequest) = HttpResponse(200, "{}", Map.empty) }
-    assert(unpaced.paced(c) eq c)
+    assert(unpaced.pacedShare(c, 0, 1) eq c)
     val paced = SourceDef("y", requestsPerSec = Some(100.0))
-    // the shared-budget property: every paced() wrapper draws from the SAME
-    // limiter instance of this connector
-    val (w1, w2) = (paced.paced(c), paced.paced(c))
+    // the shared-budget property: every whole-budget wrapper draws from the
+    // SAME limiter instance of this connector
+    val (w1, w2) = (paced.pacedShare(c, 0, 1), paced.pacedShare(c, 0, 1))
     assert(w1.asInstanceOf[graft.sources.RateLimitedClient].limiter
       eq w2.asInstanceOf[graft.sources.RateLimitedClient].limiter)
     assert(w1.get(graft.sources.HttpRequest("http://t")).status == 200) // passes through
     // transport stacking: pacing wraps the innermost transport, retry outside
     assert(Connector.transport(paced, c).isInstanceOf[graft.sources.RetryingClient])
+  }
+
+  test("protocol syncs and a one-partition Spark read pace against one limiter") {
+    val c = new HttpClient { override def get(req: graft.sources.HttpRequest) = HttpResponse(200, "{}", Map.empty) }
+    // 1 request/s with burst 4: four requests on the protocol transport
+    // spend the whole burst without sleeping
+    val src = SourceDef("one-budget", requestsPerSec = Some(1.0))
+    val sync = Connector.transport(src, c)
+    (1 to 4).foreach(_ => assert(sync.get(HttpRequest("http://t")).status == 200))
+    // the limiter a one-partition read (HttpPartition's default share 0 of
+    // 1) resolves has no burst left: it is the same budget, not a second one
+    val read = graft.sources.RateLimiter.forShare("one-budget", 1.0, burst = 4, 0, 1)
+    assert(read.acquireWaitNanos() > 0L,
+      "a one-partition read got a fresh budget beside the protocol path's")
   }
 
   test("catalog entries with top-level name (no nested stream object) still select") {
