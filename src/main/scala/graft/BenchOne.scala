@@ -12,7 +12,10 @@ package graft
   * time, shuffle write time, fetch wait, spill, GC, input bytes, job count
   * — and its Spark jobs: id, seconds, `gap` (driver-side dead time since
   * the previous job of the rep ended: planning, fs metadata work, manifest
-  * fsyncs; 0 for the first job), stage count and call site. CPU and
+  * fsyncs; 0 for the first job), stage count, call site and `sql_exec`,
+  * the SQL execution id the job ran for (null for a bare RDD job): an AQE
+  * query-stage job's site names only the future that submitted it, so
+  * the id is what ties it to its query. CPU and
   * [[Bench.ioProbe]] fsync probes bracket the run, so a gate whose wall
   * time moves while cpu_ms holds and shuffle_write_ms balloons reads as
   * disk weather, measured rather than inferred. The index-mutation gates
@@ -45,7 +48,8 @@ object BenchOne {
         val jobs = r.jobs.zip(-1L +: r.jobs.map(_.endMs)).map { case (j, prevEnd) =>
           val gap = if (prevEnd < 0) 0L else math.max(0L, j.startMs - prevEnd)
           s"""{"id":${j.id},"sec":${fmt((j.endMs - j.startMs) / 1e3)},"gap":${fmt(gap / 1e3)},""" +
-            s""""stages":${j.stages},"site":${graft.core.Json.quote(j.site)}}"""
+            s""""stages":${j.stages},"site":${graft.core.Json.quote(j.site)},""" +
+            s""""sql_exec":${j.sqlExecutionId.fold("null")(_.toString)}}"""
         }.mkString("[", ",", "]")
         println(s"""{"query":"${g.name}","rep":${i + 1},"sec":${fmt(r.sec)},"stage_metrics":$stage,"jobs":$jobs}""")
       }

@@ -1,6 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import IndexStore._
@@ -12,49 +16,90 @@ import IndexStore._
   */
 trait IndexStore extends org.apache.spark.internal.Logging {
 
+  // ---- the cell stage: the one way a mutation changes live cells ----------
+
   protected def cellStage(path: String) =
     new org.apache.hadoop.fs.Path(s"$path/cells_staging")
 
-  /** Finish an interrupted [[replaceCells]] and return the committed
-    * snapshot. A complete stage (one carrying its `_recount`) moves each
-    * staged cell over its live counterpart — idempotent, a re-run skips
-    * cells already moved — deletes the recounted cells left empty, and
-    * commits the recount; only then is the stage dropped. An incomplete
-    * stage replaced nothing and is dropped. An interrupted append's job
-    * directory is dropped too: the next append's job commit would
-    * otherwise move its committed task files in a second time. Every
-    * mutation resolves its snapshot through here, so no writer builds on a
-    * half-replaced codes directory or a stale occupancy.
+  /** Change live cells through the cell stage. `rows` (cell-clustered and
+    * materialized) are staged complete, partitioned by cell; then `cents`,
+    * a split's new centroid table, in the next generation's cents
+    * directory; and last the stage's record, which is the whole data
+    * commit: the absolute count of each cell it names, `mark` (a stream's
+    * absolute applied mark) and the cents directory. [[settled]] then moves
+    * the staged cells in and commits the record. With `append` the staged
+    * files join their live cells; otherwise each staged cell replaces its
+    * live one, and a cell counted 0 loses its directory.
+    *
+    * Nothing may commit between `snap` and the record's commit: its gc
+    * would drop the staged cents directory. So a writer that widens the
+    * schema does so before it calls this.
+    */
+  protected def stageCells(s: SparkSession, snap: IndexSnapshot, rows: DataFrame,
+      counts: Map[Long, Long], append: Boolean = false,
+      mark: Option[(Option[String], Long)] = None,
+      cents: Option[DataFrame] = None): IndexSnapshot = {
+    val stage = cellStage(snap.path)
+    rows.write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
+    val record = graft.core.Json.obj()
+    putCounts(record.putArray("cells"), counts)
+    record.put("append", append)
+    mark.foreach(putMark(record.putObject("mark"), _))
+    cents.foreach { c =>
+      val dir = stagedDirName(snap, "cents")
+      c.write.mode("overwrite").parquet(s"${snap.path}/$dir")
+      record.put("cents", dir)
+    }
+    if (!publish(hadoopFs(s, snap.path), new org.apache.hadoop.fs.Path(stage, "_recount.tmp"),
+        new org.apache.hadoop.fs.Path(stage, "_recount"), graft.core.Json.write(record)))
+      throw new java.io.IOException(s"completing the cell stage at ${snap.path} failed")
+    settled(s, snap)
+  }
+
+  /** Finish an interrupted [[stageCells]] and return the committed
+    * snapshot. A complete stage (one carrying its record, `_recount`)
+    * moves each staged cell in — idempotent, a re-run skips files and
+    * cells already moved — deletes the cells it counts 0 and commits the
+    * record; only then is the stage dropped. The record's values are
+    * absolute, so committing it twice changes nothing. An incomplete stage
+    * changed nothing and is dropped. Every mutation resolves its snapshot
+    * through here, so no writer builds on a half-moved codes directory or
+    * a stale occupancy.
     */
   protected def settled(s: SparkSession, snap: IndexSnapshot): IndexSnapshot = {
     import org.apache.hadoop.fs.Path
-    import scala.jdk.CollectionConverters._
     val fs = hadoopFs(s, snap.path)
-    val codes = snap.partPath("codes")
-    val jobDir = new Path(codes, "_temporary")
-    if (fs.exists(jobDir)) fs.delete(jobDir, true)
     val stage = cellStage(snap.path)
     if (!fs.exists(stage)) snap
     else {
-      val recount = new Path(stage, "_recount")
+      val recordFile = new Path(stage, "_recount")
       val next =
-        if (!fs.exists(recount)) snap
+        if (!fs.exists(recordFile)) snap
         else {
-          val in = fs.open(recount)
-          val counts = try graft.core.Json.mapper.readTree(in).elements().asScala
-            .map(e => e.get(0).asLong -> e.get(1).asLong).toMap
-            finally in.close()
+          val in = fs.open(recordFile)
+          val record = try graft.core.Json.mapper.readTree(in) finally in.close()
+          // a stage completed by an older writer holds only the counts
+          val counts = countsIn(if (record.isArray) record else record.get("cells"))
+          val append = record.path("append").asBoolean(false)
+          val codes = new Path(snap.partPath("codes"))
           fs.listStatus(stage).map(_.getPath).filter(_.getName.startsWith("cell="))
             .foreach { staged =>
               val live = new Path(codes, staged.getName)
-              fs.delete(live, true)
-              if (!fs.rename(staged, live))
-                throw new java.io.IOException(s"moving $staged into $live failed")
+              val moves =
+                if (append && fs.exists(live))
+                  fs.listStatus(staged).map(f => f.getPath -> new Path(live, f.getPath.getName))
+                else { fs.delete(live, true); Array(staged -> live) }
+              moves.foreach { case (from, to) =>
+                if (!fs.rename(from, to))
+                  throw new java.io.IOException(s"moving $from into $to failed")
+              }
             }
           counts.collect { case (c, 0L) => c }
             .foreach(c => fs.delete(new Path(codes, s"cell=$c"), true))
           commit(s, snap)(m => m.copy(
-            occupancy = m.occupancy -- counts.keys ++ counts.filter(_._2 > 0)))
+            dirs = m.dirs ++ Option(record.get("cents")).map("cents" -> _.asText),
+            occupancy = m.occupancy -- counts.keys ++ counts.filter(_._2 > 0),
+            applied = m.applied ++ Option(record.get("mark")).map(markIn)))
         }
       fs.delete(stage, true)
       next
@@ -63,6 +108,7 @@ trait IndexStore extends org.apache.spark.internal.Logging {
 
   protected def settled(s: SparkSession, path: String): IndexSnapshot =
     settled(s, snapshot(s, path))
+
   protected def hadoopFs(s: SparkSession, path: String) =
     org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), s.sparkContext.hadoopConfiguration)
@@ -122,7 +168,6 @@ trait IndexStore extends org.apache.spark.internal.Logging {
 
   private def readManifest(fs: org.apache.hadoop.fs.FileSystem, path: String,
       gen: Long): IndexSnapshot = {
-    import scala.jdk.CollectionConverters._
     val in = fs.open(manifestFile(path, gen))
     val root = try graft.core.Json.mapper.readTree(in) finally in.close()
     def elems(field: String) = root.get(field).elements().asScala.toSeq
@@ -131,10 +176,8 @@ trait IndexStore extends org.apache.spark.internal.Logging {
       dirs.fieldNames().asScala.map(p => p -> dirs.get(p).asText).toMap,
       org.apache.spark.sql.types.DataType.fromJson(root.get("schema").toString)
         .asInstanceOf[StructType],
-      elems("occupancy").map(e => e.get(0).asLong -> e.get(1).asLong).toMap,
-      elems("applied").map(e =>
-        Option(e.get("stream")).filterNot(_.isNull).map(_.asText) ->
-          e.get("batch").asLong).toMap,
+      countsIn(root.get("occupancy")),
+      elems("applied").map(markIn).toMap,
       elems("retain").map(_.asText).toSet)
   }
 
@@ -144,18 +187,34 @@ trait IndexStore extends org.apache.spark.internal.Logging {
     val dirs = root.putObject("dirs")
     snap.dirs.toSeq.sorted.foreach { case (p, d) => dirs.put(p, d) }
     root.replace("schema", json.parse(snap.schema.json))
-    val occ = root.putArray("occupancy")
-    snap.occupancy.toSeq.sorted.foreach { case (c, n) => occ.addArray().add(c).add(n) }
+    putCounts(root.putArray("occupancy"), snap.occupancy)
     val applied = root.putArray("applied")
-    snap.applied.toSeq.sortBy(_._1.getOrElse("")).foreach { case (sid, b) =>
-      val e = applied.addObject()
-      sid.fold(e.putNull("stream"))(e.put("stream", _))
-      e.put("batch", b)
-    }
+    snap.applied.toSeq.sortBy(_._1.getOrElse(""))
+      .foreach(mark => putMark(applied.addObject(), mark))
     val retain = root.putArray("retain")
     snap.retain.toSeq.sorted.foreach(d => retain.add(d))
     json.write(root)
   }
+
+  /** Per-cell counts as `[[cell, n], ...]`, in the manifest's occupancy
+    * and in the stage record.
+    */
+  private def putCounts(arr: ArrayNode, counts: Map[Long, Long]): Unit =
+    counts.toSeq.sorted.foreach { case (c, n) => arr.addArray().add(c).add(n) }
+
+  private def countsIn(arr: JsonNode): Map[Long, Long] =
+    arr.elements().asScala.map(e => e.get(0).asLong -> e.get(1).asLong).toMap
+
+  /** An applied mark as `{"stream": id or null, "batch": n}`, in the
+    * manifest and in the stage record.
+    */
+  private def putMark(e: ObjectNode, mark: (Option[String], Long)): Unit = {
+    mark._1.fold(e.putNull("stream"))(e.put("stream", _))
+    e.put("batch", mark._2)
+  }
+
+  private def markIn(e: JsonNode): (Option[String], Long) =
+    Option(e.get("stream")).filterNot(_.isNull).map(_.asText) -> e.get("batch").asLong
 
   /** The directory a swap of `part` must stage its replacement into — the
     * next generation's name, deterministic from the current snapshot so a
@@ -183,9 +242,7 @@ trait IndexStore extends org.apache.spark.internal.Logging {
         else snap.dirs.values.toSet -- changed.dirs.values)
     val tmp = new org.apache.hadoop.fs.Path(
       s"${snap.path}/.manifest-tmp-${System.nanoTime()}")
-    val out = fs.create(tmp, true)
-    try out.write(manifestJson(next).getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, manifestFile(snap.path, next.gen))) {
+    if (!publish(fs, tmp, manifestFile(snap.path, next.gen), manifestJson(next))) {
       fs.delete(tmp, false)
       throw new java.io.IOException(
         s"manifest commit for generation ${next.gen} at ${snap.path} lost a " +
@@ -193,6 +250,16 @@ trait IndexStore extends org.apache.spark.internal.Logging {
     }
     gc(s, next)
     next
+  }
+
+  /** Write `text` to `tmp`, then rename it to `dst`: a reader sees the
+    * whole file or none. False when the rename did not happen.
+    */
+  private def publish(fs: org.apache.hadoop.fs.FileSystem, tmp: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path, text: String): Boolean = {
+    val out = fs.create(tmp, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    fs.rename(tmp, dst)
   }
 
   /** Drop everything the committed generation `snap` does not reference:
@@ -214,15 +281,16 @@ trait IndexStore extends org.apache.spark.internal.Logging {
     } catch { case _: java.io.IOException => () }
   }
 
-  /** Repair an interrupted mutation — the one recovery entry point,
-    * idempotent and a no-op on a healthy index. A crash before a commit
-    * leaves the committed generation untouched and the staged work as
-    * unreferenced debris; a crash between a commit and its GC leaves
-    * superseded directories; a crash mid cell-replace leaves its stage.
-    * The stage is rolled forward and the rest collected here (and by the
-    * next mutation anyway). Appends and upserts then converge by
-    * re-running the same batch (see [[upsertBatch]], [[appendSink]]); a
-    * split by [[recoverSplit]].
+  /** Repair an interrupted mutation — the one recovery entry point for
+    * every mutation, idempotent and a no-op on a healthy index. A crash
+    * before a commit leaves the committed generation untouched and the
+    * staged work as unreferenced debris; a crash between a commit and its
+    * gc leaves superseded directories; a crash once a cell stage is
+    * complete leaves its record. The stage is rolled forward (or dropped
+    * when incomplete) and the rest collected, so afterwards the index is
+    * the one before or the one after the mutation and its root holds only
+    * manifests and generation directories. Every later mutation does the
+    * same first.
     */
   def recover(s: SparkSession, path: String): Unit =
     withWriterLease(s, path, "recover") {
@@ -587,8 +655,8 @@ object IndexStore {
     * ANOTHER writer mid-op (the TTL reclaim fired against a live-but-slow
     * holder — e.g. a long encode inside [[reindex]] starved the heartbeat
     * past the TTL). The op's mutations may have interleaved with the
-    * reclaimer's; the index should be verified ([[refreshOccupancy]], the
-    * recovery entry points) before further maintenance. The heartbeat
+    * reclaimer's; the index should be verified ([[recover]],
+    * `refreshOccupancy`) before further maintenance. The heartbeat
     * (period ttl/3) makes this practically unreachable for healthy JVMs —
     * it exists so the failure is LOUD, never silent.
     */

@@ -117,15 +117,11 @@ object VectorIndex extends IndexStore {
     * k centroids / m·k codebook rows) do shuffle, but only beneath their
     * BroadcastExchange build sides (VectorIndexSpec walks the plan and
     * asserts exactly this), which is what makes appends corpus-free.
-    */
-  def encode(vectors: DataFrame, id: Column, emb: Column,
-      quant: IvfadcQuantizer): DataFrame =
-    encode(vectors, id, emb, quant, Nil)
-
-  /** [[encode]] carrying FILTERABLE METADATA columns (by name, from
-    * `vectors`) onto every code row — the storage side of filtered ANN
-    * search. Every production vector query rides with a predicate (source,
-    * lang, date, licence); storing the metadata ON the code rows (repeated
+    *
+    * `meta` names FILTERABLE METADATA columns of `vectors` to carry onto
+    * every code row — the storage side of filtered ANN search. Every
+    * production vector query rides with a predicate (source, lang, date,
+    * licence); storing the metadata ON the code rows (repeated
     * per subspace — parquet RLE makes the repetition ~free) means a
     * filtered search evaluates the predicate INSIDE the codes scan, before
     * any ADC scoring, instead of post-filtering a top-k and starving. The
@@ -134,7 +130,7 @@ object VectorIndex extends IndexStore {
     * assertion covers it).
     */
   def encode(vectors: DataFrame, id: Column, emb: Column,
-      quant: IvfadcQuantizer, meta: Seq[String]): DataFrame = {
+      quant: IvfadcQuantizer, meta: Seq[String] = Nil): DataFrame = {
     val assigned = Dedup.assignCells(vectors, id, emb, quant.cents, meta)
       .select(col("__id").as("vec_id") +: col("cell") +:
         col("__v").as("embedding") +: meta.map(col): _*)
@@ -203,33 +199,6 @@ object VectorIndex extends IndexStore {
         col("rn"))
   }
 
-  /** [[searchAdc]] with the probed cell set PUSHED DOWN over a persisted,
-    * cell-partitioned codes table ([[write]]'s layout): the distinct
-    * probed cells — at most |queries|·nprobe ids, a bounded query-side
-    * list, so the driver collect touches no corpus data — become an IN
-    * partition filter, and only the probed cells' code files are even
-    * opened (~nprobe/k of the index; VectorIndexSpec asserts the
-    * partition filter reaches the scan and the surviving directory
-    * count). Results are identical to [[searchAdc]]: every ADC candidate
-    * joins on a probed cell, so un-probed cells can contribute nothing.
-    */
-  def searchAdcPruned(codes: DataFrame, quant: IvfadcQuantizer, queries: DataFrame,
-      nprobe: Int, topK: Int): DataFrame =
-    searchAdcPruned(codes, quant, queries, nprobe, topK, None)
-
-  /** [[searchAdcPruned]] with a METADATA PREDICATE pushed into the codes
-    * scan — filtered ANN serving. The predicate (over columns carried by
-    * the metadata-aware [[encode]]) composes with the probed-cell
-    * partition filter, so on a persisted index BOTH reach the parquet
-    * reader: partition pruning opens only the probed cells' files, and the
-    * predicate lands in PushedFilters / the scan's data filters
-    * (spec-asserted) — candidates are eliminated BEFORE any ADC scoring
-    * work. That is what makes a selective filtered query return its full
-    * `topK`: the top-k window ranks ONLY predicate-matching candidates
-    * from the probed cells, instead of post-filtering an unfiltered top-k
-    * and starving toward <k rows. (Matches fewer than k in the probed
-    * cells → fewer rows, like any ANN search; raise nprobe for recall.)
-    */
   /** Observation name under which a PREDICATE-filtered pruned search
     * reports its top-k starvation: `returned` (result rows that
     * materialized) vs `expected` (queries × topK). A filtered search
@@ -243,8 +212,31 @@ object VectorIndex extends IndexStore {
     */
   val ShortfallObservation = "ann_pruned_shortfall"
 
+  /** [[searchAdc]] with the probed cell set PUSHED DOWN over a persisted,
+    * cell-partitioned codes table ([[write]]'s layout): the distinct
+    * probed cells — at most |queries|·nprobe ids, a bounded query-side
+    * list, so the driver collect touches no corpus data — become an IN
+    * partition filter, and only the probed cells' code files are even
+    * opened (~nprobe/k of the index; VectorIndexSpec asserts the
+    * partition filter reaches the scan and the surviving directory
+    * count). Results are identical to [[searchAdc]]: every ADC candidate
+    * joins on a probed cell, so un-probed cells can contribute nothing.
+    *
+    * `predicate` is a METADATA PREDICATE pushed into the codes scan —
+    * filtered ANN serving. The predicate (over columns carried by the
+    * metadata-aware [[encode]]) composes with the probed-cell
+    * partition filter, so on a persisted index BOTH reach the parquet
+    * reader: partition pruning opens only the probed cells' files, and the
+    * predicate lands in PushedFilters / the scan's data filters
+    * (spec-asserted) — candidates are eliminated BEFORE any ADC scoring
+    * work. That is what makes a selective filtered query return its full
+    * `topK`: the top-k window ranks ONLY predicate-matching candidates
+    * from the probed cells, instead of post-filtering an unfiltered top-k
+    * and starving toward <k rows. (Matches fewer than k in the probed
+    * cells → fewer rows, like any ANN search; raise nprobe for recall.)
+    */
   def searchAdcPruned(codes: DataFrame, quant: IvfadcQuantizer, queries: DataFrame,
-      nprobe: Int, topK: Int, predicate: Option[Column]): DataFrame = {
+      nprobe: Int, topK: Int, predicate: Option[Column] = None): DataFrame = {
     // ONE bounded job (≤ queries × nprobe rows) serves both driver needs:
     // the distinct probed-cell set for the scan prune AND the query count
     // that pins the observation's expected total — no separate count job
@@ -457,7 +449,9 @@ object VectorIndex extends IndexStore {
     * stored quantizer and append the codes — the persisted corpus codes are
     * untouched and the corpus itself is never read. The daily-ingest path.
     * Occupancy is maintained INCREMENTALLY (old per-cell counts + the fresh
-    * batch's), so the accounting stays corpus-free too.
+    * batch's), so the accounting stays corpus-free too. Unstamped: a
+    * re-run appends the batch again, so a crash is repaired by [[recover]]
+    * alone, which leaves the index without the batch or with all of it.
     */
   def appendBatch(s: SparkSession, path: String, fresh: DataFrame,
       id: Column, emb: Column, pq: PqParams): Unit =
@@ -470,9 +464,10 @@ object VectorIndex extends IndexStore {
     * under the frozen stored quantizer, cell-cluster BEFORE the eager
     * checkpoint (the append then reuses the materialized layout — one new
     * file per touched cell per batch, not one per (task, cell), with no
-    * second pass), commit any new columns (superset-first), append, then
-    * commit the occupancy delta together with the batch's applied mark —
-    * the mark is committed only after the data it covers.
+    * second pass), commit any new columns (superset-first), then add the
+    * files to their live cells through the cell stage, whose one data
+    * commit carries the new occupancy and the batch's applied mark — the
+    * mark is committed only after the data it covers.
     */
   private def appendCodes(s: SparkSession, path: String, vectors: DataFrame,
       id: Column, emb: Column, pq: PqParams, stamp: Option[Long],
@@ -484,14 +479,11 @@ object VectorIndex extends IndexStore {
     val codes = streamId.fold(stamped)(sid => stamped.withColumn("__stream", lit(sid)))
       .repartition(col("cell")).localCheckpoint()
     val live = widenSchema(s, snap, codes.schema)
-    codes.write.mode("append").partitionBy("cell").parquet(snap.partPath("codes"))
-    val delta = countsOf(cellOccupancy(codes))
-    commit(s, live)(m => m.copy(
-      occupancy = delta.foldLeft(m.occupancy) { case (o, (c, n)) =>
-        o.updated(c, o.getOrElse(c, 0L) + n)
-      },
-      applied = stamp.fold(m.applied)(b =>
-        m.applied.updated(streamId, m.applied.get(streamId).fold(b)(_ max b)))))
+    val batch = countsOf(cellOccupancy(codes))
+    stageCells(s, live, codes,
+      batch.map { case (c, n) => c -> (live.occupancy.getOrElse(c, 0L) + n) },
+      append = true,
+      mark = stamp.map(b => streamId -> live.applied.get(streamId).fold(b)(_ max b)))
   }
 
   // ---- deletes / updates -------------------------------------------------
@@ -510,7 +502,7 @@ object VectorIndex extends IndexStore {
     *     the corpus;
     *   - only the TOUCHED cell partitions are rewritten (the old cells of
     *     changed ids ∪ the new cells of updated vectors — an update may
-    *     move a vector between cells), via dynamic partition overwrite;
+    *     move a vector between cells), through the cell stage;
     *     untouched cells keep their files byte-for-byte.
     *
     * Equivalence contract (the `ann_ivfpq_upsert` oracle gate pins it
@@ -527,36 +519,27 @@ object VectorIndex extends IndexStore {
     * localCheckpoint (bounded by touched-cell codes + the change batch)
     * before the overwrite so the write never reads the path it replaces.
     *
-    * CRASH WINDOW (documented, with a converging recovery): the upsert
-    * stages the touched cells' rewrite and their recount complete, then
-    * moves each staged cell over its live one, deletes fully-emptied cell
-    * directories and commits the recount. A crash once the stage is
-    * complete is rolled forward, occupancy included, by the next mutation
-    * or [[recover]]; a crash before it leaves the live index untouched.
-    * Recovery is to RE-RUN THE SAME CHANGE BATCH: the rewrite is
-    * idempotent, so one clean re-run converges the answers and the
-    * occupancy to the exact post-upsert state (spec-pinned by the
+    * CRASH WINDOW: the touched cells' rewrite goes through the cell stage
+    * ([[stageCells]]), so a crash leaves the index before or after the
+    * upsert once [[recover]] (or the next mutation) has run. Re-running
+    * the same change batch is idempotent too: it converges the answers and
+    * the occupancy to the exact post-upsert state (spec-pinned by the
     * crash-point sweep). Single-writer op, like all maintenance here.
     *
     * @param updates frame exposing `id`/`emb` — changed or new vectors
     * @param deletes single-column frame of ids to remove (tombstones)
-    */
-  def upsertBatch(s: SparkSession, path: String, updates: DataFrame,
-      deletes: DataFrame, id: Column, emb: Column, pq: PqParams): Unit =
-    upsertBatch(s, path, updates, deletes, id, emb, pq, Nil)
-
-  /** [[upsertBatch]] for a METADATA-CARRYING index: `meta` names the
-    * filterable columns the index was encoded with (see the metadata-aware
-    * [[encode]]) — they must be present on `updates` so rewritten rows
-    * keep their metadata (a plain upsert on such an index would null the
-    * updated rows' metadata and silently exempt them from every filtered
-    * search).
+    * @param meta    for a METADATA-CARRYING index, the filterable columns
+    *   it was encoded with (see [[encode]]) — they must be present on
+    *   `updates` so rewritten rows keep their metadata (a plain upsert on
+    *   such an index would null the updated rows' metadata and silently
+    *   exempt them from every filtered search)
     */
   def upsertBatch(s: SparkSession, path: String, updates: DataFrame,
       deletes: DataFrame, id: Column, emb: Column, pq: PqParams,
-      meta: Seq[String]): Unit =
+      meta: Seq[String] = Nil): Unit =
     withWriterLease(s, path, "upsertBatch") {
-      upsertCore(s, path, updates, deletes, id, emb, loadQuantizer(s, path, pq), meta)
+      val snap = settled(s, path)
+      upsertCore(s, snap, updates, deletes, id, emb, loadQuantizer(s, snap, pq), meta)
     }
 
   /** Change batches up to this many distinct ids are collected once into
@@ -565,18 +548,17 @@ object VectorIndex extends IndexStore {
     */
   private val IdProbeCap = 10000
 
-  /** [[upsertBatch]] under a caller-supplied quantizer instead of the
-    * stored one — the seam [[splitCell]] rides (it re-encodes a hot cell's
-    * members under the POST-SPLIT centroid table before that table is
-    * persisted). Everything else — touched-cell discovery, dynamic
-    * partition overwrite, emptied-cell cleanup, occupancy — is the one
-    * shared implementation, so the split path can never drift from the
-    * upsert contract.
+  /** [[upsertBatch]] on a settled snapshot under a caller-supplied
+    * quantizer instead of the stored one — the seam [[splitCell]] rides (it
+    * re-encodes a hot cell's members under the POST-SPLIT centroid table
+    * and passes that table as `cents`, committed with the rewritten cells).
+    * Everything else — touched-cell discovery, the cell stage,
+    * emptied-cell cleanup, occupancy — is the one shared implementation,
+    * so the split path can never drift from the upsert contract.
     */
-  private def upsertCore(s: SparkSession, path: String, updates: DataFrame,
+  private def upsertCore(s: SparkSession, snap: IndexSnapshot, updates: DataFrame,
       deletes: DataFrame, id: Column, emb: Column, quant: IvfadcQuantizer,
-      meta: Seq[String]): Unit = {
-    val snap = settled(s, path)
+      meta: Seq[String], cents: Option[DataFrame] = None): Unit = {
     val delIds = deletes.select(deletes.columns.head).toDF("vec_id")
     val updIds = updates.select(id.as("vec_id"))
     val changedAll = updIds.union(delIds).distinct()
@@ -623,35 +605,23 @@ object VectorIndex extends IndexStore {
     Dedup.dropLocalCheckpoint(newCodes)   // folded into the rewrite above
     // a metadata-carrying upsert on a bare index may add columns: they are
     // committed before the rewrite lands (superset-first)
-    replaceCells(s, widenSchema(s, snap, rewritten.schema), touched, rewritten)
+    replaceCells(s, widenSchema(s, snap, rewritten.schema), touched, rewritten, cents)
   }
 
   /** Replace the live codes of `cells` with `rows` — every row those cells
-    * keep, cell-clustered and materialized — and commit their recounted
-    * occupancy (untouched cells keep their counts). The rows are staged
-    * COMPLETE, then the touched cells' recount completes the stage, and
-    * only then does [[settled]] replace any live cell — so a crash at any
-    * later point rolls the whole replacement, occupancy included, forward
-    * from the stage. A cell left with no rows loses its directory.
+    * keep, cell-clustered and materialized — through the cell stage, with
+    * their recounted occupancy (untouched cells keep their counts). A cell
+    * left with no rows loses its directory.
     */
   private def replaceCells(s: SparkSession, snap: IndexSnapshot, cells: Seq[Any],
-      rows: DataFrame): IndexSnapshot = {
+      rows: DataFrame, cents: Option[DataFrame] = None): IndexSnapshot = {
     // ONE pass over the materialized rows: the per-cell counts are the new
     // occupancy, and a touched cell absent from them is left empty
     val counts = countsOf(cellOccupancy(rows))
-    val stage = cellStage(snap.path)
-    rows.write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
-    val recount = graft.core.Json.mapper.createArrayNode()
-    cells.map(_.asInstanceOf[Number].longValue).foreach { c =>
-      recount.addArray().add(c).add(counts.getOrElse(c, 0L))
-    }
-    val fs = hadoopFs(s, snap.path)
-    val tmp = new org.apache.hadoop.fs.Path(stage, "_recount.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(graft.core.Json.write(recount).getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(stage, "_recount")))
-      throw new java.io.IOException(s"completing the cell stage at ${snap.path} failed")
-    settled(s, snap)
+    stageCells(s, snap, rows, cells.map { c =>
+      val cell = c.asInstanceOf[Number].longValue
+      cell -> counts.getOrElse(cell, 0L)
+    }.toMap, cents = cents)
   }
 
   // ---- streaming ingest ---------------------------------------------------
@@ -666,14 +636,15 @@ object VectorIndex extends IndexStore {
     *
     * Restart semantics: `foreachBatch` replays an in-flight batch on
     * recovery; a replayed batch is detected via the manifest's applied
-    * mark for its stream (committed only after the append lands, so it
+    * mark for its stream (committed in the append's one data commit, so it
     * never claims an unapplied batch and — unlike a data-derived max —
     * cannot regress when [[upsertBatch]] later rewrites or deletes
-    * max-stamped rows). The appended rows' own `__batch` stamps cover the
-    * lost-commit window: rows stamped by a batch no mark covers are a
-    * crashed attempt's (possibly partial) append, rolled back before the
-    * batch re-applies — idempotent per batch id, the same device as the
-    * dedup sink's docs stamps. [[loadCodes]] projects `__batch` away, so
+    * max-stamped rows). The appended rows' own `__batch` stamps are the
+    * second record: rows stamped by a batch no mark covers (left by a
+    * writer that appended before committing its mark, or by a lost
+    * manifest) are rolled back before the batch re-applies — idempotent
+    * per batch id, the same device as the dedup sink's docs stamps.
+    * [[loadCodes]] projects `__batch` away, so
     * search is oblivious to how rows arrived, and [[compactCells]]
     * preserves the stamps, so replay detection survives compaction.
     *
@@ -774,10 +745,10 @@ object VectorIndex extends IndexStore {
     */
   private[graft] val adoptedIndexWarnings = new java.util.concurrent.atomic.AtomicLong
 
-  /** The data-derived replay record, for the lost-commit window: rows of
-    * this lineage stamped `batchId` or later that no applied mark covers
-    * are a crashed attempt's append — complete, or partial when the crash
-    * fell between the file moves of the append's job commit. They are
+  /** The data-derived replay record, for a lost mark: rows of this lineage
+    * stamped `batchId` or later that no applied mark covers are an append
+    * whose mark never committed — an index written before appends went
+    * through the cell stage may hold them. They are
     * rolled back (only the cells holding them are rewritten) so the batch
     * re-applies exactly once. One filtered scan finds them; none is the
     * common case. The unscoped lineage (`streamId = None`) owns the rows
@@ -862,8 +833,8 @@ object VectorIndex extends IndexStore {
     * centroid table, and re-encode only the members under the refined
     * quantizer — the PQ codebook stays frozen, the rest of the corpus is
     * untouched, and the whole rewrite rides [[upsertBatch]]'s machinery
-    * (touched-cells-only dynamic overwrite, emptied-parent-dir cleanup,
-    * occupancy maintenance), so the split inherits the upsert's pinned
+    * (touched-cells-only rewrite through the cell stage, emptied-parent-dir
+    * cleanup, occupancy maintenance), so the split inherits the upsert's pinned
     * incremental-≡-rebuild law: the post-split index answers EXACTLY like a
     * from-scratch encode of the corpus under the post-split centroid table
     * (spec-pinned). This is the response to the skew signal
@@ -886,137 +857,58 @@ object VectorIndex extends IndexStore {
     * vector source for the members (same contract as [[upsertBatch]]'s
     * `updates`); rows whose `id` is not a member are ignored.
     *
-    * CRASH RECOVERY (staged children, the [[compactCells]] discipline):
-    * the chosen children centroids are persisted to `split_staging/`
-    * BEFORE any mutation, and every entry here first rolls a previous
-    * interrupted split forward ([[recoverSplit]]). The apply phase is
-    * idempotent given the staged centroids — members are re-derived from
-    * whatever currently sits in parent ∪ children cells, the upsert
-    * converges from any intermediate state (its documented contract), and
-    * the final centroid-table commit plus the stage delete finish the
-    * split. Single-writer maintenance op, like compaction.
+    * CRASH RECOVERY: the post-split centroid table and the rewritten cells
+    * go through ONE cell stage ([[stageCells]]) and land in one data
+    * commit, so after a crash [[recover]] leaves the index unsplit or
+    * split — never codes in a child cell the committed centroid table
+    * lacks. Single-writer maintenance op, like compaction.
     *
     * @return the two child cell ids
     */
   def splitCell(s: SparkSession, path: String, cell: Long, vectors: DataFrame,
       id: Column, emb: Column, pq: PqParams, meta: Seq[String] = Nil): Seq[Long] =
       withWriterLease(s, path, "splitCell") {
-    settled(s, path)
-    recoverSplit(s, path, vectors, id, emb, pq, meta)
-    // One hot cell's member VECTORS, materialized once: the
-    // sub-train's 4 actions (seed TakeOrdered + 3 Lloyd iterations) would
-    // each re-execute their input — a full `vectors` scan per action. One
-    // hot cell's vectors are bounded by construction (the split exists to
-    // bound them), so the checkpoint holds O(cell) rows and saves 3 corpus
-    // reads. The member-ID build side (codes scan + distinct) needs no
-    // checkpoint of its own: it executes exactly once, inside this one
-    // checkpoint action, as the semi-join's broadcast build.
-    val memberIds = loadCodes(s, path).filter(col("cell") === cell)
+    val snap = settled(s, path)
+    // One hot cell's member VECTORS, materialized once: the sub-train's 4
+    // actions (seed TakeOrdered + 3 Lloyd iterations) and the rewrite's
+    // (the encode checkpoint, the changed-id collect) would each
+    // re-execute their input — a full `vectors` scan per action. One hot
+    // cell's vectors are bounded by construction (the split exists to
+    // bound them), so the checkpoint holds O(cell) rows. The member-ID
+    // build side (codes scan + distinct) needs no checkpoint of its own:
+    // it executes exactly once, inside this one checkpoint action, as the
+    // semi-join's broadcast build.
+    val memberIds = loadCodes(s, snap).filter(col("cell") === cell)
       .select(col("vec_id").as("__split_member")).distinct()
     val members = vectors.join(broadcast(memberIds),
       id === col("__split_member"), "left_semi")
       .localCheckpoint()
-    val sub = KMeans.fit(members, id, emb, k = 2, iters = 3)
-      .orderBy(col("cent_id")).collect()
-    Dedup.dropLocalCheckpoint(members) // consumed by the sub-train above
-    // fewer than 2 sub-centroids = fewer than 2 member rows to seed from —
-    // refinement cannot help this cell. Thrown BEFORE any staging or
-    // mutation (the children stage is below), so the index is untouched;
-    // splitHottestCell translates it into NeedsRetrain instead of
-    // propagating, per its documented contract.
-    if (sub.length < 2) throw UnsplittableCellException(cell, sub.length)
-    // fresh child ids above every existing cent_id: KMeans labels by seed
-    // ROW id, which could collide with an existing centroid's id
-    val maxId = s.read.parquet(snapshot(s, path).partPath("cents"))
-      .agg(max(col("cent_id"))).head().getLong(0)
-    val manifest = sub.zipWithIndex.map { case (r, i) =>
-      (cell, maxId + 1 + i, r.getAs[scala.collection.Seq[Double]]("cent").toSeq)
-    }
-    import s.implicits._
-    manifest.toSeq.toDF("parent", "cent_id", "cent")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/split_staging")
-    applySplit(s, path, vectors, id, emb, pq, meta)
-  }
-
-  /** Roll an interrupted [[splitCell]] forward (complete staged children →
-    * re-apply, idempotent) or back (partial stage without its commit
-    * marker → discard; no mutation had started). No-op on a healthy index.
-    */
-  def recoverSplit(s: SparkSession, path: String, vectors: DataFrame,
-      id: Column, emb: Column, pq: PqParams, meta: Seq[String] = Nil): Unit =
-      withWriterLease(s, path, "recoverSplit") {
-    val fs = hadoopFs(s, path)
-    val staging = new org.apache.hadoop.fs.Path(s"$path/split_staging")
-    if (fs.exists(staging)) {
-      if (fs.exists(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"))) {
-        applySplit(s, path, vectors, id, emb, pq, meta)
-        ()
-      } else {
-        fs.delete(staging, true) // the stage write itself crashed
-        ()
-      }
-    }
-  }
-
-  /** The idempotent apply phase of a split, driven ONLY by the staged
-    * children: build the post-split centroid table, re-encode every vector
-    * currently coded in parent ∪ children cells under it (covers the fresh
-    * run AND every crash intermediate — a member duplicated across a
-    * half-swapped rewrite re-enters through either copy and the overwrite
-    * collapses it), commit the new centroid table, drop the stage.
-    */
-  private def applySplit(s: SparkSession, path: String, vectors: DataFrame,
-      id: Column, emb: Column, pq: PqParams, meta: Seq[String]): Seq[Long] = {
-    val man = s.read.parquet(s"$path/split_staging").orderBy(col("cent_id")).collect()
-    val parent = man.head.getAs[Long]("parent")
-    val childIds = man.map(_.getAs[Long]("cent_id")).toSeq
-    import s.implicits._
-    val childCents = man.map(r =>
-      (r.getAs[Long]("cent_id"), r.getAs[scala.collection.Seq[Double]]("cent").toSeq))
-      .toSeq.toDF("cent_id", "cent")
-    // k+1 rows, checkpointed before the staged write below. The filter
-    // removes the CHILD ids too, not just the parent: a crash between the
-    // cents commit and the stage delete leaves the persisted table
-    // already post-split, and a recovery re-run that filtered only the
-    // (absent) parent would union the staged children a second time —
-    // duplicated centroid rows consume probe slots and double-match the
-    // residual join, corrupting ADC sums. Filtering the staged ids makes
-    // this read a fixed point: fresh run and every crash intermediate both
-    // converge to exactly k+1 rows.
-    val snap = snapshot(s, path)
-    val newCents = s.read.parquet(snap.partPath("cents"))
-      .filter(!col("cent_id").isin((parent +: childIds): _*))
-      .unionByName(childCents)
-      .localCheckpoint()
-    val quant = IvfadcQuantizer(newCents,
-      s.read.parquet(snap.partPath("codebook")), pq)
-    val cellSet = parent +: childIds
-    // Parent ∪ children member VECTORS materialized once (same reasoning
-    // as splitCell's sub-train input): upsertCore executes its
-    // `updates` in several actions (the encode checkpoint, the changed-id
-    // snapshot) and each would re-scan the full `vectors` source for
-    // O(parent ∪ children) surviving rows. Bounded by the touched cells,
-    // dropped when consumed. The member-ID build side runs exactly once,
-    // inside this one checkpoint action.
-    val memberIds = loadCodes(s, path).filter(col("cell").isin(cellSet: _*))
-      .select(col("vec_id").as("__split_member")).distinct()
-    val updates = vectors.join(broadcast(memberIds),
-      id === col("__split_member"), "left_semi")
-      .localCheckpoint()
-    upsertCore(s, path, updates, updates.limit(0).select(id.as("vec_id")),
-      id, emb, quant, meta)
-    Dedup.dropLocalCheckpoint(updates) // consumed by the upsert above
-    // the cents replace is a GENERATION COMMIT, not an in-place overwrite:
-    // readers resolve either the whole pre-commit or whole post-commit
-    // centroid table (the codes rewrite above is partition-wise in place —
-    // the split's documented touched-cells-only cost bound — so the split's
-    // own window is still writer-side-only)
-    val live = snapshot(s, path)
-    val stagedDir = stagedDirName(live, "cents")
-    newCents.write.mode("overwrite").parquet(s"$path/$stagedDir")
-    commit(s, live)(m => m.copy(dirs = m.dirs + ("cents" -> stagedDir)))
-    hadoopFs(s, path).delete(new org.apache.hadoop.fs.Path(s"$path/split_staging"), true)
-    childIds
+    try {
+      val sub = KMeans.fit(members, id, emb, k = 2, iters = 3)
+        .orderBy(col("cent_id")).collect()
+      // fewer than 2 sub-centroids = fewer than 2 member rows to seed from
+      // — refinement cannot help this cell. Thrown BEFORE any staging, so
+      // the index is untouched; splitHottestCell translates it into
+      // NeedsRetrain instead of propagating, per its documented contract.
+      if (sub.length < 2) throw UnsplittableCellException(cell, sub.length)
+      // fresh child ids above every existing cent_id: KMeans labels by
+      // seed ROW id, which could collide with an existing centroid's id
+      val cents = s.read.parquet(snap.partPath("cents"))
+      val maxId = cents.agg(max(col("cent_id"))).head().getLong(0)
+      val childIds = sub.indices.map(maxId + 1 + _)
+      import s.implicits._
+      val childCents = sub.zip(childIds).map { case (r, c) =>
+        (c, r.getAs[scala.collection.Seq[Double]]("cent").toSeq)
+      }.toSeq.toDF("cent_id", "cent")
+      // k+1 rows, checkpointed: the re-encode broadcasts them and the
+      // stage writes them
+      val newCents = cents.filter(col("cent_id") =!= cell).unionByName(childCents)
+        .localCheckpoint()
+      val quant = IvfadcQuantizer(newCents, s.read.parquet(snap.partPath("codebook")), pq)
+      upsertCore(s, snap, members, members.limit(0).select(id.as("vec_id")),
+        id, emb, quant, meta, cents = Some(newCents))
+      childIds
+    } finally Dedup.dropLocalCheckpoint(members)
   }
 
   /** Thrown by [[splitCell]] BEFORE any staging or mutation when the cell

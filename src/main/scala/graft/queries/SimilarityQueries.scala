@@ -779,7 +779,7 @@ object SimilarityQueries extends QueryPack {
     * cold rebuild. (Contrast with the upsert gate, whose oracle trains on
     * the ORIGINAL table — upsert keeps the quantizer, reindex replaces
     * it.) Crash recovery for every swap window is spec-pinned in
-    * VectorIndexSpec.
+    * VectorIndexCrashSweepSpec.
     *
     * The change batch rides the reindex itself, not a preceding
     * [[graft.operators.VectorIndex.upsertBatch]] (r13 VERDICT #8 — the

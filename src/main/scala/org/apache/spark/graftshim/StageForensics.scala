@@ -35,7 +35,7 @@ class StageForensics extends SparkListener {
   import StageForensics.JobSpan
 
   private val sums = new ConcurrentHashMap[String, LongAdder]()
-  private val started = new ConcurrentHashMap[Int, (Long, Int, String)]()
+  private val started = new ConcurrentHashMap[Int, (Long, Int, String, Option[Long])]()
   private val spans = new ConcurrentLinkedQueue[JobSpan]()
   private def add(k: String, v: Long): Unit =
     sums.computeIfAbsent(k, _ => new LongAdder).add(v)
@@ -61,14 +61,16 @@ class StageForensics extends SparkListener {
   // moment a callback runs can lag the job by the queue's backlog.
   override def onJobStart(e: SparkListenerJobStart): Unit = {
     started.put(e.jobId, (e.time, e.stageInfos.size,
-      e.stageInfos.lastOption.map(_.name.take(60)).getOrElse("?")))
+      e.stageInfos.lastOption.map(_.name.take(60)).getOrElse("?"),
+      Option(e.properties).flatMap(p =>
+        Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)))
     ()
   }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit = {
     add("jobs", 1L)
-    Option(started.remove(e.jobId)).foreach { case (t0, stages, site) =>
-      spans.add(JobSpan(e.jobId, t0, e.time, stages, site))
+    Option(started.remove(e.jobId)).foreach { case (t0, stages, site, execId) =>
+      spans.add(JobSpan(e.jobId, t0, e.time, stages, site, execId))
     }
   }
 
@@ -100,10 +102,14 @@ object StageForensics {
     "shuffle_bytes_written", "shuffle_bytes_read", "fetch_wait_ms",
     "mem_spill_bytes", "disk_spill_bytes", "input_bytes", "jobs")
 
-  /** One finished Spark job: event times in epoch ms, its stage count, and
-    * its call site (the final stage's name).
+  /** One finished Spark job: event times in epoch ms, its stage count, its
+    * call site (the final stage's name) and the SQL execution it ran for
+    * (`spark.sql.execution.id`; None for a bare RDD job). Every job of one
+    * DataFrame action shares the id, AQE query-stage jobs included, whose
+    * site names only the future that submitted them.
     */
-  final case class JobSpan(id: Int, startMs: Long, endMs: Long, stages: Int, site: String)
+  final case class JobSpan(id: Int, startMs: Long, endMs: Long, stages: Int, site: String,
+      sqlExecutionId: Option[Long])
 
   /** The context's one forensics listener, registered on first use:
     * every caller on a context shares the same counters.

@@ -82,6 +82,21 @@ object CrashFileSystem {
   }
 }
 
+/** What an index root may hold between mutations: manifests and generation
+  * directories, nothing else.
+  */
+object IndexRoot {
+  val Entry = "manifest-\\d{9}|(cents|codebook|codes)_gen_\\d+".r
+
+  /** The root's entries that [[Entry]] does not admit; `.<name>.crc` files
+    * are the local file system's checksums of the entries themselves.
+    */
+  def stray(path: String): Seq[String] =
+    new java.io.File(path).list().toSeq
+      .filterNot(n => n.startsWith(".") && n.endsWith(".crc"))
+      .filterNot(Entry.matches).sorted
+}
+
 /** Hand edits of an index's commit record, for specs that need a state a
   * crash or an operator could leave behind.
   */

@@ -10,11 +10,13 @@ import graft.SparkFixture
   * delete, mkdirs) of a mutation is, in turn, the call at which its writer
   * dies ([[CrashFileSystem]] fails it and every call after it). After each
   * crash the dead writer's lease is reclaimed and [[VectorIndex.recover]]
-  * runs; then
+  * runs; then the index root holds only manifests and generation
+  * directories, the committed occupancy equals a recount, and
   *
-  *   - `write` onto a live index, `compactCells` and `reindex`: a fresh
-  *     snapshot holds exactly the pre-mutation or the post-mutation index
-  *     (quantizer and codes row for row), with no re-run;
+  *   - `write` onto a live index, `compactCells`, `reindex`, `splitCell`
+  *     and `appendBatch`: a fresh snapshot holds exactly the pre-mutation
+  *     or the post-mutation index (quantizer and codes row for row), with
+  *     no re-run;
   *   - `upsertBatch` and a stamped `appendSink` batch: re-running the same
   *     batch reaches exactly the post-mutation index, and the committed
   *     occupancy equals a recount; for the sink, the applied mark is never
@@ -90,7 +92,8 @@ class VectorIndexCrashSweepSpec extends AnyFunSuite
 
   /** Run `op` against a copy of `base` once cleanly (the post state and
     * the op count), then once per crash point; `after` checks each
-    * crashed copy once the lease is reclaimed and recovery ran.
+    * crashed copy once the lease is reclaimed, recovery ran, and its root
+    * and occupancy were checked.
     */
   private def sweep(base: String, op: String => Unit)(
       after: (String, Long, Seq[Seq[Row]]) => Unit): Unit = {
@@ -110,6 +113,9 @@ class VectorIndexCrashSweepSpec extends AnyFunSuite
       new java.io.File(s"$dir/maintenance_lease").delete()
       new java.io.File(s"$dir/.maintenance_lease.crc").delete()
       VectorIndex.recover(spark, dir)
+      val stray = IndexRoot.stray(dir)
+      assert(stray.isEmpty, s"crash at mutating call $n: after recover the index root holds $stray")
+      assertOccupancyRecounted(dir, n)
       after(dir, n, post)
     }
   }
@@ -148,6 +154,18 @@ class VectorIndexCrashSweepSpec extends AnyFunSuite
   test("crash sweep: reindex leaves the old or the retrained index") {
     preOrPost(pristine, p => VectorIndex.reindex(spark, p, corpus,
       col("vec_id"), col("embedding"), kCells = 4, iters = 1, pq = pq))
+  }
+
+  test("crash sweep: splitCell leaves the unsplit or the split index") {
+    val hot = VectorIndex.occupancy(spark, pristine)
+      .orderBy(col("n_vecs").desc, col("cell")).head().getLong(0)
+    preOrPost(pristine, p => VectorIndex.splitCell(spark, p, hot, corpus,
+      col("vec_id"), col("embedding"), pq))
+  }
+
+  test("crash sweep: appendBatch leaves the index without the batch or with all of it") {
+    preOrPost(pristine, p => VectorIndex.appendBatch(spark, p,
+      corpus.filter(col("vec_id") >= 32), col("vec_id"), col("embedding"), pq))
   }
 
   test("crash sweep: upsertBatch converges to the post-upsert index on a re-run") {

@@ -7,8 +7,6 @@ import graft.SparkFixture
 
 /** Index-lifecycle contracts:
   *
-  *  - the applySplit crash window AFTER the cents overwrite: recovery must
-  *    not duplicate the child centroids;
   *  - a one-member hot cell maps to NeedsRetrain instead of an exception,
   *    with the index untouched;
   *  - the adopted-index edge warning of the replay check;
@@ -63,44 +61,6 @@ class VectorIndexLifecycleSpec extends AnyFunSuite {
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
     nprobe = nprobe, topK = 5).orderBy("query_id", "rn").collect().toSeq
 
-  test("recoverSplit from the crash window AFTER the cents overwrite: no duplicated centroids, no duplicated codes") {
-    val corpus = bimodalCorpus().cache()
-    val path = tmp("graft_split_postcents")
-    build(corpus, path)
-    val VectorIndex.Split(parent, children) = VectorIndex.splitHottestCell(
-      spark, path, corpus, col("vec_id"), col("embedding"), pq, maxCellRows = 10L)
-    val centsClean = spark.read.parquet(VectorIndex.snapshot(spark, path).partPath("cents"))
-      .collect().map(r => r.getLong(0)).sorted.toSeq
-    val cleanAnswers = answers(path, corpus)
-
-    // SIMULATE the crash: the split's cents overwrite landed (the table is
-    // already post-split) but the manifest delete was lost — re-stage the
-    // exact manifest the original run staged (parent + the two children,
-    // whose centroids now live in the cents table)
-    val childCents = spark.read.parquet(VectorIndex.snapshot(spark, path).partPath("cents"))
-      .filter(col("cent_id").isin(children: _*))
-      .orderBy("cent_id").collect()
-    childCents.map(r => (parent, r.getLong(0),
-        r.getAs[scala.collection.Seq[Double]]("cent").toSeq))
-      .toSeq.toDF("parent", "cent_id", "cent")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/split_staging")
-
-    VectorIndex.recoverSplit(spark, path, corpus, col("vec_id"), col("embedding"), pq)
-
-    assert(!new java.io.File(s"$path/split_staging").exists(),
-      "recovery must consume the manifest")
-    val centIds = spark.read.parquet(VectorIndex.snapshot(spark, path).partPath("cents"))
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(centIds == centIds.distinct,
-      s"recovery from the post-cents-overwrite window must not duplicate child centroids, got $centIds")
-    assert(centIds == centsClean, "centroid table must equal the cleanly-split one")
-    val dupCodes = VectorIndex.loadCodes(spark, path)
-      .groupBy("vec_id", "m").count().filter(col("count") > 1).count()
-    assert(dupCodes == 0, "no duplicated code rows after recovery")
-    assert(answers(path, corpus) == cleanAnswers,
-      "recovered index must answer exactly like the cleanly-split one")
-  }
-
   test("a one-member hot cell yields NeedsRetrain, not an exception, and leaves the index untouched") {
     val corpus = (0 until 3).map { i =>
       (i.toLong, Array.tabulate(dim)(d => if (d == i) 50f else 0f))
@@ -119,7 +79,7 @@ class VectorIndexLifecycleSpec extends AnyFunSuite {
       case other => fail(s"expected NeedsRetrain for a 1-member cell, got $other")
     }
     assert(cents() == centsBefore, "the index must be untouched")
-    assert(!new java.io.File(s"$path/split_staging").exists(),
+    assert(!new java.io.File(s"$path/cells_staging").exists(),
       "nothing may have been staged")
     // the raw operator still throws the TYPED exception for direct callers
     val hot = VectorIndex.occupancy(spark, path)
@@ -190,7 +150,7 @@ class VectorIndexLifecycleSpec extends AnyFunSuite {
       "the reclaimed lease must be released after the op")
 
     // re-entrancy end-to-end: splitHottestCell (outer lease) drives
-    // splitCell → recoverSplit → upsert machinery without self-deadlock
+    // splitCell → upsert machinery without self-deadlock
     val outcome = VectorIndex.splitHottestCell(spark, path, corpus,
       col("vec_id"), col("embedding"), pq, maxCellRows = 10L)
     assert(outcome.isInstanceOf[VectorIndex.Split], s"got $outcome")

@@ -46,16 +46,10 @@ class VectorIndexManifestSpec extends AnyFunSuite {
     VectorIndex.appendSink(path, pq, col("vec_id"), col("embedding"),
       streamId = Some(stream))
 
-  private val RootEntry = "manifest-\\d{9}|(cents|codebook|codes)_gen_\\d+".r
-
   private def assertRootClean(path: String, after: String): Unit = {
-    // `.<name>.crc` files are the local file system's checksums of the
-    // entries themselves
-    val entries = new java.io.File(path).list().toSeq
-      .filterNot(n => n.startsWith(".") && n.endsWith(".crc"))
-    val stray = entries.filterNot(RootEntry.matches)
-    assert(stray.isEmpty, s"after $after the index root holds ${stray.sorted}")
-    assert(entries.exists(_.startsWith("manifest-")))
+    val stray = IndexRoot.stray(path)
+    assert(stray.isEmpty, s"after $after the index root holds $stray")
+    assert(new java.io.File(path).list().exists(_.startsWith("manifest-")))
   }
 
   private def manifestJson(path: String, gen: Long) =

@@ -324,7 +324,7 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(occ.map(_.getAs[Long]("n_vecs")).sum == 65L)
   }
 
-  test("hot-cell split: probe cost reduced, rebuild-equivalence holds, recovery converges, loop reaches the bound") {
+  test("hot-cell split: probe cost reduced, rebuild-equivalence holds, loop reaches the bound") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     val dim = 64
@@ -408,41 +408,6 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(VectorIndex.occupancy(spark, path).orderBy("cell").collect().toSeq ==
       VectorIndex.cellOccupancy(VectorIndex.loadCodes(spark, path))
         .orderBy("cell").collect().toSeq)
-
-    // CRASH RECOVERY: same index, the split dies right after staging its
-    // manifest — recoverSplit must roll it forward to the identical state
-    val path2 = java.nio.file.Files.createTempDirectory("graft_vindex_split2").toString
-    build(path2)
-    val memberIds = VectorIndex.loadCodes(spark, path2)
-      .filter(col("cell") === parent).select(col("vec_id").as("__m")).distinct()
-    val members = corpusDf.join(memberIds, col("vec_id") === col("__m"), "left_semi")
-    val sub = KMeans.fit(members, col("vec_id"), col("embedding"), k = 2, iters = 3)
-      .orderBy("cent_id").collect()
-    val maxId = spark.read.parquet(VectorIndex.snapshot(spark, path2).partPath("cents"))
-      .agg(max(col("cent_id"))).head().getLong(0)
-    sub.zipWithIndex.map { case (r, i) =>
-      (parent, maxId + 1 + i, r.getAs[scala.collection.Seq[Double]]("cent").toSeq)
-    }.toSeq.toDF("parent", "cent_id", "cent")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path2/split_staging")
-    VectorIndex.recoverSplit(spark, path2, corpusDf, col("vec_id"), col("embedding"), pq)
-    assert(!new java.io.File(s"$path2/split_staging").exists(),
-      "recovery must consume the manifest")
-    assert(spark.read.parquet(VectorIndex.snapshot(spark, path2).partPath("cents")).select("cent_id")
-      .collect().map(_.getLong(0)).toSet == centsAfter,
-      "recovery must converge to the same centroid table as the clean split")
-    assert(answers(path2) == fromSplit,
-      "the recovered index must answer exactly like the cleanly-split one")
-
-    // a PARTIAL manifest (no _SUCCESS — the staging write itself crashed)
-    // rolls BACK: nothing had mutated, the debris is dropped
-    val debris = new java.io.File(s"$path2/split_staging")
-    debris.mkdirs()
-    java.nio.file.Files.writeString(
-      new java.io.File(debris, "part-garbage.parquet").toPath, "not parquet")
-    val preRollback = answers(path2)
-    VectorIndex.recoverSplit(spark, path2, corpusDf, col("vec_id"), col("embedding"), pq)
-    assert(!debris.exists(), "a partial manifest is rolled back (deleted)")
-    assert(answers(path2) == preRollback, "rollback must not touch the index")
 
     // the policy LOOP: keep splitting while a cell exceeds the absolute
     // probe-cost bound; terminates with every cell under it
